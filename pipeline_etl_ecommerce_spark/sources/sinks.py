@@ -12,17 +12,29 @@ Scale notes
 - ``merge_upsert`` is one shuffle on the key (the left_anti join); with AQE
   the small "new" side is broadcast automatically, so merging a day's delta
   into a 100 TB mart does NOT reshuffle the mart.
-- For date-grain marts, prefer ``overwrite_date_partitions`` (dynamic
-  partition overwrite): rewriting only the affected date partitions is the
-  100 TB-safe upsert — cost is proportional to the delta's days, not to the
-  mart.
+- ``upsert_to_path`` is file-level copy-on-write over a flat directory of
+  parquet files. Parquet footers pick the files whose key ranges may hold a
+  batch key; only those are rewritten, minus the batch's keys, against a
+  broadcast of the batch's keys. A call costs O(batch + picked files), not
+  O(mart), as long as the keys cluster by file (order ids, dates). The
+  batch's keys must fit a broadcast. The mart gains about one file per
+  call. ``compact_path`` cuts the file count but merges key ranges, after
+  which every call picks the merged file. A crash between the moves and
+  the deletes duplicates the picked files' surviving rows;
+  ``transactional_upsert_to_path`` is the crash-safe variant.
+- For Hive-partitioned date-grain marts, ``overwrite_date_partitions``
+  (dynamic partition overwrite) rewrites only the affected date partitions.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import tempfile
+import uuid
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,6 +69,43 @@ def _null_safe_key_cond(left_alias: str, right_alias: str, keys: list[str]):
     return cond
 
 
+def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: bool) -> bool:
+    """Schema-drift guards of the keyed merges; True when the column NAMES
+    drift (only possible with ``evolve_schema``).
+
+    They run on the RAW batch, before dedupe_last_wins touches it (ADVICE
+    r9): a batch missing a KEY column used to fail inside the dedupe window
+    with an opaque AnalysisException, and a same-name TYPE change sailed
+    past the name-only check into unionByName."""
+    lost_keys = [k for k in keys if k not in new.columns]
+    if lost_keys:
+        raise ValueError(
+            f"merge_upsert: batch lacks key column(s) {lost_keys}; a key is "
+            "the row identity and can never drift away"
+        )
+    old_types = {f.name: f.dataType for f in old_schema.fields}
+    added = [c for c in new.columns if c not in old_types]
+    missing = [c for c in old_types if c not in new.columns]
+    if (added or missing) and not evolve_schema:
+        raise ValueError(
+            f"merge_upsert: batch schema drifts from target (adds {added}, "
+            f"lacks {missing}); pass evolve_schema=True to union the "
+            "schemas (NULL-filled on both sides), or fix the producer"
+        )
+    retyped = [
+        f"{f.name}: {old_types[f.name].simpleString()} -> {f.dataType.simpleString()}"
+        for f in new.schema.fields
+        if f.name in old_types and f.dataType != old_types[f.name]
+    ]
+    if retyped and not evolve_schema:
+        raise ValueError(
+            f"merge_upsert: batch retypes column(s) [{', '.join(retyped)}]; "
+            "pass evolve_schema=True to accept Spark's union type coercion, "
+            "or fix the producer"
+        )
+    return bool(added or missing)
+
+
 def merge_upsert(
     old: DataFrame,
     new: DataFrame,
@@ -78,43 +127,14 @@ def merge_upsert(
     added columns, replaced/inserted rows carry NULL for columns the batch
     no longer ships.
     """
-    # Drift guards run on the RAW batch, before dedupe_last_wins touches it
-    # (ADVICE r9): a batch missing a KEY column used to fail inside the
-    # dedupe window with an opaque AnalysisException, and a same-name TYPE
-    # change sailed past the name-only check into unionByName.
-    lost_keys = [k for k in keys if k not in new.columns]
-    if lost_keys:
-        raise ValueError(
-            f"merge_upsert: batch lacks key column(s) {lost_keys}; a key is "
-            "the row identity and can never drift away"
-        )
-    added = [c for c in new.columns if c not in old.columns]
-    missing = [c for c in old.columns if c not in new.columns]
-    if (added or missing) and not evolve_schema:
-        raise ValueError(
-            f"merge_upsert: batch schema drifts from target (adds {added}, "
-            f"lacks {missing}); pass evolve_schema=True to union the "
-            "schemas (NULL-filled on both sides), or fix the producer"
-        )
-    old_types = {f.name: f.dataType for f in old.schema.fields}
-    retyped = [
-        f"{f.name}: {old_types[f.name].simpleString()} -> {f.dataType.simpleString()}"
-        for f in new.schema.fields
-        if f.name in old_types and f.dataType != old_types[f.name]
-    ]
-    if retyped and not evolve_schema:
-        raise ValueError(
-            f"merge_upsert: batch retypes column(s) [{', '.join(retyped)}]; "
-            "pass evolve_schema=True to accept Spark's union type coercion, "
-            "or fix the producer"
-        )
+    drifted = _check_drift(old.schema, new, keys, evolve_schema=evolve_schema)
     fresh = dedupe_last_wins(new, keys, order_by)
     kept = old.alias("__old").join(
         fresh.select(*keys).distinct().alias("__new"),
         _null_safe_key_cond("__old", "__new", keys),
         "left_anti",
     )
-    if added or missing:
+    if drifted:
         return kept.unionByName(fresh, allowMissingColumns=True)
     return kept.unionByName(fresh.select(*old.columns))
 
@@ -202,32 +222,136 @@ def overwrite_date_partitions(df: DataFrame, path: str, partition_col: str) -> N
     )
 
 
-def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | None = None) -> None:
-    """Keyed MERGE into a parquet path without Delta: read-merge-swap.
+def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | None = None) -> int:
+    """Keyed MERGE into a flat directory of parquet files, without Delta:
+    file-level copy-on-write. Returns the number of rows upserted (the
+    deduped batch), read from the footers of the files it wrote.
 
-    Correct at any scale but rewrites the whole target; use only for dims and
-    small marts. Date-grain facts should use ``overwrite_date_partitions``.
+    Same semantics as :func:`merge_upsert` (null-safe keys, last-wins dedupe
+    with ``order_by``, a loud failure on schema drift before any file
+    changes), at a cost proportional to the batch, not to the mart:
 
-    NOT crash-atomic: a failure between the rmtree and the move below loses
-    the mart (VERDICT r1). ``transactional_upsert_to_path`` is the
+    1. the batch is deduped once and written to a temp dir beside the mart;
+    2. the parquet footers alone (min, max and null count of the key
+       columns) pick the mart files that MAY hold a batch key; a key column
+       without usable stats counts as "may hold";
+    3. each picked file is rewritten minus the batch's keys, one output
+       file per read split (one file unless it is larger than
+       ``spark.sql.files.maxPartitionBytes``), by a broadcast null-safe
+       ``left_anti``: the old side is never shuffled and files never merge
+       or grow;
+    4. once every new file is fully written, the new files move into the
+       mart under unique names, then the picked files are deleted.
+
+    Untouched files are never read beyond their footers, and the mart stays
+    a flat directory of ``*.parquet`` files (no Hive ``key=value/`` dirs).
+
+    NOT crash-atomic: a crash between the moves and the deletes of step 4
+    leaves both the picked files and their rewrites in the mart, so the keys
+    they share read twice. ``transactional_upsert_to_path`` is the
     crash-safe variant — same merge semantics, versioned snapshots behind an
     atomically-swapped pointer file; prefer it for any mart a crash matters
     for.
     """
     spark = new.sparkSession
-    if not os.path.exists(path):
-        new_df = dedupe_last_wins(new, keys, order_by)
-        new_df.write.mode("overwrite").parquet(path)
-        return
-    old = spark.read.parquet(path)
-    merged = merge_upsert(old, new, keys, order_by)
-    _write_and_swap(merged, path, prefix="upsert_")
+    old_files = _parquet_files(path)
+    if old_files:
+        old_schema = spark.read.parquet(path).schema
+        _check_drift(old_schema, new, keys, evolve_schema=False)
+        new = new.select(*old_schema.names)
+    fresh = dedupe_last_wins(new, keys, order_by)
+    os.makedirs(path, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(path.rstrip("/")) or ".")
+    try:
+        batch_dir, rewrite_dir = os.path.join(tmp, "batch"), os.path.join(tmp, "rewrite")
+        fresh.write.mode("overwrite").parquet(batch_dir)
+        batch = _footers(_parquet_files(batch_dir), keys)
+        old = _footers(old_files, keys)
+        picked = [f for f, (_, boxes) in old.items()
+                  if any(_may_overlap(a, b) for a in boxes for _, bs in batch.values() for b in bs)]
+        rewritten = {}
+        if picked:
+            batch_keys = spark.read.schema(fresh.schema).parquet(batch_dir).select(*keys)
+            # one scan per file, not coalesce(1) per scan: Spark 4's
+            # partitioning-aware union would zip single-partition children
+            # into ONE partition and merge the files
+            scans = [spark.read.schema(old_schema).parquet(f) for f in picked]
+            kept = functools.reduce(DataFrame.union, scans).alias("__old").join(
+                F.broadcast(batch_keys.alias("__new")), _null_safe_key_cond("__old", "__new", keys), "left_anti"
+            )
+            kept.write.mode("overwrite").parquet(rewrite_dir)
+            rewritten = _footers(_parquet_files(rewrite_dir), [])
+        landing = [f for f, (rows, _) in {**batch, **rewritten}.items() if rows]
+        # a file without rows only carries the schema: keep one while the mart has no rows
+        stale = picked + ([f for f, (rows, _) in old.items() if not rows] if landing else [])
+        if not landing and not old_files:
+            landing = list(batch)[:1]
+        for f in landing:
+            os.rename(f, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+        for f in stale:
+            os.remove(f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return sum(rows for rows, _ in batch.values())
+
+
+def _parquet_files(path: str) -> list[str]:
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _footers(files: list[str], keys: list[str]) -> dict[str, tuple[int, list[list]]]:
+    """file -> (rows, one key box per non-empty row group), from the footer.
+    A box holds per key column ``None`` (no usable stats: may hold any
+    value) or ``(min, max, has_nulls)``, with min and max None when the
+    column is all NULL in that row group."""
+    out = {}
+    for f in files:
+        md = pq.read_metadata(f)
+        index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        boxes = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows:
+                boxes.append([_column_range(rg.column(index[k]), rg.num_rows) if k in index else None for k in keys])
+        out[f] = (md.num_rows, boxes)
+    return out
+
+
+def _column_range(col, rows: int):
+    st = col.statistics
+    if st is None or not st.has_null_count:
+        return None
+    if st.null_count == rows:
+        return (None, None, True)
+    # float stats skip NaN, which a null-safe key compares equal to itself
+    if not st.has_min_max or col.physical_type in ("FLOAT", "DOUBLE"):
+        return None
+    return (st.min, st.max, st.null_count > 0)
+
+
+def _may_overlap(a: list, b: list) -> bool:
+    """Whether two key boxes may share a key: every key column must be able
+    to match, either with a value in both ranges or NULL on both sides
+    (keys compare null-safe)."""
+    for ra, rb in zip(a, b):
+        if ra is None or rb is None or (ra[2] and rb[2]):
+            continue
+        if ra[0] is None or rb[0] is None or ra[1] < rb[0] or rb[1] < ra[0]:
+            return False  # all NULL on one side and no NULL on the other, or disjoint ranges
+    return True
 
 
 def replace_groups_to_path(new: DataFrame, path: str, group_keys: list[str]) -> None:
     """Path-level ``replace_groups``: groups present in ``new`` are replaced
-    wholesale, others survive. Same read-merge-swap shape (and the same
-    non-atomicity caveat) as ``upsert_to_path``."""
+    wholesale, others survive. Read-merge-swap: rewrites the whole target,
+    and is not crash-atomic (see ``_write_and_swap``)."""
     spark = new.sparkSession
     if not os.path.exists(path):
         new.write.mode("overwrite").parquet(path)
@@ -239,7 +363,9 @@ def replace_groups_to_path(new: DataFrame, path: str, group_keys: list[str]) -> 
 
 def _write_and_swap(df: DataFrame, path: str, *, prefix: str = "swap_") -> None:
     """Write ``df`` (whose plan lazily reads ``path``) to a temp dir, then
-    swap it in. The write must fully materialize before the old data drops."""
+    swap it in. The write must fully materialize before the old data drops.
+    NOT crash-atomic: a failure between the rmtree and the move loses the
+    mart (VERDICT r1)."""
     tmp = tempfile.mkdtemp(prefix=prefix, dir=os.path.dirname(path.rstrip("/")) or ".")
     df.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
@@ -588,7 +714,7 @@ def merge_aggregate_mart_to_path(
 ) -> None:
     """Path-level IVM merge: read the mart if present, additively merge
     the delta's partial aggregates, swap. Same non-atomic caveat as
-    ``upsert_to_path``; wrap with ``writer_lock`` / use the
+    ``replace_groups_to_path``; wrap with ``writer_lock`` / use the
     transactional mart for crash safety."""
     spark = delta_agg.sparkSession
     if not os.path.exists(path):

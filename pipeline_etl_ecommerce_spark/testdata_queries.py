@@ -812,8 +812,9 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11 run no row's evidence predates r06 (the r10 verdict's #10
 # done-criterion); (c) the 15 alphabetically-first r06-age rows fill the
 # window to 50. Every row is selfcheck-green at sf0.001/0.01 this round
-# (SELFCHECK_r11.json is the standing full-catalog record); rotated-out
-# greens stay protected by selfcheck+pytest.
+# (SELFCHECK_r10.json is the newest committed full-catalog record;
+# CORRECTNESS_r11.json holds the r11 driver window); rotated-out greens
+# stay protected by selfcheck+pytest.
 # --------------------------------------------------------------------------
 _DRIVER_PRIORITY = [
     # (a) changed-plan / adjudicated r11 rows
@@ -11553,7 +11554,7 @@ def warc_record_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running sum; ends netting starts at the same instant = half-open), one
 # hash partitioning shared by every pass — never the O(n²)-per-key
 # self-join overlap test. Epochs are timezone-free microseconds on both
-# engines (timestampdiff from the NTZ epoch == DuckDB epoch_us on naive ts).
+# engines (``_epoch_us`` == DuckDB epoch_us on naive ts).
 _US_PER_WEEK = 7 * 86_400_000_000
 
 _PEAK_CONCURRENCY_SQL = f"""
@@ -11585,14 +11586,24 @@ FROM p WHERE open_count = peak
 GROUP BY 1, 2
 """
 
-_EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
+
+def _epoch_us(col: str) -> Column:
+    """Zone-free microseconds since 1970-01-01 of a naive (TIMESTAMP_NTZ)
+    column: DuckDB's ``epoch_us``. Built from the wall-clock fields, which
+    read no zone. ``timestampdiff`` from the NTZ epoch does not do: it
+    works on session-zone instants, so a local midnight inside a DST gap
+    (1995-10-15 under America/Sao_Paulo) comes out an hour late."""
+    return F.expr(
+        f"unix_date(CAST({col} AS DATE)) * 86400000000L + hour({col}) * 3600000000L"
+        f" + minute({col}) * 60000000L + CAST(date_part('SECOND', {col}) * 1000000 AS BIGINT)"
+    )
 
 
 @register("peak_concurrent_orders", _PEAK_CONCURRENCY_SQL)
 def peak_concurrent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.intervals import peak_concurrency
 
-    od_us = F.expr(f"timestampdiff(MICROSECOND, {_EPOCH_NTZ}, o_orderdate)")
+    od_us = _epoch_us("o_orderdate")
     iv = _t(spark, sf_dir, "orders").select(
         "o_orderpriority",
         od_us.alias("s"),
@@ -12282,7 +12293,7 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("U"))
         .alias("op"),
         F.col("l_extendedprice").alias("price"),
-        F.expr(f"timestampdiff(MICROSECOND, {_EPOCH_NTZ}, l_shipdate)").alias("ts"),
+        _epoch_us("l_shipdate").alias("ts"),
         "l_orderkey",
         "l_linenumber",
     )
@@ -12466,7 +12477,7 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey")
             + F.when(F.col("l_linenumber") == 7, F.lit(1000000)).otherwise(F.lit(0))
         ).alias("p_partkey"),
-        F.expr(f"timestampdiff(MICROSECOND, {_EPOCH_NTZ}, l_shipdate)").alias("ts"),
+        _epoch_us("l_shipdate").alias("ts"),
         F.col("l_orderkey").alias("okey"),
         F.col("l_linenumber").cast("long").alias("lnum"),
         F.when(F.col("l_linenumber") % 5 == 0, F.lit("D"))

@@ -189,7 +189,9 @@ def _strip_cached_subtrees(plan: str) -> str:
     for line in plan.splitlines():
         d = depth(line)
         if skip_deeper_than is not None:
-            if line.strip() and d > skip_deeper_than:
+            # a blank line carries no depth: it neither ends the cached
+            # subtree nor belongs to the residual plan
+            if not line.strip() or d > skip_deeper_than:
                 continue
             skip_deeper_than = None
         out.append(line)

@@ -50,7 +50,8 @@ def _payload(spark, payload_dir: str, name: str, schema):
 
 
 def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]:
-    """Process one day; returns per-mart row counts for logging."""
+    """Process one day; returns per-mart row counts for logging: the rows
+    each upsert wrote (its deduped batch) and the day's alert count."""
     stats: dict[str, int] = {}
 
     # --- dims ---
@@ -62,26 +63,23 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
     )
     if tiny is not None:
         cat = sync_catalog(tiny)
-        upsert_to_path(cat, f"{marts}/produtos_catalogo", ["sku"])
-        stats["produtos_catalogo"] = cat.count()
+        stats["produtos_catalogo"] = upsert_to_path(cat, f"{marts}/produtos_catalogo", ["sku"])
 
     listings = _payload(spark, payload_dir, "listings", schemas.MELI_LISTING)
     if listings is not None:
         anuncios = sync_listings(listings)
-        upsert_to_path(anuncios, f"{marts}/anuncios_canais", ["id_anuncio_canal"])
-        stats["anuncios_canais"] = anuncios.count()
+        stats["anuncios_canais"] = upsert_to_path(anuncios, f"{marts}/anuncios_canais", ["id_anuncio_canal"])
 
     cat_path = f"{marts}/produtos_catalogo"
     an_path = f"{marts}/anuncios_canais"
     if os.path.exists(cat_path) and os.path.exists(an_path):
         mapa, alertas = consolidate_mapa(spark.read.parquet(cat_path), spark.read.parquet(an_path))
-        upsert_to_path(mapa, f"{marts}/mapa_produtos_anuncios", ["id_anuncio_canal"])
+        stats["mapa_produtos_anuncios"] = upsert_to_path(mapa, f"{marts}/mapa_produtos_anuncios", ["id_anuncio_canal"])
         n_alerts = alertas.count()
         if n_alerts:
             append_to_path(
                 alertas.withColumn("data_alerta", F.lit(str(day)).cast("date")), f"{marts}/alertas_mapa"
             )
-        stats["mapa_produtos_anuncios"] = mapa.count()
         stats["alertas"] = n_alerts
 
     # --- facts ---
@@ -91,8 +89,9 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
         if shipments is None:
             shipments = spark.createDataFrame([], "shipping_id long, logistic_type string, list_cost double")
         vendas = transform_orders(orders, shipments)
-        upsert_to_path(vendas, f"{marts}/vendas_financeiro", ["id_ordem", "id_anuncio", "id_variacao"])
-        stats["vendas_financeiro"] = vendas.count()
+        stats["vendas_financeiro"] = upsert_to_path(
+            vendas, f"{marts}/vendas_financeiro", ["id_ordem", "id_anuncio", "id_variacao"]
+        )
 
     visits = _payload(spark, payload_dir, "visits", schemas.MELI_VISITS)
     ads = _payload(
@@ -117,8 +116,7 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
         trafego = process_traffic_tasks(
             active, visits if visits is not None else empty_visits, ads if ads is not None else empty_ads
         )
-        upsert_to_path(trafego, f"{marts}/trafego_diario", ["id_anuncio", "data_metrica"])
-        stats["trafego_diario"] = trafego.count()
+        stats["trafego_diario"] = upsert_to_path(trafego, f"{marts}/trafego_diario", ["id_anuncio", "data_metrica"])
 
     # --- flagship consolidation ---
     needed = ["vendas_financeiro", "trafego_diario", "mapa_produtos_anuncios", "produtos_catalogo"]
@@ -130,8 +128,9 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
             spark.read.parquet(f"{marts}/produtos_catalogo"),
             day,
         )
-        upsert_to_path(rel, f"{marts}/relatorio_diario", ["data_relatorio", "id_anuncio_variacao"])
-        stats["relatorio_diario"] = rel.count()
+        stats["relatorio_diario"] = upsert_to_path(
+            rel, f"{marts}/relatorio_diario", ["data_relatorio", "id_anuncio_variacao"]
+        )
 
     return stats
 

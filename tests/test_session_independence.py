@@ -167,3 +167,38 @@ def test_side_marts_isolated_per_sf_dir(spark, tmp_path):
     assert b.count() == 7
     assert a.count() == 3
     assert _side_table(spark, dirs[0], "iso_probe", build(dirs[0])).count() == 3
+
+
+def test_epoch_us_is_zone_free_across_a_dst_gap(spark):
+    """1995-10-15 00:00 does not exist in America/Sao_Paulo (DST began at
+    midnight): ``timestampdiff`` from the NTZ epoch put it an hour late,
+    ``_epoch_us`` gives DuckDB's naive ``epoch_us``."""
+    from pipeline_etl_ecommerce_spark.testdata_queries import _epoch_us
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "America/Sao_Paulo"
+    naive = [
+        dt.datetime(1995, 10, 15),
+        dt.datetime(1995, 10, 15, 0, 30, 1, 250),
+        dt.datetime(2001, 3, 4, 13, 45, 10, 500000),
+    ]
+    df = spark.createDataFrame([(t,) for t in naive], "t timestamp_ntz")
+    got = [r[0] for r in df.select(_epoch_us("t")).collect()]
+    epoch = dt.datetime(1970, 1, 1)
+    assert got == [(t - epoch) // dt.timedelta(microseconds=1) for t in naive]
+
+
+def test_peak_concurrent_orders_matches_oracle_on_dst_gap_seed(spark, tmp_path):
+    """Seed 5 of the benchmark's tables puts the '4-NOT SPECIFIED' peak at
+    the 1995-10-15 DST-gap midnight: the row must equal its DuckDB oracle."""
+    import duckdb
+
+    from perfbench import tables
+    from pipeline_etl_ecommerce_spark.testdata_queries import oracle_sql, queries
+
+    pq.write_table(tables.build(5, 0.01)["orders"], str(tmp_path / "orders.parquet"))
+    got = {tuple(r) for r in queries()["peak_concurrent_orders"](spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')")
+    want = set(con.execute(oracle_sql()["peak_concurrent_orders"]).fetchall())
+    assert ("4-NOT SPECIFIED", 20, 814233600000000) in want
+    assert got == want
