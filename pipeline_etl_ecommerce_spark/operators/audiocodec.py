@@ -21,8 +21,9 @@ they are interleaving-sensitive enough to prove channel de-interleaving,
 and they hash stably for the DuckDB oracle.
 
 Scale note: per-payload and allocation-light (one ``array('h')`` bulk
-parse, channel sums via slice strides), sized for Arrow-batched
-mapInPandas where the payload column is projected away after this stage.
+parse, channel sums via slice strides), sized for the Arrow-batched
+``multimodal.row_kernel`` stages, where the payload column is projected away
+after this stage.
 """
 
 from __future__ import annotations

@@ -11,8 +11,8 @@ cross-representation equality proof, like the palette-PNG row.
 
 Same adversarial encode → opaque bytes → decode discipline as the other
 codecs: the encoder is only used by the synth stage; the decoder sees
-bytes it must actually parse. Spark-side both run under Arrow-batched
-``mapInPandas`` (cost-based media widen applies — LZW is a per-byte
+bytes it must actually parse. Spark-side both run under the Arrow-batched
+``multimodal.row_kernel`` (cost-based media widen applies — LZW is a per-byte
 Python loop, weight class with PNG).
 
 Public spec: GIF89a (CompuServe, 1990); LZW per the spec's Appendix F.

@@ -26,8 +26,9 @@ Also provided, same spirit:
 
 Scale note: all functions are per-payload and allocation-light (one bytes scan,
 no per-pixel Python objects — channel sums come from ``bytes`` slicing +
-``sum``/``memoryview`` strides), sized for Arrow-batched mapInPandas where the
-payload column is projected away immediately after this stage.
+``sum``/``memoryview`` strides), sized for the Arrow-batched
+``multimodal.row_kernel`` stages, where the payload column is projected away
+immediately after this stage.
 """
 
 from __future__ import annotations

@@ -30,8 +30,8 @@ tests/test_jpegcodec.py::TestBatchKernelBitIdentity and an r9
 before/after golden diff over 190 encode+decode cases) at ~4× the
 throughput; only the inherently serial Huffman bit-stream stays scalar.
 
-Scale note: per-payload, allocation-light, Arrow-batched via mapInPandas
-like the PPM/BMP/PNG kernels (operators/multimodal.py); at 100 TB the
+Scale note: per-payload, allocation-light, Arrow-batched through
+``multimodal.row_kernel`` like the PPM/BMP/PNG kernels; at 100 TB the
 kernel slot is where a SIMD codec library would drop in — the Spark-side
 plumbing (schema, dispatch, dead-letter rows, band checks) is identical.
 """

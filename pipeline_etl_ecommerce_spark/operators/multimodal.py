@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
-with typed metadata, processed through Arrow-batched ``mapInPandas``.
+with typed metadata, processed through one Arrow row-kernel wrapper
+(:func:`row_kernel`, over ``mapInArrow``) that every media stage shares.
 
 Since round 4 the uncompressed-format kernels are REAL: ``decode_image``
 dispatches on the payload magic to the dependency-free PPM/BMP parsers in
@@ -26,12 +27,13 @@ the bytes away, and only the small feature columns move afterwards.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -49,6 +51,54 @@ MEDIA_SCHEMA = StructType(
         StructField("payload", BinaryType()),
     ]
 )
+
+
+def row_kernel(
+    df: DataFrame,
+    in_cols: list[str],
+    fn: Callable[..., dict | Iterable[dict]],
+    schema: StructType,
+    *,
+    errors: tuple[type[BaseException], ...] = (),
+    status_col: str | None = None,
+) -> DataFrame:
+    """Run a per-row Python kernel over ``df[in_cols]`` as one Arrow-batched
+    ``mapInArrow`` stage: RecordBatches in and out, no pandas step, so an
+    int64 column keeps every bit even in a batch that holds NULLs.
+
+    ``fn`` receives one row's ``in_cols`` values positionally (a NULL
+    binary payload arrives as ``b""``) and returns one output row as a
+    dict, or an iterable of dicts for a one-to-many stage; keys missing
+    from a row are NULL, keys outside ``schema`` are ignored. The key
+    column ``in_cols[0]`` is copied into every output row. An exception in
+    ``errors`` adds one dead-letter row — the key, ``status_col`` set to
+    ``"error: <ExceptionName>"``, every other column NULL — after whatever
+    rows a generator kernel yielded before it raised. Any other exception
+    fails the task."""
+    key = in_cols[0]
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [
+                [b"" if v is None else v for v in c.to_pylist()]
+                if pa.types.is_binary(c.type) or pa.types.is_large_binary(c.type)
+                else c.to_pylist()
+                for c in batch.columns
+            ]
+            rows = []
+            for args in zip(*cols):
+                try:
+                    out = fn(*args)
+                    for row in [out] if isinstance(out, dict) else out:
+                        row[key] = args[0]
+                        rows.append(row)
+                except errors as e:
+                    rows.append({key: args[0], status_col: f"error: {type(e).__name__}"})
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.select(*in_cols).mapInArrow(run, schema)
+
 
 FEATURE_SCHEMA = StructType(
     [
@@ -102,27 +152,20 @@ def fake_decode(payload: bytes) -> dict:
     }
 
 
-def _batch_features(batches: Iterator[pd.DataFrame], kernel) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        feats = []
-        for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-            try:
-                f = kernel(bytes(payload) if payload is not None else b"")
-            except NotImplementedError:
-                f = {"n_bytes": None, "content_hash": None, "decode_status": "decoder_unavailable"}
-            f["media_id"] = media_id
-            feats.append(f)
-        yield pd.DataFrame(feats, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-
 def extract_features(media: DataFrame, kernel=fake_decode) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+    """Feature extraction over binary payloads through :func:`row_kernel`.
 
     Arrow moves the bytes into Python in columnar batches (never row-at-a-
-    time pickling); output carries only small feature columns."""
-    return media.select("media_id", "payload").mapInPandas(
-        lambda it: _batch_features(it, kernel), schema=FEATURE_SCHEMA
-    )
+    time pickling); output carries only small feature columns. A kernel
+    that raises NotImplementedError yields a ``decoder_unavailable`` row."""
+
+    def features(_media_id, payload):
+        try:
+            return kernel(payload)
+        except NotImplementedError:
+            return {"decode_status": "decoder_unavailable"}
+
+    return row_kernel(media, ["media_id", "payload"], features, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -220,23 +263,19 @@ def fake_resize(payload: bytes, width: int, height: int) -> dict:
 
 
 def resize_media(media: DataFrame, *, width: int, height: int, kernel=fake_resize) -> DataFrame:
-    """mapInPandas resize over binary payloads: one output row per input,
-    carrying the resized payload's size/hash instead of the bytes (project
-    the heavy column away before anything shuffles)."""
+    """Resize over binary payloads (:func:`row_kernel`): one output row per
+    input, carrying the resized payload's size/hash instead of the bytes
+    (project the heavy column away before anything shuffles). Every row,
+    ``decoder_unavailable`` ones included, carries the target dims."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    r = kernel(bytes(payload) if payload is not None else b"", width, height)
-                except NotImplementedError:
-                    r = {"n_bytes": None, "content_hash": None, "resize_status": "decoder_unavailable"}
-                r.update(media_id=media_id, width=width, height=height)
-                rows.append(r)
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def resize(_media_id, payload):
+        try:
+            r = kernel(payload, width, height)
+        except NotImplementedError:
+            r = {"resize_status": "decoder_unavailable"}
+        return r | {"width": width, "height": height}
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
+    return row_kernel(media, ["media_id", "payload"], resize, RESIZE_SCHEMA)
 
 
 def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
@@ -254,12 +293,6 @@ def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
             from .videocodec import demux_avi
 
             info = demux_avi(payload)
-            total = info["n_frames"]
-            keep = (
-                range(total)
-                if n_frames >= total
-                else sorted({j * total // n_frames for j in range(n_frames)})
-            )
             return [
                 {
                     "frame_index": i,
@@ -272,7 +305,7 @@ def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
                     ).hexdigest(),
                     "sample_status": "ok",
                 }
-                for i in keep
+                for i in _even_sample(info["n_frames"], n_frames)
             ]
         if payload[:6] in (b"GIF87a", b"GIF89a"):
             # REAL animated-GIF sampling (r8): every frame's LZW stream must
@@ -295,11 +328,6 @@ def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
             "GIF parse here"
         )
     frames = [frame for _off, frame in iter_ppm_stream(payload)]
-    total = len(frames)
-    if n_frames >= total:
-        keep = range(total)  # fewer frames than requested: take each once
-    else:
-        keep = sorted({j * total // n_frames for j in range(n_frames)})
     return [
         {
             "frame_index": i,
@@ -307,8 +335,17 @@ def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
             "frame_hash": hashlib.md5(frames[i]).hexdigest(),
             "sample_status": "ok",
         }
-        for i in keep
+        for i in _even_sample(len(frames), n_frames)
     ]
+
+
+def _even_sample(total: int, n_frames: int) -> Iterable[int]:
+    """``n_frames`` evenly spaced indices out of ``total`` (floor map
+    ``j*total//n``); every index once when there are fewer frames than
+    requested."""
+    if n_frames >= total:
+        return range(total)
+    return sorted({j * total // n_frames for j in range(n_frames)})
 
 
 def fake_frame_sample(payload: bytes, n_frames: int) -> list[dict]:
@@ -330,26 +367,18 @@ def fake_frame_sample(payload: bytes, n_frames: int) -> list[dict]:
 
 
 def sample_frames(media: DataFrame, *, n_frames: int = 4, kernel=fake_frame_sample) -> DataFrame:
-    """One-to-MANY mapInPandas: each media row yields ``n_frames`` frame rows
-    (the UDTF-ish shape a video pipeline needs — batch in, bigger batch out).
-    Frame payload bytes never leave the stage; only index + hash + size do."""
+    """One-to-MANY :func:`row_kernel` stage: each media row yields
+    ``n_frames`` frame rows (the UDTF-ish shape a video pipeline needs —
+    batch in, bigger batch out). Frame payload bytes never leave the stage;
+    only index + hash + size do."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = kernel(bytes(payload) if payload is not None else b"", n_frames)
-                except NotImplementedError:
-                    frames = [
-                        {"frame_index": None, "n_bytes": None, "frame_hash": None, "sample_status": "decoder_unavailable"}
-                    ]
-                for f in frames:
-                    f["media_id"] = media_id
-                    rows.append(f)
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def frames(_media_id, payload):
+        try:
+            return kernel(payload, n_frames)
+        except NotImplementedError:
+            return [{"sample_status": "decoder_unavailable"}]
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=FRAME_SCHEMA)
+    return row_kernel(media, ["media_id", "payload"], frames, FRAME_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -375,8 +404,6 @@ IMAGE_STATS_SCHEMA = StructType(
         StructField("decode_status", StringType()),
     ]
 )
-
-_STATS_COLS = [f.name for f in IMAGE_STATS_SCHEMA.fields]
 
 
 def synth_raster(media_id: int) -> tuple[int, int, bytes]:
@@ -497,7 +524,7 @@ _WIDEN_WEIGHT_MIN = 40
 
 
 def synthesize_images(media_ids: DataFrame, *, fmt: str) -> DataFrame:
-    """mapInPandas encode stage: one valid PPM/BMP/PNG/JPEG payload per id.
+    """:func:`row_kernel` encode stage: one valid PPM/BMP/PNG/JPEG payload per id.
     The encoder is separate from the decoder on purpose — the decode stage
     receives opaque bytes it must actually parse (headers, comments, BMP
     bottom-up padded BGR rows, JPEG entropy stream), not a dict handed
@@ -563,134 +590,101 @@ def synthesize_images(media_ids: DataFrame, *, fmt: str) -> DataFrame:
     if _KERNEL_WEIGHT[fmt] >= _WIDEN_WEIGHT_MIN:
         media_ids = _widen(media_ids)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                w, h, raster = raster_fn(int(media_id))
-                if fmt == "jpeg":
-                    # ids % 4 == 0 carry a DRI restart interval: the decoder
-                    # must handle byte-aligned RSTn + predictor resets every
-                    # round (coefficients are identical, so the decoded
-                    # pixels — and the band oracle — are unchanged).
-                    # Independent of the id%3 subsampling rotation, so DRI
-                    # runs against every component layout.
-                    payload = encode_jpeg(
-                        w,
-                        h,
-                        raster,
-                        subsampling=jpeg_subsampling_for(int(media_id)),
-                        restart_interval=2 if int(media_id) % 4 == 0 else 0,
-                    )
-                elif fmt == "jpeg_progressive":
-                    # full Annex G script: DC successive approximation + per-
-                    # component spectral bands each with a refinement pass —
-                    # every progressive decoder path runs on every image; the
-                    # same id%3 subsampling rotation as the baseline row
-                    from .jpegcodec import encode_jpeg_progressive
+    def synth(media_id):
+        w, h, raster = raster_fn(media_id)
+        if fmt == "jpeg":
+            # ids % 4 == 0 carry a DRI restart interval: the decoder
+            # must handle byte-aligned RSTn + predictor resets every
+            # round (coefficients are identical, so the decoded
+            # pixels — and the band oracle — are unchanged).
+            # Independent of the id%3 subsampling rotation, so DRI
+            # runs against every component layout.
+            payload = encode_jpeg(
+                w, h, raster,
+                subsampling=jpeg_subsampling_for(media_id),
+                restart_interval=2 if media_id % 4 == 0 else 0,
+            )
+        elif fmt == "jpeg_progressive":
+            # full Annex G script: DC successive approximation + per-
+            # component spectral bands each with a refinement pass —
+            # every progressive decoder path runs on every image; the
+            # same id%3 subsampling rotation as the baseline row
+            from .jpegcodec import encode_jpeg_progressive
 
-                    payload = encode_jpeg_progressive(
-                        w, h, raster,
-                        subsampling=jpeg_subsampling_for(int(media_id)),
-                    )
-                elif fmt == "png":
-                    # ids % 7 == 0 store the Adam7 interlaced layout — the
-                    # decoder reassembles the 7 pass sub-images every round
-                    # (pure re-layout: decoded pixels — and the formula
-                    # oracle — are unchanged)
-                    payload = encode_png(
-                        w, h, raster, interlace=int(media_id) % 7 == 0
-                    )
-                elif fmt == "png_colorkey":
-                    # key = pixel 0's triple: every image carries at least
-                    # one transparent pixel, the % 32 raster period adds
-                    # more at p = 32, 64 where the image is large enough
-                    payload = encode_png(
-                        w, h, raster, color_key=(raster[0], raster[1], raster[2])
-                    )
-                elif fmt == "png_16bit":
-                    # same interlace rotation as the truecolor row: the
-                    # depth-16 Adam7 path runs at every SF
-                    payload = encode_png(
-                        w, h, raster, depth=16, interlace=int(media_id) % 7 == 0
-                    )
-                elif fmt == "png_lowdepth":
-                    # depth rotates 1/2/4 on id%3 inside the synth; the
-                    # same id%7 interlace rotation as the other PNG rows,
-                    # so sub-byte Adam7 (per-pass bit packing) runs every
-                    # round
-                    w, h, dep, raster = synth_raster_lowdepth(int(media_id))
-                    payload = encode_png(
-                        w, h, raster, channels=1, depth=dep,
-                        interlace=int(media_id) % 7 == 0,
-                    )
-                elif fmt == "gif":
-                    # ids % 5 == 0 store the 4-pass GIF interlace — the
-                    # decoder reassembles the row order every round (pure
-                    # re-layout; the formula oracle is unchanged)
-                    from .gifcodec import encode_gif
+            payload = encode_jpeg_progressive(
+                w, h, raster, subsampling=jpeg_subsampling_for(media_id)
+            )
+        elif fmt == "png":
+            # ids % 7 == 0 store the Adam7 interlaced layout — the
+            # decoder reassembles the 7 pass sub-images every round
+            # (pure re-layout: decoded pixels — and the formula
+            # oracle — are unchanged)
+            payload = encode_png(w, h, raster, interlace=media_id % 7 == 0)
+        elif fmt == "png_colorkey":
+            # key = pixel 0's triple: every image carries at least
+            # one transparent pixel, the % 32 raster period adds
+            # more at p = 32, 64 where the image is large enough
+            payload = encode_png(
+                w, h, raster, color_key=(raster[0], raster[1], raster[2])
+            )
+        elif fmt == "png_16bit":
+            # same interlace rotation as the truecolor row: the
+            # depth-16 Adam7 path runs at every SF
+            payload = encode_png(w, h, raster, depth=16, interlace=media_id % 7 == 0)
+        elif fmt == "png_lowdepth":
+            # depth rotates 1/2/4 on id%3 inside the synth; the
+            # same id%7 interlace rotation as the other PNG rows,
+            # so sub-byte Adam7 (per-pass bit packing) runs every
+            # round
+            w, h, dep, raster = synth_raster_lowdepth(media_id)
+            payload = encode_png(
+                w, h, raster, channels=1, depth=dep, interlace=media_id % 7 == 0
+            )
+        elif fmt == "gif":
+            # ids % 5 == 0 store the 4-pass GIF interlace — the
+            # decoder reassembles the row order every round (pure
+            # re-layout; the formula oracle is unchanged)
+            from .gifcodec import encode_gif
 
-                    payload = encode_gif(w, h, raster, interlace=int(media_id) % 5 == 0)
-                else:
-                    payload = encode(w, h, raster)
-                rows.append(
-                    {"media_id": media_id, "mime_type": mime, "payload": payload}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+            payload = encode_gif(w, h, raster, interlace=media_id % 5 == 0)
+        else:
+            payload = encode(w, h, raster)
+        return {"mime_type": mime, "payload": payload}
 
-    return media_ids.select("media_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(media_ids, ["media_id"], synth, MEDIA_SCHEMA)
 
 
 def extract_image_stats(media: DataFrame) -> DataFrame:
-    """mapInPandas REAL-decode stage over binary payloads: parses each payload
-    with :func:`decode_image` (PPM/BMP dispatch) and emits exact pixel stats.
-    Malformed payloads degrade to a status row instead of failing the batch
-    (dead-letter semantics, same policy as the JSON quarantine ingest)."""
+    """:func:`row_kernel` REAL-decode stage over binary payloads: parses each
+    payload with :func:`decode_image` (PPM/BMP dispatch) and emits exact
+    pixel stats. Malformed payloads degrade to a status row instead of
+    failing the batch (dead-letter semantics, same policy as the JSON
+    quarantine ingest)."""
     from .imagecodec import DecodeError
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    stats = decode_image(bytes(payload) if payload is not None else b"")
-                    stats["decode_status"] = "ok"
-                except (DecodeError, NotImplementedError) as e:
-                    stats = dict.fromkeys(_STATS_COLS[1:-1])
-                    stats["decode_status"] = f"error: {type(e).__name__}"
-                stats["media_id"] = media_id
-                rows.append(stats)
-            yield pd.DataFrame(rows, columns=_STATS_COLS)
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"],
+        lambda _media_id, payload: decode_image(payload) | {"decode_status": "ok"},
+        IMAGE_STATS_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="decode_status",
+    )
 
 
 def resize_image_stats(media: DataFrame, *, width: int, height: int) -> DataFrame:
-    """mapInPandas REAL-resize stage: nearest-neighbor-resample each payload
+    """:func:`row_kernel` REAL-resize stage: nearest-neighbor-resample each payload
     (format-dispatched — PPM or PNG, floor index map), then decode the
     RESIZED image and emit its exact pixel stats — which the SQL oracle
     reproduces by replaying the index map over the synthesis formula.
     Proves the resampler end-to-end, not just that some bytes came back."""
     from .imagecodec import DecodeError
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    resized = _resize_payload(
-                        bytes(payload) if payload is not None else b"", width, height
-                    )
-                    stats = decode_image(resized)
-                    stats["decode_status"] = "ok"
-                except (DecodeError, NotImplementedError) as e:
-                    stats = dict.fromkeys(_STATS_COLS[1:-1])
-                    stats["decode_status"] = f"error: {type(e).__name__}"
-                stats["media_id"] = media_id
-                rows.append(stats)
-            yield pd.DataFrame(rows, columns=_STATS_COLS)
+    def resized_stats(_media_id, payload):
+        return decode_image(_resize_payload(payload, width, height)) | {"decode_status": "ok"}
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], resized_stats, IMAGE_STATS_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="decode_status",
+    )
 
 
 FRAME_STATS_SCHEMA = StructType(
@@ -719,65 +713,40 @@ def synthesize_ppm_streams(media_ids: DataFrame) -> DataFrame:
     must genuinely split and parse the stream."""
     from .imagecodec import encode_ppm
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                mid = int(media_id)
-                n = 2 + mid % 4
-                stream = b"".join(
-                    encode_ppm(4, 2, synth_stream_raster(mid, f)) for f in range(n)
-                )
-                rows.append(
-                    {"media_id": media_id, "mime_type": "video/x-ppm-stream", "payload": stream}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def synth(media_id):
+        stream = b"".join(
+            encode_ppm(4, 2, synth_stream_raster(media_id, f)) for f in range(2 + media_id % 4)
+        )
+        return {"mime_type": "video/x-ppm-stream", "payload": stream}
 
-    return media_ids.select("media_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(media_ids, ["media_id"], synth, MEDIA_SCHEMA)
 
 
 def sample_frame_stats(media: DataFrame, *, n_frames: int) -> DataFrame:
-    """mapInPandas REAL frame sampling with decoded stats: split the
+    """:func:`row_kernel` REAL frame sampling with decoded stats: split the
     concatenated-P6 stream, keep ``n_frames`` evenly spaced frames (floor map
     ``j*total//n``), decode each kept frame and emit its channel sums — all
     replayable by the oracle. One-to-many (UDTF shape); payload bytes never
     leave the stage."""
     from .imagecodec import DecodeError, decode_ppm, iter_ppm_stream
 
-    cols = [f.name for f in FRAME_STATS_SCHEMA.fields]
+    def frame_stats(_media_id, payload):
+        frames = [f for _o, f in iter_ppm_stream(payload)]
+        for i in _even_sample(len(frames), n_frames):
+            d = decode_ppm(frames[i])
+            yield {
+                "frame_index": i,
+                "n_frames_total": len(frames),
+                "sum_r": d["sum_r"],
+                "sum_g": d["sum_g"],
+                "sum_b": d["sum_b"],
+                "sample_status": "ok",
+            }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = [f for _o, f in iter_ppm_stream(bytes(payload))]
-                    total = len(frames)
-                    if n_frames >= total:
-                        keep = range(total)
-                    else:
-                        keep = sorted({j * total // n_frames for j in range(n_frames)})
-                    for i in keep:
-                        d = decode_ppm(frames[i])
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "frame_index": i,
-                                "n_frames_total": total,
-                                "sum_r": d["sum_r"],
-                                "sum_g": d["sum_g"],
-                                "sum_b": d["sum_b"],
-                                "sample_status": "ok",
-                            }
-                        )
-                except (DecodeError, NotImplementedError) as e:
-                    rows.append(
-                        dict.fromkeys(cols)
-                        | {"media_id": media_id, "sample_status": f"error: {type(e).__name__}"}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=FRAME_STATS_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], frame_stats, FRAME_STATS_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="sample_status",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -804,8 +773,6 @@ AUDIO_STATS_SCHEMA = StructType(
     ]
 )
 
-_AUDIO_COLS = [f.name for f in AUDIO_STATS_SCHEMA.fields]
-
 
 def synth_pcm(media_id: int) -> tuple[int, int, list[int]]:
     """Deterministic interleaved PCM stream for ``media_id``: channels
@@ -821,50 +788,31 @@ def synth_pcm(media_id: int) -> tuple[int, int, list[int]]:
 
 
 def synthesize_wavs(media_ids: DataFrame) -> DataFrame:
-    """mapInPandas encode stage: one valid RIFF/WAVE payload per id (odd-sized
+    """:func:`row_kernel` encode stage: one valid RIFF/WAVE payload per id (odd-sized
     JUNK chunk ahead of ``fmt `` — the decode stage must genuinely walk the
     chunk list, not read fixed offsets)."""
     from .audiocodec import encode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                rate, channels, samples = synth_pcm(int(media_id))
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "mime_type": "audio/wav",
-                        "payload": encode_wav(rate, channels, samples),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return media_ids.select("media_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(
+        media_ids, ["media_id"],
+        lambda media_id: {"mime_type": "audio/wav", "payload": encode_wav(*synth_pcm(media_id))},
+        MEDIA_SCHEMA,
+    )
 
 
 def extract_audio_stats(media: DataFrame) -> DataFrame:
-    """mapInPandas REAL-decode stage over binary payloads: parses each WAV
+    """:func:`row_kernel` REAL-decode stage over binary payloads: parses each WAV
     with :func:`.audiocodec.decode_wav` (chunk walk, pad bytes, channel
     de-interleave) and emits exact sample stats. Malformed payloads degrade
     to a status row (dead-letter semantics, same policy as the image path)."""
     from .audiocodec import DecodeError, decode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    stats = decode_wav(bytes(payload) if payload is not None else b"")
-                    stats["decode_status"] = "ok"
-                except (DecodeError, NotImplementedError) as e:
-                    stats = dict.fromkeys(_AUDIO_COLS[1:-1])
-                    stats["decode_status"] = f"error: {type(e).__name__}"
-                stats["media_id"] = media_id
-                rows.append(stats)
-            yield pd.DataFrame(rows, columns=_AUDIO_COLS)
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"],
+        lambda _media_id, payload: decode_wav(payload) | {"decode_status": "ok"},
+        AUDIO_STATS_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="decode_status",
+    )
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -878,8 +826,6 @@ AUDIO_FEATURES_SCHEMA = StructType(
         StructField("feature_status", StringType()),
     ]
 )
-
-_AUDIO_FEATURE_COLS = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
@@ -895,35 +841,24 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     noise ⇒ high ZCR)."""
     from .audiocodec import DecodeError, decode_wav_samples
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, nch, pcm = decode_wav_samples(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    # vectorized (r9): pure integer reductions over int64 —
-                    # exact, identical to the former generator loops
-                    ch0 = np.asarray(pcm[0::nch], dtype=np.int64)
-                    feats = {
-                        "n_frames": int(ch0.size),
-                        "energy_ch0": int((ch0 * ch0).sum()),
-                        "zero_crossings_ch0": int(
-                            ((ch0[:-1] < 0) != (ch0[1:] < 0)).sum()
-                        ),
-                        "sum_abs_delta_ch0": int(np.abs(ch0[1:] - ch0[:-1]).sum()),
-                        "peak_abs_ch0": int(np.abs(ch0).max()) if ch0.size else 0,
-                        "feature_status": "ok",
-                    }
-                except (DecodeError, NotImplementedError) as e:
-                    feats = dict.fromkeys(_AUDIO_FEATURE_COLS[1:-1])
-                    feats["feature_status"] = f"error: {type(e).__name__}"
-                feats["media_id"] = media_id
-                rows.append(feats)
-            yield pd.DataFrame(rows, columns=_AUDIO_FEATURE_COLS)
+    def features(_media_id, payload):
+        _rate, nch, pcm = decode_wav_samples(payload)
+        # vectorized (r9): pure integer reductions over int64 —
+        # exact, identical to the former generator loops
+        ch0 = np.asarray(pcm[0::nch], dtype=np.int64)
+        return {
+            "n_frames": int(ch0.size),
+            "energy_ch0": int((ch0 * ch0).sum()),
+            "zero_crossings_ch0": int(((ch0[:-1] < 0) != (ch0[1:] < 0)).sum()),
+            "sum_abs_delta_ch0": int(np.abs(ch0[1:] - ch0[:-1]).sum()),
+            "peak_abs_ch0": int(np.abs(ch0).max()) if ch0.size else 0,
+            "feature_status": "ok",
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], features, AUDIO_FEATURES_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="feature_status",
+    )
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:
@@ -960,8 +895,6 @@ JPEG_BAND_SCHEMA = StructType(
     ]
 )
 
-_JPEG_BAND_COLS = [f.name for f in JPEG_BAND_SCHEMA.fields]
-
 # Measured on the smooth synth raster: worst per-pixel abs err = 1 at both
 # subsamplings with the all-ones quant tables. Bands carry 4× headroom for
 # the color-transform corner cases a future image might hit; a REAL decoder
@@ -989,7 +922,7 @@ def _band_errors(got: bytes, orig: bytes) -> tuple[int, bool, int]:
 
 
 def jpeg_decode_band_stats(media: DataFrame) -> DataFrame:
-    """mapInPandas REAL-JPEG-decode stage: parse each payload with the
+    """:func:`row_kernel` REAL-JPEG-decode stage: parse each payload with the
     baseline decoder, regenerate the pre-encode raster from the media id
     (``synth_raster_smooth``) and emit header facts + fidelity-band
     booleans. Malformed payloads degrade to a status row (dead-letter
@@ -997,38 +930,31 @@ def jpeg_decode_band_stats(media: DataFrame) -> DataFrame:
     from .imagecodec import DecodeError
     from .jpegcodec import decode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    st = decode_jpeg(bytes(payload) if payload is not None else b"")
-                    w, h, orig = synth_raster_smooth(int(media_id))
-                    got = st["raster"]
-                    dims_ok = st["width"] == w and st["height"] == h and len(got) == len(orig)
-                    if dims_ok:
-                        max_err, sums_ok, _ = _band_errors(got, orig)
-                    else:
-                        max_err, sums_ok = None, False
-                    row = {
-                        "width": st["width"],
-                        "height": st["height"],
-                        "channels": st["channels"],
-                        "subsampling": st["subsampling"],
-                        "pixels_in_band": bool(
-                            dims_ok and max_err is not None and max_err <= JPEG_MAX_ABS_PIXEL_ERR
-                        ),
-                        "sums_in_band": bool(dims_ok and sums_ok),
-                        "decode_status": "ok",
-                    }
-                except (DecodeError, NotImplementedError) as e:
-                    row = dict.fromkeys(_JPEG_BAND_COLS[1:-1])
-                    row["decode_status"] = f"error: {type(e).__name__}"
-                row["media_id"] = media_id
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=_JPEG_BAND_COLS)
+    def band_stats(media_id, payload):
+        st = decode_jpeg(payload)
+        w, h, orig = synth_raster_smooth(media_id)
+        got = st["raster"]
+        dims_ok = st["width"] == w and st["height"] == h and len(got) == len(orig)
+        if dims_ok:
+            max_err, sums_ok, _ = _band_errors(got, orig)
+        else:
+            max_err, sums_ok = None, False
+        return {
+            "width": st["width"],
+            "height": st["height"],
+            "channels": st["channels"],
+            "subsampling": st["subsampling"],
+            "pixels_in_band": bool(
+                dims_ok and max_err is not None and max_err <= JPEG_MAX_ABS_PIXEL_ERR
+            ),
+            "sums_in_band": bool(dims_ok and sums_ok),
+            "decode_status": "ok",
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=JPEG_BAND_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], band_stats, JPEG_BAND_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="decode_status",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1066,7 +992,7 @@ def synth_video_raster(media_id: int, frame_index: int) -> tuple[int, int, bytes
 
 
 def synthesize_avis(media_ids: DataFrame) -> DataFrame:
-    """mapInPandas encode stage: one valid single-stream MJPEG AVI per id
+    """:func:`row_kernel` encode stage: one valid single-stream MJPEG AVI per id
     with ``2 + id%3`` frames; even ids encode frames 4:4:4, odd 4:2:0, so
     both MCU layouts cross the container path every round; fps = 12 + id%5
     exercises the dwRate/dwScale arithmetic."""
@@ -1074,30 +1000,19 @@ def synthesize_avis(media_ids: DataFrame) -> DataFrame:
     from .jpegcodec import encode_jpeg
     from .videocodec import encode_avi_mjpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                mid = int(media_id)
-                n = 2 + mid % 3
-                frames = []
-                w = h = 0
-                for f in range(n):
-                    w, h, raster = synth_video_raster(mid, f)
-                    frames.append(
-                        encode_jpeg(
-                            w, h, raster,
-                            subsampling="4:4:4" if mid % 2 == 0 else "4:2:0",
-                        )
-                    )
-                payload = encode_avi_mjpeg(w, h, frames, fps=12 + mid % 5)
-                rows.append(
-                    {"media_id": media_id, "mime_type": "video/x-msvideo", "payload": payload}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def synth(media_id):
+        frames = []
+        w = h = 0
+        for f in range(2 + media_id % 3):
+            w, h, raster = synth_video_raster(media_id, f)
+            frames.append(
+                encode_jpeg(w, h, raster, subsampling="4:4:4" if media_id % 2 == 0 else "4:2:0")
+            )
+        payload = encode_avi_mjpeg(w, h, frames, fps=12 + media_id % 5)
+        return {"mime_type": "video/x-msvideo", "payload": payload}
 
     # MJPEG = JPEG per frame: always above the cost-based widen threshold.
-    return _widen(media_ids.select("media_id")).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(_widen(media_ids.select("media_id")), ["media_id"], synth, MEDIA_SCHEMA)
 
 
 DHASH_SCHEMA = StructType(
@@ -1110,8 +1025,6 @@ DHASH_SCHEMA = StructType(
         StructField("hash_status", StringType()),
     ]
 )
-_DHASH_COLS = [f.name for f in DHASH_SCHEMA.fields]
-
 
 def decode_image_raster(payload: bytes) -> tuple[int, int, np.ndarray]:
     """REAL pixel decode for the perceptual-hash path: dispatch on the
@@ -1171,37 +1084,28 @@ def perceptual_dhash(media: DataFrame) -> DataFrame:
     standard near-duplicate IMAGE signal: crops/recompressions/brightness
     shifts that defeat byte hashing keep the gradient signs; because the
     hash is computed from decoded PIXELS, the same image stored as PPM,
-    BMP, PNG or GIF hashes IDENTICALLY (pinned in tests). Arrow
-    mapInPandas, dead-letter rows on malformed/undecodable payloads (the
-    media-path policy)."""
+    BMP, PNG or GIF hashes IDENTICALLY (pinned in tests). One
+    :func:`row_kernel` stage, dead-letter rows on malformed/undecodable
+    payloads (the media-path policy)."""
     from .imagecodec import DecodeError  # gif/jpeg codecs raise this same class
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, gray = decode_image_raster(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    sub = gray[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
-                    bits = (sub[:, 1:] > sub[:, :-1]).astype(np.int64).reshape(64)
-                    weights = np.int64(1) << (31 - np.arange(32, dtype=np.int64))
-                    row = {
-                        "width": w,
-                        "height": h,
-                        "dhash_hi": int((bits[:32] * weights).sum()),
-                        "dhash_lo": int((bits[32:] * weights).sum()),
-                        "hash_status": "ok",
-                    }
-                except (DecodeError, NotImplementedError) as e:
-                    row = dict.fromkeys(_DHASH_COLS[1:-1])
-                    row["hash_status"] = f"error: {type(e).__name__}"
-                row["media_id"] = media_id
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=_DHASH_COLS)
+    def dhash(_media_id, payload):
+        w, h, gray = decode_image_raster(payload)
+        sub = gray[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
+        bits = (sub[:, 1:] > sub[:, :-1]).astype(np.int64).reshape(64)
+        weights = np.int64(1) << (31 - np.arange(32, dtype=np.int64))
+        return {
+            "width": w,
+            "height": h,
+            "dhash_hi": int((bits[:32] * weights).sum()),
+            "dhash_lo": int((bits[32:] * weights).sum()),
+            "hash_status": "ok",
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=DHASH_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], dhash, DHASH_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="hash_status",
+    )
 
 
 def dhash_near_pairs(hashes: DataFrame, *, max_hamming: int = 3) -> DataFrame:
@@ -1346,61 +1250,40 @@ AVI_BAND_SCHEMA = StructType(
     ]
 )
 
-_AVI_BAND_COLS = [f.name for f in AVI_BAND_SCHEMA.fields]
-
 
 def avi_frame_band_stats(media: DataFrame, *, n_frames: int = 2) -> DataFrame:
-    """mapInPandas REAL demux+decode stage: walk the RIFF container, verify
+    """:func:`row_kernel` REAL demux+decode stage: walk the RIFF container, verify
     idx1 against the movi scan, decode ONLY the ``n_frames`` sampled frames
     through the baseline JPEG codec, and band-check each against the
     regenerated ``synth_video_raster``. One output row per sampled frame;
     malformed payloads degrade to a status row (dead-letter semantics)."""
     from .imagecodec import DecodeError
-    from .videocodec import sample_avi_frames
+    from .videocodec import demux_avi, sample_avi_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                mid = int(media_id)
-                try:
-                    info_rows = sample_avi_frames(
-                        bytes(payload) if payload is not None else b"", n_frames
-                    )
-                    from .videocodec import demux_avi
+    def frame_bands(media_id, payload):
+        info_rows = sample_avi_frames(payload, n_frames)
+        fps = demux_avi(payload)["fps"]
+        for fr in info_rows:
+            w, h, orig = synth_video_raster(media_id, fr["frame_index"])
+            got = fr["raster"]
+            dims_ok = fr["width"] == w and fr["height"] == h and len(got) == len(orig)
+            max_err = _band_errors(got, orig)[0] if dims_ok else None
+            yield {
+                "frame_index": fr["frame_index"],
+                "n_frames_total": fr["n_frames_total"],
+                "width": fr["width"],
+                "height": fr["height"],
+                "fps": fps,
+                "pixels_in_band": bool(
+                    dims_ok and max_err is not None and max_err <= JPEG_MAX_ABS_PIXEL_ERR
+                ),
+                "sample_status": "ok",
+            }
 
-                    fps = demux_avi(bytes(payload))["fps"]
-                    for fr in info_rows:
-                        w, h, orig = synth_video_raster(mid, fr["frame_index"])
-                        got = fr["raster"]
-                        dims_ok = (
-                            fr["width"] == w and fr["height"] == h and len(got) == len(orig)
-                        )
-                        max_err = _band_errors(got, orig)[0] if dims_ok else None
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "frame_index": fr["frame_index"],
-                                "n_frames_total": fr["n_frames_total"],
-                                "width": fr["width"],
-                                "height": fr["height"],
-                                "fps": fps,
-                                "pixels_in_band": bool(
-                                    dims_ok
-                                    and max_err is not None
-                                    and max_err <= JPEG_MAX_ABS_PIXEL_ERR
-                                ),
-                                "sample_status": "ok",
-                            }
-                        )
-                except (DecodeError, NotImplementedError, ValueError) as e:
-                    row = dict.fromkeys(_AVI_BAND_COLS[1:-1])
-                    row["media_id"] = media_id
-                    row["sample_status"] = f"error: {type(e).__name__}"
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=_AVI_BAND_COLS)
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=AVI_BAND_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], frame_bands, AVI_BAND_SCHEMA,
+        errors=(DecodeError, NotImplementedError, ValueError), status_col="sample_status",
+    )
 
 
 AUDIO_FRAME_SCHEMA = StructType(
@@ -1412,8 +1295,6 @@ AUDIO_FRAME_SCHEMA = StructType(
         StructField("frame_status", StringType()),
     ]
 )
-
-_AUDIO_FRAME_COLS = [f.name for f in AUDIO_FRAME_SCHEMA.fields]
 
 
 def extract_audio_frames(media: DataFrame, *, window: int = 8, hop: int = 4) -> DataFrame:
@@ -1428,63 +1309,40 @@ def extract_audio_frames(media: DataFrame, *, window: int = 8, hop: int = 4) -> 
     band rows."""
     from .audiocodec import DecodeError, decode_wav_samples
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, nch, pcm = decode_wav_samples(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    ch0 = pcm[0::nch]
-                    n = len(ch0)
-                    for f in range((n - window) // hop + 1 if n >= window else 0):
-                        fr = ch0[f * hop : f * hop + window]
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "frame_index": f,
-                                "frame_energy": sum(v * v for v in fr),
-                                "frame_peak": max(abs(v) for v in fr),
-                                "frame_status": "ok",
-                            }
-                        )
-                except (DecodeError, NotImplementedError) as e:
-                    row = dict.fromkeys(_AUDIO_FRAME_COLS[1:-1])
-                    row["media_id"] = media_id
-                    row["frame_status"] = f"error: {type(e).__name__}"
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=_AUDIO_FRAME_COLS)
+    def frames(_media_id, payload):
+        _rate, nch, pcm = decode_wav_samples(payload)
+        ch0 = pcm[0::nch]
+        n = len(ch0)
+        for f in range((n - window) // hop + 1 if n >= window else 0):
+            fr = ch0[f * hop : f * hop + window]
+            yield {
+                "frame_index": f,
+                "frame_energy": sum(v * v for v in fr),
+                "frame_peak": max(abs(v) for v in fr),
+                "frame_status": "ok",
+            }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=AUDIO_FRAME_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], frames, AUDIO_FRAME_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="frame_status",
+    )
 
 
 def synthesize_gif_animations(media_ids: DataFrame) -> DataFrame:
-    """mapInPandas encode stage: one animated GIF per id with ``2 + id%3``
+    """:func:`row_kernel` encode stage: one animated GIF per id with ``2 + id%3``
     full frames from ``synth_video_raster`` (the AVI row's formula — the
     same clip in a lossless format, so this row's oracle is EXACT where
     AVI's is banded), NETSCAPE loop extension, per-frame GCE delays."""
     from .gifcodec import encode_gif_animation
     from .importance import _widen
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                mid = int(media_id)
-                n = 2 + mid % 3
-                frames = [synth_video_raster(mid, f)[2] for f in range(n)]
-                w, h, _ = synth_video_raster(mid, 0)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "mime_type": "image/gif",
-                        "payload": encode_gif_animation(w, h, frames, delay_cs=4 + mid % 7),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def synth(media_id):
+        frames = [synth_video_raster(media_id, f)[2] for f in range(2 + media_id % 3)]
+        w, h, _ = synth_video_raster(media_id, 0)
+        payload = encode_gif_animation(w, h, frames, delay_cs=4 + media_id % 7)
+        return {"mime_type": "image/gif", "payload": payload}
 
-    return _widen(media_ids.select("media_id")).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(_widen(media_ids.select("media_id")), ["media_id"], synth, MEDIA_SCHEMA)
 
 
 GIF_ANIM_SCHEMA = StructType(
@@ -1501,44 +1359,30 @@ GIF_ANIM_SCHEMA = StructType(
     ]
 )
 
-_GIF_ANIM_COLS = [f.name for f in GIF_ANIM_SCHEMA.fields]
-
 
 def gif_anim_frame_stats(media: DataFrame, *, n_frames: int = 2) -> DataFrame:
-    """mapInPandas REAL animated-GIF sampling: iterate the LZW frames
+    """:func:`row_kernel` REAL animated-GIF sampling: iterate the LZW frames
     (compositing canvases — GIF frames are deltas), keep the evenly-spaced
     sample, and emit EXACT per-frame channel sums the formula oracle
     replays (lossless codec ⇒ exact hash, no band needed)."""
     from .gifcodec import sample_gif_frames
     from .imagecodec import DecodeError
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    for fr in sample_gif_frames(
-                        bytes(payload) if payload is not None else b"", n_frames
-                    ):
-                        raster = fr["raster"]
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "frame_index": fr["frame_index"],
-                                "n_frames_total": fr["n_frames_total"],
-                                "width": fr["width"],
-                                "height": fr["height"],
-                                "sum_r": sum(raster[0::3]),
-                                "sum_g": sum(raster[1::3]),
-                                "sum_b": sum(raster[2::3]),
-                                "sample_status": "ok",
-                            }
-                        )
-                except (DecodeError, NotImplementedError) as e:
-                    row = dict.fromkeys(_GIF_ANIM_COLS[1:-1])
-                    row["media_id"] = media_id
-                    row["sample_status"] = f"error: {type(e).__name__}"
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=_GIF_ANIM_COLS)
+    def frame_stats(_media_id, payload):
+        for fr in sample_gif_frames(payload, n_frames):
+            raster = fr["raster"]
+            yield {
+                "frame_index": fr["frame_index"],
+                "n_frames_total": fr["n_frames_total"],
+                "width": fr["width"],
+                "height": fr["height"],
+                "sum_r": sum(raster[0::3]),
+                "sum_g": sum(raster[1::3]),
+                "sum_b": sum(raster[2::3]),
+                "sample_status": "ok",
+            }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=GIF_ANIM_SCHEMA)
+    return row_kernel(
+        media, ["media_id", "payload"], frame_stats, GIF_ANIM_SCHEMA,
+        errors=(DecodeError, NotImplementedError), status_col="sample_status",
+    )

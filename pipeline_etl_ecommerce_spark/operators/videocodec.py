@@ -24,7 +24,7 @@ Layout notes (public spec: Microsoft "AVI RIFF File Reference" / OpenDML):
   demuxers trust idx1 and a corrupt index is the classic AVI failure.
 
 Scale design: the codec is a per-payload kernel — Spark-side it runs under
-``mapInPandas`` exactly like the image codecs (Arrow batches, linear
+``multimodal.row_kernel`` exactly like the image codecs (Arrow batches, linear
 map-only work, widened via the cost-based media policy: MJPEG weight =
 JPEG's). Frame sampling decodes ONLY the sampled frames — the demux walk
 is header arithmetic, so sampling k of n frames costs k decodes + O(n)

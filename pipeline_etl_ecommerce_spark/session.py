@@ -7,8 +7,10 @@ same configs are the ones we'd set on a 1000-executor cluster:
   at 100 TB the static shuffle-partition guess is always wrong; AQE fixes it.
 - ``spark.sql.shuffle.partitions`` sized to the local core count for tests;
   on a real cluster AQE's coalescing makes the initial number a ceiling.
-- Arrow enabled so any ``applyInPandas``/``mapInPandas`` operator (multimodal,
-  embedding kernels) moves data in vectorized batches, never row-at-a-time.
+- Arrow enabled so the ``applyInPandas``/``mapInPandas`` operators (scoring,
+  embedding kernels) move data in vectorized batches, never row-at-a-time;
+  the media stages' ``multimodal.row_kernel`` (``mapInArrow``) is Arrow by
+  construction.
 - Session timezone pinned to ``America/Sao_Paulo`` — the reference's business
   timezone (reference ``tarefa_coletar_financas.php:89-91``); date-grain
   semantics must be stable regardless of host tz.

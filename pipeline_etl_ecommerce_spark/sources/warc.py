@@ -15,7 +15,8 @@ Dependency-free and strict, same discipline as the image/audio codecs:
 
 Spark integration is the established two-stage synth → parse shape: the
 parse stage receives opaque bytes it must genuinely decode, one Arrow batch
-at a time, map-only (``parse_warc_streams``). At scale each input row is
+at a time, map-only (``parse_warc_streams``, on the media path's shared
+``multimodal.row_kernel``). At scale each input row is
 one WARC file (or byte-range split) and record fan-out happens inside the
 kernel — no shuffle until whatever aggregation follows.
 
@@ -26,11 +27,14 @@ LLM-data extension surface the brief requires.
 
 from __future__ import annotations
 
+import hashlib
 import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..operators.multimodal import MEDIA_SCHEMA, row_kernel
 
 
 class WarcError(ValueError):
@@ -142,50 +146,32 @@ WARC_RECORD_SCHEMA = StructType(
     ]
 )
 
-_WARC_COLS = [f.name for f in WARC_RECORD_SCHEMA.fields]
-
 
 def parse_warc_streams(media: DataFrame) -> DataFrame:
-    """mapInPandas REAL-parse stage over binary WARC streams: one output
-    row per record (type, URI, declared length, payload md5, whether the
-    stream arrived member-gzipped). Malformed streams degrade to a status
-    row (dead-letter semantics, same policy as the image/audio paths)."""
-    import hashlib
+    """REAL-parse stage over binary WARC streams (one ``row_kernel`` stage):
+    one output row per record (type, URI, declared length, payload md5,
+    whether the stream arrived member-gzipped). Malformed streams degrade
+    to a status row after the records parsed before the fault (dead-letter
+    semantics, same policy as the image/audio paths); the row keeps
+    ``compressed`` and the error message."""
 
-    import pandas as pd
+    def records(_media_id, raw):
+        compressed = 1 if raw[:2] == _GZIP_MAGIC else 0
+        try:
+            for idx, (headers, body) in enumerate(iter_warc_records(raw)):
+                yield {
+                    "record_index": idx,
+                    "warc_type": headers.get("WARC-Type"),
+                    "target_uri": headers.get("WARC-Target-URI"),
+                    "content_length": len(body),
+                    "payload_hash": hashlib.md5(body).hexdigest(),
+                    "compressed": compressed,
+                    "parse_status": "ok",
+                }
+        except WarcError as e:
+            yield {"compressed": compressed, "parse_status": f"error: {e}"[:120]}
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                compressed = 1 if raw[:2] == _GZIP_MAGIC else 0
-                try:
-                    for idx, (headers, body) in enumerate(iter_warc_records(raw)):
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "record_index": idx,
-                                "warc_type": headers.get("WARC-Type"),
-                                "target_uri": headers.get("WARC-Target-URI"),
-                                "content_length": len(body),
-                                "payload_hash": hashlib.md5(body).hexdigest(),
-                                "compressed": compressed,
-                                "parse_status": "ok",
-                            }
-                        )
-                except WarcError as e:
-                    rows.append(
-                        dict.fromkeys(_WARC_COLS)
-                        | {
-                            "media_id": media_id,
-                            "compressed": compressed,
-                            "parse_status": f"error: {e}"[:120],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=_WARC_COLS)
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=WARC_RECORD_SCHEMA)
+    return row_kernel(media, ["media_id", "payload"], records, WARC_RECORD_SCHEMA)
 
 
 def synthesize_warc_streams(media_ids: DataFrame) -> DataFrame:
@@ -194,41 +180,24 @@ def synthesize_warc_streams(media_ids: DataFrame) -> DataFrame:
     ``20 + (id+j)%15``-char lowercase payload ``chr(97 + (id*43 + j*17 +
     i*7) % 26)``; even ids arrive as per-record gzip members (the Common
     Crawl layout), odd ids plain. The parse stage sees only opaque bytes."""
-    import pandas as pd
 
-    from ..operators.multimodal import MEDIA_SCHEMA
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                mid = int(media_id)
-                gz = mid % 2 == 0
-                parts = []
-                for j in range(2 + mid % 3):
-                    length = 20 + (mid + j) % 15
-                    body = bytes(
-                        97 + (mid * 43 + j * 17 + i * 7) % 26 for i in range(length)
-                    )
-                    parts.append(
-                        encode_warc_record(
-                            f"{mid:08d}-{j:04d}",
-                            "response" if j % 2 == 0 else "request",
-                            f"http://example.com/{mid}/{j}",
-                            body,
-                            gzip_member=gz,
-                        )
-                    )
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "mime_type": "application/warc",
-                        "payload": b"".join(parts),
-                    }
+    def synth(mid):
+        parts = []
+        for j in range(2 + mid % 3):
+            length = 20 + (mid + j) % 15
+            body = bytes(97 + (mid * 43 + j * 17 + i * 7) % 26 for i in range(length))
+            parts.append(
+                encode_warc_record(
+                    f"{mid:08d}-{j:04d}",
+                    "response" if j % 2 == 0 else "request",
+                    f"http://example.com/{mid}/{j}",
+                    body,
+                    gzip_member=mid % 2 == 0,
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+            )
+        return {"mime_type": "application/warc", "payload": b"".join(parts)}
 
-    return media_ids.select("media_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(media_ids, ["media_id"], synth, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -248,41 +217,26 @@ WARC_PAGE_SCHEMA = StructType(
     ]
 )
 
-_WARC_PAGE_COLS = [f.name for f in WARC_PAGE_SCHEMA.fields]
-
 
 def parse_warc_pages(media: DataFrame) -> DataFrame:
-    """mapInPandas page-grain parse: one row per RESPONSE record with the
-    decoded HTML body (UTF-8, replacement on invalid bytes — dead-letter
-    stays row-level like the other media parsers)."""
-    import pandas as pd
+    """Page-grain parse (one ``row_kernel`` stage): one row per RESPONSE
+    record with the decoded HTML body (UTF-8, replacement on invalid bytes
+    — dead-letter stays row-level like the other media parsers)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    for idx, (headers, body) in enumerate(iter_warc_records(raw)):
-                        if headers.get("WARC-Type") != "response":
-                            continue
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "record_index": idx,
-                                "target_uri": headers.get("WARC-Target-URI"),
-                                "html": body.decode("utf-8", errors="replace"),
-                                "parse_status": "ok",
-                            }
-                        )
-                except WarcError as e:
-                    rows.append(
-                        dict.fromkeys(_WARC_PAGE_COLS)
-                        | {"media_id": media_id, "parse_status": f"error: {e}"[:120]}
-                    )
-            yield pd.DataFrame(rows, columns=_WARC_PAGE_COLS)
+    def pages(_media_id, raw):
+        try:
+            for idx, (headers, body) in enumerate(iter_warc_records(raw)):
+                if headers.get("WARC-Type") == "response":
+                    yield {
+                        "record_index": idx,
+                        "target_uri": headers.get("WARC-Target-URI"),
+                        "html": body.decode("utf-8", errors="replace"),
+                        "parse_status": "ok",
+                    }
+        except WarcError as e:
+            yield {"parse_status": f"error: {e}"[:120]}
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=WARC_PAGE_SCHEMA)
+    return row_kernel(media, ["media_id", "payload"], pages, WARC_PAGE_SCHEMA)
 
 
 def synthesize_warc_html_streams(media_ids: DataFrame) -> DataFrame:
@@ -292,42 +246,25 @@ def synthesize_warc_html_streams(media_ids: DataFrame) -> DataFrame:
     wrapped in h1/p/script markup, URI carrying an uppercase host, a :80
     default port and a utm param (so the canonicalizer has real work).
     Even ids arrive as per-record gzip members, odd plain."""
-    import pandas as pd
 
-    from ..operators.multimodal import MEDIA_SCHEMA
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for media_id in pdf["media_id"]:
-                mid = int(media_id)
-                gz = mid % 2 == 0
-                parts = []
-                for j in range(2 + mid % 3):
-                    length = 20 + (mid + j) % 15
-                    text = "".join(
-                        chr(97 + (mid * 43 + j * 17 + i * 7) % 26) for i in range(length)
-                    )
-                    html = (
-                        f"<html><body><h1>Page {mid}/{j}</h1><p>{text}</p>"
-                        "<script>var hidden = 1;</script></body></html>"
-                    )
-                    parts.append(
-                        encode_warc_record(
-                            f"{mid:08d}-{j:04d}",
-                            "response",
-                            f"http://Example.com:80/p/{mid}?id={j}&utm_x=1",
-                            html.encode("utf-8"),
-                            gzip_member=gz,
-                        )
-                    )
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "mime_type": "application/warc",
-                        "payload": b"".join(parts),
-                    }
+    def synth(mid):
+        parts = []
+        for j in range(2 + mid % 3):
+            length = 20 + (mid + j) % 15
+            text = "".join(chr(97 + (mid * 43 + j * 17 + i * 7) % 26) for i in range(length))
+            html = (
+                f"<html><body><h1>Page {mid}/{j}</h1><p>{text}</p>"
+                "<script>var hidden = 1;</script></body></html>"
+            )
+            parts.append(
+                encode_warc_record(
+                    f"{mid:08d}-{j:04d}",
+                    "response",
+                    f"http://Example.com:80/p/{mid}?id={j}&utm_x=1",
+                    html.encode("utf-8"),
+                    gzip_member=mid % 2 == 0,
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+            )
+        return {"mime_type": "application/warc", "payload": b"".join(parts)}
 
-    return media_ids.select("media_id").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return row_kernel(media_ids, ["media_id"], synth, MEDIA_SCHEMA)

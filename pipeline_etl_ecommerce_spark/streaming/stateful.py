@@ -55,12 +55,11 @@ EXACT_STATE_SCHEMA = "n bigint, cents bigint"
 def fold_running_totals(
     prev: tuple[int, int] | None, pdfs: Iterable[pd.DataFrame]
 ) -> tuple[int, int]:
-    """The pure per-key state fold shared by BOTH stateful APIs
-    (applyInPandasWithState and transformWithState): integer (count, cents)
-    accumulation — associative and order-independent, so any micro-batch
-    composition converges to the batch sum. Split out so the fold is
-    unit-testable without a Spark state server (the transformWithState
-    harness needs google.protobuf, absent in this container)."""
+    """The pure per-key state fold behind ``running_user_totals_exact``:
+    integer (count, cents) accumulation — associative and
+    order-independent, so any micro-batch composition converges to the
+    batch sum. Split out so the fold is unit-testable without a Spark
+    state store."""
     n, cents = prev if prev is not None else (0, 0)
     for pdf in pdfs:
         n += len(pdf)
@@ -93,50 +92,3 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithState: the successor API to applyInPandasWithState —
-# named state variables on a StatefulProcessor handle instead of one opaque
-# state tuple, timers, TTL, and composite types (list/map state). Requires
-# the RocksDB state-store provider (runner.ROCKSDB_STATE_CONFS), which is
-# also the 100 TB answer: state bounded by local disk, not executor heap.
-# ---------------------------------------------------------------------------
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle  # noqa: E402
-from pyspark.sql.streaming.stateful_processor import TimerValues  # noqa: E402
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """transformWithState twin of ``_accumulate_cents``: per-key
-    (count, integer-cents) running totals in a named ValueState. Integer
-    arithmetic keeps every emission exactly SQL-replayable regardless of
-    micro-batch composition (same contract as the exact GroupState
-    variant above)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState("totals", EXACT_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterable[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        n, cents = fold_running_totals(self._totals.get(), rows)
-        self._totals.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals through ``transformWithStateInPandas``.
-    Update mode: each micro-batch re-emits the keys it changed (pairs with
-    a keyed MERGE sink); timeMode 'None' — pure data-driven state, no
-    timers. The caller must run under the RocksDB state-store provider
-    (transformWithState rejects the HDFS-backed default)."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=EXACT_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -1251,7 +1251,7 @@ def multimodal_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_media(documents_as_media(d), width=64, height=48)
 
 
-# frame sampling: one-to-many mapInPandas — each doc yields 4 "frames"
+# frame sampling: one-to-many row kernel — each doc yields 4 "frames"
 # (contiguous integer-division chunks of the payload in the fake kernel);
 # the oracle reproduces the chunk boundaries with substr arithmetic.
 _MULTIMODAL_FRAMES_SQL = """
@@ -9679,15 +9679,12 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(base, ignore_errors=True)
 
 
-# NOT registered: a transformWithStateInPandas twin of the query above
-# (streaming/stateful.py RunningTotalsProcessor) exists and is test-covered,
-# but Spark 4's TWS Python worker speaks protobuf to its state server and
-# google.protobuf is not installed in this container (probed r4:
-# STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, ImportError google.protobuf
-# — same environment class as the absent spark-avro jar / PIL). The test
-# (tests/test_streaming_rocksdb.py) importorskips on protobuf so it runs the
-# REAL two-trigger harness wherever the dependency exists; the GroupState
-# twin above keeps the T5 driver row green here.
+# No transformWithStateInPandas twin of the query above: Spark 4's TWS
+# Python worker speaks protobuf to its state server and cannot start
+# without google.protobuf (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE),
+# which the pinned environment lacks. The GroupState route above is
+# the T5 catalog row; its per-key fold (stateful.fold_running_totals) is
+# unit-tested in tests/test_streaming_rocksdb.py.
 # Stream-STATIC join EXECUTED (NEW r4): the enrichment shape Structured
 # Streaming runs stateless — the static dim is joined INSIDE the streaming
 # DAG (broadcast, re-resolvable per micro-batch), unlike the foreachBatch

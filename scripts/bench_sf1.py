@@ -6,8 +6,8 @@ driver's own 8-core and 32-core runs landed within 4% of each other
 *parallel-compute* optimization. This artifact restores that measurement:
 
 - Synthesizes a 10x sf0.1 slice (facts x10 with shifted keys, dims fixed —
-  the same deterministic synthesizer the scale-stress battery uses, minus
-  its deliberately planted near-duplicates) into session scratch. The data
+  the scale-stress battery's synthesizer with ``near_dup=False``, so no
+  planted near-duplicates) into session scratch. The data
   is recreated from /root/testdata on EVERY run and deleted after — it is
   measurement input, never a cached result.
 - Times a fixed panel of the catalog's compute-heaviest LAZY rows
@@ -43,15 +43,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
 from pipeline_etl_ecommerce_spark import testdata_queries  # noqa: E402
+from scale_stress import synthesize  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, "BENCH_SF1.json")
-SF_SRC = "/root/testdata/sf0.1"
-KEY_OFFSET = 100_000_000
 
 # The measured panel: compute-bound lazy rows, ~linear scaled workload.
 PANEL = [
@@ -98,50 +95,6 @@ EXCLUSIONS = {
 }
 
 
-def synthesize(spark, out_dir: str, copies: int) -> None:
-    """Disjoint-copy 10x synthesis: facts scale, dims fixed, keys shifted
-    per copy. Unlike scale_stress.synthesize, document text gets a
-    per-copy token PREFIX long enough that copies are not near-duplicates
-    of each other under any of the catalog's similarity rows — the panel
-    here measures parallel compute, not pair growth."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def shifted_union(name: str, key_cols: list[str], mutate=None):
-        src = spark.read.parquet(os.path.join(SF_SRC, f"{name}.parquet"))
-        parts = []
-        for i in range(copies):
-            c = src
-            for k in key_cols:
-                c = c.withColumn(k, F.col(k) + F.lit(i * KEY_OFFSET))
-            if mutate is not None:
-                c = mutate(c, i)
-            parts.append(c)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
-
-    def text_shift(df, i):
-        if i == 0:
-            return df
-        # deterministic distinct prefix per copy: keeps per-doc length
-        # profile ~unchanged, guarantees distinct grams/signatures
-        return df.withColumn(
-            "text", F.concat(F.format_string("copy%d ", F.lit(i)), F.col("text"))
-        ).withColumn("n_chars", F.length("text"))
-
-    shifted_union("lineitem", ["l_orderkey"])
-    shifted_union("orders", ["o_orderkey"])
-    shifted_union("documents", ["doc_id"], mutate=text_shift)
-    shifted_union("events", ["event_id", "user_id"])
-    shifted_union("embeddings", ["vec_id"])
-    for dim in ("part", "supplier", "customer", "region", "nation"):
-        shutil.copyfile(
-            os.path.join(SF_SRC, f"{dim}.parquet"),
-            os.path.join(out_dir, f"{dim}.parquet"),
-        )
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=2)
@@ -156,7 +109,7 @@ def main() -> int:
     sf_dir = os.path.join(scratch, f"sf1x{args.copies}")
     load_start = round(os.getloadavg()[0], 2)
     t0 = time.perf_counter()
-    synthesize(spark, sf_dir, args.copies)
+    synthesize(spark, sf_dir, args.copies, near_dup=False)
     synth_sec = round(time.perf_counter() - t0, 1)
     print(f"[synth] {args.copies}x sf0.1 -> {sf_dir} in {synth_sec}s", flush=True)
 

@@ -96,7 +96,7 @@ ALLOWED_PYTHON = {
     "multimodal_decode_stub",
     "multimodal_resize_stub",
     "multimodal_frame_sample",
-    "ppm_decode_stats",   # REAL decode: synth mapInPandas + parser mapInPandas
+    "ppm_decode_stats",   # REAL decode: synth row kernel + parser row kernel
     "bmp_decode_stats",   # REAL decode (bottom-up padded BGR parse)
     "ppm_resize_stats",   # REAL nearest-neighbor resample + decode of result
     "png_decode_stats",   # REAL PNG decode (zlib DEFLATE + 5 unfilters, CRC)
@@ -267,7 +267,8 @@ def main() -> int:
             "sortmerge_joins": plan.count("SortMergeJoin"),
             "nested_loop": plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct"),
             "python": plan.count("BatchEvalPython") + plan.count("ArrowEvalPython")
-            + plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas")
+            + plan.count("MapInPandas") + plan.count("MapInArrow")
+            + plan.count("FlatMapGroupsInPandas")
             # r10: the bitext cosine kernel is a COGROUPED Arrow stage —
             # a distinct physical operator the counter must not miss
             + plan.count("FlatMapCoGroupsInPandas"),

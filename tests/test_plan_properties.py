@@ -55,8 +55,9 @@ def test_near_dup_joins_never_go_cartesian(spark):
 
 def test_multimodal_is_arrow_batched(spark):
     plan = _executed_plan(tq.QUERIES["multimodal_decode_stub"](spark, SF))
-    # mapInPandas shows up as MapInPandas (Arrow), NOT BatchEvalPython (pickle)
-    assert "MapInPandas" in plan
+    # the shared row kernel shows up as MapInArrow (Arrow batches), NOT
+    # BatchEvalPython (row-at-a-time pickle)
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
 
 

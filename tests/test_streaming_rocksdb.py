@@ -11,8 +11,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
-
 from pyspark.sql.types import StructType
 
 from pipeline_etl_ecommerce_spark.streaming.runner import (
@@ -81,108 +79,15 @@ def test_rocksdb_provider_matches_default_provider(spark):
     assert len(rocks) == 100  # exactly-once despite the 20-id overlap
 
 
-def test_transform_with_state_totals_match_batch(spark, tmp_path):
-    # Spark 4 transformWithStateInPandas twin of the GroupState running
-    # totals: named ValueState on a StatefulProcessor, RocksDB provider
-    # (TWS rejects the HDFS-backed default). The TWS Python worker speaks
-    # protobuf to its state server, which this container does not ship —
-    # importorskip keeps the REAL harness runnable wherever it exists.
-    pytest.importorskip("google.protobuf")
-    from pipeline_etl_ecommerce_spark.streaming.runner import run_upsert_stream
-    from pipeline_etl_ecommerce_spark.streaming.stateful import running_user_totals_tws
-
-    base = str(tmp_path)
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
-    rows = [(i % 7, (i * 13) % 100) for i in range(200)]
-    for fname, chunk in (("b1.json", rows[::2]), ("b2.json", rows[1::2])):
-        with open(os.path.join(drops, fname), "w") as fh:
-            for uid, cents in chunk:
-                fh.write(json.dumps({"user_id": uid, "cents": cents}) + "\n")
-    old = {}
-    for k, v in ROCKSDB_STATE_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        schema = StructType.fromDDL("user_id bigint, cents bigint")
-        stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
-        q = run_upsert_stream(
-            running_user_totals_tws(stream), target, ["user_id"], ckpt,
-            output_mode="update", order_by=["n_events"],
-        )
-        assert q.awaitTermination(300), "stream did not finish"
-        got = {
-            r["user_id"]: (r["n_events"], r["total_cents"])
-            for r in spark.read.parquet(target).collect()
-        }
-        want = {}
-        for uid, cents in rows:
-            n, c = want.get(uid, (0, 0))
-            want[uid] = (n + 1, c + cents)
-        assert got == want
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-class _FakeValueState:
-    """Stand-in for a transformWithState ValueState handle: same get/update
-    surface, plain process memory behind it."""
-
-    def __init__(self):
-        self._v = None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_tws_processor_logic_without_state_server():
-    """The container lacks google.protobuf, so the executed TWS harness above
-    skips — this drives RunningTotalsProcessor's EXACT logic (init /
-    handleInputRows / state round-trip) against a fake handle instead, so
-    the processor is tested even where the Spark state server can't run.
-    The fold itself is shared with the executed applyInPandasWithState
-    variant (fold_running_totals), which DOES run end-to-end in this
-    container (rocksdb_user_totals_executed, driver-green r05)."""
+def test_fold_running_totals_split_invariant():
+    """The executed applyInPandasWithState row (streaming_stateful_totals)
+    folds per-key state with fold_running_totals: any split of a key's rows
+    into micro-batches, and of a micro-batch into frames, converges to the
+    same (count, cents) as one pass over all of them."""
     import pandas as pd
 
-    from pipeline_etl_ecommerce_spark.streaming.stateful import (
-        RunningTotalsProcessor,
-        fold_running_totals,
-    )
+    from pipeline_etl_ecommerce_spark.streaming.stateful import fold_running_totals
 
-    proc = RunningTotalsProcessor()
-    proc.init(_FakeHandle())
-
-    b1 = pd.DataFrame({"cents": [10, 20, 30]})
-    b2 = pd.DataFrame({"cents": [5]})
-    out1 = list(proc.handleInputRows((7,), [b1], None))[0]
-    assert out1.iloc[0].tolist() == [7, 3, 60]
-    # state persists across micro-batches; multi-frame iterables fold fully
-    out2 = list(proc.handleInputRows((7,), [b2, b1], None))[0]
-    assert out2.iloc[0].tolist() == [7, 7, 125]
-    proc.close()
-
-    # split-invariance of the shared fold: any batch composition converges
     rows = [(i * 13) % 100 for i in range(50)]
     whole = fold_running_totals(None, [pd.DataFrame({"cents": rows})])
     split = fold_running_totals(
