@@ -1,11 +1,12 @@
 """Benchmark runner: executes the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: the CPUs this process may use) and prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
-Queries are executed to completion through the noop sink (full compute, no
-driver-side collect bottleneck), after a small warm-up to exclude JVM/codegen
-first-run cost from per-query numbers.
+The session, the warm-up and each timed rep come from scripts/measure.py:
+queries run to completion through the noop sink (full compute, no
+driver-side collect bottleneck) after a warm-up that excludes JVM/codegen
+first-run cost and the shared side-table marts from per-query numbers.
 
 De-noising (r3 verdict item 4 — that round burned judge time adjudicating a
 141-198 s noise band caused by external host load):
@@ -20,8 +21,8 @@ De-noising (r3 verdict item 4 — that round burned judge time adjudicating a
   $SPARK_GRAFT_BENCH_MAX_WAIT_SEC (default 600) for the host to quiesce;
   if it never does, the run proceeds with ``load_gate: waived`` recorded
   in both outputs so a loaded-host number is never mistaken for a clean one.
-Compare per-query/per-family with scripts/bench_compare.py, never totals:
-the catalog grows between rounds.
+Compare per query with scripts/bench_compare.py, never totals: the
+catalog grows between rounds.
 """
 
 from __future__ import annotations
@@ -33,15 +34,16 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
 
-from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 from pipeline_etl_ecommerce_spark import testdata_queries  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # Pinned per-query baseline gate (r7 verdict item 3). BENCH_BASELINE.json is
-# a COMMITTED clean run (reps=3, load gate passed); every bench run compares
-# per-query min-of-reps against it and reports >THRESHOLDx regressions (with
+# a COMMITTED clean run (reps=3, load gate passed, gate not failed); every
+# bench run at the pin's core count and SF compares per-query min-of-reps
+# against it and reports >THRESHOLDx regressions (with
 # a 0.5 s absolute floor so sub-second noise can't trip it) in BOTH outputs.
 # A regression is either ADJUDICATED here — a written reason the delta is
 # expected — or it marks the run's baseline_gate "failed", loudly, in the
@@ -61,8 +63,8 @@ _BASELINE_THRESHOLD = 2.0
 # re-pin rather than suppressed here.)
 BASELINE_ADJUDICATIONS: dict[str, str] = {}
 
-# The EXECUTED-streaming family (real two-trigger stream runs) has its own
-# gate shape (r9 verdict item 3): its wall is dominated by fixed harness
+# Rows registered kind="streaming" (real two-trigger stream runs) have their
+# own gate shape (r9 verdict item 3): their wall is dominated by fixed harness
 # cost — stream start/stop, state-store open, checkpoint/tempdir creation —
 # which is BIMODAL across clean runs (r8 and r9 both measured 2-3x swings
 # on different rows of the family with bit-identical plans, while the
@@ -70,18 +72,8 @@ BASELINE_ADJUDICATIONS: dict[str, str] = {}
 # still catches real regressions (a state-growth bug multiplies the wall,
 # e.g. the r9 state-partition fix moved the family 4-5 s) without burning
 # a judge adjudication pass every round on harness jitter.
-_STREAMING_PREFIX = "streaming_"
 _STREAMING_THRESHOLD = 3.0
 _STREAMING_FLOOR = 2.0
-
-
-def _gate_params(query: str) -> tuple[float, float]:
-    if query.startswith(_STREAMING_PREFIX) and query.endswith("_executed") or query in (
-        "streaming_stateful_totals",
-        "streaming_ingest_pairs_converged",
-    ):
-        return _STREAMING_THRESHOLD, _STREAMING_FLOOR
-    return _BASELINE_THRESHOLD, 0.5
 
 
 # Mart-build gate (r10 verdict item 4): the untimed side_table_build phase
@@ -97,11 +89,16 @@ _MART_FLOOR = 5.0
 MART_ADJUDICATIONS: dict[str, str] = {}
 
 
-def _baseline_gate(timings: dict[str, float], marts: dict[str, float] | None = None) -> dict:
+def _baseline_gate(
+    timings: dict[str, float], marts: dict[str, float] | None, *, cpus: int, sf: float | None
+) -> dict:
     if not os.path.exists(_BASELINE_PATH):
         return {"status": "no-baseline", "file": "BENCH_BASELINE.json"}
     with open(_BASELINE_PATH) as fh:
         base = json.load(fh)
+    # a pin from another core count or SF times other work: no gate
+    if not measure.same_setup(base, {"cpus": cpus, "sf": sf}):
+        return {"status": f"no pin for cpus={cpus} sf={sf}", "file": "BENCH_BASELINE.json"}
     base_q = base.get("queries", {})
     regressions: dict[str, dict] = {}
     unadjudicated: list[str] = []
@@ -110,7 +107,10 @@ def _baseline_gate(timings: dict[str, float], marts: dict[str, float] | None = N
         b = base_q.get(q)
         if b is None:
             continue
-        threshold, floor = _gate_params(q)
+        if testdata_queries.KIND[q] == "streaming":
+            threshold, floor = _STREAMING_THRESHOLD, _STREAMING_FLOOR
+        else:
+            threshold, floor = _BASELINE_THRESHOLD, 0.5
         if now > threshold * b and now - b > floor:
             reason = BASELINE_ADJUDICATIONS.get(q)
             regressions[q] = {
@@ -186,7 +186,6 @@ def run() -> None:
     reps = max(1, args.reps)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
@@ -207,21 +206,15 @@ def run() -> None:
         "status": "passed" if load_start <= gate else "waived",
     }
 
-    spark = get_spark("bench", cpus=cpus, shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, cpus = measure.session("bench")
 
-    qs = testdata_queries.queries()
-
-    # warm-up: run the flagship once to pay JVM/codegen startup
-    qs["flagship_consolidation"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Build the shared side-table marts (LSH signatures, verified pairs,
-    # centroids, trained models, PQ codes) in an explicit setup step billed
+    # The shared side-table marts (LSH signatures, verified pairs,
+    # centroids, trained models, PQ codes) build in the warm-up, billed
     # under "side_table_build": at scale these are ingest-time persisted
     # tables, and billing them to their accidental first consumer made
     # per-query regressions unreadable (r2: near_dup_components absorbed
     # ~9 s of family build).
-    side_tables = testdata_queries.warm_side_tables(spark, sf_dir)
+    side_tables = measure.warm(spark, sf_dir)
     # "__wall" is the true elapsed setup cost (independent marts build
     # concurrently); the per-mart seconds are attribution spans whose sum
     # exceeds wall under overlap.
@@ -229,17 +222,13 @@ def run() -> None:
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for name, fn in qs.items():
-        samples = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+    for name in testdata_queries.queries():
+        samples = measure.time_row(spark, sf_dir, name, reps)
         timings[name] = round(min(samples), 3)
         if reps > 1:
             spreads[name] = round(max(samples) - min(samples), 3)
 
-    gate_result = _baseline_gate(timings, side_tables)
+    gate_result = _baseline_gate(timings, side_tables, cpus=cpus, sf=sf)
 
     # Regime-retry pass (r10, guide §1/§7 "measure correctly"): the host
     # shows minutes-long slow regimes invisible to loadavg (two back-to-back
@@ -267,11 +256,7 @@ def run() -> None:
     for name in retry_names:
         if BASELINE_ADJUDICATIONS.get(name):
             continue
-        samples = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+        samples = measure.time_row(spark, sf_dir, name, reps)
         new_min = round(min(timings[name], min(samples)), 3)
         retried[name] = {
             "first_pass_s": timings[name],
@@ -285,7 +270,7 @@ def run() -> None:
             spreads[name] = round(max(first_max, max(samples)) - new_min, 3)
         timings[name] = new_min
     if retried:
-        gate_result = _baseline_gate(timings, side_tables)
+        gate_result = _baseline_gate(timings, side_tables, cpus=cpus, sf=sf)
 
     load_end = round(os.getloadavg()[0], 2)
     total = round(sum(timings.values()), 3)
@@ -298,7 +283,7 @@ def run() -> None:
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
     detail = {
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "reps": reps,
         "loadavg_start": load_start,
         "loadavg_end": load_end,

@@ -38,6 +38,8 @@ from .operators.ranking import (
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
+ROW_KINDS = ("lazy", "executed", "streaming")
+KIND: dict[str, str] = {}  # row -> one of ROW_KINDS, declared at register()
 
 NS_PER_DAY = 86_400_000_000_000
 
@@ -50,9 +52,22 @@ _EVENTS_PROBE_OK: set[tuple[str, str]] = set()
 _EVENTS_DFS: dict[tuple[str, str], "DataFrame"] = {}
 
 
-def register(name: str, sql: str | None = None):
+def register(name: str, sql: str | None = None, *, kind: str = "lazy"):
+    """Add a catalog row. ``kind`` declares what calling it does, once, for
+    the measurement tools to read:
+
+    - ``"lazy"``: returns a plan; its work runs at the caller's action;
+    - ``"executed"``: starts no stream, but before returning writes files in
+      a ``_scratch_dir`` or runs its result under ``_conf_pin`` /
+      ``_session_tz`` (so there is no plan to explain);
+    - ``"streaming"``: starts a Structured Streaming query before returning.
+    """
+    if kind not in ROW_KINDS:
+        raise ValueError(f"{name}: kind {kind!r} is not one of {ROW_KINDS}")
+
     def deco(fn):
         QUERIES[name] = fn
+        KIND[name] = kind
         if sql is not None:
             ORACLE[name] = sql
         return fn
@@ -2822,7 +2837,7 @@ def _aqe_skew_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     return fact, dim
 
 
-@register("aqe_skew_join_flag_counts", _AQE_SKEW_SQL)
+@register("aqe_skew_join_flag_counts", _AQE_SKEW_SQL, kind="executed")
 def aqe_skew_join_flag_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact, dim = _aqe_skew_frames(spark, sf_dir)
     joined = fact.join(dim, "skew_key")
@@ -3017,7 +3032,7 @@ GROUP BY month(o_orderdate)
 """
 
 
-@register("dpp_quarter_order_counts", _DPP_SQL)
+@register("dpp_quarter_order_counts", _DPP_SQL, kind="executed")
 def dpp_quarter_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTED dynamic-partition-pruning shape: orders land in a
     month-partitioned mart; a parquet-backed quarter dim filtered to Q1
@@ -3091,7 +3106,7 @@ GROUP BY p.p_type
 """
 
 
-@register("bloom_filter_brand_revenue", _BLOOM_SQL)
+@register("bloom_filter_brand_revenue", _BLOOM_SQL, kind="executed")
 def bloom_filter_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTED runtime-bloom-filter shape: the dim predicate (p_brand) is
     NOT on the join key, so neither static pushdown nor DPP can prune the
@@ -7398,7 +7413,7 @@ SELECT event_id, user_id, event_type, epoch_us(ts) AS tus,
 """
 
 
-@register("streaming_dedup_executed", _STREAM_DEDUP_SQL)
+@register("streaming_dedup_executed", _STREAM_DEDUP_SQL, kind="streaming")
 def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once -> exactly-once via a REAL stream (SURVEY.md §2.10
     T1/T5): the reference's queue redelivery becomes
@@ -7476,7 +7491,7 @@ GROUP BY 1, 2
 """
 
 
-@register("streaming_rollup_executed", _STREAM_ROLLUP_SQL)
+@register("streaming_rollup_executed", _STREAM_ROLLUP_SQL, kind="streaming")
 def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data convergence proven by EXECUTION (SURVEY.md §2.10 T2-T4):
     a real watermarked 1-day-tumbling stream over two triggers — the
@@ -8228,7 +8243,7 @@ def ivf_delta_list_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and appends to the list mart — O(batch) work per trigger, no retrain,
 # no corpus rescan. The streamed mart must equal the batch delta
 # assignment bit-for-bit, so the oracle is _IVF_DELTA_SQL verbatim.
-@register("streaming_ann_ingest_executed", _IVF_DELTA_SQL)
+@register("streaming_ann_ingest_executed", _IVF_DELTA_SQL, kind="streaming")
 def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import shutil as _shutil
@@ -8506,7 +8521,7 @@ GROUP BY p_brand
 """
 
 
-@register("sink_append_roundtrip", _SINK_APPEND_SQL)
+@register("sink_append_roundtrip", _SINK_APPEND_SQL, kind="executed")
 def sink_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11 EXECUTED: two overlapping slices appended to one parquet mart
     (``append_to_path``), read back and aggregated — append semantics are
@@ -8551,7 +8566,7 @@ GROUP BY c_mktsegment
 """
 
 
-@register("sink_truncate_reload", _SINK_RELOAD_SQL)
+@register("sink_truncate_reload", _SINK_RELOAD_SQL, kind="executed")
 def sink_truncate_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S13 EXECUTED: the mart is first loaded with a WRONG slice (half the
     rows, balances zeroed), then truncate+reloaded with the real table
@@ -8596,7 +8611,7 @@ GROUP BY 1, 2
 """
 
 
-@register("sink_partitioned_bi_mart", _SINK_BI_SQL)
+@register("sink_partitioned_bi_mart", _SINK_BI_SQL, kind="executed")
 def sink_partitioned_bi_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S16 EXECUTED: a MONTH-partitioned BI mart (daily data, monthly
     directories — partitioning on the raw date column made one directory
@@ -8656,7 +8671,7 @@ GROUP BY 1, 2
 """
 
 
-@register("backfill_daily_rollup", _BACKFILL_SQL)
+@register("backfill_daily_rollup", _BACKFILL_SQL, kind="executed")
 def backfill_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7 EXECUTED: ``streaming.runner.backfill`` reprocesses
     2024-01-03..07 day by day (each day one pruned batch transform) into
@@ -8860,7 +8875,7 @@ GROUP BY user_id, session_index
 """
 
 
-@register("streaming_sessions_executed", _STREAM_SESSIONS_SQL)
+@register("streaming_sessions_executed", _STREAM_SESSIONS_SQL, kind="streaming")
 def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming sessionization EXECUTED (SURVEY.md §2.10 T4/T5
     + applyInPandasWithState's declarative sibling): session_window with
@@ -8954,7 +8969,7 @@ GROUP BY o_orderstatus
 """
 
 
-@register("sink_schema_evolution", _SCHEMA_EVO_SQL)
+@register("sink_schema_evolution", _SCHEMA_EVO_SQL, kind="executed")
 def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution EXECUTED: generation 1 of a mart lacks a column
     that generation 2 adds (the standard additive-column migration);
@@ -9007,7 +9022,7 @@ GROUP BY event_type
 """
 
 
-@register("json_quarantine_ingest", _QUARANTINE_SQL)
+@register("json_quarantine_ingest", _QUARANTINE_SQL, kind="executed")
 def json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter ingestion EXECUTED: a JSON drop where every 97th event
     line is TRUNCATED mid-record is read PERMISSIVE with a
@@ -9081,7 +9096,7 @@ GROUP BY event_type
 """
 
 
-@register("rest_offset_ingest", _REST_OFFSET_SQL)
+@register("rest_offset_ingest", _REST_OFFSET_SQL, kind="executed")
 def rest_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 offset/limit ingest EXECUTED (reference merge-pages loop,
     ``tarefa_coletar_financas.php:17-41``): a fake API serves the events
@@ -9137,7 +9152,7 @@ GROUP BY p_brand
 """
 
 
-@register("rest_scroll_ingest", _REST_SCROLL_SQL)
+@register("rest_scroll_ingest", _REST_SCROLL_SQL, kind="executed")
 def rest_scroll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 scroll ingest EXECUTED (reference do/while on ``scroll_id``,
     ``tarefa_sincronizar_anuncios_meli.php:14-37``): sequential by
@@ -9193,7 +9208,7 @@ GROUP BY c_mktsegment
 """
 
 
-@register("rest_page_ingest", _REST_PAGE_SQL)
+@register("rest_page_ingest", _REST_PAGE_SQL, kind="executed")
 def rest_page_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 page-number ingest EXECUTED (reference ``pagina=N`` until the
     first empty page, ``tarefa_sincronizar_catalogo_tiny.php:16-33`` and 3
@@ -9397,7 +9412,7 @@ GROUP BY n_name
 """
 
 
-@register("csv_source_roundtrip", _CSV_ROUNDTRIP_SQL)
+@register("csv_source_roundtrip", _CSV_ROUNDTRIP_SQL, kind="executed")
 def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source EXECUTED: the supplier dim exported to headered CSV and
     read back with an EXPLICIT schema (never inference — an inference
@@ -9443,7 +9458,7 @@ GROUP BY o_orderpriority
 """
 
 
-@register("orc_source_roundtrip", _ORC_ROUNDTRIP_SQL)
+@register("orc_source_roundtrip", _ORC_ROUNDTRIP_SQL, kind="executed")
 def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source EXECUTED: the second columnar format Spark reads
     natively (the reference's BI extracts are format-agnostic dumps;
@@ -9490,7 +9505,7 @@ GROUP BY s_nationkey
 """
 
 
-@register("xml_source_roundtrip", _XML_ROUNDTRIP_SQL)
+@register("xml_source_roundtrip", _XML_ROUNDTRIP_SQL, kind="executed")
 def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source EXECUTED: supplier round-trips through the native XML
     format (rowTag elements) and is read back with a forced schema, then
@@ -9629,7 +9644,7 @@ GROUP BY user_id
 """
 
 
-@register("streaming_stateful_totals", _STATEFUL_TOTALS_SQL)
+@register("streaming_stateful_totals", _STATEFUL_TOTALS_SQL, kind="streaming")
 def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator EXECUTED (SURVEY.md §2.10 T5, the
     applyInPandasWithState path): per-user running totals accumulate in
@@ -9699,7 +9714,7 @@ GROUP BY e.user_id, c.c_mktsegment
 """
 
 
-@register("streaming_static_enrichment", _STREAM_STATIC_SQL)
+@register("streaming_static_enrichment", _STREAM_STATIC_SQL, kind="streaming")
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTED stream-static enrichment: the event slice replays as two
     real file triggers, each micro-batch broadcast-joins the STATIC
@@ -9814,7 +9829,7 @@ FROM p JOIN c ON c.user_id = p.user_id
 """
 
 
-@register("streaming_attribution_executed", _STREAM_ATTRIB_SQL)
+@register("streaming_attribution_executed", _STREAM_ATTRIB_SQL, kind="streaming")
 def streaming_attribution_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join EXECUTED (the streaming form of the
     as-of/range join family): two watermarked file streams, two triggers
@@ -9876,7 +9891,7 @@ FROM c LEFT JOIN p ON p.user_id = c.user_id
 """
 
 
-@register("streaming_outer_join_executed", _STREAM_OUTER_SQL)
+@register("streaming_outer_join_executed", _STREAM_OUTER_SQL, kind="streaming")
 def streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join EXECUTED (see
     streaming.pipelines.click_conversion_outer_stream): clicks with no
@@ -10353,7 +10368,7 @@ GROUP BY l.l_orderkey
 """
 
 
-@register("bucketed_colocated_join", _BUCKETED_JOIN_SQL)
+@register("bucketed_colocated_join", _BUCKETED_JOIN_SQL, kind="executed")
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTED bucketed layout end-to-end: lineitem and orders written as
     8-bucket tables sorted on the order key (sources/bucketing.py), then
@@ -10734,7 +10749,7 @@ GROUP BY 1, 2
 """
 
 
-@register("incremental_agg_mart", _IVM_SQL)
+@register("incremental_agg_mart", _IVM_SQL, kind="executed")
 def incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive aggregate-mart maintenance (IVM) EXECUTED: lineitem
     arrives as three disjoint delta batches; each batch computes its own
@@ -11211,7 +11226,7 @@ GROUP BY user_id
 """
 
 
-@register("rocksdb_user_totals_executed", _ROCKSDB_TOTALS_SQL)
+@register("rocksdb_user_totals_executed", _ROCKSDB_TOTALS_SQL, kind="streaming")
 def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user totals as a REAL two-trigger update-mode stream with
     RocksDB-backed aggregation state, merged into a keyed mart that must
@@ -12074,7 +12089,7 @@ GROUP BY l_returnflag
 """
 
 
-@register("sink_compaction_roundtrip", _SINK_COMPACT_SQL)
+@register("sink_compaction_roundtrip", _SINK_COMPACT_SQL, kind="executed")
 def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil as _shutil
@@ -12183,7 +12198,7 @@ FROM z GROUP BY 1
 """
 
 
-@register("zorder_recluster_roundtrip", _ZORDER_RECLUSTER_SQL)
+@register("zorder_recluster_roundtrip", _ZORDER_RECLUSTER_SQL, kind="executed")
 def zorder_recluster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil as _shutil
@@ -12444,7 +12459,7 @@ WHERE l.op IS NULL OR l.op <> 'D'
 """
 
 
-@register("streaming_cdc_apply_executed", _STREAM_CDC_SQL)
+@register("streaming_cdc_apply_executed", _STREAM_CDC_SQL, kind="streaming")
 def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import shutil as _shutil

@@ -1,19 +1,11 @@
 """Round-over-round bench comparison: diff two bench_detail.json files
-per query (NEVER totals — the catalog grows between rounds).
-
-Family logic: queries sharing session side tables used to bill the mart
-build to whichever ran first in catalog order, so per-query deltas inside
-a family were only meaningful as the family SUM. Since round 3 the bench
-builds all side tables in a separate "side_table_build" setup step, so
-NEW details have flat families. When the OLD file predates the split (its
-first consumers carry build cost the new file bills to setup), the NEW
-side's family sum gets its setup marts' build time added back
-(MART_FAMILY below) so the comparison stays apples-to-apples — otherwise
-the removed build cost would mask a real within-family regression across
-the transition round.
+per query (NEVER totals — the catalog grows between rounds). Shared
+side-table marts are billed to setup ("side_table_build"), so every row is
+judged on its own. Only runs taken at the same core count and SF compare.
 
 Usage: python scripts/bench_compare.py OLD.json NEW.json [--threshold 1.5]
-Exit 1 when any non-family-explained query regressed past threshold x.
+Exit 1 when any query regressed past threshold x (+0.5 s floor); exit 2
+when the two runs differ in cpus or sf.
 """
 
 from __future__ import annotations
@@ -21,37 +13,7 @@ from __future__ import annotations
 import argparse
 import json
 
-# Queries that share session side tables: deltas are judged on the family
-# SUM (see module docstring for the pre/post side_table_build caveat).
-FAMILIES = {
-    "lsh": [
-        "near_dup_components", "near_dup_verified_pairs", "near_dup_keep_best",
-        "near_dup_canonical_ids", "minhash_band_buckets", "minhash_candidate_pairs",
-        "minhash_incremental_pairs", "curated_documents", "curated_documents_multimodal",
-        "curated_documents_best",
-    ],
-    "simhash": ["simhash_documents", "simhash_near_pairs", "simhash_incremental_pairs"],
-    "kmeans": ["kmeans_clusters", "semantic_dedup_keep", "ivf_ann_top3"],
-    "lang_model": ["ngram_lang_classifier", "lang_confusion_matrix"],
-    "pagerank": ["near_dup_pagerank"],  # bills the LSH marts if first consumer
-    "pq": ["pq_adc_top3"],              # codebook + codes side tables
-    "bpe": ["bpe_merge_table", "bpe_tokenized_docs", "bpe_fertility_by_lang"],
-    "dsir": ["dsir_importance_weights", "dsir_selected_corpus"],
-}
-
-# side_table_build mart -> family whose OLD first consumer used to bill it
-MART_FAMILY = {
-    "minhash_band_keys": "lsh",
-    "near_dup_verified_pairs": "lsh",
-    "near_dup_components": "lsh",
-    "simhash32": "simhash",
-    "kmeans_centroids": "kmeans",
-    "kmeans_assignment": "kmeans",
-    "lang_trigram_profiles": "lang_model",
-    "pq_codebooks": "pq",
-    "pq_codes": "pq",
-    "bpe_merges": "bpe",
-}
+from measure import same_setup
 
 
 def main() -> int:
@@ -63,50 +25,23 @@ def main() -> int:
 
     old_doc = json.load(open(args.old))
     new_doc = json.load(open(args.new))
+    if not same_setup(old_doc, new_doc):
+        print(f"refusing to compare: OLD cpus={old_doc.get('cpus')} sf={old_doc.get('sf')}, "
+              f"NEW cpus={new_doc.get('cpus')} sf={new_doc.get('sf')}")
+        return 2
     old, new = old_doc["queries"], new_doc["queries"]
-    fam_of = {q: f for f, qs in FAMILIES.items() for q in qs}
 
     regressions: list[str] = []
     print(f"{len(new)} queries in NEW ({len(set(new) - set(old))} added, "
           f"{len(set(old) - set(new))} removed)")
-    for side in ("side_table_build",):
-        o = (old_doc.get(side) or {}).get("total")
-        n = (new_doc.get(side) or {}).get("total")
-        if o is not None or n is not None:
-            print(f"  {side}: {o if o is not None else 'n/a'} -> "
-                  f"{n if n is not None else 'n/a'}s (setup, billed separately)")
-
-    fam_old: dict[str, float] = {}
-    fam_new: dict[str, float] = {}
-    # transition compensation: OLD pre-split (no setup entry) vs NEW
-    # post-split — add NEW's setup mart costs back into their families
-    old_has_split = "side_table_build" in old_doc
-    if not old_has_split:
-        marts = new_doc.get("side_table_build", {}).get("marts") or {}
-        wall = new_doc.get("side_table_build", {}).get("total")
-        span_sum = sum(marts.values())
-        # marts build CONCURRENTLY, so per-mart spans measure contended
-        # latency and their sum exceeds the true wall cost — amortize the
-        # wall across marts proportionally to their spans, else the
-        # compensation overstates NEW family cost and cries wolf
-        scale = (wall / span_sum) if wall and span_sum > wall else 1.0
-        for mart, sec in marts.items():
-            f = MART_FAMILY.get(mart)
-            if f:
-                fam_new[f] = fam_new.get(f, 0.0) + sec * scale
-    for q in set(old) & set(new):
-        f = fam_of.get(q)
-        if f:
-            fam_old[f] = fam_old.get(f, 0.0) + old[q]
-            fam_new[f] = fam_new.get(f, 0.0) + new[q]
-            continue
+    o = (old_doc.get("side_table_build") or {}).get("total")
+    n = (new_doc.get("side_table_build") or {}).get("total")
+    if o is not None or n is not None:
+        print(f"  side_table_build: {o if o is not None else 'n/a'} -> "
+              f"{n if n is not None else 'n/a'}s (setup, billed separately)")
+    for q in sorted(set(old) & set(new)):
         if new[q] > args.threshold * old[q] and new[q] - old[q] > 0.5:
             regressions.append(f"{q}: {old[q]:.2f}s -> {new[q]:.2f}s")
-    for f in sorted(fam_old):
-        if fam_new[f] > args.threshold * fam_old[f] and fam_new[f] - fam_old[f] > 1.0:
-            regressions.append(f"family {f}: {fam_old[f]:.2f}s -> {fam_new[f]:.2f}s")
-        else:
-            print(f"  family {f}: {fam_old[f]:.2f}s -> {fam_new[f]:.2f}s (ok)")
 
     for r in regressions:
         print(f"  [REGRESSION] {r}")

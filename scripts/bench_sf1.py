@@ -10,21 +10,21 @@ driver's own 8-core and 32-core runs landed within 4% of each other
   planted near-duplicates) into session scratch. The data
   is recreated from /root/testdata on EVERY run and deleted after — it is
   measurement input, never a cached result.
-- Times a fixed panel of the catalog's compute-heaviest LAZY rows
-  (min-of-REPS through the noop sink, shared marts pre-built and billed
-  separately — bench.py's exact methodology) at the current
-  $SPARK_GRAFT_CPUS.
+- Times a fixed panel of the catalog's compute-heaviest rows (min-of-REPS
+  through the noop sink, shared marts pre-built and billed separately —
+  bench.py's session, warm-up and timed reps, from scripts/measure.py) at
+  $SPARK_GRAFT_CPUS, else the CPUs this process may use.
 - Merges per-core-count results into BENCH_SF1.json and computes the
   32c/8c speedup per row; the committed artifact is the pin the next
   round's scaled runs diff against.
 
-Panel selection: compute-bound lazy rows whose scaled workload is ~linear
-in the fact step. EXCLUDED by design, with reasons recorded in the
-artifact: executed/streaming/sink rows (per-batch harness floor is the
-documented core-insensitive cost), and the dedup/similarity family (any
-duplication scheme multiplies candidate PAIRS superlinearly — ~45x per
-identity group of 10 — so their 10x behaviour is governed by the stress
-battery's growth gates, not a parallelism ratio).
+Panel selection: compute-bound rows whose scaled workload is ~linear in
+the fact step. Every panel row must be registered kind="lazy"; the script
+refuses to start otherwise. EXCLUDED by design, with reasons recorded in
+the artifact: executed and streaming rows, and the dedup/similarity family
+(any duplication scheme multiplies candidate PAIRS superlinearly — ~45x
+per identity group of 10 — so their 10x behaviour is governed by the
+stress battery's growth gates, not a parallelism ratio).
 
 Usage:
   SPARK_GRAFT_CPUS=32 python scripts/bench_sf1.py [--reps 2] [--copies 10]
@@ -38,14 +38,11 @@ import argparse
 import json
 import os
 import shutil
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
-from pipeline_etl_ecommerce_spark import testdata_queries  # noqa: E402
-from scale_stress import synthesize  # noqa: E402
+import measure  # also puts the repo root on sys.path
+from pipeline_etl_ecommerce_spark import testdata_queries
+from scale_stress import synthesize
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, "BENCH_SF1.json")
@@ -82,10 +79,10 @@ PANEL = [
 ]
 
 EXCLUSIONS = {
-    "executed/streaming/sink/rest families": (
-        "per-batch stream-machinery floor measured core-insensitive "
-        "(OPTIMIZATION_r11.md item 5); a core-count ratio over them "
-        "measures the harness, not parallelism"
+    "executed and streaming rows (register kind != lazy)": (
+        "their scratch writes and stream start/stop are a per-call harness "
+        "floor measured core-insensitive (OPTIMIZATION_r11.md item 5); a "
+        "core-count ratio over them measures the harness, not parallelism"
     ),
     "dedup/similarity family (minhash/simhash/span/bitext/image)": (
         "10x duplication multiplies candidate pairs ~45x per identity "
@@ -101,9 +98,10 @@ def main() -> int:
     ap.add_argument("--copies", type=int, default=10)
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("bench-sf1", cpus=cpus, shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    not_lazy = [q for q in PANEL if testdata_queries.KIND[q] != "lazy"]
+    if not_lazy:
+        raise SystemExit(f"panel rows must be lazy: {not_lazy}")
+    spark, cpus = measure.session("bench-sf1")
 
     scratch = testdata_queries._scratch_dir(prefix="sf1_bench_")
     sf_dir = os.path.join(scratch, f"sf1x{args.copies}")
@@ -113,23 +111,15 @@ def main() -> int:
     synth_sec = round(time.perf_counter() - t0, 1)
     print(f"[synth] {args.copies}x sf0.1 -> {sf_dir} in {synth_sec}s", flush=True)
 
-    qs = testdata_queries.queries()
     t0 = time.perf_counter()
-    qs["flagship_consolidation"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    testdata_queries.warm_side_tables(spark, sf_dir)
+    measure.warm(spark, sf_dir)
     warm_sec = round(time.perf_counter() - t0, 1)
     print(f"[warm] marts in {warm_sec}s", flush=True)
 
     timings: dict[str, float] = {}
     try:
         for name in PANEL:
-            spark.sparkContext.setJobDescription(f"sf1:{name}")
-            samples = []
-            for _ in range(args.reps):
-                t = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t)
-            spark.sparkContext.setJobDescription(None)
+            samples = measure.time_row(spark, sf_dir, name, args.reps)
             timings[name] = round(min(samples), 3)
             print(f"[time] {name}: min={min(samples):.3f}s "
                   f"max={max(samples):.3f}s", flush=True)
@@ -147,7 +137,7 @@ def main() -> int:
     })
     runs = doc.setdefault("runs", {})
     runs[f"cpus{cpus}"] = {
-        "cpus": int(cpus),
+        "cpus": cpus,
         "copies": args.copies,
         "reps": args.reps,
         "loadavg_start": load_start,
@@ -180,7 +170,7 @@ def main() -> int:
     with open(OUT, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
     print(json.dumps({
-        "artifact": "BENCH_SF1.json", "cpus": int(cpus),
+        "artifact": "BENCH_SF1.json", "cpus": cpus,
         "total": round(sum(timings.values()), 3), "n": len(timings),
     }))
     return 0

@@ -8,11 +8,10 @@ Usage:
   python scripts/opt_measure.py --time --reps 3 --all-over 1.0   # every query
                                   whose last bench_detail time exceeds 1.0s
 
-Timing methodology matches bench.py exactly: warm-up flagship run, shared
-side tables built first (billed separately), per-query min across reps
-through the noop sink. Explains are captured WITHOUT executing (lazy rows
-only — executed rows run their harness on call, so --explain skips names
-in EXECUTED_ROWS and notes why).
+Session, warm-up and timed reps are bench.py's, from scripts/measure.py.
+Explains are captured WITHOUT executing, so --explain covers rows registered
+kind="lazy" only: an executed or streaming row runs its harness on call and
+returns a materialized result, whose plan says nothing about the query.
 """
 
 from __future__ import annotations
@@ -21,33 +20,14 @@ import argparse
 import io
 import json
 import os
-import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
-from pipeline_etl_ecommerce_spark import testdata_queries  # noqa: E402
+import measure  # also puts the repo root on sys.path
+from pipeline_etl_ecommerce_spark import testdata_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PLANS_DIR = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_TAG", "r11"))
-
-# Rows whose callable EXECUTES work (streams, sink writes, backfills) before
-# returning a materialized result: their returned DF is a localCheckpoint /
-# parquet read-back, so .explain() is meaningless and building them is not
-# "lazy". Timing still works (the harness IS the query).
-EXECUTED_PREFIXES = ("streaming_", "sink_", "rest_", "queue_")
-EXECUTED_ROWS = {
-    "backfill_daily_rollup", "bucketed_colocated_join", "incremental_agg_mart",
-    "last_event_per_user", "insert_if_absent_users", "keyed_update_retailprice",
-    "rocksdb_user_totals_executed", "json_quarantine_ingest",
-    "streaming_chunk_replace", "merge_scd2_history", "sp_timezone_daily_rollup",
-}
-
-
-def is_executed(name: str) -> bool:
-    return name.startswith(EXECUTED_PREFIXES) or name in EXECUTED_ROWS
 
 
 def main() -> None:
@@ -58,14 +38,12 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--all-over", type=float, default=None)
     ap.add_argument("--no-warm", action="store_true",
-                    help="skip warm_side_tables (explain-only shortcut for rows without marts)")
+                    help="skip the warm-up (explain-only shortcut for rows without marts)")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("opt-measure", cpus=cpus, shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = measure.session("opt-measure")
 
     qs = testdata_queries.queries()
     names = list(args.queries)
@@ -80,16 +58,16 @@ def main() -> None:
 
     t0 = time.perf_counter()
     if not args.no_warm:
-        qs["flagship_consolidation"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        testdata_queries.warm_side_tables(spark, sf_dir)
+        measure.warm(spark, sf_dir)
         print(f"[warm] side tables in {time.perf_counter() - t0:.1f}s", flush=True)
 
     results: dict[str, dict] = {}
     for name in names:
         fn = qs[name]
         if args.explain:
-            if is_executed(name):
-                print(f"[explain] {name}: SKIP (executed row — harness, not plan)")
+            kind = testdata_queries.KIND[name]
+            if kind != "lazy":
+                print(f"[explain] {name}: SKIP ({kind} row — harness, not plan)")
             else:
                 df = fn(spark, sf_dir)
                 buf = io.StringIO()
@@ -102,13 +80,7 @@ def main() -> None:
                 n_ex = txt.count("Exchange")
                 print(f"[explain] {name}: {path} (Exchange x{n_ex})")
         if args.time:
-            spark.sparkContext.setJobDescription(f"opt:{name}")
-            samples = []
-            for _ in range(args.reps):
-                t = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t)
-            spark.sparkContext.setJobDescription(None)
+            samples = measure.time_row(spark, sf_dir, name, args.reps)
             results[name] = {
                 "min": round(min(samples), 3),
                 "max": round(max(samples), 3),

@@ -2,9 +2,12 @@
 (BENCH_BASELINE.json) that bench.py's baseline gate compares every future
 run against (r7 verdict item 3).
 
-Refuses to pin a run that isn't clean: load gate must have PASSED and
+Refuses to pin a run that isn't clean: load gate must have PASSED,
 reps >= 3 (a 1-rep or loaded-host run would bake noise into the floor
-every later run is judged by).
+every later run is judged by), and the run's baseline gate must not have
+failed (an understood regression is adjudicated in bench.py's
+BASELINE_ADJUDICATIONS, which keeps the gate ok; pinning over it would
+erase the evidence instead).
 
 Usage: python scripts/pin_bench_baseline.py ["note for the record"]
 """
@@ -27,6 +30,10 @@ def main() -> int:
         return 1
     if detail.get("reps", 1) < 3:
         print(f"refusing to pin: reps={detail.get('reps')} < 3")
+        return 1
+    status = detail.get("baseline_gate", {}).get("status", "")
+    if status.startswith("failed"):
+        print(f"refusing to pin: baseline gate {status}")
         return 1
     baseline = {
         "pinned_from": sys.argv[1] if len(sys.argv) > 1 else "clean run",
@@ -70,11 +77,12 @@ def main() -> int:
                 "walls."
             ),
             "executed_streaming_family": (
-                "streaming_*_executed walls are bimodal across clean runs "
-                "(fixed stream start/stop + state-store harness cost, not "
-                "data compute) — r8/r9 both burned adjudication passes on "
-                "2-3x swings with bit-identical plans. bench.py now gates "
-                "the family at 3x with a 2 s floor (r9 verdict item 3)."
+                "walls of rows that start a stream are bimodal across clean "
+                "runs (fixed stream start/stop + state-store harness cost, "
+                "not data compute) — r8/r9 both burned adjudication passes "
+                "on 2-3x swings with bit-identical plans. bench.py gates "
+                "the rows registered kind=\"streaming\" at 3x with a 2 s "
+                "floor (r9 verdict item 3)."
             ),
             "r10_media_flags": (
                 "bmp_decode_stats / png_decode_stats / png_rgba_decode_stats "

@@ -24,11 +24,11 @@ semantics, not a plan defect).
 Usage: python scripts/scale_stress.py [--copies 10] [--keep] [--json OUT]
 Prints a markdown table; with ``--json`` also writes a structured artifact
 (STRESS_r{N}.json — r6 verdict item 5) so scale regressions diff round-over-
-round like bench. Query walls are measured with the shared side-table marts
-PRE-BUILT at each SF (the ingest-time contract bench.py also uses), and the
-mart-build walls are recorded separately; each family carries a written
-adjudication of its expected growth so a ratio is judged against its design,
-not a blanket bound.
+round like bench. Query walls are measured with bench.py's warm-up and
+timed rep (scripts/measure.py) — the shared side-table marts PRE-BUILT at
+each SF, the ingest-time contract — and the mart-build walls are recorded
+separately; each family carries a written adjudication of its expected
+growth so a ratio is judged against its design, not a blanket bound.
 """
 
 from __future__ import annotations
@@ -44,6 +44,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import measure  # noqa: E402
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 SF_SRC = "/root/testdata/sf0.1"
@@ -129,12 +130,6 @@ def shuffle_write_bytes(spark: SparkSession) -> int:
         return sum(s.get("shuffleWriteBytes", 0) for s in stages)
     except Exception:
         return -1
-
-
-def materialize(df) -> int:
-    """Run the full plan without driver-side collection; return row count."""
-    df.write.format("noop").mode("overwrite").save()
-    return -1
 
 
 # Written adjudication per stressed family: what growth the DESIGN predicts
@@ -269,24 +264,21 @@ def main() -> int:
         "span_intra_deduped_documents",
         "span_full_deduped_documents",
     ]
-    # Pre-build the shared marts at BOTH SFs outside the per-query timers
-    # (the ingest-time contract; bench.py bills the same way), recording the
-    # build walls as their own artifact row.
+    # Warm up and pre-build the shared marts at BOTH SFs outside the
+    # per-query timers (bench.py bills the same way), recording the build
+    # walls as their own artifact row.
     mart_walls = {}
     for label, sf_dir in (("sf0.1", SF_SRC), ("sf1", sf1_dir)):
-        w = tq.warm_side_tables(spark, sf_dir)
+        w = measure.warm(spark, sf_dir)
         mart_walls[label] = w
         print(f"  marts @ {label}: {w['__wall']}s")
 
     rows = []
     for name in queries:
-        fn = tq.QUERIES[name]
         rec = {"query": name}
         for label, sf_dir in (("sf0.1", SF_SRC), ("sf1", sf1_dir)):
             sw0 = shuffle_write_bytes(spark)
-            t = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            wall = time.perf_counter() - t
+            [wall] = measure.time_row(spark, sf_dir, name, 1)
             sw1 = shuffle_write_bytes(spark)
             rec[f"{label}_wall_s"] = round(wall, 2)
             rec[f"{label}_shuffle_mb"] = (
