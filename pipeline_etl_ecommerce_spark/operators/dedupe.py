@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ranking import rank_per_group
+
 
 def content_hash(col: str | Column) -> Column:
     """Exact-dedup key: md5 over the raw UTF-8 bytes."""
@@ -347,14 +349,12 @@ def keep_best_per_cluster(
     component_id shared by the ranking window and the size count — the same
     single-Exchange window pattern as the SCD2 build.
     """
-    w = Window.partitionBy("component_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col)
-    )
+    joined = components.join(scores.select(id_col, score_col), id_col)
     return (
-        components.join(scores.select(id_col, score_col), id_col)
-        .withColumn("__rn", F.row_number().over(w))
-        .withColumn("n_members", F.count("*").over(Window.partitionBy("component_id")))
-        .filter(F.col("__rn") == 1)
+        rank_per_group(
+            joined, "component_id", [F.col(score_col).desc(), F.col(id_col)],
+            k=1, size_col="n_members",
+        )
         .select(
             "component_id",
             F.col(id_col).alias(f"best_{id_col}"),
@@ -368,7 +368,8 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
     """Transitive closure of the duplicate relation by iterative label
     propagation: every node's label converges to the minimum doc id in its
     component. Deterministic; O(diameter) rounds, each one join + groupBy.
-    Returns (doc_id, component_id) for every doc appearing in ``pairs``.
+    Returns (doc_id, component_id) for every doc appearing in ``pairs``;
+    raises ``RuntimeError`` when ``max_iter`` rounds end before a fixed point.
 
     Scale note: label propagation is the standard distributed CC algorithm;
     each round's shuffle is proportional to the edge list, and near-dup
@@ -413,8 +414,14 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
         changed = updated.filter(F.col("new_component") != F.col("component_id")).limit(1).count()
         labels = updated.select("doc_id", F.col("new_component").alias("component_id"))
         if changed == 0:
-            break
-    return labels
+            return labels
+    # A label still moved in the last round: the labels are not the
+    # component minima yet. Fail loudly, as connected_components_star does.
+    raise RuntimeError(
+        f"connected_components: no fixed point after {max_iter} rounds; raise "
+        "max_iter (label propagation needs one round per hop of the graph's "
+        "diameter) or use connected_components_star"
+    )
 
 
 def connected_components_star(pairs: DataFrame, *, max_iter: int = 30) -> DataFrame:

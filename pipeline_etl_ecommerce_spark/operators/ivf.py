@@ -25,9 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.window import Window
 
-from .similarity import _dvec, cosine, dot, norm
+from .ranking import rank_per_group, top_k_per_group
+from .similarity import _dvec, _ivf_probes, _top_k_by_cos_sim, cosine, dot, norm
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -110,12 +110,7 @@ def ivf_topk(
         .select("query_id", "cand_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"))
         .dropDuplicates(["query_id", "cand_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k_by_cos_sim(scored, k)
 
 
 def ivf_topk_pinned(
@@ -230,12 +225,7 @@ def spilled_assignment(
     scored = v.crossJoin(F.broadcast(centroids.select("cid", "cvec"))).select(
         "_vid", "_v", "cid", _sq_dist(F.col("_v"), F.col("cvec")).alias("d2")
     )
-    w = Window.partitionBy("_vid").orderBy("d2", "cid")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= spill)
-        .select("_vid", "_v", "cid")
-    )
+    return top_k_per_group(scored, "_vid", ["d2", "cid"], spill).select("_vid", "_v", "cid")
 
 
 def build_search_index(
@@ -323,11 +313,8 @@ def ivfadc_topk(
     probe_scored = q.crossJoin(F.broadcast(centroids.select("cid", "cvec"))).select(
         "query_id", F.col("cid"), _sq_dist(F.col("qv"), F.col("cvec")).alias("d2")
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cid")
-    probes = (
-        probe_scored.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", F.col("cid").alias("cluster"))
+    probes = top_k_per_group(probe_scored, "query_id", ["d2", "cid"], nprobe).select(
+        "query_id", F.col("cid").alias("cluster")
     )
     cands = (
         probes.join(
@@ -366,17 +353,10 @@ def ivfadc_topk(
         .groupBy("query_id", "cand_id")
         .agg(F.round(F.sum("sub_dist"), 6).alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("cand_id").asc())
+    by_adc = [F.col("adc_dist").asc(), F.col("cand_id").asc()]
     if refine <= 0:
-        return (
-            scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= k)
-        )
-    shortlist = (
-        scored.withColumn("srn", F.row_number().over(w))
-        .filter(F.col("srn") <= refine)
-        .select("query_id", "cand_id")
-    )
+        return rank_per_group(scored, "query_id", by_adc, rank_col="rnk", k=k)
+    shortlist = top_k_per_group(scored, "query_id", by_adc, refine).select("query_id", "cand_id")
     vecs = lists.select(
         F.col("_vid").alias("cand_id"), F.col("_v").alias("cv")
     ).dropDuplicates(["cand_id"])  # spilled lists carry each vector twice
@@ -385,11 +365,8 @@ def ivfadc_topk(
         .join(q, "query_id")
         .select("query_id", "cand_id", _sq_dist(F.col("qv"), F.col("cv")).alias("d2"))
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("cand_id").asc())
-    return (
-        exact.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= k)
-    )
+    by_d2 = [F.col("d2").asc(), F.col("cand_id").asc()]
+    return rank_per_group(exact, "query_id", by_d2, rank_col="rnk", k=k)
 
 
 def ivf_search_pinned(
@@ -412,24 +389,10 @@ def ivf_search_pinned(
     candidate probed via two of its lists would otherwise occupy two of the
     top-k slots (identical cos_sim rows) and silently evict a real
     neighbor. Single-assignment lists skip the extra shuffle."""
-    from .clustering import _sq_dist
-
-    cents = centroids
     lists = assigned.select(
         F.col("_vid").alias("cand_id"), F.col("_v").alias("cv"), F.col("cid").alias("cluster")
     )
-
-    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qv"))
-    probe_scored = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", F.col("cid"), _sq_dist(F.col("qv"), F.col("cvec")).alias("d2")
-    )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cid")
-    probes = (
-        probe_scored.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", F.col("cid").alias("cluster"))
-    )
-
+    probes = _ivf_probes(queries, centroids, vec_col=vec_col, id_col=id_col, nprobe=nprobe)
     scored = (
         probes.join(lists, "cluster")  # inverted-list join replaces the cross join
         .filter(F.col("query_id") != F.col("cand_id"))
@@ -445,9 +408,4 @@ def ivf_search_pinned(
         # duplicate (query, cand) rows carry an identical rounded cos_sim
         # (same inputs, same expression), so dropDuplicates collapses exactly
         scored = scored.dropDuplicates(["query_id", "cand_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k_by_cos_sim(scored, k)

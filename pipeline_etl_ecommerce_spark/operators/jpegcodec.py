@@ -289,10 +289,6 @@ def _idct_planes_multi(
     return out
 
 
-def _clamp(v: int) -> int:
-    return 0 if v < 0 else (255 if v > 255 else v)
-
-
 # --------------------------------------------------------------------------
 # Huffman: canonical code construction shared by both directions.
 # --------------------------------------------------------------------------

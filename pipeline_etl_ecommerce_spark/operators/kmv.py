@@ -36,7 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .ranking import top_k_per_group
 
 __all__ = ["kmv_estimate", "kmv_pair_estimates", "kmv_sketch"]
 
@@ -65,10 +66,8 @@ def kmv_sketch(
         .select(*group_cols, _h32(F.col(value_col)).alias("__h"))
         .distinct()
     )
-    w = Window.partitionBy(*group_cols).orderBy("__h")
     return (
-        d.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        top_k_per_group(d, group_cols, ["__h"], k)
         .groupBy(*group_cols)
         .agg(F.sort_array(F.collect_list("__h")).alias("kmv"))
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import _assign, centroids_table
+from .ranking import rank_per_group
 from .similarity import _dvec
 
 
@@ -161,10 +162,5 @@ def pq_adc_topk(
         .groupBy("query_id", F.col("vec_id").alias("cand_id"))
         .agg(F.round(F.sum("sub_dist"), 6).alias("adc_dist"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-    )
+    order = [F.col("adc_dist").asc(), F.col("cand_id").asc()]
+    return rank_per_group(scored, "query_id", order, rank_col="rnk", k=k)

@@ -7,6 +7,12 @@ with ``posicao = offset + index + 1`` (reference
 (reference ``worker_processar_estoque.php:158``). Spark-first: ``row_number``
 windows and ``posexplode``.
 
+``rank_per_group`` is the one place a per-group rank is made: every top-k,
+first-per-group, position and rank-statistics pass in ``operators/`` and
+``plans/`` (percentiles, postings caps, ANN probes and re-ranks) is a
+``row_number`` over ``partitionBy(keys).orderBy(order)`` built there, with
+the group size riding the same partitioning when a caller needs it.
+
 Scale: a global ``row_number`` over one unpartitioned window is a single-task
 sort — fine for the reference's 500-row search pages, wrong at 100 TB. All
 helpers here take a partition key; ``rank_capture`` documents the
@@ -27,6 +33,32 @@ def _cols(key: str | list[str]) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
 
 
+def rank_per_group(
+    df: DataFrame,
+    keys: str | list[str],
+    order_by: list[Column | str],
+    *,
+    rank_col: str = "__rn",
+    k: int | None = None,
+    size_col: str | None = None,
+    size_of: str = "*",
+) -> DataFrame:
+    """Add ``rank_col``, the 1-based ``row_number`` of each row within its
+    ``keys`` group in ``order_by`` order; with ``k``, keep only ranks
+    ``<= k``. ``size_col`` adds ``count(size_of)`` over the same
+    partitioning (``"*"`` counts rows, a column name counts its non-NULL
+    values), counted before the ``k`` filter. Both windows share one
+    shuffle on the group key."""
+    group = Window.partitionBy(*_cols(keys))
+    order = [F.col(c) if isinstance(c, str) else c for c in order_by]
+    out = df.withColumn(rank_col, F.row_number().over(group.orderBy(*order)))
+    if size_col is not None:
+        out = out.withColumn(size_col, F.count(size_of).over(group))
+    if k is not None:
+        out = out.filter(F.col(rank_col) <= k)
+    return out
+
+
 def first_per_group(df: DataFrame, keys: str | list[str], order_by: list[Column | str]) -> DataFrame:
     """W7: deterministic first row per group (reference's loop-``break``
     first-fulfillment-listing-per-SKU, ``worker_processar_estoque.php:158``)."""
@@ -37,12 +69,8 @@ def top_k_per_group(
     df: DataFrame, keys: str | list[str], order_by: list[Column | str], k: int, *, rank_col: str | None = None
 ) -> DataFrame:
     """Top-k rows per group via row_number window; one shuffle on the group key."""
-    order_exprs = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    w = Window.partitionBy(*_cols(keys)).orderBy(*order_exprs)
-    ranked = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
-    if rank_col:
-        return ranked.withColumnRenamed("__rn", rank_col)
-    return ranked.drop("__rn")
+    ranked = rank_per_group(df, keys, order_by, rank_col=rank_col or "__rn", k=k)
+    return ranked if rank_col else ranked.drop("__rn")
 
 
 def distributed_global_rank(
@@ -173,12 +201,7 @@ def rank_capture(
     exchange) — only valid when ``limit`` bounds the result, as in the
     reference's 500-row cap.
     """
-    order_exprs = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    w = Window.partitionBy(*_cols(partition_by)) if partition_by else Window.partitionBy()
-    w = w.orderBy(*order_exprs)
-    out = df.withColumn(rank_col, F.row_number().over(w))
-    if limit is not None:
-        out = out.filter(F.col(rank_col) <= limit)
+    out = rank_per_group(df, partition_by or [], order_by, rank_col=rank_col, k=limit)
     if page_size:
         out = out.withColumn(page_col, ((F.col(rank_col) - 1) / F.lit(page_size)).cast("int") + 1)
     return out

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ranking import rank_per_group
+
 
 def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     tok = F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
@@ -80,8 +82,6 @@ def tfidf_top_terms(
     """Per-document top-k characteristic terms by tf-idf
     (``tf * ln(N / df)``), deterministic tie-break by term. The per-doc
     keyword extraction a corpus explorer or topical tagger runs."""
-    from pyspark.sql.window import Window
-
     toks = _tokens(df, text_col, id_col)
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").cast("double").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
@@ -91,12 +91,9 @@ def tfidf_top_terms(
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6))
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("doc_id", "term", "tfidf", F.col("rnk").cast("int").alias("rnk"))
-    )
+    order = [F.col("tfidf").desc(), F.col("term")]
+    ranked = rank_per_group(scored, "doc_id", order, rank_col="rnk", k=top_k)
+    return ranked.select("doc_id", "term", "tfidf", "rnk")
 
 
 def inverted_index(
@@ -121,8 +118,6 @@ def inverted_index(
     even for stop-terms — an uncapped ``collect_set`` on a 100 TB corpus
     would OOM on exactly the most frequent terms.
     """
-    from pyspark.sql import Window
-
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(
@@ -134,13 +129,8 @@ def inverted_index(
             )
         ).alias("term"),
     )
-    w_rank = Window.partitionBy("term").orderBy("doc_id")
-    w_all = Window.partitionBy("term")
-    ranked = toks.withColumn("__rn", F.row_number().over(w_rank)).withColumn(
-        "df", F.count("*").over(w_all)
-    )
     return (
-        ranked.filter(F.col("__rn") <= max_postings)
+        rank_per_group(toks, "term", ["doc_id"], k=max_postings, size_col="df")
         .groupBy("term", "df")
         .agg(
             F.array_join(F.array_sort(F.collect_list("doc_id")), ",").alias("postings")

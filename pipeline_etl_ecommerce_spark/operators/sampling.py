@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ranking import top_k_per_group
+
 
 def _hex_threshold(fraction: float) -> str:
     """8-hex-char threshold such that P[hash8 < threshold] == fraction.
@@ -179,14 +181,7 @@ def weighted_sample_topk(
     )
     if strata_col is None:
         return scored.orderBy(F.col("sample_score").desc(), F.col(id_col)).limit(k)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(strata_col).orderBy(F.col("sample_score").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return top_k_per_group(scored, strata_col, [F.col("sample_score").desc(), F.col(id_col)], k)
 
 
 def hash_topk_sample(
@@ -207,15 +202,7 @@ def hash_topk_sample(
     if k <= 0:
         raise ValueError("k must be positive")
     h = _hash8(F.col(strata_col).cast("string"), F.col(id_col).cast("string"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(strata_col).orderBy("_h8", id_col)
-    return (
-        df.withColumn("_h8", h)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_h8", "_rk")
-    )
+    return top_k_per_group(df.withColumn("_h8", h), strata_col, ["_h8", id_col], k).drop("_h8")
 
 
 def token_budget_sample(

@@ -22,8 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from .ranking import rank_per_group
 from .sampling import _hex_threshold
 
 
@@ -49,11 +49,8 @@ def shuffle_shards(
     the identity hash within the shard (id tiebreak for md5-prefix
     collisions). Writing ``partitionBy(shard) sortBy(pos)`` materializes
     the epoch's training order."""
-    h = _hash8(F.col(id_col), seed)
-    w = Window.partitionBy("shard").orderBy("h8", id_col)
-    return (
-        df.withColumn("h8", h)
-        .withColumn("shard", shard_of(F.col(id_col), n_shards=n_shards, seed=seed))
-        .withColumn("pos", F.row_number().over(w).cast("long"))
-        .drop("h8")
+    keyed = df.withColumn("h8", _hash8(F.col(id_col), seed)).withColumn(
+        "shard", shard_of(F.col(id_col), n_shards=n_shards, seed=seed)
     )
+    ranked = rank_per_group(keyed, "shard", ["h8", id_col], rank_col="pos")
+    return ranked.withColumn("pos", F.col("pos").cast("long")).drop("h8")

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .ranking import first_per_group, rank_per_group, top_k_per_group
+
 
 def _dvec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -71,12 +73,15 @@ def cosine_topk(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k_by_cos_sim(scored, k)
+
+
+def _top_k_by_cos_sim(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best candidates by ``cos_sim`` (ties by id):
+    ``(query_id, cand_id, cos_sim, rnk)``."""
+    order = [F.col("cos_sim").desc(), F.col("cand_id")]
+    ranked = rank_per_group(scored, "query_id", order, rank_col="rnk", k=k)
+    return ranked.select("query_id", "cand_id", "cos_sim", "rnk")
 
 
 def _margin_select(fwd: DataFrame, bwd: DataFrame, tau: float) -> DataFrame:
@@ -107,10 +112,9 @@ def _margin_select(fwd: DataFrame, bwd: DataFrame, tau: float) -> DataFrame:
             F.round(2 * F.col("cos_sim") / (F.col("__ax") + F.col("__ay")), 6),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("margin").desc(), F.col("cand_id"))
     return (
-        m.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("margin") >= tau))
+        first_per_group(m, "query_id", [F.col("margin").desc(), F.col("cand_id")])
+        .filter(F.col("margin") >= tau)
         .select(
             F.col("query_id").alias("src_id"),
             F.col("cand_id").alias("tgt_id"),
@@ -203,11 +207,8 @@ def ivf_knn_normed(
     probe_scored = q.crossJoin(F.broadcast(centroids.select("cid", "cvec"))).select(
         "query_id", "qv", "qnorm", F.col("cid"), _sq_dist(F.col("qv"), F.col("cvec")).alias("d2")
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cid")
-    probes = (
-        probe_scored.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "qnorm", F.col("cid").alias("cluster"))
+    probes = top_k_per_group(probe_scored, "query_id", ["d2", "cid"], nprobe).select(
+        "query_id", "qv", "qnorm", F.col("cid").alias("cluster")
     )
     scored = (
         probes.join(l_tab, "cluster")
@@ -223,12 +224,7 @@ def ivf_knn_normed(
         # collapses exactly (the ivf_search_pinned dedupe_candidates rule)
         .dropDuplicates(["query_id", "cand_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k_by_cos_sim(scored, k)
 
 
 def _ivf_probes(
@@ -247,11 +243,8 @@ def _ivf_probes(
     probe_scored = q.crossJoin(F.broadcast(centroids.select("cid", "cvec"))).select(
         "query_id", "qv", F.col("cid"), _sq_dist(F.col("qv"), F.col("cvec")).alias("d2")
     )
-    wp = Window.partitionBy("query_id").orderBy("d2", "cid")
-    return (
-        probe_scored.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", F.col("cid").alias("cluster"))
+    return top_k_per_group(probe_scored, "query_id", ["d2", "cid"], nprobe).select(
+        "query_id", "qv", F.col("cid").alias("cluster")
     )
 
 
@@ -470,12 +463,7 @@ def lsh_bucket_topk(
         .filter(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k_by_cos_sim(scored, k)
 
 
 def embedding_near_dup_pairs(

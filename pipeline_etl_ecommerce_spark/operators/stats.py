@@ -10,17 +10,24 @@ engine computing the same formula from the same exact sums reproduces the
 result bit-for-bit, while the heavy part stays a plain one-shuffle
 hash-aggregate that scales like any groupBy.
 
-``group_percentiles`` uses nearest-rank (type-1) selection — an integer
-rank pick, no interpolation arithmetic to diverge between engines — via
-one sort-free window pass.
+``group_percentiles`` (nearest-rank, type-1: an integer rank pick, no
+interpolation arithmetic to diverge between engines) and
+``group_percentiles_cont`` (linear, type-7) select from the same rank pass:
+one shuffle on the group key, each group's values sorted within its
+partition and numbered by ``ranking.rank_per_group``, then one row per
+group. NULL values rank last and are not counted in ``n``, as in SQL's
+``percentile_disc`` / ``percentile_cont``; an all-NULL group keeps its row
+with NULL percentiles.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .ranking import rank_per_group
 
 # 18,6 not 38,6: products of two decimal(18,6) stay within precision 38
 # (37,12 — exact); decimal(38,6)² would trip Spark's precision-loss scale
@@ -67,6 +74,27 @@ def descriptive_stats(
     return g.select(*group_cols, "n", *out_cols)
 
 
+def _names(percentiles: Sequence[float], out_names: Sequence[str] | None) -> list[str]:
+    if out_names is not None:
+        return list(out_names)
+    return [f"p{str(p).replace('0.', '').ljust(2, '0')}" for p in percentiles]
+
+
+def _rank_pick(
+    df: DataFrame, group_cols: Sequence[str], value_col: str, picks: dict[str, Column]
+) -> DataFrame:
+    """The rank pass both percentile types select from: one row per group
+    with ``__n`` (its non-NULL value count) and, per ``picks`` entry, the
+    value at that rank — a Column over ``__n``, NULL when no row has it."""
+    v = F.col(value_col)
+    ranked = rank_per_group(
+        df.select(*group_cols, value_col), list(group_cols), [v.asc_nulls_last()],
+        rank_col="__rk", size_col="__n", size_of=value_col,
+    )
+    aggs = [F.max(F.when(F.col("__rk") == r, v)).alias(a) for a, r in picks.items()]
+    return ranked.groupBy(*group_cols).agg(*aggs, F.max("__n").alias("__n"))
+
+
 def group_percentiles(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -78,31 +106,18 @@ def group_percentiles(
 ) -> DataFrame:
     """Exact nearest-rank (type-1) percentiles per group: the value at rank
     ``ceil(p * n)`` in ascending order. Integer rank selection — identical
-    on every engine, no interpolation. One shuffle; the rank filter keeps
-    only the selected rows before the final pivot-style aggregation.
-    ``n_col`` additionally emits the group row count — it rides the window
-    pass's existing ``count(*) OVER`` column, so callers that need n (e.g.
+    on every engine, no interpolation. One shuffle; a conditional max per
+    percentile picks the selected rank in the one-row-per-group aggregation.
+    ``n_col`` additionally emits the group's non-NULL value count — it
+    rides the rank pass's own count, so callers that need n (e.g.
     ``group_mad``) skip a separate counting scan."""
-    names = list(out_names) if out_names is not None else [
-        f"p{str(p).replace('0.', '').ljust(2, '0')}" for p in percentiles
-    ]
-    w = Window.partitionBy(*group_cols).orderBy(F.col(value_col))
-    cnt = Window.partitionBy(*group_cols)
-    ranked = df.select(*group_cols, value_col).withColumn(
-        "__rk", F.row_number().over(w)
-    ).withColumn("__n", F.count("*").over(cnt))
-    aggs = [
-        F.max(
-            F.when(
-                F.col("__rk") == F.ceil(F.lit(float(p)) * F.col("__n")).cast("long"),
-                F.col(value_col),
-            )
-        ).alias(name)
-        for p, name in zip(percentiles, names)
-    ]
-    if n_col is not None:
-        aggs.append(F.max("__n").alias(n_col))
-    return ranked.groupBy(*group_cols).agg(*aggs)
+    names = _names(percentiles, out_names)
+    n = F.col("__n")
+    picks = {
+        name: F.ceil(F.lit(float(p)) * n).cast("long") for p, name in zip(percentiles, names)
+    }
+    extra = [n.alias(n_col)] if n_col is not None else []
+    return _rank_pick(df, group_cols, value_col, picks).select(*group_cols, *names, *extra)
 
 
 def fixed_histogram(
@@ -148,38 +163,22 @@ def group_percentiles_cont(
     the heavy work is a sort within hash partitions and each group
     collapses to one row before the final aggregation (measured ~2.5x
     faster than the native aggregate at sf0.1)."""
-    names = list(out_names) if out_names is not None else [
-        f"p{str(p).replace('0.', '').ljust(2, '0')}" for p in percentiles
-    ]
-    w = Window.partitionBy(*group_cols).orderBy(F.col(value_col))
-    cnt = Window.partitionBy(*group_cols)
-    ranked = (
-        df.select(*group_cols, value_col)
-        .withColumn("__rk", F.row_number().over(w))
-        .withColumn("__n", F.count("*").over(cnt))
-    )
+    names = _names(percentiles, out_names)
     pos = {
         name: F.lit(float(p)) * (F.col("__n") - 1).cast("double")
         for p, name in zip(percentiles, names)
     }
-    aggs = []
+    picks = {}
     for name in names:
         lo_rank = F.floor(pos[name]).cast("long") + 1
-        aggs.append(
-            F.max(F.when(F.col("__rk") == lo_rank, F.col(value_col))).alias(f"__lo_{name}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("__rk") == lo_rank + 1, F.col(value_col))).alias(f"__hi_{name}")
-        )
-    grouped = ranked.groupBy(*group_cols).agg(*aggs, F.max("__n").alias("__n"))
+        picks.update({f"__lo_{name}": lo_rank, f"__hi_{name}": lo_rank + 1})
     outs = []
-    for p, name in zip(percentiles, names):
-        gpos = F.lit(float(p)) * (F.col("__n") - 1).cast("double")
-        frac = gpos - F.floor(gpos).cast("double")
+    for name in names:
+        frac = pos[name] - F.floor(pos[name]).cast("double")
         lo, hi = F.col(f"__lo_{name}"), F.col(f"__hi_{name}")
         val = F.when(hi.isNull() | (frac == 0.0), lo).otherwise(lo + frac * (hi - lo))
         outs.append(F.round(val, round_to).alias(name))
-    return grouped.select(*group_cols, *outs)
+    return _rank_pick(df, group_cols, value_col, picks).select(*group_cols, *outs)
 
 
 def winsorized_stats(
@@ -199,23 +198,24 @@ def winsorized_stats(
     Two passes over the group, no quadratic anything: the threshold table
     from ``group_percentiles`` is one row per group, so it broadcasts back
     onto the rows; the clipped aggregate sums in DECIMAL (order-exact).
+    NULL values are neither clipped nor counted in ``n`` or the mean.
     Output: group cols, n, p_lo, p_hi, winsorized_sum, winsorized_mean."""
     gl = list(group_cols)
     thresholds = group_percentiles(
         df, gl, value_col, [lo_p, hi_p], out_names=["p_lo", "p_hi"]
     )
+    v = F.col(value_col)
+    # a NULL value stays NULL: GREATEST/LEAST skip NULLs and would clip it to p_lo
+    clip = F.when(v.isNotNull(), F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi")))
     clipped = df.select(*gl, value_col).join(F.broadcast(thresholds), gl).withColumn(
-        "__w",
-        F.least(F.greatest(F.col(value_col), F.col("p_lo")), F.col("p_hi")).cast(
-            "decimal(18,2)"
-        ),
+        "__w", clip.cast("decimal(18,2)")
     )
     return clipped.groupBy(*gl).agg(
-        F.count("*").alias("n"),
+        F.count(value_col).alias("n"),
         F.max("p_lo").alias("p_lo"),
         F.max("p_hi").alias("p_hi"),
         F.round(F.sum("__w"), 2).cast("double").alias("winsorized_sum"),
-        F.round(F.sum("__w").cast("double") / F.count("*"), 6).alias("winsorized_mean"),
+        F.round(F.sum("__w").cast("double") / F.count(value_col), 6).alias("winsorized_mean"),
     )
 
 

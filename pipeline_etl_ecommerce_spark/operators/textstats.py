@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .ranking import first_per_group, top_k_per_group
+
 # marker stopwords per language (n-gram heuristic; word-boundary matched)
 LANG_MARKERS: dict[str, str] = {
     "en": r"\b(the|and|of|is|to|in)\b",
@@ -247,12 +249,8 @@ def train_lang_profiles(
         n,
     )
     counts = grams.groupBy("lang", "gram").agg(F.countDistinct("_doc").alias("n_docs"))
-    w = Window.partitionBy("lang").orderBy(F.col("n_docs").desc(), F.col("gram"))
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("lang", "gram")
-    )
+    top = top_k_per_group(counts, "lang", [F.col("n_docs").desc(), F.col("gram")], top_k)
+    return top.select("lang", "gram")
 
 
 def classify_lang_ngram(
@@ -273,12 +271,9 @@ def classify_lang_ngram(
         .groupBy("doc_id", "lang")
         .agg(F.countDistinct("gram").alias("n_overlap"))
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("n_overlap").desc(), F.col("lang"))
-    best = (
-        overlap.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("doc_id", F.col("lang").alias("predicted_lang"), "n_overlap")
-    )
+    best = first_per_group(
+        overlap, "doc_id", [F.col("n_overlap").desc(), F.col("lang")]
+    ).select("doc_id", F.col("lang").alias("predicted_lang"), "n_overlap")
     return (
         df.select(F.col(id_col).alias("doc_id"))
         .join(best, "doc_id", "left")

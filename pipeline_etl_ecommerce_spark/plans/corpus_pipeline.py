@@ -48,6 +48,7 @@ from ..operators.importance import dsir_importance_weights
 from ..operators.lm import perplexity_scores, train_char_trigram_lm
 from ..operators.dq import check_not_null, check_unique, dq_report
 from ..operators.packing import assemble_packs, pack_sequences
+from ..operators.ranking import first_per_group
 from ..operators.sharding import shuffle_shards
 from ..operators.textstats import quality_features
 from ..sources.sinks import (
@@ -385,14 +386,12 @@ def web_ingest_batch(
     media_id, record_index) for provenance joins back to the crawl."""
     from ..operators.webtext import extract_html_text, with_canonical_url
     from ..sources.warc import parse_warc_pages
-    from pyspark.sql import Window
 
     pages = parse_warc_pages(warc_media).filter(F.col("parse_status") == "ok")
     pages = with_canonical_url(pages, "target_uri").filter(
         F.col("canonical_url").isNotNull()
     )
-    w = Window.partitionBy("canonical_url").orderBy("media_id", "record_index")
-    first = pages.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    first = first_per_group(pages, "canonical_url", ["media_id", "record_index"])
     docs = first.select(
         F.xxhash64("canonical_url").alias("doc_id"),
         extract_html_text(F.col("html")).alias("text"),

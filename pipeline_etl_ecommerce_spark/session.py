@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the
-same configs are the ones we'd set on a 1000-executor cluster:
+``get_spark`` runs on ``local[<cpus>]``: the ``cpus`` argument, else
+``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on (what ``nproc``
+prints). The same configs are the ones we'd set on a 1000-executor cluster:
 
 - AQE on (runtime coalescing, skew-join splitting, plan re-optimization) —
   at 100 TB the static shuffle-partition guess is always wrong; AQE fixes it.
@@ -37,7 +38,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -1,4 +1,4 @@
-"""Readers: parquet test tables, JSON ingestion payloads, JDBC marts.
+"""Readers: parquet test tables and JSON ingestion payloads.
 
 The reference scans MySQL tables into PHP hash maps (SURVEY.md §2.1 S1-S3);
 here every table is a DataFrame scan that Catalyst prunes/pushes into. REST
@@ -52,40 +52,6 @@ def read_json_payloads(
     if multiline:
         reader = reader.option("multiLine", "true")
     return reader.json(path)
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    num_partitions: int = 32,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Production-path reader for the reference's MySQL marts.
-
-    Always pass ``partition_column`` bounds for big tables — without them the
-    JDBC source reads through a single connection (one task), which cannot
-    scale past one executor.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound if lower_bound is not None else 0))
-            .option("upperBound", str(upper_bound if upper_bound is not None else 1_000_000_000))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def register_catalog(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> list[str]:

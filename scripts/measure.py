@@ -24,11 +24,11 @@ from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
 
 
 def session(app: str) -> tuple[SparkSession, int]:
-    """The measuring session and its core count: ``$SPARK_GRAFT_CPUS``, else
-    the CPUs this process may run on (what ``nproc`` prints). Shuffle
-    partitions follow the core count."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    spark = get_spark(app, cpus=cpus, shuffle_partitions=cpus)
+    """The measuring session and its core count: ``get_spark``'s default,
+    ``$SPARK_GRAFT_CPUS`` else the CPUs this process may run on (what
+    ``nproc`` prints). Shuffle partitions follow the core count."""
+    spark = get_spark(app)
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     return spark, cpus
 

@@ -78,3 +78,18 @@ def test_star_raises_on_max_iter_exhaustion(spark):
     # ...and with enough rounds the same graph converges to one component
     ok = _components(connected_components_star(chain, max_iter=12))
     assert set(ok.values()) == {0}
+
+
+def test_label_prop_raises_on_max_iter_exhaustion(spark):
+    """A 30-node path needs 29 label-propagation rounds; the default
+    max_iter=20 must fail loudly instead of returning unconverged labels
+    (node 29 would otherwise come back labeled 9)."""
+    import pytest
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="no fixed point"):
+        connected_components(chain)
+    ok = _components(connected_components(chain, max_iter=30))
+    assert set(ok) == set(range(30)) and set(ok.values()) == {0}

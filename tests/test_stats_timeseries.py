@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeline_etl_ecommerce_spark.operators.dedupe import edit_distance_pairs
@@ -12,6 +13,7 @@ from pipeline_etl_ecommerce_spark.operators.stats import (
     descriptive_stats,
     fixed_histogram,
     group_percentiles,
+    group_percentiles_cont,
 )
 from pipeline_etl_ecommerce_spark.operators.timeseries import (
     daily_gapfill,
@@ -39,6 +41,54 @@ def test_group_percentiles_nearest_rank(spark):
     r = group_percentiles(df, ["k"], "v", [0.5, 0.95], out_names=["p50", "p95"]).collect()[0]
     # nearest-rank: ceil(.5*10)=5 -> 50; ceil(.95*10)=10 -> 100
     assert (r.p50, r.p95) == (50.0, 100.0)
+
+
+def test_group_percentiles_cont_matches_numpy_linear(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    groups = {"a": rng.normal(size=37).round(3), "b": rng.normal(size=2).round(3),
+              "c": np.array([4.25])}
+    df = spark.createDataFrame(
+        [(g, float(v)) for g, vs in groups.items() for v in vs], "k string, v double"
+    )
+    ps = [0.0, 0.1, 0.25, 0.5, 0.9, 1.0]
+    names = [f"q{i}" for i in range(len(ps))]
+    got = {r.k: [r[n] for n in names]
+           for r in group_percentiles_cont(df, ["k"], "v", ps, out_names=names).collect()}
+    want = {g: [round(float(np.percentile(vs, 100 * p, method="linear")), 6) for p in ps]
+            for g, vs in groups.items()}
+    assert got.keys() == want.keys()
+    for g in want:
+        assert got[g] == pytest.approx(want[g], abs=1e-6), g
+
+
+def test_percentiles_rank_nulls_last_and_count_only_values(spark):
+    """{NULL, 1, 2, 3}: SQL's percentile_disc / percentile_cont give 2.0 at
+    p50 — NULL is not a value, so it takes no rank below the data and does
+    not count in n. An all-NULL group keeps its row with NULL statistics."""
+    from pipeline_etl_ecommerce_spark.operators.stats import group_mad, winsorized_stats
+
+    df = spark.createDataFrame(
+        [("g", None), ("g", 1.0), ("g", 2.0), ("g", 3.0), ("e", None)], "k string, v double"
+    )
+    disc = group_percentiles(df, ["k"], "v", [0.5], out_names=["p50"], n_col="n")
+    assert {r.k: (r.p50, r.n) for r in disc.collect()} == {"g": (2.0, 3), "e": (None, 0)}
+    cont = group_percentiles_cont(df, ["k"], "v", [0.5, 1.0], out_names=["p50", "p100"])
+    assert {r.k: (r.p50, r.p100) for r in cont.collect()} == {
+        "g": (2.0, 3.0), "e": (None, None)
+    }
+    sql = df.groupBy("k").agg(
+        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v)").alias("d"),
+        F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY v)").alias("c"),
+    )
+    assert {r.k: (r.d, r.c) for r in sql.collect()} == {"g": (2.0, 2.0), "e": (None, None)}
+    mad = {r.k: (r.n, r.median, r.mad) for r in group_mad(df, ["k"], "v").collect()}
+    assert mad == {"g": (3, 2.0, 1.0), "e": (0, None, None)}
+    w = {r.k: r.asDict() for r in winsorized_stats(df, ["k"], "v").collect()}
+    assert (w["g"]["n"], w["g"]["p_lo"], w["g"]["p_hi"]) == (3, 1.0, 3.0)
+    assert (w["g"]["winsorized_sum"], w["g"]["winsorized_mean"]) == (6.0, 2.0)
+    assert (w["e"]["n"], w["e"]["winsorized_sum"], w["e"]["winsorized_mean"]) == (0, None, None)
 
 
 def test_fixed_histogram_clamps_out_of_range(spark):
