@@ -12,10 +12,12 @@ column. Unchanged keys are dropped (at 100 TB the diff is small; the input
 is not).
 
 Scale design: ONE full-outer shuffle join on the key — no collect, no
-per-column subqueries. Comparison uses null-safe equality (``<=>``), so a
-NULL→value or value→NULL flip is 'changed', not 'unchanged'. The companion
-``table_checksum_by_day`` fingerprint query answers "did anything change?"
-cheaply first; this operator answers "what exactly?" only when needed.
+per-column subqueries. Keys and compared columns both match null-safe
+(``<=>``): a key with a NULL component is one row identity (as in the
+keyed sinks), and a NULL→value or value→NULL flip is 'changed', not
+'unchanged'. The companion ``table_checksum_by_day`` fingerprint query
+answers "did anything change?" cheaply first; this operator answers "what
+exactly?" only when needed.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.sinks import key_match
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -32,15 +36,15 @@ def snapshot_diff(
     key_cols: Sequence[str],
     compare_cols: Sequence[str],
 ) -> DataFrame:
-    """Keyed diff of ``new`` against ``old``: full-outer join on
+    """Keyed diff of ``new`` against ``old``: null-safe full-outer join on
     ``key_cols``, classify each key as added / removed / changed by
     null-safe comparison of ``compare_cols``, and emit
     ``old_{col}`` / ``new_{col}`` pairs for each compared column."""
     keys = list(key_cols)
     cols = list(compare_cols)
-    o = old.select(*keys, F.lit(True).alias("__in_old"), *[F.col(c).alias(f"old_{c}") for c in cols])
-    n = new.select(*keys, F.lit(True).alias("__in_new"), *[F.col(c).alias(f"new_{c}") for c in cols])
-    j = o.join(n, keys, "full_outer")
+    o = old.select(*keys, F.lit(True).alias("__in_old"), *[F.col(c).alias(f"old_{c}") for c in cols]).alias("__o")
+    n = new.select(*keys, F.lit(True).alias("__in_new"), *[F.col(c).alias(f"new_{c}") for c in cols]).alias("__n")
+    j = o.join(n, key_match("__o", "__n", keys), "full_outer")
     # keys-only diff (no compared columns) degrades to added/removed only
     any_diff = F.lit(False)
     for c in cols:
@@ -53,5 +57,8 @@ def snapshot_diff(
     return (
         j.withColumn("change_type", change)
         .filter(F.col("change_type").isNotNull())
-        .select(*keys, "change_type", *[f"old_{c}" for c in cols], *[f"new_{c}" for c in cols])
+        .select(
+            *[F.coalesce(F.col(f"__o.{k}"), F.col(f"__n.{k}")).alias(k) for k in keys],
+            "change_type", *[f"old_{c}" for c in cols], *[f"new_{c}" for c in cols],
+        )
     )

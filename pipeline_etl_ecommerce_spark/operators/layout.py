@@ -96,8 +96,8 @@ def write_zordered(
     Z-curve of ``cols``: one range shuffle on the z-key, a local sort inside
     each range. Each output file then holds a contiguous z-range — narrow
     min/max on every participating column. ``keep_key=True`` persists the
-    ``__zkey`` column so readers can range-filter on it directly (the
-    ``sinks.write_zorder_mart`` contract); the default drops it."""
+    ``__zkey`` column so readers can range-filter on it directly; the
+    default drops it."""
     keyed = df.withColumn("__zkey", zorder_key(cols, bits=bits))
     ranged = keyed.repartitionByRange(target_files, "__zkey").sortWithinPartitions(
         "__zkey"

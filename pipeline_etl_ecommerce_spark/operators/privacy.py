@@ -99,21 +99,3 @@ def pseudonymize(df: DataFrame, cols: Sequence[str], *, salt: str, prefix_len: i
             ),
         )
     return out
-
-
-def delete_keys_from_path(spark, path: str, keys_df: DataFrame, key_cols: Sequence[str]) -> int:
-    """Right-to-be-forgotten hard delete: rewrite the mart without any row
-    whose key appears in ``keys_df`` (left-anti join), via the same
-    write-then-swap used by the keyed upserts. Returns the number of rows
-    removed. On Delta this is ``DELETE WHERE key IN (...)``; here it is the
-    plain-parquet reduction with the same anti-join plan. The deletion list
-    is tiny next to the mart, so the anti-join broadcasts it and the
-    rewrite cost is one mart scan — and for date-partitioned marts, pair
-    with partition pruning by filtering the read to affected partitions."""
-    from ..sources.sinks import _write_and_swap
-
-    old = spark.read.parquet(path)
-    keep = old.join(F.broadcast(keys_df.select(*key_cols).distinct()), list(key_cols), "left_anti")
-    removed = old.count() - keep.count()
-    _write_and_swap(keep, path, prefix="delete_")
-    return removed

@@ -9,19 +9,34 @@ DataFrame-level merge helpers plus path-level writers.
 
 Scale notes
 -----------
-- ``merge_upsert`` is one shuffle on the key (the left_anti join); with AQE
-  the small "new" side is broadcast automatically, so merging a day's delta
+- Every keyed write is one operation: drop the rows whose key is in the
+  batch (one null-safe ``left_anti`` join, ``_drop_keys``, on the one key
+  condition ``key_match``), then add the batch. ``replace_groups`` is
+  exactly that; ``merge_upsert`` is the same over the batch deduped
+  last-wins; ``insert_if_absent`` is the same join the other way round.
+  Both fail on schema drift (``merge_upsert`` can opt into evolution).
+  With AQE the small batch side is broadcast, so merging a day's delta
   into a 100 TB mart does NOT reshuffle the mart.
-- ``upsert_to_path`` is file-level copy-on-write over a flat directory of
-  parquet files. Parquet footers pick the files whose key ranges may hold a
-  batch key; only those are rewritten, minus the batch's keys, against a
-  broadcast of the batch's keys. A call costs O(batch + picked files), not
-  O(mart), as long as the keys cluster by file (order ids, dates). The
-  batch's keys must fit a broadcast. The mart gains about one file per
-  call. ``compact_path`` cuts the file count but merges key ranges, after
-  which every call picks the merged file. A crash between the moves and
-  the deletes duplicates the picked files' surviving rows;
-  ``transactional_upsert_to_path`` is the crash-safe variant.
+- ``upsert_to_path``, ``replace_groups_to_path`` and
+  ``delete_keys_from_path`` are that operation on disk, as file-level
+  copy-on-write over a flat directory of parquet files
+  (``_replace_in_path``). Parquet footers pick the files whose key ranges
+  may hold a batch key; only those are rewritten, minus the batch's keys,
+  against a broadcast of the batch's keys. A call costs O(batch + picked
+  files), not O(mart), as long as the keys cluster by file (order ids,
+  dates); keys that scatter over the mart pick every file. The batch's
+  keys must fit a broadcast. ``upsert_to_path`` rewrites each picked file
+  on its own, so key ranges stay narrow and the mart gains about one file
+  per call; ``compact_path`` cuts the file count but merges key ranges,
+  after which every call picks the merged file. The group replace and the
+  delete merge the picked files as they rewrite them, so a mart whose
+  groups scatter (user ids, document ids) keeps a bounded file count. A
+  crash between the moves and the deletes duplicates the picked files'
+  surviving rows; ``transactional_upsert_to_path`` is the crash-safe
+  variant.
+- ``compact_path`` and ``merge_aggregate_mart_to_path`` rewrite the whole
+  mart and swap it in (``_write_and_swap``): a crash between the delete
+  and the move loses the mart.
 - For Hive-partitioned date-grain marts, ``overwrite_date_partitions``
   (dynamic partition overwrite) rewrites only the affected date partitions.
 """
@@ -56,22 +71,32 @@ def dedupe_last_wins(df: DataFrame, keys: list[str], order_by: list | None = Non
     )
 
 
-def _null_safe_key_cond(left_alias: str, right_alias: str, keys: list[str]):
-    """Null-safe key equality for the merge joins: NULL key components must
-    match each other (MySQL's dup-key check treats the row identity by
-    position, and the reference's keys — e.g. vendas' nullable id_variacao —
-    contain NULLs). A plain equi-join would never match NULL = NULL, so every
-    re-run would duplicate those rows."""
-    cond = None
-    for k in keys:
-        c = F.col(f"{left_alias}.{k}").eqNullSafe(F.col(f"{right_alias}.{k}"))
-        cond = c if cond is None else cond & c
-    return cond
+def key_match(left: str, right: str, keys: list[str]):
+    """Join condition: the rows of the frames aliased ``left`` and ``right``
+    have the same key. Null-safe: NULL key components match each other
+    (MySQL's dup-key check treats the row identity by position, and the
+    reference's keys — e.g. vendas' nullable id_variacao — contain NULLs).
+    A plain equi-join would never match NULL = NULL, so every re-run would
+    duplicate those rows."""
+    return functools.reduce(
+        lambda acc, k: acc & k, [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys]
+    )
 
 
-def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: bool) -> bool:
-    """Schema-drift guards of the keyed merges; True when the column NAMES
-    drift (only possible with ``evolve_schema``).
+def _drop_keys(df: DataFrame, batch_keys: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows of ``df`` whose key is not in ``batch_keys``: the one keyed
+    ``left_anti`` join of every merge here."""
+    return df.alias("__old").join(batch_keys.alias("__new"), key_match("__old", "__new", keys), "left_anti")
+
+
+def _replace(old: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """``old`` minus the batch's keys, plus the batch, columns by name."""
+    kept = _drop_keys(old, batch.select(*keys).distinct(), keys)
+    return kept.unionByName(batch, allowMissingColumns=True)
+
+
+def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: bool) -> None:
+    """Schema-drift guards of the keyed merges.
 
     They run on the RAW batch, before dedupe_last_wins touches it (ADVICE
     r9): a batch missing a KEY column used to fail inside the dedupe window
@@ -80,7 +105,7 @@ def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: 
     lost_keys = [k for k in keys if k not in new.columns]
     if lost_keys:
         raise ValueError(
-            f"merge_upsert: batch lacks key column(s) {lost_keys}; a key is "
+            f"batch lacks key column(s) {lost_keys}; a key is "
             "the row identity and can never drift away"
         )
     old_types = {f.name: f.dataType for f in old_schema.fields}
@@ -88,9 +113,9 @@ def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: 
     missing = [c for c in old_types if c not in new.columns]
     if (added or missing) and not evolve_schema:
         raise ValueError(
-            f"merge_upsert: batch schema drifts from target (adds {added}, "
-            f"lacks {missing}); pass evolve_schema=True to union the "
-            "schemas (NULL-filled on both sides), or fix the producer"
+            f"batch schema drifts from target (adds {added}, lacks {missing}); "
+            "merge_upsert(evolve_schema=True) unions the schemas (NULL-filled "
+            "on both sides), or fix the producer"
         )
     retyped = [
         f"{f.name}: {old_types[f.name].simpleString()} -> {f.dataType.simpleString()}"
@@ -99,11 +124,10 @@ def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: 
     ]
     if retyped and not evolve_schema:
         raise ValueError(
-            f"merge_upsert: batch retypes column(s) [{', '.join(retyped)}]; "
-            "pass evolve_schema=True to accept Spark's union type coercion, "
-            "or fix the producer"
+            f"batch retypes column(s) [{', '.join(retyped)}]; "
+            "merge_upsert(evolve_schema=True) accepts Spark's union type "
+            "coercion, or fix the producer"
         )
-    return bool(added or missing)
 
 
 def merge_upsert(
@@ -127,16 +151,8 @@ def merge_upsert(
     added columns, replaced/inserted rows carry NULL for columns the batch
     no longer ships.
     """
-    drifted = _check_drift(old.schema, new, keys, evolve_schema=evolve_schema)
-    fresh = dedupe_last_wins(new, keys, order_by)
-    kept = old.alias("__old").join(
-        fresh.select(*keys).distinct().alias("__new"),
-        _null_safe_key_cond("__old", "__new", keys),
-        "left_anti",
-    )
-    if drifted:
-        return kept.unionByName(fresh, allowMissingColumns=True)
-    return kept.unionByName(fresh.select(*old.columns))
+    _check_drift(old.schema, new, keys, evolve_schema=evolve_schema)
+    return _replace(old, dedupe_last_wins(new, keys, order_by), keys)
 
 
 def replace_groups(old: DataFrame, new: DataFrame, group_keys: list[str]) -> DataFrame:
@@ -146,13 +162,10 @@ def replace_groups(old: DataFrame, new: DataFrame, group_keys: list[str]) -> Dat
     a shrinking group leaves no stale tail rows — the fix for a redelivered
     document whose re-chunking produces FEWER chunks than before (ADVICE
     r1). Groups absent from ``new`` survive untouched; null-safe on key
-    components like the other merges."""
-    kept = old.alias("__old").join(
-        new.select(*group_keys).distinct().alias("__new"),
-        _null_safe_key_cond("__old", "__new", group_keys),
-        "left_anti",
-    )
-    return kept.unionByName(new.select(*old.columns))
+    components like the other merges. A batch whose columns or types drift
+    from ``old`` raises, as in ``merge_upsert`` without ``evolve_schema``."""
+    _check_drift(old.schema, new, group_keys, evolve_schema=False)
+    return _replace(old, new, group_keys)
 
 
 def insert_if_absent(existing: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
@@ -161,12 +174,7 @@ def insert_if_absent(existing: DataFrame, new: DataFrame, keys: list[str]) -> Da
     from ``existing`` are appended; first occurrence wins within ``new``.
     Null-safe on key components like ``merge_upsert``.
     """
-    candidates = new.dropDuplicates(keys)
-    return candidates.alias("__new").join(
-        existing.select(*keys).distinct().alias("__old"),
-        _null_safe_key_cond("__new", "__old", keys),
-        "left_anti",
-    )
+    return _drop_keys(new.dropDuplicates(keys), existing.select(*keys).distinct(), keys)
 
 
 def keyed_update(target: DataFrame, updates: DataFrame, keys: list[str], set_cols: list[str]) -> DataFrame:
@@ -174,19 +182,12 @@ def keyed_update(target: DataFrame, updates: DataFrame, keys: list[str], set_col
     ``tarefa_atualizar_custos_erp.php:26,45-46``): update-only merge — keys
     missing from ``target`` are NOT inserted.
     """
-    upd = updates.dropDuplicates(keys).select(
-        *[F.col(k).alias(f"__k_{k}") for k in keys],
-        *[F.col(c).alias(f"__new_{c}") for c in set_cols],
+    upd = updates.dropDuplicates(keys).select(*keys, *[F.col(c).alias(f"__new_{c}") for c in set_cols])
+    joined = target.alias("__old").join(upd.alias("__new"), key_match("__old", "__new", keys), "left")
+    return joined.select(
+        *[F.coalesce(F.col(f"__new_{c}"), F.col(f"__old.{c}")).alias(c) if c in set_cols else F.col(f"__old.{c}")
+          for c in target.columns]
     )
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        cond = c if cond is None else cond & c
-    joined = target.join(upd, cond, "left")
-    out = joined
-    for c in set_cols:
-        out = out.withColumn(c, F.coalesce(F.col(f"__new_{c}"), F.col(c)))
-    return out.drop(*[f"__k_{k}" for k in keys], *[f"__new_{c}" for c in set_cols])
 
 
 # --------------------------------------------------------------------------
@@ -224,24 +225,69 @@ def overwrite_date_partitions(df: DataFrame, path: str, partition_col: str) -> N
 
 def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | None = None) -> int:
     """Keyed MERGE into a flat directory of parquet files, without Delta:
-    file-level copy-on-write. Returns the number of rows upserted (the
-    deduped batch), read from the footers of the files it wrote.
+    :func:`merge_upsert` on disk (null-safe keys, last-wins dedupe with
+    ``order_by``, a loud failure on schema drift before any file changes).
+    It is :func:`_replace_in_path` over the batch deduped by key. Each
+    picked file is rewritten on its own, so files keep their narrow key
+    ranges: with keys that cluster by file (order ids, dates) a call costs
+    O(batch + picked files), not O(mart), and the mart gains about one file
+    per call. Returns the number of rows upserted (the deduped batch)."""
+    return _replace_in_path(new, path, keys, lambda batch: dedupe_last_wins(batch, keys, order_by), pack=False)[0]
 
-    Same semantics as :func:`merge_upsert` (null-safe keys, last-wins dedupe
-    with ``order_by``, a loud failure on schema drift before any file
-    changes), at a cost proportional to the batch, not to the mart:
 
-    1. the batch is deduped once and written to a temp dir beside the mart;
+def replace_groups_to_path(new: DataFrame, path: str, group_keys: list[str]) -> int:
+    """Path-level :func:`replace_groups`: every group of ``group_keys``
+    present in ``new`` replaces the mart's rows of that group wholesale;
+    other groups survive. It is :func:`_replace_in_path` over the batch as
+    it is, and fails on schema drift before any file changes. The picked
+    files are merged as they are rewritten: groups that cluster by file
+    (days) cost O(batch + picked files); groups that scatter over the mart
+    (user ids, document ids) pick every file, so a call rewrites the mart
+    like a full swap but the file count stays bounded. Returns the number
+    of rows landed."""
+    return _replace_in_path(new, path, group_keys, lambda batch: batch, pack=True)[0]
+
+
+def delete_keys_from_path(keys: DataFrame, path: str, key_cols: list[str]) -> int:
+    """Path-level ``DELETE WHERE key IN (...)`` (Delta's DELETE; also the
+    right-to-be-forgotten hard delete): the mart's rows whose ``key_cols``
+    appear in ``keys`` go, null-safe; files whose footers cannot hold such
+    a key stay untouched. The same copy-on-write as
+    :func:`replace_groups_to_path` with nothing to land — also the way to
+    empty a group whose new row set is empty, which a batch cannot name.
+    Returns the number of rows removed, from the footers."""
+    if not _parquet_files(path):
+        return 0
+    return _replace_in_path(keys, path, key_cols, lambda k: k.select(*key_cols).distinct(), pack=True, land=False)[1]
+
+
+_FILE_BYTES = 128 << 20  # target file size of a merging rewrite: the parquet row-group sweet spot
+
+
+def _replace_in_path(
+    new: DataFrame, path: str, keys: list[str], prepare, *, pack: bool, land: bool = True
+) -> tuple[int, int]:
+    """Replace every row of the mart at ``path`` whose ``keys`` appear in
+    the batch ``prepare(new)``, by file-level copy-on-write. Returns the
+    batch's row count and the number of mart rows it removed, read from the
+    footers.
+
+    1. schema drift between ``new`` and the mart raises before any file
+       changes; the batch ``prepare(new)`` is written to a temp dir beside
+       the mart;
     2. the parquet footers alone (min, max and null count of the key
        columns) pick the mart files that MAY hold a batch key; a key column
        without usable stats counts as "may hold";
-    3. each picked file is rewritten minus the batch's keys, one output
-       file per read split (one file unless it is larger than
-       ``spark.sql.files.maxPartitionBytes``), by a broadcast null-safe
-       ``left_anti``: the old side is never shuffled and files never merge
-       or grow;
+    3. the picked files are rewritten minus the batch's keys by a broadcast
+       null-safe ``left_anti``: the old side is never shuffled. Without
+       ``pack`` each picked file is rewritten on its own, one output file
+       per read split (one file unless it is larger than
+       ``spark.sql.files.maxPartitionBytes``), so files never merge or
+       grow; with ``pack`` they merge into files of up to 128 MB;
     4. once every new file is fully written, the new files move into the
-       mart under unique names, then the picked files are deleted.
+       mart under unique names, then the picked files are deleted. Without
+       ``land`` (a delete: the batch holds only keys) only the rewrites
+       move in.
 
     Untouched files are never read beyond their footers, and the mart stays
     a flat directory of ``*.parquet`` files (no Hive ``key=value/`` dirs).
@@ -257,9 +303,10 @@ def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | 
     old_files = _parquet_files(path)
     if old_files:
         old_schema = spark.read.parquet(path).schema
-        _check_drift(old_schema, new, keys, evolve_schema=False)
-        new = new.select(*old_schema.names)
-    fresh = dedupe_last_wins(new, keys, order_by)
+        if land:
+            _check_drift(old_schema, new, keys, evolve_schema=False)
+            new = new.select(*old_schema.names)
+    fresh = prepare(new)
     os.makedirs(path, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(path.rstrip("/")) or ".")
     try:
@@ -276,16 +323,16 @@ def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | 
             # partitioning-aware union would zip single-partition children
             # into ONE partition and merge the files
             scans = [spark.read.schema(old_schema).parquet(f) for f in picked]
-            kept = functools.reduce(DataFrame.union, scans).alias("__old").join(
-                F.broadcast(batch_keys.alias("__new")), _null_safe_key_cond("__old", "__new", keys), "left_anti"
-            )
+            kept = _drop_keys(functools.reduce(DataFrame.union, scans), F.broadcast(batch_keys), keys)
+            if pack:
+                kept = kept.coalesce(-(-sum(map(os.path.getsize, picked)) // _FILE_BYTES))
             kept.write.mode("overwrite").parquet(rewrite_dir)
             rewritten = _footers(_parquet_files(rewrite_dir), [])
-        landing = [f for f, (rows, _) in {**batch, **rewritten}.items() if rows]
+        landing = [f for f, (rows, _) in {**(batch if land else {}), **rewritten}.items() if rows]
         # a file without rows only carries the schema: keep one while the mart has no rows
         stale = picked + ([f for f, (rows, _) in old.items() if not rows] if landing else [])
-        if not landing and not old_files:
-            landing = list(batch)[:1]
+        if not landing and len(stale) == len(old_files):
+            landing = list(rewritten or batch)[:1]
         for f in landing:
             os.rename(f, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
         for f in stale:
@@ -295,7 +342,8 @@ def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | 
                 os.remove(crc)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return sum(rows for rows, _ in batch.values())
+    landed = sum(n for n, _ in batch.values())
+    return landed, sum(old[f][0] for f in picked) - sum(n for n, _ in rewritten.values())
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -346,19 +394,6 @@ def _may_overlap(a: list, b: list) -> bool:
         if ra[0] is None or rb[0] is None or ra[1] < rb[0] or rb[1] < ra[0]:
             return False  # all NULL on one side and no NULL on the other, or disjoint ranges
     return True
-
-
-def replace_groups_to_path(new: DataFrame, path: str, group_keys: list[str]) -> None:
-    """Path-level ``replace_groups``: groups present in ``new`` are replaced
-    wholesale, others survive. Read-merge-swap: rewrites the whole target,
-    and is not crash-atomic (see ``_write_and_swap``)."""
-    spark = new.sparkSession
-    if not os.path.exists(path):
-        new.write.mode("overwrite").parquet(path)
-        return
-    old = spark.read.parquet(path)
-    merged = replace_groups(old, new, group_keys)
-    _write_and_swap(merged, path, prefix="replace_")
 
 
 def _write_and_swap(df: DataFrame, path: str, *, prefix: str = "swap_") -> None:
@@ -542,8 +577,9 @@ def write_sorted_mart(
 def compact_path(spark, path: str, *, target_partitions: int | None = None) -> int:
     """Compact a parquet mart's small files (the debris a checkpointed
     streaming upsert leaves after many micro-batches): rewrite the path with
-    ``target_partitions`` output files via read → coalesce → write-to-temp →
-    atomic swap. Content is byte-identical, only the file layout changes.
+    ``target_partitions`` output files via read → coalesce →
+    ``_write_and_swap`` (not crash-atomic). Content is byte-identical, only
+    the file layout changes.
 
     Defaults to one file per 128 MB of on-disk data (min 1) — the parquet
     row-group sweet spot, and the same math a 100 TB table maintenance job
@@ -551,49 +587,9 @@ def compact_path(spark, path: str, *, target_partitions: int | None = None) -> i
     size = 0
     for root, _, files in os.walk(path):
         size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    n = target_partitions or max(1, size // (128 << 20))
-    df = spark.read.parquet(path).coalesce(int(n))
-    tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path.rstrip("/")) or ".")
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    n = target_partitions or max(1, size // _FILE_BYTES)
+    _write_and_swap(spark.read.parquet(path).coalesce(int(n)), path, prefix="compact_")
     return int(n)
-
-
-def snapshot_diff(
-    spark, path: str, v_old: str, v_new: str, key_cols: list[str]
-) -> DataFrame:
-    """Row-level change feed between two committed snapshots of a
-    transactional mart (Delta CDF's table_changes reduction): full-outer
-    join on the key with an xxhash64 row fingerprint over the non-key
-    columns — emits (keys..., change_type ∈ added|removed|changed) and
-    skips unchanged rows. One co-partitioned join; fingerprints are
-    computed map-side so only keys + 8-byte hashes shuffle beyond the
-    changed payloads."""
-    old = read_versioned(spark, path, version=v_old)
-    new = read_versioned(spark, path, version=v_new)
-    payload = [c for c in old.columns if c not in key_cols]
-    fp = lambda df: df.select(  # noqa: E731
-        *key_cols, F.xxhash64(*[F.col(c) for c in payload]).alias("__fp")
-    )
-    o, n = fp(old).alias("o"), fp(new).alias("n")
-    cond = None
-    for k in key_cols:
-        c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-        cond = c if cond is None else cond & c
-    joined = o.join(n, cond, "full")
-    change = (
-        F.when(F.col("o.__fp").isNull(), F.lit("added"))
-        .when(F.col("n.__fp").isNull(), F.lit("removed"))
-        .when(F.col("o.__fp") != F.col("n.__fp"), F.lit("changed"))
-    )
-    keys_out = [
-        F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in key_cols
-    ]
-    return (
-        joined.select(*keys_out, change.alias("change_type"))
-        .filter(F.col("change_type").isNotNull())
-    )
 
 
 class writer_lock:
@@ -644,46 +640,6 @@ class WriterLockHeld(RuntimeError):
     """Raised by non-blocking ``writer_lock`` when the mart is being written."""
 
 
-def zorder_key(x, y, *, bits: int = 16):
-    """Two-column Morton key — thin delegate to the n-dimensional builder
-    in ``operators.layout`` (ONE bit-interleave implementation repo-wide;
-    for d=2 column j's bit i lands at 2i+j, identical to the historical
-    inline form — integer adds commute, and reading only bits 0..bits-1
-    equals the old defensive mask). Inputs must already be quantized to
-    ``[0, 2^bits)``."""
-    from pyspark.sql import functions as F
-
-    from ..operators.layout import zorder_key as _zk
-
-    xm = F.col(x) if isinstance(x, str) else x
-    ym = F.col(y) if isinstance(y, str) else y
-    return _zk([xm, ym], bits=bits)
-
-
-def write_zorder_mart(
-    df: DataFrame,
-    path: str,
-    x_col,
-    y_col,
-    *,
-    bits: int = 16,
-    target_partitions: int | None = None,
-) -> None:
-    """Two-dimensional data-skipping layout (Delta ``OPTIMIZE ZORDER BY``
-    reduction): cluster files by the Morton key of (x, y) so a box
-    predicate on EITHER or BOTH dimensions overlaps a bounded subset of
-    files — the multi-dim generalization of ``write_sorted_mart``, which
-    can only serve one dimension. The ``__zkey`` column is PERSISTED so
-    readers can range-filter on it directly (min/max footer stats prune);
-    delegates to ``operators.layout.write_zordered`` with keep_key."""
-    from ..operators.layout import write_zordered
-
-    n = target_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    xm = F.col(x_col) if isinstance(x_col, str) else x_col
-    ym = F.col(y_col) if isinstance(y_col, str) else y_col
-    write_zordered(df, path, [xm, ym], bits=bits, target_files=n, keep_key=True)
-
-
 def merge_aggregate_mart(
     old: DataFrame | None,
     delta_agg: DataFrame,
@@ -713,8 +669,8 @@ def merge_aggregate_mart_to_path(
     delta_agg: DataFrame, path: str, keys: list[str], sum_cols: list[str]
 ) -> None:
     """Path-level IVM merge: read the mart if present, additively merge
-    the delta's partial aggregates, swap. Same non-atomic caveat as
-    ``replace_groups_to_path``; wrap with ``writer_lock`` / use the
+    the delta's partial aggregates, swap. Not crash-atomic (see
+    ``_write_and_swap``); wrap with ``writer_lock`` / use the
     transactional mart for crash safety."""
     spark = delta_agg.sparkSession
     if not os.path.exists(path):

@@ -9545,7 +9545,7 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Batch 26 (r2 cont.): Z-order (Morton) clustering key — the multi-dim
 # data-skipping layout (Delta OPTIMIZE ZORDER reduction). The key itself
 # is pure integer bit arithmetic, so it goes under the value hash; the
-# file-layout half (write_zorder_mart) is proven by the footer-stats
+# file-layout half (layout.write_zordered) is proven by the footer-stats
 # disjointness test in tests/test_sinks.py.
 # ===========================================================================
 
@@ -9569,16 +9569,16 @@ def zorder_events_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton key over (user, day): locality in the key preserves
     locality in BOTH dimensions, so files clustered by it serve box
     predicates on either — what a 1-D sort layout cannot (see
-    sources/sinks.zorder_key / write_zorder_mart). Map-only unrolled
+    operators/layout.zorder_key / write_zordered). Map-only unrolled
     shift/mask codegen; engine-exact integers."""
-    from .sources.sinks import zorder_key
+    from .operators.layout import zorder_key
 
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 20000)
     x = F.pmod(F.col("user_id"), F.lit(65536))
     y = F.pmod(
         F.datediff(F.col("event_date"), F.lit("1970-01-01").cast("date")), F.lit(65536)
     )
-    return e.select("event_id", zorder_key(x, y, bits=16).alias("zkey"))
+    return e.select("event_id", zorder_key([x, y], bits=16).alias("zkey"))
 
 
 _MAD_SQL = """

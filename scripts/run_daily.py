@@ -10,8 +10,10 @@ Usage:
   python scripts/run_daily.py --payloads DIR --marts DIR [--date YYYY-MM-DD]
   python scripts/run_daily.py ... --backfill 2025-08-01:2025-08-05
 
-Every sink is a keyed upsert / date-partition overwrite, so re-running any
-day converges (the reference's idempotent ON DUPLICATE KEY UPDATE contract).
+Every sink is a keyed upsert or a keyed group replace (the alert log holds
+one alert set per day, deleted when the day's set comes out empty), so
+re-running any day converges (the reference's idempotent ON DUPLICATE KEY
+UPDATE contract).
 """
 
 from __future__ import annotations
@@ -35,7 +37,9 @@ from pipeline_etl_ecommerce_spark.plans.traffic import process_traffic_tasks  # 
 from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
 from pipeline_etl_ecommerce_spark.sources.readers import read_json_payloads  # noqa: E402
 from pipeline_etl_ecommerce_spark.sources.sinks import (  # noqa: E402
-    append_to_path,
+    append_to_path,  # noqa: F401 - a name of this module that tracing harnesses patch
+    delete_keys_from_path,
+    replace_groups_to_path,
     upsert_to_path,
 )
 
@@ -75,12 +79,13 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
     if os.path.exists(cat_path) and os.path.exists(an_path):
         mapa, alertas = consolidate_mapa(spark.read.parquet(cat_path), spark.read.parquet(an_path))
         stats["mapa_produtos_anuncios"] = upsert_to_path(mapa, f"{marts}/mapa_produtos_anuncios", ["id_anuncio_canal"])
-        n_alerts = alertas.count()
-        if n_alerts:
-            append_to_path(
-                alertas.withColumn("data_alerta", F.lit(str(day)).cast("date")), f"{marts}/alertas_mapa"
-            )
-        stats["alertas"] = n_alerts
+        # the day's alert set replaces that day's earlier one, so a re-run keeps one copy
+        alert_day, alerts_path = F.lit(str(day)).cast("date"), f"{marts}/alertas_mapa"
+        stats["alertas"] = replace_groups_to_path(
+            alertas.withColumn("data_alerta", alert_day), alerts_path, ["data_alerta"]
+        )
+        if not stats["alertas"]:  # an empty alert set names no day: drop the day's earlier alerts
+            delete_keys_from_path(spark.range(1).select(alert_day.alias("data_alerta")), alerts_path, ["data_alerta"])
 
     # --- facts ---
     orders = _payload(spark, payload_dir, "orders", schemas.MELI_ORDER)

@@ -248,7 +248,7 @@ def test_pseudonymize_stable_irreversible_null_safe(spark):
 
 
 def test_delete_keys_from_path_hard_delete(spark, tmp_path):
-    from pipeline_etl_ecommerce_spark.operators.privacy import delete_keys_from_path
+    from pipeline_etl_ecommerce_spark.sources.sinks import delete_keys_from_path
 
     path = str(tmp_path / "corpus")
     spark.createDataFrame(
@@ -256,7 +256,7 @@ def test_delete_keys_from_path_hard_delete(spark, tmp_path):
     ).write.parquet(path)
 
     forget = spark.createDataFrame([(3,), (7,), (99,)], "doc_id long")
-    removed = delete_keys_from_path(spark, path, forget, ["doc_id"])
+    removed = delete_keys_from_path(forget, path, ["doc_id"])
     assert removed == 2  # id 99 never existed
     left = {r.doc_id for r in spark.read.parquet(path).collect()}
     assert left == set(range(10)) - {3, 7}

@@ -102,33 +102,43 @@ def _brute_diff(old: dict, new: dict):
 
 def test_snapshot_diff_matches_reference(spark):
     rng = random.Random(525)
-    old = {k: rng.choice([None, 1, 2, 3]) for k in range(60) if rng.random() < 0.8}
+    old = {(k,): rng.choice([None, 1, 2, 3]) for k in range(60) if rng.random() < 0.8}
     new = {}
     for k in range(60):
         r = rng.random()
-        if r < 0.6 and k in old:
-            new[k] = old[k]  # unchanged
+        if r < 0.6 and (k,) in old:
+            new[(k,)] = old[(k,)]  # unchanged
         elif r < 0.9:
-            new[k] = rng.choice([None, 1, 2, 3, 4])
-    # drop keys colliding into "unchanged None == None" from expectations via
-    # the same null-safe rule snapshot_diff uses
-    expect = {}
-    for k in old.keys() | new.keys():
-        if k not in old:
-            expect[k] = ("added", None, new[k])
-        elif k not in new:
-            expect[k] = ("removed", old[k], None)
-        elif old[k] is None and new[k] is None:
-            continue
-        elif old[k] != new[k] or (old[k] is None) != (new[k] is None):
-            expect[k] = ("changed", old[k], new[k])
-    o = spark.createDataFrame([(k, v) for k, v in old.items()], "k bigint, v int")
-    n = spark.createDataFrame([(k, v) for k, v in new.items()], "k bigint, v int")
-    got = {
-        r.k: (r.change_type, r.old_v, r.new_v)
-        for r in snapshot_diff(o, n, ["k"], ["v"]).collect()
-    }
-    assert got == expect
+            new[(k,)] = rng.choice([None, 1, 2, 3, 4])
+    cases = [(old, new, ["k"])]
+    # a NULL key component is part of the identity: unchanged (1, NULL) is
+    # no change, and (2, NULL) -> (3, NULL) is one removal plus one addition
+    cases.append((
+        {(1, None): 5, (1, 7): 1, (2, None): 3},
+        {(1, None): 5, (1, 7): 2, (3, None): None},
+        ["k", "k2"],
+    ))
+    for old, new, keys in cases:
+        # drop keys colliding into "unchanged None == None" from expectations
+        # via the same null-safe rule snapshot_diff uses
+        expect = {}
+        for k in old.keys() | new.keys():
+            if k not in old:
+                expect[k] = ("added", None, new[k])
+            elif k not in new:
+                expect[k] = ("removed", old[k], None)
+            elif old[k] is None and new[k] is None:
+                continue
+            elif old[k] != new[k] or (old[k] is None) != (new[k] is None):
+                expect[k] = ("changed", old[k], new[k])
+        schema = ", ".join(f"{c} bigint" for c in keys) + ", v int"
+        o = spark.createDataFrame([(*k, v) for k, v in old.items()], schema)
+        n = spark.createDataFrame([(*k, v) for k, v in new.items()], schema)
+        got = {
+            tuple(r[c] for c in keys): (r.change_type, r.old_v, r.new_v)
+            for r in snapshot_diff(o, n, keys, ["v"]).collect()
+        }
+        assert got == expect
 
 
 def test_snapshot_diff_keys_only(spark):

@@ -154,3 +154,46 @@ def test_backfill_crash_resume_idempotent(spark, tmp_path, payload_dir):
     resumed = run_backfill(spark, payload_dir, crashy, start, end, day_fn=flaky_day)
     assert resumed == [dt.date(2025, 8, 11), end]
     assert _mart_counts(spark, crashy) == clean_counts
+
+
+def _alert_payloads(d, skus):
+    """A catalog of ``skus`` and two listings, of SKU-A and SKU-Z: SKU-Z
+    raises an alert while it is missing from the catalog."""
+    d.mkdir(exist_ok=True)
+    with open(d / "tiny_products.jsonl", "w") as f:
+        for i, sku in enumerate(skus, 1):
+            f.write(json.dumps({"id": i, "codigo": sku, "nome": f"Produto {sku}", "classe_produto": "S",
+                                "idProdutoPai": None, "preco_custo": "10,50", "ean": f"78{i}"}) + "\n")
+    with open(d / "listings.jsonl", "w") as f:
+        for lid, sku in (("MLB1", "SKU-A"), ("MLB9", "SKU-Z")):
+            f.write(json.dumps({"id": lid, "title": "Anuncio", "status": "active", "category_id": "MLB-CAT",
+                                "shipping": {"logistic_type": "fulfillment"}, "seller_custom_field": sku,
+                                "inventory_id": None, "attributes": [], "variations": []}) + "\n")
+    return str(d)
+
+
+def test_rerun_keeps_one_copy_of_the_days_alerts(spark, tmp_path):
+    """A listing whose SKU is missing from the catalog raises one alert; the
+    day's alert set replaces the day's earlier one, so a re-run of the day
+    leaves one alert row, not two."""
+    payloads = _alert_payloads(tmp_path / "payloads", ["SKU-A"])
+    marts = str(tmp_path / "marts")
+    for _ in range(2):
+        assert run_day(spark, payloads, marts, DAY)["alertas"] == 1
+    alerts = spark.read.parquet(os.path.join(marts, "alertas_mapa")).collect()
+    assert [(r["sku"], r["data_alerta"]) for r in alerts] == [("SKU-Z", DAY)]
+
+
+def test_rerun_with_an_empty_alert_set_drops_the_days_alerts(spark, tmp_path):
+    """Re-running a day after its missing SKU was catalogued leaves the day
+    with no alerts: an empty alert set names no group to replace, so the
+    day's earlier alerts are deleted. Other days' alerts stay."""
+    marts = str(tmp_path / "marts")
+    missing = _alert_payloads(tmp_path / "missing", ["SKU-A"])
+    before = DAY - dt.timedelta(days=1)
+    assert run_day(spark, missing, marts, before)["alertas"] == 1
+    assert run_day(spark, missing, marts, DAY)["alertas"] == 1
+    catalogued = _alert_payloads(tmp_path / "catalogued", ["SKU-A", "SKU-Z"])
+    assert run_day(spark, catalogued, marts, DAY)["alertas"] == 0
+    alerts = spark.read.parquet(os.path.join(marts, "alertas_mapa")).collect()
+    assert [(r["sku"], r["data_alerta"]) for r in alerts] == [("SKU-Z", before)]

@@ -13,6 +13,7 @@ from pipeline_etl_ecommerce_spark.sources.sinks import (
     merge_upsert,
     overwrite_date_partitions,
     read_versioned,
+    delete_keys_from_path,
     replace_groups,
     replace_groups_to_path,
     transactional_upsert_to_path,
@@ -90,7 +91,7 @@ def test_upsert_to_path_roundtrip(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# upsert_to_path: file-level copy-on-write
+# upsert_to_path and replace_groups_to_path: file-level copy-on-write
 # ---------------------------------------------------------------------------
 
 
@@ -168,6 +169,79 @@ def test_upsert_to_path_batch_reading_the_target_mart(spark, tmp_path):
     assert upsert_to_path(bumped, path, ["k"]) == 2
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": 101, "b": 2, "c": 103}
+
+
+def _groups(spark, rows, schema="g string, i int, v int"):
+    """One file per write: the group writer has no shuffle to merge splits."""
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
+def test_replace_groups_to_path_leaves_files_outside_the_batch_groups_untouched(spark, tmp_path):
+    path = str(tmp_path / "groups")
+    replace_groups_to_path(_groups(spark, [("a", 0, 1), ("a", 1, 2), ("b", 0, 3)]), path, ["g"])
+    replace_groups_to_path(_groups(spark, [("x", 0, 7), ("y", 0, 8)]), path, ["g"])
+    before = _mart_files(path)
+    assert len(before) == 2
+    landed = replace_groups_to_path(_groups(spark, [("a", 0, 9)]), path, ["g"])
+    after = _mart_files(path)
+    # the x..y file's group range misses "a": same name, inode and bytes
+    untouched = [name for name, (ino, data) in before.items() if after.get(name) == (ino, data)]
+    assert len(untouched) == 1 and len(after) == 3  # plus the b rewrite and the batch
+    assert landed == 1
+    got = sorted((r["g"], r["i"], r["v"]) for r in spark.read.parquet(path).collect())
+    assert got == [("a", 0, 9), ("b", 0, 3), ("x", 0, 7), ("y", 0, 8)]
+
+
+def test_replace_groups_to_path_schema_drift_raises_before_any_file_changes(spark, tmp_path):
+    import pytest
+
+    path = str(tmp_path / "groups")
+    replace_groups_to_path(_groups(spark, [("a", 0, 1)]), path, ["g"])
+    replace_groups_to_path(_groups(spark, [("b", 0, 2)]), path, ["g"])
+    before = _mart_files(path)
+    widened = _groups(spark, [("a", 0, 9, 0.5)], "g string, i int, v int, w double")
+    with pytest.raises(ValueError, match="schema drifts"):
+        replace_groups_to_path(widened, path, ["g"])
+    assert _mart_files(path) == before
+    assert os.listdir(str(tmp_path)) == ["groups"]  # no temp dir left beside it
+
+
+def test_replace_groups_to_path_file_count_stays_bounded_when_groups_scatter(spark, tmp_path):
+    """Every batch spans the whole group range (as user or document ids do),
+    so every call picks every file: the picked files merge as they are
+    rewritten, and the mart holds the merged rewrite plus the batch instead
+    of gaining a file per call."""
+    import random
+
+    rng = random.Random(12)
+    path = str(tmp_path / "groups")
+    expect = {}
+    for call in range(12):
+        groups = {0, 999, *rng.sample(range(1, 999), 3)}
+        rows = [(g, i, call) for g in sorted(groups) for i in range(rng.randrange(1, 4))]
+        replace_groups_to_path(_groups(spark, rows, "g int, i int, v int"), path, ["g"])
+        expect = {k: v for k, v in expect.items() if k[0] not in groups} | {(g, i): v for g, i, v in rows}
+        assert len(_mart_files(path)) <= 2
+    assert {(r["g"], r["i"]): r["v"] for r in spark.read.parquet(path).collect()} == expect
+
+
+def test_delete_keys_from_path_rewrites_only_the_picked_files(spark, tmp_path):
+    """The deleted keys' file is rewritten, the other stays in bytes and
+    inode; deleting every row leaves an empty mart that still reads."""
+    path = str(tmp_path / "groups")
+    replace_groups_to_path(_groups(spark, [("a", 0, 1), ("a", 1, 2), ("b", 0, 3)]), path, ["g"])
+    replace_groups_to_path(_groups(spark, [("x", 0, 7), ("y", 0, 8)]), path, ["g"])
+    before = _mart_files(path)
+    assert delete_keys_from_path(spark.createDataFrame([("a",), ("c",)], "g string"), path, ["g"]) == 2
+    after = _mart_files(path)
+    assert len([name for name, f in before.items() if after.get(name) == f]) == 1
+    got = sorted((r["g"], r["i"], r["v"]) for r in spark.read.parquet(path).collect())
+    assert got == [("b", 0, 3), ("x", 0, 7), ("y", 0, 8)]
+    assert delete_keys_from_path(spark.createDataFrame([("b",), ("x",), ("y",)], "g string"), path, ["g"]) == 3
+    assert spark.read.parquet(path).count() == 0
+    assert spark.read.parquet(path).columns == ["g", "i", "v"]
+    assert delete_keys_from_path(spark.createDataFrame([("a",)], "g string"), str(tmp_path / "absent"), ["g"]) == 0
+    assert not os.path.exists(str(tmp_path / "absent"))
 
 
 def test_upsert_to_path_daily_cost_stays_flat(spark, tmp_path):
@@ -367,23 +441,25 @@ def test_write_sorted_mart_files_cover_disjoint_ranges(spark, tmp_path):
 
 
 def test_snapshot_diff_change_feed(spark, tmp_path):
-    from pipeline_etl_ecommerce_spark.sources.sinks import snapshot_diff
+    """The change feed between two committed snapshots: operators.diff over
+    two read_versioned frames. A NULL that moves between two payload columns
+    is a change (a row fingerprint such as xxhash64 hashes (NULL, 5) and
+    (5, NULL) alike)."""
+    from pipeline_etl_ecommerce_spark.operators.diff import snapshot_diff
 
     path = str(tmp_path / "cdf")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1)]), path, ["k"])
-    transactional_upsert_to_path(_df(spark, [("b", 20, 2), ("c", 30, 2)]), path, ["k"])
+    schema = "k string, v int, w int"
+    transactional_upsert_to_path(spark.createDataFrame([("a", 1, 1), ("b", 2, 1), ("d", None, 5)], schema), path, ["k"])
+    transactional_upsert_to_path(spark.createDataFrame([("b", 20, 2), ("c", 30, 2), ("d", 5, None)], schema), path, ["k"])
 
-    diff = {r.k: r.change_type for r in snapshot_diff(
-        spark, path, "v00000001", "v00000002", ["k"]
-    ).collect()}
-    # a unchanged (absent from the feed), b changed, c added
-    assert diff == {"b": "changed", "c": "added"}
+    def feed(v_old, v_new):
+        old, new = (read_versioned(spark, path, version=v) for v in (v_old, v_new))
+        return {r.k: r.change_type for r in snapshot_diff(old, new, ["k"], ["v", "w"]).collect()}
 
+    # a unchanged (absent from the feed), b changed, c added, d's NULL swapped columns
+    assert feed("v00000001", "v00000002") == {"b": "changed", "c": "added", "d": "changed"}
     # reverse direction flips added <-> removed
-    rev = {r.k: r.change_type for r in snapshot_diff(
-        spark, path, "v00000002", "v00000001", ["k"]
-    ).collect()}
-    assert rev == {"b": "changed", "c": "removed"}
+    assert feed("v00000002", "v00000001") == {"b": "changed", "c": "removed", "d": "changed"}
 
 
 # ---------------------------------------------------------------------------
@@ -448,16 +524,26 @@ def test_merge_upsert_laws(spark, old_rows, new_rows):
 
     old_list = old.collect()
     tmp = tempfile.mkdtemp()
-    try:
-        path = os.path.join(tmp, "mart")
+
+    def two_file_mart(name):
+        path = os.path.join(tmp, name)
         os.makedirs(path)
         schema = pa.schema([("k", pa.string()), ("v", pa.int32()), ("ts", pa.int64())])
         for i, part in enumerate((old_list[::2], old_list[1::2])):
             if part:
                 table = pa.Table.from_pylist([r.asDict() for r in part], schema=schema)
                 pq.write_table(table, os.path.join(path, f"part-{i}.parquet"))
+        return path
+
+    try:
+        path = two_file_mart("mart")
         upsert_to_path(new, path, ["k"], order_by=["ts", "v"])
         want = merge_upsert(old, new, ["k"], order_by=["ts", "v"]).collect()
+        assert sorted(spark.read.parquet(path).collect(), key=repr) == sorted(want, key=repr)
+        # and the group replace over the same mart equals replace_groups on the union
+        path = two_file_mart("groups")
+        assert replace_groups_to_path(new, path, ["k"]) == len(new_rows)
+        want = replace_groups(old, new, ["k"]).collect()
         assert sorted(spark.read.parquet(path).collect(), key=repr) == sorted(want, key=repr)
     finally:
         shutil.rmtree(tmp)
@@ -482,7 +568,7 @@ def test_writer_lock_excludes_second_writer(spark, tmp_path):
 
 
 def test_zorder_key_interleaves_bits_exactly(spark):
-    from pipeline_etl_ecommerce_spark.sources.sinks import zorder_key
+    from pipeline_etl_ecommerce_spark.operators.layout import zorder_key
 
     def ref(x, y, bits=16):
         z = 0
@@ -495,7 +581,7 @@ def test_zorder_key_interleaves_bits_exactly(spark):
     df = spark.createDataFrame(rows, "x long, y long")
     got = {
         (r["x"], r["y"]): r["z"]
-        for r in df.select("x", "y", zorder_key("x", "y").alias("z")).collect()
+        for r in df.select("x", "y", zorder_key([F.col("x"), F.col("y")]).alias("z")).collect()
     }
     assert got == {(x, y): ref(x, y) for x, y in rows}
     # locality sanity: neighbors in both dims stay within a small z-window
@@ -507,7 +593,7 @@ def test_write_zorder_mart_files_cover_disjoint_zkey_ranges(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from pipeline_etl_ecommerce_spark.sources.sinks import write_zorder_mart
+    from pipeline_etl_ecommerce_spark.operators.layout import write_zordered
 
     path = str(tmp_path / "zmart")
     df = (
@@ -515,7 +601,7 @@ def test_write_zorder_mart_files_cover_disjoint_zkey_ranges(spark, tmp_path):
         .withColumn("x", (F.col("id") * 13) % 256)
         .withColumn("y", (F.col("id") * 29) % 256)
     )
-    write_zorder_mart(df.orderBy(F.rand(seed=2)), path, "x", "y", bits=8, target_partitions=4)
+    write_zordered(df.orderBy(F.rand(seed=2)), path, [F.col("x"), F.col("y")], bits=8, target_files=4, keep_key=True)
 
     ranges = []
     for f in glob.glob(f"{path}/*.parquet"):
@@ -704,6 +790,22 @@ def test_merge_upsert_schema_drift_raises_by_default(spark):
     narrowed = spark.createDataFrame([("b", 2)], "k string, v int")
     with pytest.raises(ValueError, match="schema drifts"):
         merge_upsert(old, narrowed, ["k"])
+
+
+def test_replace_groups_schema_drift_raises(spark):
+    """The in-memory group replace checks drift like its path twin: a batch
+    that adds, lacks or retypes a column raises instead of being NULL-filled
+    or coerced."""
+    import pytest
+
+    old = _df(spark, [("a", 1, 1)])
+    widened = spark.createDataFrame([("a", 2, 2, 0.5)], "k string, v int, ts long, discount double")
+    with pytest.raises(ValueError, match="schema drifts"):
+        replace_groups(old, widened, ["k"])
+    with pytest.raises(ValueError, match="schema drifts"):
+        replace_groups(old, spark.createDataFrame([("a", 2)], "k string, v int"), ["k"])
+    with pytest.raises(ValueError, match="retypes column"):
+        replace_groups(old, spark.createDataFrame([("a", 2, 2)], "k string, v bigint, ts long"), ["k"])
 
 
 def test_merge_upsert_missing_key_raises_before_dedupe(spark):
