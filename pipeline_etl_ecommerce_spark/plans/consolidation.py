@@ -4,24 +4,26 @@ Spark-first restatement of reference ``tarefa_consolidar_dados.php`` (SURVEY.md
 §3.1). The reference runs five imperative stages over PHP hash maps; here the
 whole thing is ONE declarative DataFrame expression:
 
-  sales@D → coalesce-key groupBy (A1/A2, 6 sums)           [1 shuffle: id_gr]
-  ∪ traffic-driven children (U1, semi-join on the map)     [broadcast]
-  ⨝ map (inner J1) ⨝ catalog cost (left J2, default 0)     [broadcast]
-  ⨝ traffic@D by parent (left J4, zero defaults)           [broadcast]
-  → window-allocate traffic by revenue weight               [reuses parent key]
+  map, rows with a variation id                            [streamed]
+  ⟕ sales@D by variation (coalesce-key groupBy A1/A2, 6 sums) [1 shuffle: id_gr, then broadcast]
+  ⟕ traffic@D by parent (J4, zero defaults)                 [broadcast]
+  → keep what sold on D or has parent traffic on D (U1, J1)
+  ⟕ catalog cost (left J2, default 0)                       [broadcast]
+  → window-allocate traffic by revenue weight               [1 shuffle: id_anuncio_pai]
   (W1 ratio, W2 least-cap, W3 main-variation fallback)
 
-Scale shape: the only fact-sized shuffle is the sales groupBy on the
-variation key. The dims (map, catalog) and one-day traffic are broadcast, so
-nothing re-partitions the fact stream; the allocation window partitions by
-``id_anuncio_pai``, which AQE plans off the same exchange as the traffic
-join. Skewed mega-parents are handled by AQE skew-join splitting.
+Scale shape: the map is the streamed side, and nothing broadcasts it, so
+it may grow past what a broadcast holds. Each fact mart is scanned once and
+filtered to day D; the day's sales shuffle on the variation key into one
+row per variation sold. Those rows, the day's traffic and the catalog's cost column
+are broadcast into the map. The allocation window shuffles the kept rows by
+``id_anuncio_pai``; a parent's partition holds its variations, a number the
+map bounds.
 
 The reference's separate parent-revenue pre-pass ("ETAPA 2.5", lines 118-138)
 disappears: ``sum(weight) over (partition by parent)`` computes the same
-denominator inline — identical semantics because unmapped variations are
-dropped before the window (inner join J1 = the reference's ``continue`` at
-line 157).
+denominator inline — identical semantics because unmapped variations never
+enter the plan (J1 = the reference's ``continue`` at line 157).
 """
 
 from __future__ import annotations
@@ -103,29 +105,16 @@ def consolidate_daily(
         F.col("faturamento_total_ads").alias("t_faturamento_total_ads"),
     )
 
-    # --- active variations (U1): sales keys ∪ map children of traffic parents ---
-    traffic_children = (
-        mapa.join(
-            trafego_dia.select("t_id_anuncio").distinct(),
-            mapa["id_anuncio_pai"] == F.col("t_id_anuncio"),
-            "left_semi",
-        )
-        .select(F.col("id_anuncio_canal").alias("id_gr"))
-    )
-    active = sales_agg.select("id_gr").union(traffic_children).distinct()
-
-    # --- inner join to the map (J1: unmapped variations dropped, line 157) ---
+    # --- the map drives the plan: a mapped variation is active on D when it
+    # sold on D or its parent has traffic on D (U1); sales and traffic join
+    # by variation and by parent (J4), so unmapped variations and parents
+    # drop out (J1: the reference's ``continue`` at line 157) ---
     base = (
-        active.join(
-            F.broadcast(
-                mapa.select(
-                    "id_anuncio_canal", "id_anuncio_pai", "sku", "categoria", "titulo_produto"
-                )
-            ),
-            active["id_gr"] == F.col("id_anuncio_canal"),
-            "inner",
-        )
-        .join(sales_agg, "id_gr", "left")
+        mapa.filter(F.col("id_anuncio_canal").isNotNull())
+        .select("id_anuncio_canal", "id_anuncio_pai", "sku", "categoria", "titulo_produto")
+        .join(F.broadcast(sales_agg), F.col("id_anuncio_canal") == F.col("id_gr"), "left")
+        .join(F.broadcast(trafego_dia), F.col("id_anuncio_pai") == F.col("t_id_anuncio"), "left")
+        .filter(F.col("id_gr").isNotNull() | F.col("t_id_anuncio").isNotNull())
         .na.fill(
             {
                 "vendas_totais_qtd": 0,
@@ -145,11 +134,6 @@ def consolidate_daily(
         F.coalesce(F.col("custo_produto"), F.lit(0.0)) * F.col("vendas_totais_qtd"),
     )
 
-    # --- traffic by parent (J4: left join, zero defaults — lines 182-190) ---
-    base = base.join(
-        F.broadcast(trafego_dia), base["id_anuncio_pai"] == trafego_dia["t_id_anuncio"], "left"
-    )
-
     # --- W1/W2/W3 allocation, weight = the variation's revenue (line 200) ---
     allocated = allocate_ratio_to_parent(
         base,
@@ -164,7 +148,7 @@ def consolidate_daily(
     return allocated.select(
         day.alias("data_relatorio"),
         F.col("id_anuncio_pai").alias("id_anuncio"),
-        F.col("id_gr").alias("id_anuncio_variacao"),
+        F.col("id_anuncio_canal").alias("id_anuncio_variacao"),
         "sku",
         F.col("categoria").alias("categoria_anuncio"),
         F.col("titulo_produto").alias("titulo_anuncio"),

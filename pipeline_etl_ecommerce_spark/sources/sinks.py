@@ -34,6 +34,14 @@ Scale notes
   crash between the moves and the deletes duplicates the picked files'
   surviving rows; ``transactional_upsert_to_path`` is the crash-safe
   variant.
+- Mart reads take their schema from one footer: ``read_mart`` reads the
+  schema Spark stored in the first top-level file that has it, so a read
+  runs no schema-inference job, and the path writers take the mart's
+  schema from the footers they open to pick files. Like Spark's own
+  inference without ``mergeSchema``, this assumes the mart's files agree.
+  When no top-level footer carries a Spark schema (files written by
+  pyarrow alone, Hive-partitioned dirs, an absent or empty path), the read
+  falls back to ``spark.read.parquet`` and its inference job.
 - ``compact_path`` and ``merge_aggregate_mart_to_path`` rewrite the whole
   mart and swap it in (``_write_and_swap``): a crash between the delete
   and the move loses the mart.
@@ -44,6 +52,7 @@ Scale notes
 from __future__ import annotations
 
 import functools
+import json
 import os
 import shutil
 import tempfile
@@ -53,6 +62,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 from pyspark.sql.window import Window
 
 
@@ -101,14 +111,16 @@ def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: 
     They run on the RAW batch, before dedupe_last_wins touches it (ADVICE
     r9): a batch missing a KEY column used to fail inside the dedupe window
     with an opaque AnalysisException, and a same-name TYPE change sailed
-    past the name-only check into unionByName."""
+    past the name-only check into unionByName. Nullability is no type: a
+    parquet read makes every nested field nullable, so an array, map or
+    struct that can hold no NULL matches its nullable twin."""
     lost_keys = [k for k in keys if k not in new.columns]
     if lost_keys:
         raise ValueError(
             f"batch lacks key column(s) {lost_keys}; a key is "
             "the row identity and can never drift away"
         )
-    old_types = {f.name: f.dataType for f in old_schema.fields}
+    old_types = {f.name: _as_nullable(f.dataType) for f in old_schema.fields}
     added = [c for c in new.columns if c not in old_types]
     missing = [c for c in old_types if c not in new.columns]
     if (added or missing) and not evolve_schema:
@@ -120,7 +132,7 @@ def _check_drift(old_schema, new: DataFrame, keys: list[str], *, evolve_schema: 
     retyped = [
         f"{f.name}: {old_types[f.name].simpleString()} -> {f.dataType.simpleString()}"
         for f in new.schema.fields
-        if f.name in old_types and f.dataType != old_types[f.name]
+        if f.name in old_types and _as_nullable(f.dataType) != old_types[f.name]
     ]
     if retyped and not evolve_schema:
         raise ValueError(
@@ -191,8 +203,42 @@ def keyed_update(target: DataFrame, updates: DataFrame, keys: list[str], set_col
 
 
 # --------------------------------------------------------------------------
-# Path-level writers (parquet "marts")
+# Path-level readers and writers (parquet "marts")
 # --------------------------------------------------------------------------
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_mart(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job: the
+    schema comes from the first top-level footer that carries the Spark
+    schema Spark wrote there. Like Spark's own inference without
+    ``mergeSchema``, it assumes the files agree. When no such footer exists
+    (files written by pyarrow alone, Hive-partitioned dirs, an absent or
+    empty path) it is ``spark.read.parquet(path)``, errors included."""
+    schema = _footer_schema(pq.read_metadata(f) for f in _parquet_files(path))
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def _footer_schema(footers) -> StructType | None:
+    """The Spark schema of the first footer that carries one, every field,
+    array element and map value made nullable as Spark's parquet read makes
+    them; None when none does."""
+    for md in footers:
+        raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if raw:
+            return _as_nullable(StructType.fromJson(json.loads(raw)))
+    return None
+
+
+def _as_nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 def append_to_path(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
@@ -301,8 +347,9 @@ def _replace_in_path(
     """
     spark = new.sparkSession
     old_files = _parquet_files(path)
+    old, old_schema = _footers(old_files, keys)
     if old_files:
-        old_schema = spark.read.parquet(path).schema
+        old_schema = old_schema or spark.read.parquet(path).schema
         if land:
             _check_drift(old_schema, new, keys, evolve_schema=False)
             new = new.select(*old_schema.names)
@@ -312,8 +359,7 @@ def _replace_in_path(
     try:
         batch_dir, rewrite_dir = os.path.join(tmp, "batch"), os.path.join(tmp, "rewrite")
         fresh.write.mode("overwrite").parquet(batch_dir)
-        batch = _footers(_parquet_files(batch_dir), keys)
-        old = _footers(old_files, keys)
+        batch = _footers(_parquet_files(batch_dir), keys)[0]
         picked = [f for f, (_, boxes) in old.items()
                   if any(_may_overlap(a, b) for a in boxes for _, bs in batch.values() for b in bs)]
         rewritten = {}
@@ -327,7 +373,7 @@ def _replace_in_path(
             if pack:
                 kept = kept.coalesce(-(-sum(map(os.path.getsize, picked)) // _FILE_BYTES))
             kept.write.mode("overwrite").parquet(rewrite_dir)
-            rewritten = _footers(_parquet_files(rewrite_dir), [])
+            rewritten = _footers(_parquet_files(rewrite_dir), [])[0]
         landing = [f for f, (rows, _) in {**(batch if land else {}), **rewritten}.items() if rows]
         # a file without rows only carries the schema: keep one while the mart has no rows
         stale = picked + ([f for f, (rows, _) in old.items() if not rows] if landing else [])
@@ -354,14 +400,16 @@ def _parquet_files(path: str) -> list[str]:
     )
 
 
-def _footers(files: list[str], keys: list[str]) -> dict[str, tuple[int, list[list]]]:
-    """file -> (rows, one key box per non-empty row group), from the footer.
-    A box holds per key column ``None`` (no usable stats: may hold any
-    value) or ``(min, max, has_nulls)``, with min and max None when the
-    column is all NULL in that row group."""
-    out = {}
+def _footers(files: list[str], keys: list[str]) -> tuple[dict[str, tuple[int, list[list]]], StructType | None]:
+    """file -> (rows, one key box per non-empty row group), from the footer,
+    and the Spark schema of the first footer carrying one
+    (:func:`_footer_schema`). A box holds per key column ``None`` (no usable
+    stats: may hold any value) or ``(min, max, has_nulls)``, with min and
+    max None when the column is all NULL in that row group."""
+    out, footers = {}, []
     for f in files:
         md = pq.read_metadata(f)
+        footers.append(md)
         index = {md.schema.column(i).path: i for i in range(md.num_columns)}
         boxes = []
         for g in range(md.num_row_groups):
@@ -369,7 +417,7 @@ def _footers(files: list[str], keys: list[str]) -> dict[str, tuple[int, list[lis
             if rg.num_rows:
                 boxes.append([_column_range(rg.column(index[k]), rg.num_rows) if k in index else None for k in keys])
         out[f] = (md.num_rows, boxes)
-    return out
+    return out, _footer_schema(footers)
 
 
 def _column_range(col, rows: int):
@@ -460,11 +508,11 @@ def read_versioned(spark, path: str, *, version: str | None = None) -> DataFrame
         snap = os.path.join(path, _VERSIONS_DIR, version)
         if not os.path.isdir(snap):
             raise FileNotFoundError(f"version {version} missing (vacuumed?) under {path}")
-        return spark.read.parquet(snap)
+        return read_mart(spark, snap)
     snap = current_snapshot_path(path)
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {path}")
-    return spark.read.parquet(snap)
+    return read_mart(spark, snap)
 
 
 def _commit_pointer(path: str, version: str) -> None:
@@ -501,7 +549,7 @@ def transactional_upsert_to_path(
         merged = dedupe_last_wins(new, keys, order_by)
         next_ver = "v00000001"
     else:
-        old = spark.read.parquet(os.path.join(path, _VERSIONS_DIR, cur))
+        old = read_mart(spark, os.path.join(path, _VERSIONS_DIR, cur))
         merged = merge_upsert(old, new, keys, order_by, evolve_schema=evolve_schema)
         next_ver = f"v{int(cur[1:]) + 1:08d}"
     # write the full snapshot BEFORE touching the pointer; the merge plan
@@ -588,7 +636,7 @@ def compact_path(spark, path: str, *, target_partitions: int | None = None) -> i
     for root, _, files in os.walk(path):
         size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
     n = target_partitions or max(1, size // _FILE_BYTES)
-    _write_and_swap(spark.read.parquet(path).coalesce(int(n)), path, prefix="compact_")
+    _write_and_swap(read_mart(spark, path).coalesce(int(n)), path, prefix="compact_")
     return int(n)
 
 
@@ -676,6 +724,6 @@ def merge_aggregate_mart_to_path(
     if not os.path.exists(path):
         delta_agg.write.mode("overwrite").parquet(path)
         return
-    old = spark.read.parquet(path)
+    old = read_mart(spark, path)
     merged = merge_aggregate_mart(old, delta_agg, keys, sum_cols)
     _write_and_swap(merged, path, prefix="ivm_")

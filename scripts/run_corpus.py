@@ -32,6 +32,7 @@ from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import (  # noqa: E402
     web_ingest_batch,
 )
 from pipeline_etl_ecommerce_spark.session import get_spark  # noqa: E402
+from pipeline_etl_ecommerce_spark.sources.sinks import read_mart  # noqa: E402
 
 
 def main() -> int:
@@ -97,11 +98,11 @@ def main() -> int:
             # eval set (same deterministic split the catalog query uses)
             emb_path = os.path.join(path, "embeddings.parquet")
             if os.path.exists(emb_path):
-                emb = spark.read.parquet(emb_path)
+                emb = read_mart(spark, emb_path)
                 embeddings = emb.filter("vec_id % 97 != 0")
                 eval_vectors = emb.filter("vec_id % 97 = 0")
             path = os.path.join(path, "documents.parquet")
-        docs = spark.read.parquet(path)
+        docs = read_mart(spark, path)
     else:
         docs = spark.read.schema("doc_id BIGINT, text STRING").json(args.drops)
 

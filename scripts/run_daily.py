@@ -39,11 +39,15 @@ from pipeline_etl_ecommerce_spark.sources.readers import read_json_payloads  # n
 from pipeline_etl_ecommerce_spark.sources.sinks import (  # noqa: E402
     append_to_path,  # noqa: F401 - a name of this module that tracing harnesses patch
     delete_keys_from_path,
+    read_mart,
     replace_groups_to_path,
     upsert_to_path,
 )
 
 LATENESS_DAYS = 3  # the reference's D-3 rule (tarefa_consolidar_dados.php:29)
+# schemas of the drops that stand in as empty frames when missing
+SHIPMENTS = "shipping_id long, logistic_type string, list_cost double"
+ADS_METRICS = "id_anuncio string, data_metrica date, clicks int, prints int, cost double, units_quantity int, total_amount double, organic_items_quantity int"
 
 
 def _payload(spark, payload_dir: str, name: str, schema):
@@ -51,6 +55,10 @@ def _payload(spark, payload_dir: str, name: str, schema):
     if not os.path.exists(path):
         return None
     return read_json_payloads(spark, path, schema)
+
+
+def _or_empty(spark, payload, schema):
+    return payload if payload is not None else spark.createDataFrame([], schema)
 
 
 def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]:
@@ -71,13 +79,16 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
 
     listings = _payload(spark, payload_dir, "listings", schemas.MELI_LISTING)
     if listings is not None:
-        anuncios = sync_listings(listings)
-        stats["anuncios_canais"] = upsert_to_path(anuncios, f"{marts}/anuncios_canais", ["id_anuncio_canal"])
+        stats["anuncios_canais"] = upsert_to_path(
+            sync_listings(listings), f"{marts}/anuncios_canais", ["id_anuncio_canal"]
+        )
 
     cat_path = f"{marts}/produtos_catalogo"
     an_path = f"{marts}/anuncios_canais"
-    if os.path.exists(cat_path) and os.path.exists(an_path):
-        mapa, alertas = consolidate_mapa(spark.read.parquet(cat_path), spark.read.parquet(an_path))
+    # read once: the bridge and the traffic tasks share it (mart reads run no job)
+    anuncios = read_mart(spark, an_path) if os.path.exists(an_path) else None
+    if anuncios is not None and os.path.exists(cat_path):
+        mapa, alertas = consolidate_mapa(read_mart(spark, cat_path), anuncios)
         stats["mapa_produtos_anuncios"] = upsert_to_path(mapa, f"{marts}/mapa_produtos_anuncios", ["id_anuncio_canal"])
         # the day's alert set replaces that day's earlier one, so a re-run keeps one copy
         alert_day, alerts_path = F.lit(str(day)).cast("date"), f"{marts}/alertas_mapa"
@@ -89,50 +100,31 @@ def run_day(spark, payload_dir: str, marts: str, day: dt.date) -> dict[str, int]
 
     # --- facts ---
     orders = _payload(spark, payload_dir, "orders", schemas.MELI_ORDER)
-    shipments = _payload(spark, payload_dir, "shipments", "shipping_id long, logistic_type string, list_cost double")
+    shipments = _payload(spark, payload_dir, "shipments", SHIPMENTS)
     if orders is not None:
-        if shipments is None:
-            shipments = spark.createDataFrame([], "shipping_id long, logistic_type string, list_cost double")
-        vendas = transform_orders(orders, shipments)
+        vendas = transform_orders(orders, _or_empty(spark, shipments, SHIPMENTS))
         stats["vendas_financeiro"] = upsert_to_path(
             vendas, f"{marts}/vendas_financeiro", ["id_ordem", "id_anuncio", "id_variacao"]
         )
 
     visits = _payload(spark, payload_dir, "visits", schemas.MELI_VISITS)
-    ads = _payload(
-        spark,
-        payload_dir,
-        "ads_metrics",
-        "id_anuncio string, data_metrica date, clicks int, prints int, cost double, units_quantity int, total_amount double, organic_items_quantity int",
-    )
-    if os.path.exists(an_path) and (visits is not None or ads is not None):
+    ads = _payload(spark, payload_dir, "ads_metrics", ADS_METRICS)
+    if anuncios is not None and (visits is not None or ads is not None):
         active = (
-            spark.read.parquet(an_path)
-            .filter(F.col("status") == "active")
+            anuncios.filter(F.col("status") == "active")
             .select(F.col("id_anuncio_pai").alias("id_anuncio"))
             .distinct()
             .withColumn("data_metrica", F.lit(str(day)).cast("date"))
         )
-        empty_visits = spark.createDataFrame([], schemas.MELI_VISITS)
-        empty_ads = spark.createDataFrame(
-            [],
-            "id_anuncio string, data_metrica date, clicks int, prints int, cost double, units_quantity int, total_amount double, organic_items_quantity int",
-        )
         trafego = process_traffic_tasks(
-            active, visits if visits is not None else empty_visits, ads if ads is not None else empty_ads
+            active, _or_empty(spark, visits, schemas.MELI_VISITS), _or_empty(spark, ads, ADS_METRICS)
         )
         stats["trafego_diario"] = upsert_to_path(trafego, f"{marts}/trafego_diario", ["id_anuncio", "data_metrica"])
 
     # --- flagship consolidation ---
     needed = ["vendas_financeiro", "trafego_diario", "mapa_produtos_anuncios", "produtos_catalogo"]
     if all(os.path.exists(f"{marts}/{t}") for t in needed):
-        rel = consolidate_daily(
-            spark.read.parquet(f"{marts}/vendas_financeiro"),
-            spark.read.parquet(f"{marts}/trafego_diario"),
-            spark.read.parquet(f"{marts}/mapa_produtos_anuncios"),
-            spark.read.parquet(f"{marts}/produtos_catalogo"),
-            day,
-        )
+        rel = consolidate_daily(*(read_mart(spark, f"{marts}/{t}") for t in needed), day)
         stats["relatorio_diario"] = upsert_to_path(
             rel, f"{marts}/relatorio_diario", ["data_relatorio", "id_anuncio_variacao"]
         )
@@ -166,7 +158,7 @@ def run_backfill(
     journal_path = os.path.join(marts, JOURNAL_NAME)
     done: set[dt.date] = set()
     if os.path.exists(journal_path):
-        done = {r[0] for r in spark.read.parquet(journal_path).select("day").collect()}
+        done = {r[0] for r in read_mart(spark, journal_path).select("day").collect()}
     processed = []
     for i in range((end - start).days + 1):
         day = start + dt.timedelta(days=i)

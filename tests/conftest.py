@@ -10,6 +10,7 @@ ids, and parents with sales but no traffic.
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pytest
 
@@ -25,6 +26,20 @@ OFF_TS = dt.datetime(2025, 8, 9, 23, 59, 0)  # off-day row, must be filtered
 def spark():
     s = get_spark("pipeline-etl-ecommerce-tests", cpus=4, shuffle_partitions=4)
     yield s
+
+
+def count_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted as the jobs of
+    a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

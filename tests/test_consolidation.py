@@ -9,10 +9,12 @@ variation dropped.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from pipeline_etl_ecommerce_spark.plans.consolidation import consolidate_daily
-from tests.conftest import D
+from tests.conftest import D, TS
 
 # id_anuncio_variacao -> (id_anuncio, sku, impr, cliques, custo_ads, vendas_ads,
 #                         fat_ads, qtd, fat, tarifa, frete, liquido, custo_prod, visitas)
@@ -70,3 +72,52 @@ def test_date_and_schema(result):
     row = next(iter(result.values()))
     assert str(row["data_relatorio"]) == str(D)
     assert len(row) == 18
+
+
+def test_map_row_without_variation_id_is_dropped(spark, vendas, trafego, mapa, catalogo):
+    """A map row with a NULL ``id_anuncio_canal`` names no variation: it is
+    dropped even though its parent MLB100 has traffic on D, and the
+    parent's variations keep their golden allocation."""
+    from pyspark.sql.types import StructField, StructType
+
+    nullable = StructType([StructField(f.name, f.dataType, True) for f in mapa.schema.fields])
+    orphan = spark.createDataFrame(
+        [("SKU-X", "9", None, "Prod X", None, "MLB100", "catA", "fulfillment", "meli_lare", TS)], nullable
+    )
+    mapa = spark.createDataFrame(mapa.rdd, nullable).union(orphan)
+    got = {r["id_anuncio_variacao"]: r for r in consolidate_daily(vendas, trafego, mapa, catalogo, D).collect()}
+    assert set(got) == set(EXPECTED)
+    assert [got["V101"]["cliques_ads"], got["V102"]["cliques_ads"]] == [EXPECTED["V101"][3], EXPECTED["V102"][3]]
+
+
+def test_each_variation_appears_once(vendas, trafego, mapa, catalogo):
+    """V101 sold on D and its parent MLB100 has traffic on D: one row, not
+    one per reason to be active."""
+    keys = [r["id_anuncio_variacao"] for r in consolidate_daily(vendas, trafego, mapa, catalogo, D).collect()]
+    assert sorted(keys) == sorted(EXPECTED)
+
+
+def test_plan_scans_each_fact_once_and_streams_the_map(spark, tmp_path, vendas, trafego, mapa, catalogo):
+    """The executed plan reads sales and traffic once each, has no Union,
+    and broadcasts no scan of the map: the map is the streamed side."""
+    marts = {}
+    for name, df in (("vendas", vendas), ("trafego", trafego), ("mapa", mapa), ("catalogo", catalogo)):
+        df.write.parquet(str(tmp_path / name))
+        marts[name] = spark.read.parquet(str(tmp_path / name))
+    rel = consolidate_daily(marts["vendas"], marts["trafego"], marts["mapa"], marts["catalogo"], D)
+    assert sorted(r["id_anuncio_variacao"] for r in rel.collect()) == sorted(EXPECTED)
+    plan = rel._jdf.queryExecution().executedPlan().toString()
+    lines = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")].splitlines()
+    scans = [line for line in lines if "FileScan" in line]
+    # a scan's column list names its mart
+    assert sum("data_venda#" in line for line in scans) == 1
+    assert sum("data_metrica#" in line for line in scans) == 1
+    assert not any("Union" in line for line in lines)
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            below = itertools.takewhile(lambda m: depth(m) > depth(line), lines[i + 1:])
+            assert not any("FileScan" in m and "id_anuncio_canal#" in m for m in below), "the map is broadcast"

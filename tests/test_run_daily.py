@@ -15,6 +15,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 from run_daily import run_day  # noqa: E402
+from tests.conftest import count_jobs  # noqa: E402
 
 DAY = dt.date(2025, 8, 10)
 
@@ -197,3 +198,15 @@ def test_rerun_with_an_empty_alert_set_drops_the_days_alerts(spark, tmp_path):
     assert run_day(spark, catalogued, marts, DAY)["alertas"] == 0
     alerts = spark.read.parquet(os.path.join(marts, "alertas_mapa")).collect()
     assert [(r["sku"], r["data_alerta"]) for r in alerts] == [("SKU-Z", before)]
+
+
+def test_warm_rerun_runs_a_pinned_number_of_spark_jobs(spark, tmp_path, payload_dir):
+    """The daily job is bound by per-job cost, so its job count is pinned:
+    a change that adds a job to the daily path (a schema-inference read, a
+    second scan of a fact mart) fails here. Before mart reads took their
+    schema from one footer and the map drove the consolidation, this re-run
+    ran 60 jobs."""
+    marts = str(tmp_path / "marts")
+    run_day(spark, payload_dir, marts, DAY)
+    _, jobs = count_jobs(spark, lambda: run_day(spark, payload_dir, marts, DAY))
+    assert jobs == 40, jobs

@@ -6,12 +6,14 @@ import os
 
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs
 from pipeline_etl_ecommerce_spark.sources.sinks import (
     dedupe_last_wins,
     insert_if_absent,
     keyed_update,
     merge_upsert,
     overwrite_date_partitions,
+    read_mart,
     read_versioned,
     delete_keys_from_path,
     replace_groups,
@@ -169,6 +171,114 @@ def test_upsert_to_path_batch_reading_the_target_mart(spark, tmp_path):
     assert upsert_to_path(bumped, path, ["k"]) == 2
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": 101, "b": 2, "c": 103}
+
+
+# ---------------------------------------------------------------------------
+# read_mart: the schema from one footer instead of an inference job
+# ---------------------------------------------------------------------------
+
+_SALE = "id long, sku string, ts timestamp, day date, qty int, price double"
+
+
+def _sales(n, first=0):
+    import datetime as dt
+
+    return [(first + i, f"SKU-{i}", dt.datetime(2025, 8, 10, 12, i), dt.date(2025, 8, 10), i, 1.5 * i)
+            for i in range(n)]
+
+
+def _pyarrow_file(path, rows):
+    """A file written by pyarrow alone: its footer carries no Spark schema."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows))
+    utc = [t.replace(tzinfo=dt.timezone.utc) for t in cols[2]]
+    pq.write_table(pa.table({
+        "id": pa.array(cols[0], pa.int64()), "sku": pa.array(cols[1], pa.string()),
+        "ts": pa.array(utc, pa.timestamp("us", tz="UTC")), "day": pa.array(cols[3], pa.date32()),
+        "qty": pa.array(cols[4], pa.int32()), "price": pa.array(cols[5], pa.float64()),
+    }), path)
+
+
+def test_read_mart_schema_and_rows_equal_sparks_read(spark, tmp_path):
+    """Four marts: one written by upsert_to_path; one whose writer schema has
+    non-nullable nested array, map and struct fields (Spark's read makes them
+    nullable); one written by pyarrow alone (the fallback); and a
+    Spark-written one whose first file pyarrow wrote (a history backfill)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (ArrayType, IntegerType, LongType, MapType, StringType, StructField,
+                                   StructType)
+
+    upserted = str(tmp_path / "upserted")
+    upsert_to_path(_df(spark, [("a", 1, 1)]), upserted, ["k"])
+    upsert_to_path(_df(spark, [("b", 2, 2)]), upserted, ["k"])
+    nested = str(tmp_path / "nested")
+    item = StructType([StructField("x", IntegerType(), False)])
+    schema = StructType([
+        StructField("k", LongType(), False),
+        StructField("a", ArrayType(item, False), False),
+        StructField("m", MapType(StringType(), ArrayType(IntegerType(), False), False), False),
+        StructField("s", StructType([StructField("y", StringType(), False, {"comment": "kept"})]), False),
+    ])
+    spark.createDataFrame([(1, [(2,)], {"z": [3]}, ("w",))], schema).write.parquet(nested)
+    pyarrow_only = tmp_path / "pyarrow_only"
+    pyarrow_only.mkdir()
+    _pyarrow_file(str(pyarrow_only / "part-0.parquet"), _sales(3))
+    _pyarrow_file(str(pyarrow_only / "part-1.parquet"), _sales(2, first=10))
+    mixed = str(tmp_path / "mixed")
+    spark.createDataFrame(_sales(3, first=100), _SALE).coalesce(1).write.parquet(mixed)
+    _pyarrow_file(os.path.join(mixed, "part-0000-history.parquet"), _sales(4))
+    first = sorted(f for f in os.listdir(mixed) if f.endswith(".parquet"))[0]
+    assert first == "part-0000-history.parquet"
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in pq.read_metadata(os.path.join(mixed, first)).metadata
+
+    for path in (upserted, nested, str(pyarrow_only), mixed):
+        got, want = read_mart(spark, path), spark.read.parquet(path)
+        assert got.schema == want.schema, path
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect())), path
+
+
+def test_read_mart_absent_or_empty_path_raises_like_sparks_read(spark, tmp_path):
+    import pytest
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(tmp_path / "absent"), str(empty)):
+        with pytest.raises(Exception) as want:
+            spark.read.parquet(path)
+        with pytest.raises(Exception) as got:
+            read_mart(spark, path)
+        assert type(got.value) is type(want.value), path
+        assert got.value.getCondition() == want.value.getCondition(), path
+
+
+def test_read_mart_runs_no_job_on_a_spark_written_mart(spark, tmp_path):
+    """No job, also when the first file is one pyarrow wrote: the schema
+    comes from the first footer that carries one."""
+    path = str(tmp_path / "mart")
+    for i in range(3):
+        upsert_to_path(spark.createDataFrame(_sales(2, first=10 * i), _SALE), path, ["id"])
+    _pyarrow_file(os.path.join(path, "part-0000-history.parquet"), _sales(4, first=100))
+    assert count_jobs(spark, lambda: spark.read.parquet(path).schema)[1] >= 1  # the inference job
+    assert count_jobs(spark, lambda: read_mart(spark, path).schema)[1] == 0
+
+
+def test_upsert_to_path_nested_nullability_is_no_drift(spark, tmp_path):
+    """Spark reads nested fields back nullable, so a batch whose array and
+    struct cannot hold NULL re-upserts without a drift error, and so does a
+    nullable batch into the mart that batch wrote."""
+    path = str(tmp_path / "mart")
+    strict = spark.range(2).select(
+        F.col("id").alias("k"), F.array(F.lit(1)).alias("a"), F.struct(F.lit("x").alias("s")).alias("st")
+    )
+    for _ in range(2):
+        assert upsert_to_path(strict, path, ["k"]) == 2
+    loose = spark.createDataFrame([(5, [None], ("y",))], "k long, a array<int>, st struct<s:string>")
+    assert upsert_to_path(loose, path, ["k"]) == 1
+    assert sorted(r["k"] for r in read_mart(spark, path).collect()) == [0, 1, 5]
 
 
 def _groups(spark, rows, schema="g string, i int, v int"):
