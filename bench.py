@@ -222,8 +222,19 @@ def run() -> None:
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    # classes compiled and compile seconds on the first rep and on the rest:
+    # min-of-reps hides the first rep's compiles, which a cron job pays
+    compiles: dict[str, dict[str, list]] = {}
     for name in testdata_queries.queries():
-        samples = measure.time_row(spark, sf_dir, name, reps)
+        samples: list[float] = []
+        marks = [measure.codegen(spark)]
+        for n in (1, reps - 1):
+            samples += measure.time_row(spark, sf_dir, name, n)
+            marks.append(measure.codegen(spark))
+        compiles[name] = {
+            part: [b[0] - a[0], round(b[1] - a[1], 3)]
+            for part, a, b in zip(("first", "rest"), marks, marks[1:])
+        }
         timings[name] = round(min(samples), 3)
         if reps > 1:
             spreads[name] = round(max(samples) - min(samples), 3)
@@ -243,8 +254,9 @@ def run() -> None:
     # reader sees which rows needed it. Reproducible regressions survive the
     # retry and still fail the gate loudly. (A full interleaved-rounds
     # design was considered and rejected: it defeats the JVM codegen cache
-    # — 100 entries, LRU — across 273 queries, systematically inflating
-    # every sub-second row's minimum.)
+    # (an LRU of 500 classes, session.get_spark) once the rows between two
+    # reps of one row need more, systematically inflating every sub-second
+    # row's minimum.)
     total_pre_retry = round(sum(timings.values()), 3)
     retried: dict[str, dict] = {}
     # gate-flagged rows AND unpinned rows (r10 verdict item 7): a new row's
@@ -292,6 +304,7 @@ def run() -> None:
         "side_table_build": {"total": side_total, "marts": side_tables},
         "baseline_gate": gate_result,
         "queries": timings,
+        "codegen": compiles,  # row -> {"first"|"rest": [classes, compile s]}
     }
     if spreads:
         detail["spread"] = spreads  # max-min per query across reps

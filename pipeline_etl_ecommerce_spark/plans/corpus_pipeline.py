@@ -53,6 +53,7 @@ from ..operators.sharding import shuffle_shards
 from ..operators.textstats import quality_features
 from ..sources.sinks import (
     overwrite_path,
+    read_mart,
     read_versioned,
     replace_groups_to_path,
     transactional_upsert_to_path,
@@ -77,7 +78,7 @@ def _overwrite_and_read(
     stages must keep working when a gate legitimately empties a mart."""
     n = df.count()
     overwrite_path(df, path, partition_by=partition_by)
-    return (spark.read.parquet(path) if n > 0 else df.limit(0)), n
+    return (read_mart(spark, path) if n > 0 else df.limit(0)), n
 
 
 def ingest_batch(
@@ -134,7 +135,7 @@ def ingest_batch(
     # 2. signature mart: hash ONLY the batch, upsert band keys
     sig_path = _mart(marts, "minhash_bands")
     delta_bk = update_signature_mart(batch, sig_path, "text", "doc_id")
-    mart_bk = spark.read.parquet(sig_path)
+    mart_bk = read_mart(spark, sig_path)
     stats["minhash_bands"] = mart_bk.count()
 
     # 3. candidate pairs touching the delta (delta × mart), verified with
@@ -143,7 +144,7 @@ def ingest_batch(
     cand = incremental_candidate_pairs(mart_bk, delta_bk)
     verified = verify_candidate_pairs(corpus, cand, "text", "doc_id")
     upsert_to_path(verified, pairs_path, ["doc_a", "doc_b"])
-    pairs = spark.read.parquet(pairs_path)
+    pairs = read_mart(spark, pairs_path)
     stats["verified_pairs"] = pairs.count()
 
     # 4. canonical mart: components + quality-aware representative
@@ -157,7 +158,7 @@ def ingest_batch(
         ),
         canon_path,
     )
-    canonical = spark.read.parquet(canon_path)
+    canonical = read_mart(spark, canon_path)
     stats["canonical"] = canonical.count()
 
     # 5. curated mart: drop non-representatives of dup clusters + junk
@@ -226,7 +227,7 @@ def ingest_batch(
     chunks = chunk_documents(to_chunk, "text", "doc_id", chunk_size=chunk_size)
     if os.path.exists(seq_path) or chunks.limit(1).count() > 0:
         replace_groups_to_path(chunks, seq_path, ["doc_id"])
-        seqs_now = spark.read.parquet(seq_path)
+        seqs_now = read_mart(spark, seq_path)
         # curation can EVICT previously-curated docs (a new dup wins): drop
         # their chunks so the sequences mart mirrors the curated set
         live = seqs_now.join(curated.select("doc_id"), "doc_id", "semi")
@@ -283,7 +284,7 @@ def ingest_batch(
     report_path = _mart(marts, "dq_report")
     overwrite_path(report, report_path)
     stats["dq_violations"] = int(
-        spark.read.parquet(report_path).agg(F.sum("violations")).collect()[0][0] or 0
+        read_mart(spark, report_path).agg(F.sum("violations")).collect()[0][0] or 0
     )
     return stats
 
@@ -301,7 +302,7 @@ def record_run(spark: SparkSession, marts: str, stats: dict[str, int]) -> int:
     hist_path = _mart(marts, "_history")
     run_id = 0
     if os.path.exists(hist_path):
-        prev = spark.read.parquet(hist_path)
+        prev = read_mart(spark, hist_path)
         prev_max = prev.agg(F.max("run_id")).collect()[0][0]
         run_id = (int(prev_max) if prev_max is not None else -1) + 1
     rows = [(run_id, k, int(v)) for k, v in sorted(stats.items())]
@@ -326,7 +327,7 @@ def detect_drift(
     10x-duplicated delivery before training reads the mart."""
     from pyspark.sql import Window
 
-    hist = spark.read.parquet(_mart(marts, "_history"))
+    hist = read_mart(spark, _mart(marts, "_history"))
     w = Window.partitionBy("metric").orderBy("run_id")
     deltas = (
         hist.withColumn("delta", F.col("value") - F.lag("value").over(w))
@@ -406,5 +407,5 @@ def web_ingest_batch(
         keys=["canonical_url"],
     )
     stats = ingest_batch(spark, docs.select("doc_id", "text"), marts, **ingest_kwargs)
-    stats["web_pages"] = spark.read.parquet(pages_path).count()
+    stats["web_pages"] = read_mart(spark, pages_path).count()
     return stats

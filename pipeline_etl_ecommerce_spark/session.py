@@ -12,6 +12,9 @@ prints). The same configs are the ones we'd set on a 1000-executor cluster:
   embedding kernels) move data in vectorized batches, never row-at-a-time;
   the media stages' ``multimodal.row_kernel`` (``mapInArrow``) is Arrow by
   construction.
+- A generated-code cache (``spark.sql.codegen.cache.maxEntries``) that holds
+  a daily run's or a query pass's whole working set, so a plan shape compiles
+  once per JVM instead of once per run.
 - Session timezone pinned to ``America/Sao_Paulo`` — the reference's business
   timezone (reference ``tarefa_coletar_financas.php:89-91``); date-grain
   semantics must be stable regardless of host tz.
@@ -57,6 +60,17 @@ def get_spark(
         # Push MIN/MAX/COUNT down to parquet footers for filter-less
         # aggregates — a full-table COUNT(*) reads row-group metadata only.
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # Keep the whole generated-code working set, so a plan shape compiles
+        # once per JVM. Spark's LRU cache of compiled classes holds 100 by
+        # default. Distinct classes measured on 4 cores: one run_day 167-171,
+        # one pass of the 10 mart_queries rows 150-154, the heaviest single
+        # bench row (ivfadc_recall_at3, sf0.01) 97. Both workloads cycled
+        # through more keys than 100, so every lookup missed and every day or
+        # pass recompiled them all (1.2-2.0 s of Janino). 500 holds either set
+        # about three times over, so the ~22 classes a day compiles for its
+        # own date literals age out without evicting the reused ones. Static:
+        # it can only be set here, before the JVM's SQL context starts.
+        .config("spark.sql.codegen.cache.maxEntries", "500")
         .config("spark.ui.enabled", "false")
         # No console progress bar: its \r-terminated fragments can glue onto
         # the next stdout line when streams are merged, corrupting the one
@@ -130,8 +144,13 @@ def _silence_accumulator_gc_spam(spark: SparkSession) -> None:
 def tune_session(spark: SparkSession, *, tz: str | None = None) -> SparkSession:
     """Apply the engine's runtime-settable configs to an existing session.
 
-    Used when the caller (e.g. the verification driver) owns the session and
-    we can only adjust dynamic confs, not JVM-startup ones.
+    Used when the caller owns the session (``__spark_entry__.entry(spark)``
+    is handed one built elsewhere) and we can only adjust dynamic confs, not
+    JVM-startup ones. ``spark.sql.codegen.cache.maxEntries`` is static, so such a session
+    keeps Spark's 100-class codegen cache and recompiles a working set larger
+    than that on every pass: slower, never different.
+    ``selfcheck.hostile_spark`` keeps that default on purpose, because no
+    result may depend on it.
     """
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")

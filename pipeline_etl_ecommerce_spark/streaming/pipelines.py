@@ -18,7 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..plans.traffic import process_traffic_tasks
-from ..sources.sinks import upsert_to_path
+from ..sources.sinks import read_mart, upsert_to_path
 from .runner import read_json_stream
 
 TASK_SCHEMA = StructType.fromDDL("id bigint, id_anuncio string, data_metrica date")
@@ -132,7 +132,7 @@ def document_ingest_stream(
         delta_bk = update_signature_mart(
             batch, signature_mart_path, "text", "doc_id", k=k, num_hashes=num_hashes, bands=bands
         )
-        mart = spark.read.parquet(signature_mart_path)
+        mart = read_mart(spark, signature_mart_path)
         new_pairs = incremental_candidate_pairs(mart, delta_bk)
         upsert_to_path(new_pairs, pairs_path, ["doc_a", "doc_b"])
 
@@ -264,7 +264,7 @@ def scd2_maintenance_stream(
             return
         batch = batch_df.dropDuplicates(["event_id"])
         upsert_to_path(batch, log_path, ["event_id"])
-        log = spark.read.parquet(log_path)
+        log = read_mart(spark, log_path)
         touched = batch.select("user_id").distinct()
         scoped = log.join(touched, "user_id", "semi")
         hist = scd2_from_log(

@@ -58,6 +58,14 @@ def time_row(spark: SparkSession, sf_dir: str, name: str, reps: int) -> list[flo
     return samples
 
 
+def codegen(spark: SparkSession) -> tuple[int, float]:
+    """Classes the JVM's whole-stage codegen has compiled so far, and the
+    seconds Janino spent compiling them: a rep's delta is its compile cost."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    return n, jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime() / 1e9
+
+
 def same_setup(a: dict, b: dict) -> bool:
     """Whether two bench records (a pin, a run's detail) were taken at the
     same core count and SF: the only pairs whose per-row walls compare."""

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from tests.conftest import count_jobs
 from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import ingest_batch
 
 
@@ -251,3 +252,27 @@ def test_perplexity_stage_skipped_without_tau(spark, tmp_path, batch1):
     s1 = ingest_batch(spark, batch1, marts, chunk_size=8, pack_budget=16, n_shards=2)
     assert "ppl_rejected" not in s1
     assert not os.path.exists(f"{marts}/ppl_rejected")
+
+
+def test_corpus_mart_reads_run_no_job(spark, tmp_path, batch1, monkeypatch):
+    """Every mart the pipeline reads back is opened from one footer's schema:
+    no schema-inference job. The Hive-partitioned shards mart is the one
+    exception: ``read_mart`` leaves it to Spark's own read."""
+    from pipeline_etl_ecommerce_spark.plans import corpus_pipeline
+
+    marts = str(tmp_path / "marts")
+    jobs: dict[str, int] = {}
+    read_mart = corpus_pipeline.read_mart
+
+    def counted(spark, path):
+        df, jobs[os.path.basename(path)] = count_jobs(spark, lambda: read_mart(spark, path))
+        return df
+
+    monkeypatch.setattr(corpus_pipeline, "read_mart", counted)
+    for _ in range(2):  # the second run also reads the run-history mart back
+        corpus_pipeline.record_run(
+            spark, marts, ingest_batch(spark, batch1, marts, chunk_size=8, pack_budget=16, n_shards=2)
+        )
+    assert jobs.pop("shards") >= 1
+    assert {"minhash_bands", "verified_pairs", "canonical", "sequences", "dq_report", "_history"} <= set(jobs)
+    assert jobs == dict.fromkeys(jobs, 0)
