@@ -1,6 +1,8 @@
 from .runner import (
     read_json_stream,
     daily_rollup_stream,
+    run_batches,
+    run_parquet_append,
     run_upsert_stream,
     dedup_stream,
     backfill,
@@ -10,6 +12,8 @@ from .runner import (
 __all__ = [
     "read_json_stream",
     "daily_rollup_stream",
+    "run_batches",
+    "run_parquet_append",
     "run_upsert_stream",
     "dedup_stream",
     "backfill",

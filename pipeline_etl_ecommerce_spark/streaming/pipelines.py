@@ -19,7 +19,7 @@ from pyspark.sql.types import StructType
 
 from ..plans.traffic import process_traffic_tasks
 from ..sources.sinks import read_mart, upsert_to_path
-from .runner import read_json_stream
+from .runner import read_json_stream, run_batches, run_parquet_append
 
 TASK_SCHEMA = StructType.fromDDL("id bigint, id_anuncio string, data_metrica date")
 
@@ -31,26 +31,17 @@ def traffic_stream(
     ads_metrics: DataFrame,
     target_path: str,
     checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Consume traffic-task drops as a stream; each micro-batch runs the
     worker transform (J9 day-matched visits + ads metric defaults) and
     upserts the daily traffic mart keyed (id_anuncio, data_metrica)."""
-    tasks = read_json_stream(spark, task_dir, TASK_SCHEMA, max_files_per_trigger=max_files_per_trigger)
+    tasks = read_json_stream(spark, task_dir, TASK_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         out = process_traffic_tasks(batch_df, visits, ads_metrics)
         upsert_to_path(out, target_path, ["id_anuncio", "data_metrica"])
 
-    return (
-        tasks.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(tasks, checkpoint_dir, _process)
 
 
 STOCK_TASK_SCHEMA = StructType.fromDDL("id bigint, sku string, id_produto_tiny bigint, data_snapshot date")
@@ -66,28 +57,19 @@ def inventory_stream(
     inventory_stock: DataFrame,
     target_path: str,
     checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Inventory queue as a stream (reference ``worker_processar_estoque``):
     each micro-batch of (sku, day) tasks resolves Tiny warehouse balances and
     the fulfillment-stock chain, upserting ``estoque_diario``."""
     from ..plans.inventory import process_stock_tasks
 
-    tasks = read_json_stream(spark, task_dir, STOCK_TASK_SCHEMA, max_files_per_trigger=max_files_per_trigger)
+    tasks = read_json_stream(spark, task_dir, STOCK_TASK_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         out = process_stock_tasks(batch_df, tiny_stock, mapa, listings, inventory_stock)
         upsert_to_path(out, target_path, ["sku", "data_snapshot"])
 
-    return (
-        tasks.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(tasks, checkpoint_dir, _process)
 
 
 DOC_SCHEMA = StructType.fromDDL("doc_id bigint, text string")
@@ -104,7 +86,6 @@ def document_ingest_stream(
     k: int = 5,
     num_hashes: int = 4,
     bands: int = 2,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Streaming corpus ingest with INCREMENTAL near-dup detection — the
     100 TB shape of the MinHash pipeline wired into Structured Streaming.
@@ -122,11 +103,9 @@ def document_ingest_stream(
     asserted by tests/test_incremental_minhash.py)."""
     from ..operators.dedupe import incremental_candidate_pairs, update_signature_mart
 
-    docs = read_json_stream(spark, drop_dir, DOC_SCHEMA, max_files_per_trigger=max_files_per_trigger)
+    docs = read_json_stream(spark, drop_dir, DOC_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.dropDuplicates(["doc_id"])
         upsert_to_path(batch, corpus_path, ["doc_id"])
         delta_bk = update_signature_mart(
@@ -136,12 +115,7 @@ def document_ingest_stream(
         new_pairs = incremental_candidate_pairs(mart, delta_bk)
         upsert_to_path(new_pairs, pairs_path, ["doc_a", "doc_b"])
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, _process)
 
 
 def catalog_stream(
@@ -151,8 +125,6 @@ def catalog_stream(
     catalog_path: str,
     outcomes_path: str,
     checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Catalog queue as a stream (reference ``worker_sincronizar_catalogo``):
     per micro-batch, valid detail payloads upsert ``produtos_catalogo`` and
@@ -160,21 +132,14 @@ def catalog_stream(
     mart — the durable replacement for the reference's status columns."""
     from ..plans.catalog import process_catalog_tasks
 
-    tasks = read_json_stream(spark, task_dir, CATALOG_TASK_SCHEMA, max_files_per_trigger=max_files_per_trigger)
+    tasks = read_json_stream(spark, task_dir, CATALOG_TASK_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         catalog_rows, outcomes = process_catalog_tasks(batch_df, details)
         upsert_to_path(catalog_rows, catalog_path, ["sku"])
         upsert_to_path(outcomes, outcomes_path, ["id"])
 
-    return (
-        tasks.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(tasks, checkpoint_dir, _process)
 
 
 def training_sequence_stream(
@@ -185,7 +150,6 @@ def training_sequence_stream(
     *,
     chunk_size: int = 64,
     stride: int | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Streaming corpus → training-sequence emission: each micro-batch of
     document drops is chunked into fixed token windows
@@ -200,23 +164,16 @@ def training_sequence_stream(
     from ..operators.chunking import chunk_documents
     from ..sources.sinks import replace_groups_to_path
 
-    docs = read_json_stream(spark, drop_dir, DOC_SCHEMA, max_files_per_trigger=max_files_per_trigger)
+    docs = read_json_stream(spark, drop_dir, DOC_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         chunks = chunk_documents(
             batch_df.dropDuplicates(["doc_id"]), "text", "doc_id",
             chunk_size=chunk_size, stride=stride,
         )
         replace_groups_to_path(chunks, sequences_path, ["doc_id"])
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, _process)
 
 
 EVENT_LOG_SCHEMA = StructType.fromDDL(
@@ -230,8 +187,6 @@ def scd2_maintenance_stream(
     log_path: str,
     history_path: str,
     checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """CDC-style incremental SCD2 maintenance: keep a type-2 interval
     history (``operators.scd.scd2_from_log``) continuously up to date as
@@ -255,13 +210,9 @@ def scd2_maintenance_stream(
     from ..operators.scd import scd2_from_log
     from ..sources.sinks import replace_groups_to_path
 
-    events = read_json_stream(
-        spark, drop_dir, EVENT_LOG_SCHEMA, max_files_per_trigger=max_files_per_trigger
-    )
+    events = read_json_stream(spark, drop_dir, EVENT_LOG_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.dropDuplicates(["event_id"])
         upsert_to_path(batch, log_path, ["event_id"])
         log = read_mart(spark, log_path)
@@ -272,12 +223,7 @@ def scd2_maintenance_stream(
         )
         replace_groups_to_path(hist, history_path, ["user_id"])
 
-    return (
-        events.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(events, checkpoint_dir, _process)
 
 
 CLICK_SCHEMA = StructType.fromDDL("click_id bigint, user_id bigint, ts bigint")
@@ -328,14 +274,7 @@ def click_attribution_join_stream(
         ),
         "inner",
     ).select("purchase_id", "click_id", "user_id", "purchase_time", "click_time")
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_parquet_append(joined, target_path, checkpoint_dir)
 
 
 def click_conversion_outer_stream(
@@ -385,14 +324,7 @@ def click_conversion_outer_stream(
         ),
         "leftOuter",
     ).select("click_id", "user_id", "click_time", "purchase_id", "purchase_time")
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_parquet_append(joined, target_path, checkpoint_dir)
 
 
 def corpus_pipeline_stream(
@@ -404,7 +336,6 @@ def corpus_pipeline_stream(
     chunk_size: int = 32,
     pack_budget: int = 64,
     n_shards: int = 4,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """The full corpus pipeline as a stream: every micro-batch of document
     drops runs ``plans.corpus_pipeline.ingest_batch`` — delta-scoped
@@ -415,13 +346,9 @@ def corpus_pipeline_stream(
     foreachBatch contract; a redelivered batch is a no-op."""
     from ..plans.corpus_pipeline import ingest_batch
 
-    docs = read_json_stream(
-        spark, drop_dir, DOC_SCHEMA, max_files_per_trigger=max_files_per_trigger
-    )
+    docs = read_json_stream(spark, drop_dir, DOC_SCHEMA)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_batch(
             spark,
             batch_df,
@@ -431,9 +358,4 @@ def corpus_pipeline_stream(
             n_shards=n_shards,
         )
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, _process)

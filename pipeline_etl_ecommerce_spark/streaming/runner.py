@@ -12,6 +12,11 @@ Spark-first restatement:
   ``read_json_stream`` + ``run_upsert_stream`` (foreachBatch MERGE). The
   checkpoint replaces the status column; at-least-once delivery + idempotent
   keyed upsert = the reference's exact fault-tolerance contract.
+- every stream in the package starts here, checkpointed under
+  ``Trigger.AvailableNow`` (drain what is pending, then stop: the cron
+  model): ``run_batches`` is the one ``foreachBatch`` start (the keyed
+  upsert and every pipeline in ``streaming.pipelines`` are built on it),
+  ``run_parquet_append`` the one parquet-append file sink.
 - allowed lateness → ``withWatermark`` on the event time (T2's D-3 becomes a
   '3 days' watermark on a 1-day tumbling window).
 - stateful dedup → ``dropDuplicatesWithinWatermark`` (S10's INSERT IGNORE as
@@ -33,7 +38,7 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..sources.sinks import upsert_to_path
@@ -103,6 +108,47 @@ def dedup_stream(events: DataFrame, keys: list[str], ts_col: str, watermark: str
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def run_batches(
+    stream_df: DataFrame,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int], None],
+    *,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """The one ``foreachBatch`` start (T5's lock → process → mark done):
+    every micro-batch that holds rows goes to ``process(batch_df,
+    batch_id)``, Spark's own signature, so ``idempotent_foreach_batch`` can
+    wrap it; an empty micro-batch never reaches it. A batch is committed to
+    the checkpoint only after ``process`` returns, so an exception fails the
+    query and a re-run on the same checkpoint redelivers the batch
+    (at-least-once; keyed sinks make the replay converge)."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    return _start(
+        stream_df.writeStream.outputMode(output_mode).foreachBatch(_batch), checkpoint_dir
+    )
+
+
+def run_parquet_append(stream_df: DataFrame, target_path: str, checkpoint_dir: str) -> StreamingQuery:
+    """Append-mode parquet file sink: each row lands once, when the stream
+    finalizes it (for a watermarked join, once the watermark closes it). The
+    file sink's own commit log keeps a redelivered batch from landing twice."""
+    return _start(
+        stream_df.writeStream.format("parquet").option("path", target_path).outputMode("append"),
+        checkpoint_dir,
+    )
+
+
+def _start(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Checkpointed ``Trigger.AvailableNow``: drain the pending input, then
+    stop — the cron-batch execution model; the next run resumes from the
+    checkpoint."""
+    return writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True).start()
+
+
 def run_upsert_stream(
     stream_df: DataFrame,
     target_path: str,
@@ -110,34 +156,23 @@ def run_upsert_stream(
     checkpoint_dir: str,
     *,
     order_by: list | None = None,
-    available_now: bool = True,
     output_mode: str = "update",
 ) -> StreamingQuery:
     """foreachBatch + keyed MERGE: every micro-batch upserts into the target
     (idempotent under replay — the reference's ON DUPLICATE KEY UPDATE
-    contract, T5). ``Trigger.AvailableNow`` drains pending input then stops,
-    which is exactly the cron-batch execution model."""
+    contract, T5).
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_to_path(batch_df, target_path, keys, order_by)
-
-    # update mode: aggregates are re-emitted whenever a batch changes them
-    # (append mode would hold rows until the watermark closes the window —
-    # the keyed upsert makes re-emission idempotent, so update is the right
-    # contract for MERGE sinks).
-    # session-window aggregations only support append (emit-on-close):
-    # rows surface once the watermark passes session end, so the MERGE sink
-    # sees each closed session exactly once.
-    writer = (
-        stream_df.writeStream.outputMode(output_mode)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
+    Update mode re-emits an aggregate whenever a batch changes it (append
+    would hold rows until the watermark closes the window); the keyed upsert
+    makes the re-emission idempotent. Session-window aggregations only
+    support append (emit-on-close): each closed session reaches the MERGE
+    sink exactly once."""
+    return run_batches(
+        stream_df,
+        checkpoint_dir,
+        lambda batch_df, _: upsert_to_path(batch_df, target_path, keys, order_by),
+        output_mode=output_mode,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_day_targets(

@@ -18,14 +18,15 @@ Mapping of reference tables → testdata (FIXTURES.md §2):
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import threading
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 from pyspark.sql.window import Window
 
 from .operators.allocation import AllocSpec, allocate_by_share, allocate_ratio_to_parent
@@ -246,6 +247,47 @@ def _await_stream(query, timeout: int = 300) -> None:
             f"streaming query did not terminate within {timeout}s; "
             "refusing to read a partially-written sink"
         )
+
+
+def _stage_drops(
+    drops: str,
+    rows: DataFrame,
+    route: Callable[[Row], str | tuple[str, ...]],
+    *,
+    route_only: tuple[str, ...] = (),
+) -> StructType:
+    """Land a row set as the JSON-lines drop files of a file-source stream.
+
+    One ``collect``; each row becomes one ``json.dumps(row.asDict())`` line
+    (keys in column order) in the file ``route(row)`` names, or in each file
+    of a tuple of names (a redelivery). ``route_only`` columns steer the
+    router but are not written. Files are written one after another in name
+    order, and callers name them in trigger order: a ``maxFilesPerTrigger=1``
+    stream takes the oldest file first. Returns the staged schema, for the
+    stream's reader."""
+    lines: dict[str, list[str]] = {}
+    for r in rows.collect():
+        d = r.asDict()
+        for c in route_only:
+            del d[c]
+        names = route(r)
+        for name in (names,) if isinstance(names, str) else names:
+            lines.setdefault(name, []).append(json.dumps(d) + "\n")
+    os.makedirs(drops, exist_ok=True)
+    for name in sorted(lines):
+        with open(os.path.join(drops, name), "w") as f:
+            f.writelines(lines[name])
+    return rows.drop(*route_only).schema
+
+
+def _by_parity(r: Row) -> str:
+    """Two arrival waves split by the parity of the row's first column, its id."""
+    return "b1.json" if r[0] % 2 == 0 else "b2.json"
+
+
+def _late_every_fifth(r: Row) -> str:
+    """Every fifth event arrives late, in the second trigger."""
+    return "b2_late.json" if r.event_id % 5 == 0 else "b1_ontime.json"
 
 
 # ===========================================================================
@@ -3043,7 +3085,6 @@ def dpp_quarter_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-folds its filter away and DPP sees no selective predicate —
     and the join key must be the partition column itself."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     o = _t(spark, sf_dir, "orders")
     base = _scratch_dir(prefix="dpp_")
@@ -7421,57 +7462,38 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trigger.AvailableNow over two drop files whose contents overlap. The
     result is localCheckpoint-materialized so the temp dirs can be removed
     before the driver collects."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
 
-    from .streaming.runner import dedup_stream, read_json_stream, stream_shuffle_partitions
+    from .streaming.runner import (
+        dedup_stream,
+        read_json_stream,
+        run_parquet_append,
+        stream_shuffle_partitions,
+    )
 
     # deterministic cap: full coverage at the correctness SFs, bounded
     # driver-side JSONL staging at bench scale
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "user_id", "event_type", F.expr("ts DIV 1000").alias("tus"), "value"
     )
-    rows = e.collect()
 
     base = _scratch_dir(prefix="stream_dedup_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1.json"), "w") as f1, open(
-            os.path.join(drops, "b2.json"), "w"
-        ) as f2:
-            for r in rows:
-                d = _json.dumps(
-                    {"event_id": r.event_id, "user_id": r.user_id,
-                     "event_type": r.event_type, "tus": r.tus, "value": r.value}
-                )
-                # evens -> file 1, odds -> file 2, every third -> BOTH
-                if r.event_id % 2 == 0 or r.event_id % 3 == 0:
-                    f1.write(d + "\n")
-                if r.event_id % 2 == 1 or r.event_id % 3 == 0:
-                    f2.write(d + "\n")
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromDDL(
-            "event_id bigint, user_id bigint, event_type string, tus bigint, value double"
-        )
+        # evens -> file 1, odds -> file 2, every third -> BOTH
+        schema = _stage_drops(drops, e, lambda r: (
+            ("b1.json", "b2.json") if r.event_id % 3 == 0
+            else "b1.json" if r.event_id % 2 == 0 else "b2.json"
+        ))
         stream = (
             read_json_stream(spark, drops, schema, max_files_per_trigger=1)
             .withColumn("__et", F.expr("timestamp_micros(tus)"))
         )
         deduped = dedup_stream(stream, ["event_id"], "__et").drop("__et")
         with stream_shuffle_partitions(spark, 2):
-            _await_stream(
-                deduped.writeStream.format("parquet")
-                .option("path", target)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
+            _await_stream(run_parquet_append(deduped, target, ckpt))
         return spark.read.parquet(target).localCheckpoint()
     finally:
         _shutil.rmtree(base, ignore_errors=True)
@@ -7507,11 +7529,7 @@ def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRECTNESS_r02's one red row: an unpinned UTC driver session produced
     150 UTC-day groups where the oracle pins 155 America/Sao_Paulo-day
     groups."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .streaming.runner import (
         daily_rollup_stream,
@@ -7523,26 +7541,13 @@ def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "event_type", F.expr("ts DIV 1000").alias("tus"), "value"
     )
-    rows = e.collect()
 
     base = _scratch_dir(prefix="stream_rollup_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1_ontime.json"), "w") as f1, open(
-            os.path.join(drops, "b2_late.json"), "w"
-        ) as f2:
-            for r in rows:
-                d = _json.dumps(
-                    {"event_id": r.event_id, "event_type": r.event_type,
-                     "tus": r.tus, "value": r.value}
-                )
-                (f2 if r.event_id % 5 == 0 else f1).write(d + "\n")
-        schema = StructType.fromDDL(
-            "event_id bigint, event_type string, tus bigint, value double"
-        )
+        schema = _stage_drops(drops, e, _late_every_fifth)
         # Pin the session tz BEFORE the plan is built: ResolveTimeZone bakes
         # the session zone into date_trunc at analysis time, so the pin must
         # cover DataFrame construction, not just stream execution. The
@@ -8245,14 +8250,10 @@ def ivf_delta_list_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # assignment bit-for-bit, so the oracle is _IVF_DELTA_SQL verbatim.
 @register("streaming_ann_ingest_executed", _IVF_DELTA_SQL, kind="streaming")
 def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .operators.ivf import spilled_assignment
-    from .streaming.runner import read_json_stream, stream_shuffle_partitions
+    from .streaming.runner import read_json_stream, run_batches, stream_shuffle_partitions
 
     cents = _ivf_delta_centroids(spark, sf_dir)
     delta = (
@@ -8260,23 +8261,15 @@ def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("vec_id") % 10 >= 8)
         .select("vec_id", _dvec(F.col("embedding")).alias("embedding"))
     )
-    rows = delta.collect()  # bounded staging: the DELTA slice only
 
     base = _scratch_dir(prefix="stream_ann_ingest_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1.json"), "w") as f1, open(
-            os.path.join(drops, "b2.json"), "w"
-        ) as f2:
-            for r in rows:
-                d = _json.dumps({"vec_id": r.vec_id, "embedding": list(r.embedding)})
-                # two arrival waves split by id parity — each vector arrives
-                # exactly once, in one of two REAL triggers
-                (f1 if r.vec_id % 2 == 0 else f2).write(d + "\n")
-        schema = StructType.fromDDL("vec_id bigint, embedding array<double>")
+        # bounded staging: the DELTA slice only; each vector arrives exactly
+        # once, in one of two REAL triggers
+        schema = _stage_drops(drops, delta, _by_parity)
 
         def ingest(bdf, _batch_id: int) -> None:
             sp = spilled_assignment(bdf, cents, spill=_IVF_SUB_SPILL)
@@ -8285,14 +8278,9 @@ def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("cid").cast("int").alias("cluster_id"),
             ).write.mode("append").parquet(target)
 
+        stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         with stream_shuffle_partitions(spark, 2):
-            _await_stream(
-                read_json_stream(spark, drops, schema, max_files_per_trigger=1)
-                .writeStream.foreachBatch(ingest)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+            _await_stream(run_batches(stream, ckpt, ingest))
         return spark.read.parquet(target).localCheckpoint()
     finally:
         _shutil.rmtree(base, ignore_errors=True)
@@ -8528,7 +8516,6 @@ def sink_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bag semantics, so the p_size 21..25 overlap must appear once per
     batch. The oracle is the same bag union computed directly."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import append_to_path
 
@@ -8573,7 +8560,6 @@ def sink_truncate_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``overwrite_path``); the read-back aggregate must equal the clean
     batch aggregate — proving the overwrite replaced, not merged."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import overwrite_path
 
@@ -8622,7 +8608,6 @@ def sink_partitioned_bi_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the partition column round-trips through the directory
     encoding and the pruned read sees every row."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import append_to_path
 
@@ -8680,7 +8665,6 @@ def backfill_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot batch rollup the oracle computes."""
     import datetime as _dt
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import upsert_to_path
     from .streaming.runner import backfill
@@ -8884,11 +8868,7 @@ def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes and append-mode emits it exactly once into the keyed mart.
     Output in tz-free epoch micros; the oracle replays session_window's
     boundary rule as batch gaps-and-islands."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .streaming.runner import (
         read_json_stream,
@@ -8897,28 +8877,21 @@ def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_shuffle_partitions,
     )
 
-    gap_us = 6 * 3600 * 1_000_000
     e = _events(spark, sf_dir).filter(
         (F.col("event_id") <= 20000) & (F.col("user_id") < 50)
     ).select("user_id", F.expr("ts DIV 1000").alias("tus"))
-    rows = e.collect()
-    max_tus = max(r.tus for r in rows)
+    sentinel = e.agg(
+        F.lit(-1).cast("long").alias("user_id"),
+        (F.max("tus") + 40 * 86400 * 1_000_000).alias("tus"),
+    )
 
     base = _scratch_dir(prefix="stream_sessions_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1_events.json"), "w") as f1:
-            for r in rows:
-                f1.write(_json.dumps({"user_id": r.user_id, "tus": r.tus}) + "\n")
-        with open(os.path.join(drops, "b2_sentinel.json"), "w") as f2:
-            f2.write(
-                _json.dumps({"user_id": -1, "tus": max_tus + 40 * 86400 * 1_000_000})
-                + "\n"
-            )
-        schema = StructType.fromDDL("user_id bigint, tus bigint")
+        schema = _stage_drops(drops, e, lambda r: "b1_events.json")
+        _stage_drops(drops, sentinel, lambda r: "b2_sentinel.json")
         stream = (
             read_json_stream(spark, drops, schema, max_files_per_trigger=1)
             .withColumn("__et", F.expr("timestamp_micros(tus)"))
@@ -8979,7 +8952,6 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operational contract a 100 TB mart's readers rely on during a
     rolling schema change."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import append_to_path
 
@@ -9032,11 +9004,7 @@ def json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     check proves no good row is lost and every corrupt line is captured
     (the S8 source's operational failure path, reference ingestion
     scripts crash on the first bad payload)."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "event_type"
@@ -9050,7 +9018,7 @@ def json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         with open(drop, "w") as f:
             for r in rows:
-                line = _json.dumps({"event_id": r.event_id, "event_type": r.event_type})
+                line = json.dumps({"event_id": r.event_id, "event_type": r.event_type})
                 f.write((line[: len(line) // 2] if r.event_id % 97 == 0 else line) + "\n")
         schema = StructType.fromDDL(
             "event_id bigint, event_type string, _corrupt_record string"
@@ -9105,9 +9073,6 @@ def rest_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism the offset dialect permits), lands JSONL, and the engine
     parses distributed and aggregates."""
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .sources.rest import fetch_offset_limit, ingest_pages
 
@@ -9159,9 +9124,6 @@ def rest_scroll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — each page's token comes from the previous response;
     terminates on the first empty page."""
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .sources.rest import fetch_scroll, ingest_pages
 
@@ -9214,9 +9176,6 @@ def rest_page_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     first empty page, ``tarefa_sincronizar_catalogo_tiny.php:16-33`` and 3
     sibling jobs)."""
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .sources.rest import fetch_page_number, ingest_pages
 
@@ -9420,7 +9379,6 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions), then joined and aggregated. Proves the text-format
     round-trip preserves types and values exactly."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
@@ -9468,7 +9426,6 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the parquet path. The oracle recomputes from the parquet
     original, so the hash proves type and value fidelity across formats."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     o = _t(spark, sf_dir, "orders")
     base = _scratch_dir(prefix="orc_rt_")
@@ -9514,7 +9471,6 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing-zone format (supplier feeds arrive as documents) — at scale
     it is parsed ONCE at ingest into parquet, exactly this shape."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     s = _t(spark, sf_dir, "supplier")
     base = _scratch_dir(prefix="xml_rt_")
@@ -9651,11 +9607,7 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed state store across two file triggers; every
     emission is a running snapshot and the keyed upsert keeps the
     last-wins row, converging the mart to the batch aggregate."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .streaming.runner import read_json_stream, run_upsert_stream, stream_shuffle_partitions
     from .streaming.stateful import running_user_totals_exact
@@ -9667,21 +9619,13 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
     )
-    rows = e.collect()
 
     base = _scratch_dir(prefix="stateful_totals_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1.json"), "w") as f1, open(
-            os.path.join(drops, "b2.json"), "w"
-        ) as f2:
-            for r in rows:
-                line = _json.dumps({"user_id": r.user_id, "cents": r.cents}) + "\n"
-                (f1 if r.event_id % 2 == 0 else f2).write(line)
-        schema = StructType.fromDDL("user_id bigint, cents bigint")
+        schema = _stage_drops(drops, e, _by_parity, route_only=("event_id",))
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         totals = running_user_totals_exact(stream)
         with stream_shuffle_partitions(spark, 2):
@@ -9722,32 +9666,20 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store), appends to parquet, and the read-back aggregate must
     hash-match the batch join. The staging collect is the documented
     <=20k-row harness bound shared by the other executed streams."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
 
-    from pyspark.sql.types import StructType
-
-    from .streaming.runner import read_json_stream, stream_shuffle_partitions
+    from .streaming.runner import read_json_stream, run_parquet_append, stream_shuffle_partitions
 
     ev = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "user_id"
     )
-    rows = ev.collect()
 
     base = _scratch_dir(prefix="stream_static_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1.json"), "w") as f1, open(
-            os.path.join(drops, "b2.json"), "w"
-        ) as f2:
-            for r in rows:
-                line = _json.dumps({"event_id": r.event_id, "user_id": r.user_id}) + "\n"
-                (f1 if r.event_id % 2 == 0 else f2).write(line)
-        schema = StructType.fromDDL("event_id bigint, user_id bigint")
+        schema = _stage_drops(drops, ev, _by_parity)
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         dim = _t(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
@@ -9755,15 +9687,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         enriched = stream.join(F.broadcast(dim), "user_id")
         with stream_shuffle_partitions(spark, 2):
-            q = (
-                enriched.writeStream.format("parquet")
-                .option("path", target)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
+            _await_stream(run_parquet_append(enriched, target, ckpt))
         return (
             spark.read.parquet(target)
             .groupBy("user_id", "segment")
@@ -9774,36 +9698,20 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(base, ignore_errors=True)
 
 
-def _stage_click_purchase_drops(
-    spark: SparkSession, sf_dir: str, base: str, *, max_id: int
-) -> tuple[str, str, int]:
-    """Shared harness for the stream-stream join queries: collect the
-    click/purchase event slices (event_id <= max_id) and land each side as
-    TWO parity-split JSONL trigger files under ``base`` — so every join
-    must span trigger boundaries through the two-sided state. Returns
-    (clicks_dir, purchases_dir, max_tus); the single place the landing
-    format lives, so the inner and outer harnesses cannot diverge."""
-    import json as _json
-
-    ev = _events(spark, sf_dir).filter(F.col("event_id") <= max_id).select(
-        "event_id", "user_id", "event_type", F.expr("ts DIV 1000").alias("tus")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").collect()
-    purchases = ev.filter(F.col("event_type") == "purchase").collect()
-    cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
-    os.makedirs(cdir)
-    os.makedirs(pdir)
-    for rows, d, idc in ((clicks, cdir, "click_id"), (purchases, pdir, "purchase_id")):
-        with open(os.path.join(d, "b1.json"), "w") as f1, open(
-            os.path.join(d, "b2.json"), "w"
-        ) as f2:
-            for r in rows:
-                line = _json.dumps(
-                    {idc: r.event_id, "user_id": r.user_id, "ts": r.tus}
-                ) + "\n"
-                (f1 if r.event_id % 2 == 0 else f2).write(line)
-    max_tus = max([r.tus for r in clicks] + [r.tus for r in purchases] + [0])
-    return cdir, pdir, max_tus
+def _click_purchase_sides(spark: SparkSession, sf_dir: str, *, max_id: int) -> dict[str, DataFrame]:
+    """The stream-stream join harnesses' inputs, keyed by drop directory: the
+    click and purchase event slices (event_id <= max_id) as rows of
+    ``streaming.pipelines.CLICK_SCHEMA`` / ``PURCHASE_SCHEMA``. Each side
+    lands as two parity-split trigger files, so every join must span trigger
+    boundaries through the two-sided state; the single place the landing
+    shape lives, so the inner and outer harnesses cannot diverge."""
+    ev = _events(spark, sf_dir).filter(F.col("event_id") <= max_id)
+    return {
+        f"{side}s": ev.filter(F.col("event_type") == side).select(
+            F.col("event_id").alias(f"{side}_id"), "user_id", F.expr("ts DIV 1000").alias("ts")
+        )
+        for side in ("click", "purchase")
+    }
 
 
 # Stream-stream interval join EXECUTED: the last executed-streaming
@@ -9838,15 +9746,16 @@ def streaming_attribution_executed(spark: SparkSession, sf_dir: str) -> DataFram
     trigger 1 still joins a purchase arriving in trigger 2. Append sink;
     must hash-match the batch interval join."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .streaming.pipelines import click_attribution_join_stream
     from .streaming.runner import stream_shuffle_partitions
 
     base = _scratch_dir(prefix="stream_attrib_")
     target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
+    cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
     try:
-        cdir, pdir, _ = _stage_click_purchase_drops(spark, sf_dir, base, max_id=20000)
+        for side, rows in _click_purchase_sides(spark, sf_dir, max_id=20000).items():
+            _stage_drops(os.path.join(base, side), rows, _by_parity)
         with stream_shuffle_partitions(spark, 2):
             _await_stream(click_attribution_join_stream(
                 spark, cdir, pdir, target, ckpt,
@@ -9899,19 +9808,18 @@ def streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame
     with NULL purchase columns — only after the watermark proves no match
     can still arrive. Hash-matches the batch LEFT JOIN, which is the
     convergence contract for the whole outer-join protocol."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .streaming.pipelines import click_conversion_outer_stream
     from .streaming.runner import stream_shuffle_partitions
 
     base = _scratch_dir(prefix="stream_outer_")
     target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
+    cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
+    sides = _click_purchase_sides(spark, sf_dir, max_id=12000)
     try:
-        cdir, pdir, max_tus = _stage_click_purchase_drops(
-            spark, sf_dir, base, max_id=12000
-        )
+        for side, rows in sides.items():
+            _stage_drops(os.path.join(base, side), rows, _by_parity)
         with stream_shuffle_partitions(spark, 2):
             _await_stream(click_conversion_outer_stream(
                 spark, cdir, pdir, target, ckpt,
@@ -9929,12 +9837,14 @@ def streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame
             # click_id >= 0 read-back filter, which now stays only as
             # defense-in-depth for the click sentinel's own NULL-row
             # emission).
+            clicks, purchases = sides.values()
+            max_tus = clicks.union(purchases).agg(F.max("ts")).first()[0] or 0
             for wave in (1, 2):
                 far = max_tus + 30 * 86_400_000_000 + wave * 86_400_000_000
                 with open(os.path.join(cdir, f"sentinel{wave}.json"), "w") as fc:
-                    fc.write(_json.dumps({"click_id": -wave, "user_id": -1, "ts": far}) + "\n")
+                    fc.write(json.dumps({"click_id": -wave, "user_id": -1, "ts": far}) + "\n")
                 with open(os.path.join(pdir, f"sentinel{wave}.json"), "w") as fp:
-                    fp.write(_json.dumps({"purchase_id": -wave, "user_id": -2, "ts": far}) + "\n")
+                    fp.write(json.dumps({"purchase_id": -wave, "user_id": -2, "ts": far}) + "\n")
             _await_stream(click_conversion_outer_stream(
                 spark, cdir, pdir, target, ckpt,
                 conversion_window="24 hours", watermark="1 day",
@@ -10377,7 +10287,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     disturbing co-location). Unique per-call database under a temp
     location, dropped CASCADE afterwards."""
     import shutil as _shutil
-    import tempfile as _tempfile
     import uuid as _uuid
 
     from .sources.bucketing import write_bucketed
@@ -10758,7 +10667,6 @@ def incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact never re-scanned. The converged mart hash-matches the
     one-shot batch aggregate; DECIMAL partials keep every merge exact."""
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import merge_aggregate_mart_to_path
 
@@ -11233,11 +11141,7 @@ def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch aggregate value-for-value. Result is materialized
     (localCheckpoint) under the conf pin, so nothing the driver collects
     depends on the restored session confs."""
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .streaming.runner import (
         ROCKSDB_STATE_CONFS,
@@ -11249,26 +11153,13 @@ def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 12000).select(
         "event_id", "user_id", F.expr("ts DIV 1000").alias("tus"), "value"
     )
-    rows = e.collect()
 
     base = _scratch_dir(prefix="rocksdb_totals_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "target")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     try:
-        with open(os.path.join(drops, "b1_ontime.json"), "w") as f1, open(
-            os.path.join(drops, "b2_late.json"), "w"
-        ) as f2:
-            for r in rows:
-                d = _json.dumps(
-                    {"event_id": r.event_id, "user_id": r.user_id,
-                     "tus": r.tus, "value": r.value}
-                )
-                (f2 if r.event_id % 5 == 0 else f1).write(d + "\n")
-        schema = StructType.fromDDL(
-            "event_id bigint, user_id bigint, tus bigint, value double"
-        )
+        schema = _stage_drops(drops, e, _late_every_fifth)
         with _conf_pin(spark, ROCKSDB_STATE_CONFS):
             stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
             totals = stream.groupBy("user_id").agg(
@@ -12093,7 +11984,6 @@ GROUP BY l_returnflag
 def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .sources.sinks import compact_path
 
@@ -12202,7 +12092,6 @@ FROM z GROUP BY 1
 def zorder_recluster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from .operators.layout import recluster_zordered
 
@@ -12461,21 +12350,16 @@ WHERE l.op IS NULL OR l.op <> 'D'
 
 @register("streaming_cdc_apply_executed", _STREAM_CDC_SQL, kind="streaming")
 def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
     import shutil as _shutil
-    import tempfile as _tempfile
-
-    from pyspark.sql.types import StructType
 
     from .operators.cdc import cdc_compact_log
     from .sources.sinks import _write_and_swap
-    from .streaming.runner import read_json_stream, stream_shuffle_partitions
+    from .streaming.runner import read_json_stream, run_batches, stream_shuffle_partitions
 
     base = _scratch_dir(prefix="stream_cdc_")
     drops = os.path.join(base, "drops")
     target = os.path.join(base, "mart")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(drops)
     keys, order = ["p_partkey"], ["ts", "okey", "lnum"]
 
     def compact(df: DataFrame) -> DataFrame:
@@ -12513,23 +12397,11 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two drop files split by LINE NUMBER (not time): the second
         # trigger carries ops that are older than the first's for the
         # same keys — only an associative fold converges.
-        with open(os.path.join(drops, "b1_high.json"), "w") as f1, open(
-            os.path.join(drops, "b2_low.json"), "w"
-        ) as f2:
-            for r in ops.collect():
-                d = _json.dumps(
-                    {"p_partkey": r.p_partkey, "ts": r.ts, "okey": r.okey,
-                     "lnum": r.lnum, "op": r.op, "price": r.price}
-                )
-                (f1 if r.lnum >= 4 else f2).write(d + "\n")
-        schema = StructType.fromDDL(
-            "p_partkey bigint, ts bigint, okey bigint, lnum bigint, "
-            "op string, price double"
+        schema = _stage_drops(
+            drops, ops, lambda r: "b1_high.json" if r.lnum >= 4 else "b2_low.json"
         )
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             cur = spark.read.parquet(target)
             _write_and_swap(
                 compact(cur.unionByName(batch_df)), target, prefix="cdc_"
@@ -12537,14 +12409,7 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         with stream_shuffle_partitions(spark, 2):
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(_sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
+            _await_stream(run_batches(stream, ckpt, _sink))
         return (
             spark.read.parquet(target)
             .filter(F.col("op") != "D")

@@ -580,3 +580,110 @@ def test_idempotent_foreach_batch_query_key_isolates_journals(spark, tmp_path):
     s2(df, 0)  # same batch id, different query: must still run
     assert spark.read.parquet(t1).count() == 1
     assert spark.read.parquet(t2).count() == 1
+
+
+def test_run_batches_skips_empty_micro_batch(spark, tmp_path):
+    """An empty drop file still makes a micro-batch (the source offset
+    advances), but ``process`` never sees it; the next file's batch does."""
+    from pyspark.sql.types import StructType
+
+    from pipeline_etl_ecommerce_spark.streaming.runner import run_batches
+
+    src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    schema = StructType.fromDDL("id bigint, v string")
+    calls = []
+
+    def run():
+        stream = read_json_stream(spark, src, schema, max_files_per_trigger=1)
+        q = run_batches(stream, ckpt, lambda b, i: calls.append((i, b.count())))
+        assert q.awaitTermination(120)
+        return q
+
+    _write_batch(src, "b1_empty.json", [])
+    q = run()
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] == 0] == [0]
+    assert calls == []
+    _write_batch(src, "b2.json", [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}])
+    run()
+    assert calls == [(1, 2)]
+
+
+def test_run_batches_failed_batch_is_redelivered(spark, tmp_path):
+    """At-least-once: an exception in ``process`` fails the query at
+    ``awaitTermination`` and leaves the batch uncommitted, so a re-run on
+    the same checkpoint redelivers it; a keyed upsert absorbs the replay."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.types import StructType
+
+    from pipeline_etl_ecommerce_spark.sources.sinks import upsert_to_path
+    from pipeline_etl_ecommerce_spark.streaming.runner import run_batches
+
+    src, ckpt, target = (str(tmp_path / d) for d in ("in", "ckpt", "mart"))
+    schema = StructType.fromDDL("id bigint, v string")
+    _write_batch(src, "b1.json", [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}])
+    delivered = []
+
+    def upsert_then_crash(batch_df, batch_id):
+        delivered.append(batch_id)
+        upsert_to_path(batch_df, target, ["id"])
+        raise RuntimeError("crash after the sink wrote, before the commit")
+
+    q = run_batches(read_json_stream(spark, src, schema), ckpt, upsert_then_crash)
+    with pytest.raises(StreamingQueryException, match="crash after the sink wrote"):
+        q.awaitTermination(120)
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    def upsert(batch_df, batch_id):
+        delivered.append(batch_id)
+        upsert_to_path(batch_df, target, ["id"])
+
+    assert run_batches(read_json_stream(spark, src, schema), ckpt, upsert).awaitTermination(120)
+    assert delivered == [0, 0]
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert sorted((r.id, r.v) for r in spark.read.parquet(target).collect()) == [(1, "a"), (2, "b")]
+
+
+def test_stage_drops_routes_rows_to_json_lines(spark, tmp_path):
+    """Each staged row is one JSON object keyed in column order; a row
+    routed to two files lands in both, and reading the files back with the
+    returned schema gives the source rows."""
+    from pipeline_etl_ecommerce_spark.testdata_queries import _stage_drops
+
+    rows = spark.createDataFrame(
+        [(3, 1.5, "c", [0.25]), (1, None, "a", []), (2, -2.0, "b", [1.0, 2.0])],
+        "id bigint, value double, tag string, vec array<double>",
+    )
+    drops = str(tmp_path / "drops")
+    schema = _stage_drops(
+        drops, rows, lambda r: ("b1.json", "b2.json") if r.id == 3 else f"b{r.id}.json"
+    )
+    assert schema == rows.schema
+    files = {}
+    for name in sorted(os.listdir(drops)):
+        with open(os.path.join(drops, name)) as f:
+            files[name] = f.read().splitlines()
+    assert files == {
+        "b1.json": [
+            '{"id": 3, "value": 1.5, "tag": "c", "vec": [0.25]}',
+            '{"id": 1, "value": null, "tag": "a", "vec": []}',
+        ],
+        "b2.json": [
+            '{"id": 3, "value": 1.5, "tag": "c", "vec": [0.25]}',
+            '{"id": 2, "value": -2.0, "tag": "b", "vec": [1.0, 2.0]}',
+        ],
+    }
+    back = spark.read.schema(schema).json(drops).distinct()
+    assert sorted(back.collect()) == sorted(rows.collect())
+
+
+def test_stage_drops_route_only_columns_are_not_written(spark, tmp_path):
+    from pipeline_etl_ecommerce_spark.testdata_queries import _stage_drops
+
+    rows = spark.createDataFrame([(1, 10), (2, 20)], "event_id bigint, cents bigint")
+    drops = str(tmp_path / "drops")
+    schema = _stage_drops(
+        drops, rows, lambda r: f"b{r.event_id}.json", route_only=("event_id",)
+    )
+    assert schema.fieldNames() == ["cents"]
+    with open(os.path.join(drops, "b2.json")) as f:
+        assert f.read() == '{"cents": 20}\n'
