@@ -143,82 +143,12 @@ def _update(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    *,
-    k: int | None = None,
-    iters: int = 2,
-) -> DataFrame:
-    """Run ``iters`` Lloyd's iterations from the deterministic init and
-    return the final assignment: ``(vec_id, cluster_id, dist2)``.
-    ``k=None`` scales the cluster count with the corpus
-    (:func:`adaptive_k`) so cluster sizes — and any downstream
-    within-cluster work — stay constant as data grows."""
-    k = _resolve_k(df, k)
-    if k <= 0 or iters <= 0:
-        raise ValueError("k and iters must be positive")
-    v = df.select(F.col(id_col).alias("_vid"), _dvec(F.col(vec_col)).alias("_v"))
-    centroids = _init_centroids(v, k)
-    assigned = _assign(v, centroids)
-    for _ in range(iters - 1):
-        centroids = _update(assigned, centroids)
-        assigned = _assign(v, centroids)
-    return assigned.select(
-        F.col("_vid").alias("vec_id"),
-        F.col("cid").cast("int").alias("cluster_id"),
-        F.col("dist2"),
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    *,
-    k: int | None = None,
-    iters: int = 2,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """SemDeDup: k-means partition, then cosine near-dup pairs WITHIN each
-    cluster; a vector is kept unless a same-cluster vector with a smaller
-    id sits above the threshold. Returns ``(vec_id, cluster_id, kept)`` for
-    every input vector — filter on ``kept`` for the surviving corpus.
-
-    The pair join's key is the cluster id, so the quadratic blowup is
-    bounded per cluster. ``k=None`` (the default) derives k from the corpus
-    size (:func:`adaptive_k`) so the per-cluster pair budget stays constant
-    as data grows — a FIXED k here is a measured scale cliff (41.96× wall
-    at a 10× corpus; see NOTES.md r5 stress entry)."""
-    k = _resolve_k(df, k)
-    v = df.select(F.col(id_col).alias("_vid"), _dvec(F.col(vec_col)).alias("_v"))
-    centroids = _init_centroids(v, k)
-    assigned = _assign(v, centroids)
-    for _ in range(iters - 1):
-        centroids = _update(assigned, centroids)
-        assigned = _assign(v, centroids)
-    # the assignment feeds BOTH pair sides and the final verdict join —
-    # materialize it so the Lloyd's lineage runs once, not three times.
-    # localCheckpoint instead of persist(): persist registers the frame in
-    # the session CacheManager, which pins the blocks until an explicit
-    # unpersist a lazy operator can never issue (ADVICE r1: cached
-    # partitions accumulated across a 101-query bench session);
-    # localCheckpoint blocks are released by the ContextCleaner as soon as
-    # the frame is garbage-collected. Callers holding an already-
-    # materialized assignment (the centroid-mart pattern) should use
-    # ``semantic_dedup_verdict`` directly and skip the re-training.
-    assigned = assigned.localCheckpoint(eager=False)
-    return semantic_dedup_verdict(assigned, threshold=threshold)
-
-
 def semantic_dedup_verdict(assigned: DataFrame, *, threshold: float = 0.9) -> DataFrame:
     """SemDeDup's verdict stage over a PRECOMPUTED assignment frame
-    ``(_vid, _v, cid, ...)`` (the output shape of ``_assign`` /
-    ``assign_to_centroids`` keeping vectors): within-cluster cosine pairs,
-    then keep = no smaller-id neighbor above the threshold. Split out so a
-    persisted assignment mart feeds kmeans/SemDeDup/IVF without re-running
-    Lloyd's per query."""
+    ``(_vid, _v, cid, ...)`` (the output shape of ``_assign``): within-cluster
+    cosine pairs, then keep = no smaller-id neighbor above the threshold.
+    Taking the assignment as input lets a persisted assignment mart feed
+    kmeans/SemDeDup/IVF without re-running Lloyd's per query."""
     sides = assigned.select("cid", "_vid", "_v", F.sqrt(dot(F.col("_v"), F.col("_v"))).alias("_n"))
     a = sides.select("cid", F.col("_vid").alias("vec_a"), F.col("_v").alias("va"), F.col("_n").alias("na"))
     b = sides.select("cid", F.col("_vid").alias("vec_b"), F.col("_v").alias("vb"), F.col("_n").alias("nb"))
@@ -260,19 +190,3 @@ def centroids_table(
     return centroids.select("cid", "cvec")
 
 
-def assign_to_centroids(
-    df: DataFrame, centroids: DataFrame, vec_col: str, id_col: str
-) -> DataFrame:
-    """Delta-ingest path: assign NEW vectors to an existing ``(cid, cvec)``
-    centroid table (from ``centroids_table``, typically read back from the
-    persisted mart) without re-running Lloyd's. Same pinned argmin as
-    training (6dp-rounded distance, cid tie-break), so a vector gets the
-    identical cluster whether it arrived in the training batch or a later
-    delta. Broadcast join + one aggregation — O(delta), never O(corpus)."""
-    v = df.select(F.col(id_col).alias("_vid"), _dvec(F.col(vec_col)).alias("_v"))
-    assigned = _assign(v, centroids.select("cid", "cvec"))
-    return assigned.select(
-        F.col("_vid").alias("vec_id"),
-        F.col("cid").cast("int").alias("cluster_id"),
-        F.col("dist2"),
-    )

@@ -50,17 +50,6 @@ def char_shingles(col: str | Column, k: int = 5) -> Column:
     return F.transform(idx, lambda i: c.substr(i, F.lit(k)))
 
 
-def minhash(shingles: Column, hash_index: int) -> Column:
-    """One min-hash: lexicographic min over shingles of an 8-hex-char slice
-    of md5(shingle). Slices of one digest are independent 32-bit uniform
-    hashes, so k hash functions cost ONE md5 per shingle instead of k —
-    measured ~3x faster at sf0.1 than per-index salted digests."""
-    lo = 1 + 8 * hash_index  # md5 hex has 32 chars -> 4 disjoint 8-char slices
-    return F.array_min(
-        F.transform(shingles, lambda s: F.substring(F.md5(s.cast("binary")), lo, 8))
-    )
-
-
 def minhash_band_keys(
     df: DataFrame,
     text_col: str,
@@ -596,21 +585,6 @@ def _simhash_banded(signatures: DataFrame) -> DataFrame:
     return banded
 
 
-def update_simhash_mart(
-    new_docs: DataFrame, mart_path: str, text_col: str, id_col: str
-) -> DataFrame:
-    """Incremental SimHash: hash ONLY the new/changed docs (``simhash32`` is
-    map-only, so the delta cost is O(delta tokens)) and upsert the
-    signatures into the persisted mart keyed by doc_id — re-ingesting a doc
-    replaces its signature. Returns the delta signatures for
-    ``incremental_simhash_pairs``."""
-    from ..sources.sinks import upsert_to_path
-
-    delta = simhash32(new_docs, text_col, id_col)
-    upsert_to_path(delta, mart_path, keys=["doc_id"])
-    return delta
-
-
 def incremental_simhash_pairs(
     mart_sigs: DataFrame, delta_sigs: DataFrame, *, max_hamming: int = 4
 ) -> DataFrame:
@@ -720,8 +694,10 @@ def _span_gram_matches(
         )
         .select("doc", "pos", F.expr(f"substring(_t, pos, {gram_len})").alias("gram"))
         # the gram stream feeds BOTH the df-cut aggregation and the join
-        # side; materialize it once (GC-released localCheckpoint, same
-        # rationale as semantic_dedup) — measured 10-15s -> 6-8s at sf0.1
+        # side; materialize it once (localCheckpoint, not persist: the
+        # ContextCleaner releases its blocks once the frame is garbage,
+        # where a persist pins them in the CacheManager until an unpersist
+        # a lazy operator never calls) — measured 10-15s -> 6-8s at sf0.1
         .localCheckpoint(eager=False)
     )
     gdf = (

@@ -2,16 +2,17 @@
 similarity search when hyperplane-LSH recall isn't enough.
 
 Classic two-stage design:
-1. coarse quantizer: k centroids; every corpus vector is assigned to its
-   nearest centroid (one pass; assignment is a vectorized numpy matmul in an
-   Arrow-batched pandas UDF — 64-dim × k=16 per batch, the textbook case
-   where a vectorized kernel beats k HOF expressions);
+1. coarse quantizer: k centroids (``clustering.centroids_table``); every
+   corpus vector is assigned to its nearest centroid, or to its ``spill``
+   nearest (:func:`spilled_assignment`);
 2. search: a query probes its ``nprobe`` nearest centroids and brute-forces
-   only those inverted lists — the cross join shrinks by ~k/nprobe.
+   only those inverted lists — the cross join shrinks by ~k/nprobe
+   (:func:`ivf_search_pinned`, :func:`ivfadc_topk`).
 
-Centroids are chosen deterministically (the lowest-id vectors, then one
-Lloyd refinement pass computed distributively with groupBy means) so results
-are reproducible run-to-run — no RNG, no Date.now.
+The quantizer is the PINNED Lloyd's k-means of ``operators.clustering``
+(lowest-id init, 6dp-rounded argmin with cid tie-break), so every decision
+— centroids, list membership, probe ranking, final top-k — is replayable in
+ANSI SQL and hash-checkable against a DuckDB oracle. No RNG, no Date.now.
 
 At 100 TB: centroids are a broadcast table; assignment is a map stage;
 inverted lists are the partitioning key, so a probe touches nprobe/k of the
@@ -20,134 +21,11 @@ data. Re-clustering is an offline job, not a per-query cost.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .ranking import rank_per_group, top_k_per_group
-from .similarity import _dvec, _ivf_probes, _top_k_by_cos_sim, cosine, dot, norm
-
-
-def _normalize(m: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(m, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return m / n
-
-
-def train_centroids(corpus: DataFrame, *, k: int = 16, vec_col: str = "embedding", id_col: str = "vec_id") -> list[list[float]]:
-    """Deterministic coarse quantizer: seed with the k lowest-id vectors,
-    refine with one distributed Lloyd step (mean of assigned vectors)."""
-    seeds = (
-        corpus.orderBy(id_col).limit(k).select(vec_col).toPandas()[vec_col].tolist()
-    )
-    seed_m = _normalize(np.array([list(map(float, v)) for v in seeds]))
-
-    assigned = assign_clusters(corpus, seed_m.tolist(), vec_col=vec_col, id_col=id_col)
-    # one Lloyd step: per-cluster elementwise mean, computed distributively
-    dim = seed_m.shape[1]
-    sums = assigned.select(
-        "cluster", F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
-    ).groupBy("cluster").agg(
-        F.array(*[F.sum(F.col("v")[i]) for i in range(dim)]).alias("vsum"),
-        F.count("*").alias("n"),
-    )
-    rows = sums.collect()
-    out = seed_m.copy()
-    for r in rows:
-        out[r["cluster"]] = np.array(r["vsum"]) / r["n"]
-    return _normalize(out).tolist()
-
-
-def assign_clusters(
-    corpus: DataFrame, centroids: list[list[float]], *, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Map stage: nearest-centroid id per vector via a vectorized Arrow UDF
-    (numpy matmul over each record batch)."""
-    cm = _normalize(np.array(centroids, dtype=np.float64)).T  # dim × k
-
-    @pandas_udf("int")
-    def nearest(vecs: pd.Series) -> pd.Series:
-        m = _normalize(np.array(vecs.tolist(), dtype=np.float64))  # batch × dim
-        return pd.Series(np.argmax(m @ cm, axis=1).astype("int32"))
-
-    return corpus.withColumn("cluster", nearest(F.col(vec_col)))
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 3,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Probe the ``nprobe`` nearest inverted lists per query, exact cosine
-    re-rank within them. Output: (query_id, cand_id, cos_sim, rnk)."""
-    cm = _normalize(np.array(centroids, dtype=np.float64)).T
-
-    @pandas_udf("array<int>")
-    def probe_clusters(vecs: pd.Series) -> pd.Series:
-        m = _normalize(np.array(vecs.tolist(), dtype=np.float64))
-        order = np.argsort(-(m @ cm), axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(order))
-
-    dvec = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        dvec(F.col(vec_col)).alias("qv"),
-        F.explode(probe_clusters(F.col(vec_col))).alias("cluster"),
-    )
-    c = assign_clusters(corpus, centroids, vec_col=vec_col, id_col=id_col).select(
-        F.col(id_col).alias("cand_id"), dvec(F.col(vec_col)).alias("cv"), "cluster"
-    )
-    scored = (
-        q.join(c, "cluster")  # inverted-list join replaces the cross join
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    return _top_k_by_cos_sim(scored, k)
-
-
-def ivf_topk_pinned(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k_clusters: int = 8,
-    iters: int = 2,
-    nprobe: int = 3,
-    k: int = 3,
-) -> DataFrame:
-    """IVF search whose coarse quantizer is the PINNED Lloyd's k-means from
-    ``operators.clustering`` (DECIMAL-sum means rounded 9dp, 6dp-rounded
-    argmin with cid tie-break), so every decision — centroid trajectory,
-    inverted-list membership, probe ranking, final top-k — is replayable in
-    ANSI SQL and hash-checkable against a DuckDB oracle.
-
-    ``ivf_topk`` above is the Arrow-vectorized variant of the same two-stage
-    design (numpy-matmul assignment in a pandas UDF); this variant trades the
-    vectorized kernel for cross-engine bit-reproducibility. Both share the
-    scale shape: centroids are a broadcast mart, assignment is a map stage,
-    and a query touches ~nprobe/k_clusters of the corpus via the
-    inverted-list equi-join instead of a cross join.
-
-    Output: (query_id, cand_id, cos_sim, rnk).
-    """
-    from .clustering import _assign, centroids_table
-
-    cents = centroids_table(corpus, vec_col, id_col, k=k_clusters, iters=iters)
-    v = corpus.select(F.col(id_col).alias("_vid"), _dvec(F.col(vec_col)).alias("_v"))
-    # inverted lists: same pinned argmin as training, vector kept for re-rank
-    assigned = _assign(v, cents)
-    return ivf_search_pinned(
-        assigned, cents, queries, vec_col=vec_col, id_col=id_col, nprobe=nprobe, k=k
-    )
+from .similarity import _dvec, _ivf_probes, _top_k_by_cos_sim, dot, norm
 
 
 def adaptive_nprobe(k_clusters: int, *, probe_fraction: float = 3 / 8, floor: int = 3) -> int:
@@ -160,8 +38,8 @@ def adaptive_nprobe(k_clusters: int, *, probe_fraction: float = 3 / 8, floor: in
     query recall@3 fell 0.67 → 0.33 from sf0.01's 3/8 probed to sf0.1's
     3/32). Constant fraction restores recall at linear probe cost — the
     bounded-fraction scan an exact re-rank needs anyway. For a sublinear
-    index at 100 TB use :func:`build_search_index` — the DEDICATED
-    k ≈ sqrt(n) quantizer with spilled lists and nprobe ≈ sqrt(k) is the
+    index at 100 TB, the DEDICATED k ≈ sqrt(n) quantizer
+    (:func:`sublinear_k`) with spilled lists and nprobe ≈ sqrt(k) is the
     DEFAULT search-only path since r7; this constant-fraction helper
     remains for searches that piggyback on the dedup-shared quantizer.
     ``probe_fraction`` defaults to the family's pinned 3-of-8. The ceil is
@@ -192,7 +70,7 @@ def sublinear_k(n_vectors: int) -> int:
 def sublinear_nprobe(k_clusters: int) -> int:
     """Probe count for the search-only quantizer: ``max(3, ceil(sqrt(k)))``.
     Probed fraction = √k/k → 0 as the corpus grows; with 2-way spilled lists
-    (see :func:`build_search_index`) expected candidates ≈ 2·n^(3/4) —
+    (see :func:`spilled_assignment`) expected candidates ≈ 2·n^(3/4) —
     sublinear in n, vs the dedup-shared quantizer's constant 3/8 fraction."""
     if k_clusters <= 0:
         raise ValueError("k_clusters must be positive")
@@ -228,39 +106,6 @@ def spilled_assignment(
     return top_k_per_group(scored, "_vid", ["d2", "cid"], spill).select("_vid", "_v", "cid")
 
 
-def build_search_index(
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int | None = None,
-    iters: int = 2,
-    spill: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """THE default build path for a search-only ANN mart: a DEDICATED
-    k ≈ √n quantizer (:func:`sublinear_k`) with 2-way spilled inverted
-    lists, decoupled from the SemDeDup/dedup quantizer whose constant
-    cluster SIZE makes probe cost linear in corpus size. Returns
-    ``(assigned, centroids)`` — both persistable marts; search any number
-    of query batches via :func:`ivf_search_pinned` with
-    ``nprobe=sublinear_nprobe(k)`` and ``dedupe_candidates=True`` (spilled
-    lists can surface a candidate from two probed lists).
-
-    At 100 TB: training is offline (Lloyd's over a sample or the corpus),
-    the centroid table stays broadcast-sized (√n rows), and a query batch
-    touches ≈ spill·nprobe/k of the data — shrinking, not constant, as the
-    corpus grows."""
-    n = corpus.count()  # train-time action, same cost class as training
-    kk = sublinear_k(n) if k is None else k
-    from .clustering import centroids_table
-
-    cents = centroids_table(corpus, vec_col, id_col, k=kk, iters=iters)
-    assigned = spilled_assignment(
-        corpus, cents, vec_col=vec_col, id_col=id_col, spill=spill
-    )
-    return assigned, cents
-
-
 def ivfadc_topk(
     lists: DataFrame,
     centroids: DataFrame,
@@ -281,7 +126,7 @@ def ivfadc_topk(
     PQ Asymmetric Distance over the 2-byte codes mart — the float corpus
     appears in NEITHER stage. Composes the two persisted marts this
     module family already maintains: the (spilled) sublinear search lists
-    (:func:`build_search_index`) and the PQ codes/codebooks
+    (:func:`spilled_assignment` over a :func:`sublinear_k` quantizer) and the PQ codes/codebooks
     (``operators/pq.py``).
 
     ``refine > 0`` adds the IVFADC+R stage (Jégou et al. 2011 §V): the
@@ -380,8 +225,8 @@ def ivf_search_pinned(
     k: int = 3,
     dedupe_candidates: bool = False,
 ) -> DataFrame:
-    """The search half of ``ivf_topk_pinned`` over a PRECOMPUTED
-    ``(_vid, _v, cid, ...)`` assignment and ``(cid, cvec)`` centroid table —
+    """Pinned IVF search over a PRECOMPUTED ``(_vid, _v, cid, ...)``
+    assignment and ``(cid, cvec)`` centroid table —
     the persisted-mart path: train once per corpus version
     (``clustering.centroids_table``), search any number of query batches
     without re-running Lloyd's per query. ``dedupe_candidates=True`` is

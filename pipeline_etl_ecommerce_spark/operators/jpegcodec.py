@@ -249,14 +249,6 @@ def _quantized_blocks_multi(
     return out
 
 
-def _idct_plane_np(zz: np.ndarray, quant: list[int], gw: int, gh: int) -> np.ndarray:
-    """(gh*gw, 64) int64 zigzag-quantized coefs -> (gh*8, gw*8) int64 pixel
-    plane: dequantize (exact int multiply), zigzag scatter, batched IDCT,
-    +128 level shift, round-half-away, clamp — the batched equivalent of
-    the scalar per-block tail of _decode_block/_finish_jpeg."""
-    return _idct_planes_multi([(zz, quant, gw, gh)])[0]
-
-
 def _idct_planes_multi(
     comps: list[tuple[np.ndarray, list[int], int, int]],
 ) -> list[np.ndarray]:
@@ -713,7 +705,7 @@ def _decode_block_coef(
 ) -> tuple[list[int], int]:
     """Huffman-decode one block into 64 zigzag-quantized coefficients (the
     serial entropy layer); dequant + IDCT run batched afterwards
-    (:func:`_idct_plane_np`)."""
+    (:func:`_idct_planes_multi`)."""
     zz = [0] * 64
     size = br.decode_symbol(dc_map)
     if size > 11:

@@ -4,13 +4,14 @@ with typed metadata, processed through one Arrow row-kernel wrapper
 
 Since round 4 the uncompressed-format kernels are REAL: ``decode_image``
 dispatches on the payload magic to the dependency-free PPM/BMP parsers in
-``operators/imagecodec.py``, ``resize_image`` does genuine nearest-neighbor
-resampling of PPM payloads, and ``sample_video_frames`` splits concatenated-P6
-streams (the ``ffmpeg -f image2pipe -vcodec ppm`` framing). Since round 6
-PNG (8-bit RGB/RGBA, non-interlaced, all five scanline filters) decodes for
-real too — stdlib zlib carries DEFLATE — and since round 7 so does baseline
-JPEG (in-file Huffman tables, dequant/zigzag/IDCT, YCbCr, 4:4:4 + 4:2:0
-MCU interleave; ``operators/jpegcodec.py``) — and since round 8 PROGRESSIVE
+``operators/imagecodec.py``, ``resize_image_stats`` does genuine
+nearest-neighbor resampling of PPM payloads, and ``sample_frame_stats``
+splits concatenated-P6 streams (the ``ffmpeg -f image2pipe -vcodec ppm``
+framing). Since round 6 PNG (8-bit RGB/RGBA, non-interlaced, all five
+scanline filters) decodes for real too — stdlib zlib carries DEFLATE — and
+since round 7 so does baseline JPEG (in-file Huffman tables,
+dequant/zigzag/IDCT, YCbCr, 4:4:4 + 4:2:0 MCU interleave;
+``operators/jpegcodec.py``) — and since round 8 PROGRESSIVE
 JPEG (SOF2: spectral selection + successive approximation), GIF (full LZW
 incl. animation), and MJPEG-in-AVI video. Only H.264-class video and the
 arithmetic-coded/lossless/12-bit JPEG modes still raise
@@ -239,17 +240,6 @@ def _nearest_rgb(src: bytes, sw: int, sh: int, width: int, height: int) -> bytes
     return bytes(out)
 
 
-def resize_image(payload: bytes, width: int, height: int) -> dict:
-    """REAL nearest-neighbor resize for PPM/PNG payloads; see
-    :func:`_resize_payload` for the dispatch and index-map contract."""
-    out = _resize_payload(payload, width, height)
-    return {
-        "n_bytes": len(out),
-        "content_hash": hashlib.md5(out).hexdigest(),
-        "resize_status": "ok",
-    }
-
-
 def fake_resize(payload: bytes, width: int, height: int) -> dict:
     """Deterministic stand-in: 'resize' = truncate the payload to the target
     pixel budget. Same batch path, schema, and output size profile as a real
@@ -276,67 +266,6 @@ def resize_media(media: DataFrame, *, width: int, height: int, kernel=fake_resiz
         return r | {"width": width, "height": height}
 
     return row_kernel(media, ["media_id", "payload"], resize, RESIZE_SCHEMA)
-
-
-def sample_video_frames(payload: bytes, n_frames: int) -> list[dict]:
-    """REAL frame sampling for concatenated-P6 streams (the netpbm pipe
-    framing ``ffmpeg -f image2pipe -vcodec ppm`` emits): parse every frame,
-    keep ``n_frames`` evenly spaced ones (floor map ``j*total//n``, the same
-    index convention as the resizer). Compressed containers (MP4/MKV) still
-    require a demuxer library."""
-    from .imagecodec import iter_ppm_stream
-
-    if payload[:2] != b"P6":
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            # REAL demux (r8): MJPEG-in-AVI samples without decoding the
-            # skipped frames; rows carry the compressed frame bytes' hash.
-            from .videocodec import demux_avi
-
-            info = demux_avi(payload)
-            return [
-                {
-                    "frame_index": i,
-                    "n_bytes": info["frame_spans"][i][1],
-                    "frame_hash": hashlib.md5(
-                        payload[
-                            info["frame_spans"][i][0] : info["frame_spans"][i][0]
-                            + info["frame_spans"][i][1]
-                        ]
-                    ).hexdigest(),
-                    "sample_status": "ok",
-                }
-                for i in _even_sample(info["n_frames"], n_frames)
-            ]
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            # REAL animated-GIF sampling (r8): every frame's LZW stream must
-            # be decoded to composite the canvas (GIF frames are deltas), so
-            # the rows hash the composited raster, not a byte span.
-            from .gifcodec import sample_gif_frames
-
-            return [
-                {
-                    "frame_index": fr["frame_index"],
-                    "n_bytes": len(fr["raster"]),
-                    "frame_hash": hashlib.md5(fr["raster"]).hexdigest(),
-                    "sample_status": "ok",
-                }
-                for fr in sample_gif_frames(payload, n_frames)
-            ]
-        raise NotImplementedError(
-            "frame sampling of H.264-class compressed containers requires a "
-            "video library; concatenated-P6 streams, MJPEG AVI, and animated "
-            "GIF parse here"
-        )
-    frames = [frame for _off, frame in iter_ppm_stream(payload)]
-    return [
-        {
-            "frame_index": i,
-            "n_bytes": len(frames[i]),
-            "frame_hash": hashlib.md5(frames[i]).hexdigest(),
-            "sample_status": "ok",
-        }
-        for i in _even_sample(len(frames), n_frames)
-    ]
 
 
 def _even_sample(total: int, n_frames: int) -> Iterable[int]:

@@ -71,19 +71,6 @@ def stratified_sample(
     return df.filter(h < _hex_threshold(fraction))
 
 
-def downsample_by_weight(
-    df: DataFrame, strata_col: str, id_col: str, weights: dict[str, float], *, default: float = 1.0
-) -> DataFrame:
-    """Per-stratum keep-rates (e.g. downweight a dominant language):
-    ``weights`` maps stratum value -> fraction kept; unlisted strata keep
-    ``default``. Same identity-hash determinism as ``stratified_sample``."""
-    h = _hash8(F.col(strata_col).cast("string"), F.col(id_col).cast("string"))
-    thr: Column = F.lit(_hex_threshold(default))
-    for value, frac in weights.items():
-        thr = F.when(F.col(strata_col) == value, F.lit(_hex_threshold(frac))).otherwise(thr)
-    return df.filter(h < thr)
-
-
 def temperature_mixture_sample(
     df: DataFrame, strata_col: str, id_col: str, *, alpha: float = 0.5, budget: int = 1000
 ) -> DataFrame:

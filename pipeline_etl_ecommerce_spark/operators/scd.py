@@ -87,13 +87,3 @@ def scd2_from_log(
     )
 
 
-def as_of_value(history: DataFrame, key_cols: Sequence[str], ts) -> DataFrame:
-    """Point-in-time lookup against an SCD2 history: the row whose
-    ``[valid_from, valid_to)`` interval contains ``ts`` (a literal in the
-    same units as the history's timestamps). A plain filter — no shuffle —
-    because the SCD2 intervals are non-overlapping per key by construction."""
-    t = F.lit(ts)
-    return history.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    ).select(*key_cols, "attr_value", "valid_from", "valid_to")

@@ -72,19 +72,3 @@ def score_documents(
     )
 
 
-def model_filter(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    model: Callable[[pd.Series], pd.Series] = md5_stub_model,
-    threshold: float = 0.33,
-) -> DataFrame:
-    """Keep documents the model scores at or above ``threshold`` — the
-    classifier gate composed as score → semi-join back to the full rows
-    (the text column rejoins AFTER the filter, so the gate's shuffle moves
-    ids and scores, not payloads)."""
-    kept = score_documents(df, text_col, id_col, model=model).filter(
-        F.col("model_score") >= threshold
-    )
-    return df.join(kept.select(F.col("doc_id").alias(id_col), "model_score"), id_col)

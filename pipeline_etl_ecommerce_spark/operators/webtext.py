@@ -9,7 +9,7 @@ Scale design: both operators are pure native column expressions — map-only,
 zero Python, zero shuffle, whole-stage codegen — so at 100 TB they cost one
 linear scan co-partitioned with the read. The regex pipeline is shared,
 step for step and in the same order, with the DuckDB oracle generators
-(:func:`html_extract_sql` / :func:`canonical_url_sql`), so the catalog's
+(:func:`html_extract_sql` / :func:`canonical_url_ctes`), so the catalog's
 cross-engine hash equality proves the *chain*, not just summary stats.
 
 Cross-engine regex contract (Java regex on Spark, RE2 on DuckDB — the
@@ -166,31 +166,6 @@ def canonical_url(col: Column) -> Column:
         F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
     )
     return F.when(scheme == "", F.lit(None).cast("string")).otherwise(out)
-
-
-def canonical_url_sql(expr: str) -> str:
-    """DuckDB scalar-subquery expression mirroring :func:`canonical_url`
-    step for step (same regexes, same ordering, same NULL contract)."""
-    return f"""(
- WITH _cu_x AS (SELECT regexp_replace({expr}, '(?s)#.*', '', 'g') AS u),
- _cu_p AS (SELECT u,
-   lower(regexp_extract(u, '\\A([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-   lower(regexp_extract(u, '\\A[^:/?#]+://([^/?#]*)', 1)) AS hostport,
-   regexp_extract(u, '(?s)\\A[^:/?#]+://[^/?#]*(.*)', 1) AS rest FROM _cu_x),
- _cu_q AS (SELECT scheme,
-   CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80\\z', '')
-        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443\\z', '')
-        ELSE hostport END AS host,
-   CASE WHEN regexp_extract(rest, '\\A([^?]*)', 1) = '' THEN '/'
-        ELSE regexp_extract(rest, '\\A([^?]*)', 1) END AS pth,
-   coalesce(array_to_string(list_sort(list_filter(
-     string_split(regexp_extract(rest, '(?s)\\A[^?]*\\?(.*)', 1), '&'),
-     x -> x <> '' AND NOT regexp_matches(lower(x),
-       '{_TRACKING_PARAM_RE}'))), '&'), '') AS q
-  FROM _cu_p)
- SELECT CASE WHEN scheme = '' THEN NULL
-   ELSE scheme || '://' || host || pth ||
-        (CASE WHEN q = '' THEN '' ELSE '?' || q END) END FROM _cu_q)"""
 
 
 def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:

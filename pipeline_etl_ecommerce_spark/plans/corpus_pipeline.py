@@ -58,6 +58,7 @@ from ..sources.sinks import (
     replace_groups_to_path,
     transactional_upsert_to_path,
     upsert_to_path,
+    vacuum_versions,
 )
 
 # Curation gates — match the catalog's curated_documents thresholds.
@@ -126,9 +127,11 @@ def ingest_batch(
     stats: dict[str, int] = {}
     batch = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
 
-    # 1. corpus: crash-safe versioned upsert keyed on doc_id
+    # 1. corpus: crash-safe versioned upsert keyed on doc_id; keep the new
+    # snapshot and the previous one (for a reader still on it), drop older
     corpus_path = _mart(marts, "corpus")
     transactional_upsert_to_path(batch, corpus_path, ["doc_id"])
+    vacuum_versions(corpus_path)
     corpus = read_versioned(spark, corpus_path)
     stats["corpus"] = corpus.count()
 
@@ -312,55 +315,6 @@ def record_run(spark: SparkSession, marts: str, stats: dict[str, int]) -> int:
         spark.createDataFrame(rows, "run_id int, metric string, value long"), hist_path
     )
     return run_id
-
-
-def detect_drift(
-    spark: SparkSession, marts: str, *, z: float = 3.0, min_history: int = 3
-) -> DataFrame:
-    """Flag metrics whose LATEST per-run growth deviates more than ``z``
-    sample stddevs from the growth history (ingests are cumulative, so the
-    stable signal is the run-over-run DELTA, not the level). Returns one
-    row per metric with the latest delta, history mean/stddev and the
-    flag; metrics with fewer than ``min_history`` prior deltas never flag.
-    One window pass over the tiny history mart — the same check a 100 TB
-    deployment runs over its ingest ledger to catch a silently-empty or
-    10x-duplicated delivery before training reads the mart."""
-    from pyspark.sql import Window
-
-    hist = read_mart(spark, _mart(marts, "_history"))
-    w = Window.partitionBy("metric").orderBy("run_id")
-    deltas = (
-        hist.withColumn("delta", F.col("value") - F.lag("value").over(w))
-        .filter(F.col("delta").isNotNull())
-    )
-    latest_run = deltas.agg(F.max("run_id")).collect()[0][0]
-    prior = deltas.filter(F.col("run_id") < latest_run)
-    stats = prior.groupBy("metric").agg(
-        F.count("*").alias("n_history"),
-        F.avg("delta").alias("mean_delta"),
-        F.stddev_samp("delta").alias("sd_delta"),
-    )
-    latest = deltas.filter(F.col("run_id") == latest_run).select(
-        "metric", F.col("delta").alias("latest_delta")
-    )
-    return latest.join(stats, "metric", "left").select(
-        "metric",
-        "latest_delta",
-        F.round("mean_delta", 3).alias("mean_delta"),
-        F.round("sd_delta", 3).alias("sd_delta"),
-        (
-            (F.col("n_history") >= min_history)
-            & F.col("sd_delta").isNotNull()
-            & (
-                # constant history: ANY deviation is the clearest anomaly
-                ((F.col("sd_delta") == 0) & (F.col("latest_delta") != F.col("mean_delta")))
-                | (
-                    (F.col("sd_delta") > 0)
-                    & (F.abs(F.col("latest_delta") - F.col("mean_delta")) > z * F.col("sd_delta"))
-                )
-            )
-        ).alias("flagged"),
-    )
 
 
 def web_ingest_batch(

@@ -14,7 +14,7 @@ in the catalog, not the parquet files).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -34,7 +34,3 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str, on: list[str]) -> DataFrame:
-    """Join two same-bucketed tables; with matching bucket specs Catalyst
-    plans a join with zero Exchange operators."""
-    return spark.table(table_a).join(spark.table(table_b), on)

@@ -29,22 +29,14 @@ makes the reference's late-data reprocessing (§2.10 T3) safe on a real
 database, exactly mirroring the parquet-side ``upsert_to_path``.
 
 Duplicate keys INSIDE the delta must be collapsed before staging (MySQL
-would apply them in arbitrary order): call ``dedupe_last_wins`` first —
-``stage_and_merge`` does this for you.
+would apply them in arbitrary order): call ``sinks.dedupe_last_wins`` first.
 
-No MySQL/Postgres server exists in this sandbox, so the statement builders
-are pure functions (contract-tested against DuckDB's ``ON CONFLICT``, which
-implements the same semantics) and the execution wrapper gates the JDBC
-round trip behind the caller-supplied runner.
+The statement functions are pure, contract-tested against
+DuckDB's ``ON CONFLICT`` (which implements the same semantics); the caller
+stages the delta and runs the statements on its own connection.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame
-
-from .sinks import dedupe_last_wins
 
 _DIALECTS = ("mysql", "postgres", "duckdb")
 
@@ -153,52 +145,3 @@ def truncate_statement(dialect: str, staging: str) -> str:
     return f"TRUNCATE TABLE {staging}" if dialect != "duckdb" else f"DELETE FROM {staging}"
 
 
-def stage_and_merge(
-    df: DataFrame,
-    *,
-    url: str,
-    target: str,
-    keys: list[str],
-    dialect: str = "mysql",
-    staging: str | None = None,
-    order_by: list | None = None,
-    properties: dict[str, str] | None = None,
-    batchsize: int = 5_000,
-    num_partitions: int | None = None,
-    run_sql: Callable[[str], None] | None = None,
-    null_safe: bool = False,
-) -> list[str]:
-    """Full upsert flow: collapse in-delta duplicates → stage via
-    ``df.write.jdbc`` → execute the merge statement(s) → truncate staging.
-
-    ``run_sql`` executes a statement against the database from the driver
-    (e.g. a ``mysql.connector``/``psycopg`` cursor, or in tests a DuckDB
-    connection). It is required to actually merge; without it the function
-    stages only and returns the statements for the caller to run — the
-    escape hatch for operators whose DB credentials live outside Spark.
-
-    ``null_safe=True`` switches to the DELETE-then-INSERT recipe
-    (``merge_statements_null_safe``) — REQUIRED whenever a key column is
-    nullable, because ``ON CONFLICT``/``ON DUPLICATE KEY`` treat NULL keys
-    as never-matching and would duplicate those rows on every re-run. The
-    caller's ``run_sql`` should wrap the statements in one transaction.
-
-    Returns the list of merge statements that were (or must be) executed.
-    """
-    staging = staging or f"{target}__staging"
-    delta = dedupe_last_wins(df, keys, order_by)
-    writer = delta.write.mode("overwrite").option("truncate", "true").option(
-        "batchsize", str(batchsize)
-    )
-    if num_partitions is not None:
-        writer = writer.option("numPartitions", str(num_partitions))
-    writer.jdbc(url, staging, properties=properties or {})
-    if null_safe:
-        stmts = merge_statements_null_safe(dialect, target, staging, keys, delta.columns)
-    else:
-        stmts = [merge_statement(dialect, target, staging, keys, delta.columns)]
-    if run_sql is not None:
-        for stmt in stmts:
-            run_sql(stmt)
-        run_sql(truncate_statement(dialect, staging))
-    return stmts

@@ -54,18 +54,3 @@ def read_json_payloads(
     return reader.json(path)
 
 
-def register_catalog(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> list[str]:
-    """Register every testdata table as a temp view so callers can use plain
-    ``spark.sql`` over the catalog (the engine is DataFrame-first, but the
-    SQL surface is free — same Catalyst plans). Returns the view names."""
-    names = []
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            if name == "events":
-                # nanosecond timestamps need the legacy long read (see
-                # testdata_queries._events)
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.read.parquet(path).createOrReplaceTempView(name)
-            names.append(name)
-    return names

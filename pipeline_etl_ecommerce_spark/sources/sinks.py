@@ -595,33 +595,6 @@ def vacuum_versions(path: str, *, keep: int = 2) -> list[str]:
     return drop
 
 
-def write_sorted_mart(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    *,
-    target_partitions: int | None = None,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Write with a range-clustered layout: ``repartitionByRange`` on
-    ``sort_cols`` then sort within partitions, so every output file covers a
-    DISJOINT range of the sort key and its parquet min/max footer stats
-    actually prune. This is the data-skipping layout (Z-order's 1-D case):
-    at 100 TB a time- or key-range query then touches only the files whose
-    stats overlap the predicate instead of scanning the mart.
-
-    Use for the read-mostly marts whose dominant predicate is a range on
-    ``sort_cols`` (event time, date, id range). Combine with
-    ``partition_by`` for coarse-grained directory pruning on a second,
-    low-cardinality key."""
-    n = target_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def compact_path(spark, path: str, *, target_partitions: int | None = None) -> int:
     """Compact a parquet mart's small files (the debris a checkpointed
     streaming upsert leaves after many micro-batches): rewrite the path with

@@ -15,13 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..plans.traffic import process_traffic_tasks
 from ..sources.sinks import read_mart, upsert_to_path
 from .runner import read_json_stream, run_batches, run_parquet_append
 
-TASK_SCHEMA = StructType.fromDDL("id bigint, id_anuncio string, data_metrica date")
+TASK_SCHEMA = "id bigint, id_anuncio string, data_metrica date"
 
 
 def traffic_stream(
@@ -44,8 +43,8 @@ def traffic_stream(
     return run_batches(tasks, checkpoint_dir, _process)
 
 
-STOCK_TASK_SCHEMA = StructType.fromDDL("id bigint, sku string, id_produto_tiny bigint, data_snapshot date")
-CATALOG_TASK_SCHEMA = StructType.fromDDL("id bigint, id_produto_tiny bigint")
+STOCK_TASK_SCHEMA = "id bigint, sku string, id_produto_tiny bigint, data_snapshot date"
+CATALOG_TASK_SCHEMA = "id bigint, id_produto_tiny bigint"
 
 
 def inventory_stream(
@@ -72,7 +71,7 @@ def inventory_stream(
     return run_batches(tasks, checkpoint_dir, _process)
 
 
-DOC_SCHEMA = StructType.fromDDL("doc_id bigint, text string")
+DOC_SCHEMA = "doc_id bigint, text string"
 
 
 def document_ingest_stream(
@@ -176,9 +175,7 @@ def training_sequence_stream(
     return run_batches(docs, checkpoint_dir, _process)
 
 
-EVENT_LOG_SCHEMA = StructType.fromDDL(
-    "event_id bigint, user_id bigint, event_type string, ts bigint"
-)
+EVENT_LOG_SCHEMA = "event_id bigint, user_id bigint, event_type string, ts bigint"
 
 
 def scd2_maintenance_stream(
@@ -226,8 +223,8 @@ def scd2_maintenance_stream(
     return run_batches(events, checkpoint_dir, _process)
 
 
-CLICK_SCHEMA = StructType.fromDDL("click_id bigint, user_id bigint, ts bigint")
-PURCHASE_SCHEMA = StructType.fromDDL("purchase_id bigint, user_id bigint, ts bigint")
+CLICK_SCHEMA = "click_id bigint, user_id bigint, ts bigint"
+PURCHASE_SCHEMA = "purchase_id bigint, user_id bigint, ts bigint"
 
 
 def click_attribution_join_stream(

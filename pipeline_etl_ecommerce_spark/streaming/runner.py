@@ -62,7 +62,7 @@ ROCKSDB_STATE_CONFS = {
 
 
 def read_json_stream(
-    spark: SparkSession, path: str, schema: StructType, *, max_files_per_trigger: int | None = None
+    spark: SparkSession, path: str, schema: StructType | str, *, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over JSON-lines payload drops (the connector lands
     API pages as files; each file is the reference's "queue batch").

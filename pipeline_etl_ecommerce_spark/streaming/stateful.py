@@ -3,9 +3,9 @@
 The reference's queue workers keep per-key progress in MySQL status columns
 (SURVEY.md §2.10 T5). The Spark-native generalization is arbitrary per-key
 state in the state store; this module implements a running per-key
-accumulator — event count + value total carried across micro-batches — the
-building block for "how much have we processed for listing X" bookkeeping
-without any external table.
+accumulator — event count + integer cents total carried across
+micro-batches — the building block for "how much have we processed for
+listing X" bookkeeping without any external table.
 """
 
 from __future__ import annotations
@@ -15,38 +15,6 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n bigint, total double"
-
-
-def _accumulate(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (n, total) = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]})
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming per-user running totals: emits the updated (count, total)
-    for every user seen in each micro-batch; state persists in the
-    checkpointed state store across batches and restarts."""
-    # append mode: each emission is a standalone row (the running snapshot at
-    # that batch); pairs with append-only sinks like parquet. Semantically the
-    # downstream consumer keeps the row with the highest n_events per key, or
-    # routes through a keyed upsert sink.
-    return events.groupBy("user_id").applyInPandasWithState(
-        _accumulate,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 EXACT_OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
 EXACT_STATE_SCHEMA = "n bigint, cents bigint"
@@ -78,12 +46,14 @@ def _accumulate_cents(
 
 
 def running_user_totals_exact(events: DataFrame) -> DataFrame:
-    """Oracle-exact variant of ``running_user_totals``: the value column
+    """Streaming per-user running totals: emits the updated (count, cents)
+    for every user seen in each micro-batch; state persists in the
+    checkpointed state store across batches and restarts. The value column
     arrives pre-quantized to integer ``cents``, so the per-key state is
     pure integer arithmetic — associative, order-independent, and
     bit-identical to any batch engine's sum regardless of micro-batch
-    composition. The float variant's pandas double sum is deterministic
-    per run but not SQL-replayable; this one is."""
+    composition (a pandas double sum would be deterministic per run but
+    not SQL-replayable)."""
     return events.groupBy("user_id").applyInPandasWithState(
         _accumulate_cents,
         outputStructType=EXACT_OUTPUT_SCHEMA,

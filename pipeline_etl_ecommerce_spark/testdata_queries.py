@@ -8193,7 +8193,7 @@ GROUP BY e.query_id
 # existing lists with the same pinned argmin: broadcast centroids + one
 # window over the delta only, never a retrain or corpus rescan. A vector
 # lands in identical lists whether it arrived in the training batch or a
-# later delta (assign_to_centroids' contract, extended to spilled lists).
+# later delta (training's pinned argmin, extended to spilled lists).
 _IVF_DELTA_WHERE = "WHERE vec_id % 10 < 8"
 _IVF_DELTA_K_SQL = (
     f"SELECT GREATEST(8, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) FROM embeddings {_IVF_DELTA_WHERE}"

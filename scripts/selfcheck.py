@@ -151,6 +151,11 @@ def main() -> int:
         argv = argv[:i] + argv[i + 2 :]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
 
     # --- oracle rounding lint (r6 verdict item 3): refuse to start on an
     # unadjudicated ROUND(integer-quotient) site — the binary-tie class the
@@ -189,7 +194,6 @@ def main() -> int:
     print(f"[smoke] entry() -> {n} rows, {len(smoke.columns)} cols: {smoke.columns}")
     assert n > 0
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     record: dict[str, dict] = {}
@@ -227,7 +231,7 @@ def main() -> int:
         else:
             print(f"[ok] {name}: {len(sdf)} rows, {len(sdf.columns)} cols match exactly")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries match")
+    print(f"\n{len(record) - len(failures)}/{len(record)} queries match")
     if json_out:
         # the standing full-catalog artifact (r7 verdict item 1): per-query
         # match booleans at this sf_dir — CORRECTNESS_r*.json's 50-row

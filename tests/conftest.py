@@ -42,6 +42,17 @@ def count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def search_index(corpus):
+    """``(lists, centroids)`` of the sublinear IVF search index over a
+    ``(vec_id, embedding)`` corpus, made by the catalog's two calls: a
+    k ≈ √n pinned quantizer and 2-way spilled inverted lists."""
+    from pipeline_etl_ecommerce_spark.operators.clustering import centroids_table
+    from pipeline_etl_ecommerce_spark.operators.ivf import spilled_assignment, sublinear_k
+
+    cents = centroids_table(corpus, "embedding", "vec_id", k=sublinear_k(corpus.count()))
+    return spilled_assignment(corpus, cents), cents
+
+
 @pytest.fixture(scope="session")
 def mapa(spark):
     rows = [

@@ -1,6 +1,7 @@
 """The bench tools' gates, on hand-written bench records: ``bench.py``'s
-baseline gate, ``pin_bench_baseline.py``'s refusals and ``bench_compare.py``'s
-exit codes. No Spark session is started."""
+baseline gate, ``pin_bench_baseline.py``'s refusals, ``bench_compare.py``'s
+and ``scale_stress.py``'s exit codes, and ``selfcheck.py``'s row count. No
+Spark session is started."""
 
 from __future__ import annotations
 
@@ -17,6 +18,8 @@ sys.path.insert(0, os.path.join(ROOT, "scripts"))
 import bench  # noqa: E402
 import bench_compare  # noqa: E402
 import pin_bench_baseline  # noqa: E402
+import scale_stress  # noqa: E402
+import selfcheck  # noqa: E402
 
 LAZY, STREAMING = "pricing_summary", "streaming_stateful_totals"
 
@@ -120,3 +123,45 @@ def test_compare_flags_one_doubled_row(tmp_path, monkeypatch):
 def test_compare_refuses_another_core_count(tmp_path, monkeypatch, capsys):
     assert _compare(tmp_path, monkeypatch, _run(cpus=32), _run()) == 2
     assert "refusing to compare" in capsys.readouterr().out
+
+
+def test_stress_exit_fails_a_section_whose_measurement_raised():
+    passed, failed = {"gate": {"passed": True}}, {"gate": {"passed": False}}
+    assert scale_stress.gates_passed(passed, passed, passed)
+    assert not scale_stress.gates_passed(passed, failed, passed)
+    # the section raised before it set its gate: the run is not clean
+    assert not scale_stress.gates_passed(passed, {"error": "boom"}, passed)
+
+
+class _Smoke:
+    columns = ["x"]
+
+    def count(self):
+        return 1
+
+
+def _no_session(spark, sf_dir):
+    raise RuntimeError("no session in this test")
+
+
+def _selfcheck(monkeypatch, tmp_path, *names):
+    """``selfcheck.main()`` over a two-row catalog whose rows fail at once,
+    with no Spark session."""
+    monkeypatch.setattr(selfcheck, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(selfcheck.entrymod, "entry", lambda spark: _Smoke())
+    monkeypatch.setattr(selfcheck.entrymod, "queries", lambda: {"a": _no_session, "b": _no_session})
+    monkeypatch.setattr(sys, "argv", ["selfcheck.py", str(tmp_path), *names])
+    return selfcheck.main()
+
+
+def test_selfcheck_counts_only_the_rows_it_ran(tmp_path, monkeypatch, capsys):
+    assert _selfcheck(monkeypatch, tmp_path, "a") == 1
+    out = capsys.readouterr().out
+    assert "[FAIL] a:" in out and "[FAIL] b:" not in out
+    assert "0/1 queries match" in out
+
+
+def test_selfcheck_refuses_an_unknown_row_name(tmp_path, monkeypatch, capsys):
+    assert _selfcheck(monkeypatch, tmp_path, "a", "no_such_row") == 2
+    out = capsys.readouterr().out
+    assert "unknown queries: ['no_such_row']" in out and "[smoke]" not in out

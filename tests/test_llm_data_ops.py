@@ -198,10 +198,8 @@ def test_multimodal_resize_and_frame_sample(spark, docs):
 
     from pipeline_etl_ecommerce_spark.operators.multimodal import (
         fake_frame_sample,
-        resize_image,
         resize_media,
         sample_frames,
-        sample_video_frames,
     )
 
     media = documents_as_media(docs)
@@ -223,12 +221,11 @@ def test_multimodal_resize_and_frame_sample(spark, docs):
     got = sorted(by_doc[1], key=lambda r: r["frame_index"])
     assert [r["frame_hash"] for r in got] == [f["frame_hash"] for f in expect]
 
-    # real kernels are stubbed; the batch path degrades per-row, not per-job
-    with pytest.raises(NotImplementedError):
-        resize_image(b"\x89PNG", 64, 48)
-    with pytest.raises(NotImplementedError):
-        sample_video_frames(b"\x00", 4)
-    degraded = sample_frames(media, n_frames=4, kernel=sample_video_frames).collect()
+    # a kernel without a decoder degrades per-row, not per-job
+    def no_decoder(payload, n_frames):
+        raise NotImplementedError("no decoder for this container")
+
+    degraded = sample_frames(media, n_frames=4, kernel=no_decoder).collect()
     assert all(r["sample_status"] == "decoder_unavailable" for r in degraded)
     assert len(degraded) == docs.count()  # one placeholder row per media
 
@@ -295,7 +292,6 @@ def test_model_scoring_batch_path_and_pluggable_kernel(spark):
 
     from pipeline_etl_ecommerce_spark.operators.scoring import (
         md5_stub_model,
-        model_filter,
         score_documents,
     )
 
@@ -313,13 +309,14 @@ def test_model_scoring_batch_path_and_pluggable_kernel(spark):
              score_documents(df, "text", "doc_id").collect()}
     assert {k: v[0] for k, v in out.items()} == again
 
-    # pluggable kernel: length-based "model" — filter keeps only long docs
+    # pluggable kernel: a length-based "model" replaces the stub
     def length_model(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: min(len(t or "") / 10.0, 1.0))
 
-    kept = model_filter(df, "text", "doc_id", model=length_model, threshold=0.5)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1]
-    assert "text" in kept.columns and "model_score" in kept.columns
+    scored = score_documents(df, "text", "doc_id", model=length_model)
+    got = {r["doc_id"]: (r["model_score"], r["score_bucket"]) for r in scored.collect()}
+    assert got == {1: (1.0, "high"), 2: (0.3, "low"), 3: (0.0, "low")}
+    assert scored.columns == ["doc_id", "model_score", "score_bucket"]
 
 
 def test_keep_best_per_cluster_quality_and_ties(spark):

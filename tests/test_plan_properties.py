@@ -71,10 +71,12 @@ def test_daily_scan_prunes_columns(spark):
 
 
 def test_sql_surface_over_registered_catalog(spark):
-    from pipeline_etl_ecommerce_spark.sources.readers import register_catalog
+    from pipeline_etl_ecommerce_spark.sources.readers import load_tables
 
-    views = register_catalog(spark, SF)
-    assert "lineitem" in views and "documents" in views
+    tables = load_tables(spark, SF, ("lineitem", "part"))
+    for name, df in tables.items():
+        df.createOrReplaceTempView(name)
+    assert set(tables) == {"lineitem", "part"}
     got = spark.sql(
         """
         SELECT l_returnflag, COUNT(*) AS n,

@@ -127,35 +127,24 @@ def test_corpus_pipeline_stream_converges_marts(spark, tmp_path):
     assert seq_ids == curated
 
 
-def test_run_history_and_drift_detection(spark, tmp_path):
-    from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import (
-        detect_drift,
-        ingest_batch,
-        record_run,
-    )
+def test_repeated_ingests_keep_two_corpus_snapshots(spark, tmp_path):
+    """Every ingest commits a full corpus snapshot and then vacuums all but
+    the newest two (the previous one stays for a reader still on it), so
+    three ingests leave two snapshot dirs and a corpus holding every doc.
+    The run history numbers the runs 0, 1, 2."""
+    from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import record_run
+    from pipeline_etl_ecommerce_spark.sources.sinks import read_versioned
 
     marts = str(tmp_path / "marts")
-    # four steady ingests of 2 fresh docs each, then a 40-doc anomaly
-    next_id = 0
-
-    def batch(n):
-        nonlocal next_id
-        rows = [(next_id + i, _good_text(f"tag{next_id + i}")) for i in range(n)]
-        next_id += n
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    for _ in range(4):
-        stats = ingest_batch(spark, batch(2), marts, chunk_size=8, pack_budget=16, n_shards=2)
-        record_run(spark, marts, stats)
-    stats = ingest_batch(spark, batch(40), marts, chunk_size=8, pack_budget=16, n_shards=2)
-    rid = record_run(spark, marts, stats)
-    assert rid == 4
-
-    drift = {r.metric: r for r in detect_drift(spark, marts).collect()}
-    # the corpus delta jumped 2 -> 40: flagged; steady zero-variance
-    # metrics (dq_violations) never flag
-    assert drift["corpus"].flagged and drift["corpus"].latest_delta == 40
-    assert not drift["dq_violations"].flagged
+    run_ids = []
+    for b in range(3):
+        ids = (2 * b, 2 * b + 1)
+        docs = spark.createDataFrame([(i, _good_text(f"doc{i}")) for i in ids], "doc_id long, text string")
+        stats = ingest_batch(spark, docs, marts, chunk_size=8, pack_budget=16, n_shards=2)
+        run_ids.append(record_run(spark, marts, stats))
+    assert run_ids == [0, 1, 2]
+    assert sorted(os.listdir(f"{marts}/corpus/_v")) == ["v00000002", "v00000003"]
+    assert sorted(r.doc_id for r in read_versioned(spark, f"{marts}/corpus").collect()) == list(range(6))
 
 
 def test_semantic_decontamination_stage_drops_eval_proximate_docs(spark, tmp_path, batch1):

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from pipeline_etl_ecommerce_spark.operators.sampling import (
     _hex_threshold,
     deterministic_split,
-    downsample_by_weight,
     stratified_sample,
 )
 
@@ -98,20 +97,6 @@ def test_assemble_packs_order_is_deterministic(spark):
     assert {r["pack_id"]: r["packed_text"] for r in scrambled.collect()} == {
         k: v["packed_text"] for k, v in out.items()
     }
-
-
-def test_downsample_by_weight(corpus):
-    out = downsample_by_weight(corpus, "lang", "doc_id", {"pt": 0.1}, default=1.0)
-    kept = {
-        r["lang"]: r["n"]
-        for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    totals = {
-        r["lang"]: r["n"]
-        for r in corpus.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    assert kept["en"] == totals["en"]  # default 1.0 keeps everything
-    assert kept["pt"] / totals["pt"] == pytest.approx(0.1, abs=0.04)
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):

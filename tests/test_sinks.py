@@ -509,47 +509,6 @@ def test_time_travel_read_pinned_version(spark, tmp_path):
         read_versioned(spark, path, version="v00000001")
 
 
-def test_write_sorted_mart_files_cover_disjoint_ranges(spark, tmp_path):
-    from pipeline_etl_ecommerce_spark.sources.sinks import write_sorted_mart
-
-    path = str(tmp_path / "sorted_mart")
-    df = spark.range(0, 10000).withColumnRenamed("id", "k").withColumn(
-        "v", (F.col("k") * 7) % 100
-    )
-    # shuffle the input so the layout is the writer's doing, not luck
-    write_sorted_mart(df.orderBy(F.rand(seed=1)), path, ["k"], target_partitions=4)
-
-    import glob
-
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        ci = next(
-            md.row_group(0).column(i)
-            for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "k"
-        )
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            c = next(
-                md.row_group(rg).column(i)
-                for i in range(md.num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "k"
-            )
-            mins.append(c.statistics.min)
-            maxs.append(c.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) == 4
-    ranges.sort()
-    # each file covers a disjoint range of the sort key -> min/max stats prune
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-    # content survives the re-layout
-    assert spark.read.parquet(path).count() == 10000
-
-
 def test_snapshot_diff_change_feed(spark, tmp_path):
     """The change feed between two committed snapshots: operators.diff over
     two read_versioned frames. A NULL that moves between two payload columns

@@ -11,7 +11,7 @@ from pipeline_etl_ecommerce_spark.operators.skew import (
     salted_groupby_agg,
     salted_join,
 )
-from pipeline_etl_ecommerce_spark.sources.bucketing import bucketed_join_ready, write_bucketed
+from pipeline_etl_ecommerce_spark.sources.bucketing import write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -103,7 +103,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join_ready(spark, "bt_a", "bt_b", ["k"])
+        joined = spark.table("bt_a").join(spark.table("bt_b"), ["k"])
         assert joined.count() == 1000
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # co-located bucketed join: the shuffle was paid at write time

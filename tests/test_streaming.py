@@ -23,6 +23,20 @@ from pipeline_etl_ecommerce_spark.streaming.runner import (
 SCHEMA = "event_id long, ts timestamp, user_id long, value double"
 
 
+def test_pipelines_import_without_a_session():
+    """The worker streams' task schemas are DDL strings, parsed when a stream
+    reads them, so importing the module needs no Spark session."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", "import pipeline_etl_ecommerce_spark.streaming.pipelines"],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+
+
 def _write_batch(path, name, rows):
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, name), "w") as f:

@@ -9,10 +9,7 @@ import pytest
 
 from pipeline_etl_ecommerce_spark.operators.imagecodec import DecodeError
 from pipeline_etl_ecommerce_spark.operators.jpegcodec import encode_jpeg
-from pipeline_etl_ecommerce_spark.operators.multimodal import (
-    sample_video_frames,
-    synth_video_raster,
-)
+from pipeline_etl_ecommerce_spark.operators.multimodal import synth_video_raster
 from pipeline_etl_ecommerce_spark.operators.videocodec import (
     decode_avi_frame,
     demux_avi,
@@ -130,13 +127,3 @@ class TestGuards:
                 pass
 
 
-class TestGenericDispatch:
-    def test_sample_video_frames_routes_avi(self):
-        avi, _, _, n = _make_avi(mid=2, n=4)
-        rows = sample_video_frames(avi, 2)
-        assert [r["frame_index"] for r in rows] == [0, 2]
-        assert all(r["sample_status"] == "ok" and r["n_bytes"] > 0 for r in rows)
-
-    def test_h264_class_still_raises(self):
-        with pytest.raises(NotImplementedError):
-            sample_video_frames(b"\x00\x00\x00\x18ftypmp42", 2)
