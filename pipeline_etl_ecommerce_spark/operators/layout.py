@@ -118,27 +118,24 @@ def recluster_zordered(
     """Table maintenance: rewrite an EXISTING parquet path into
     ``target_files`` Z-clustered files IN PLACE — the scheduled job that
     repairs the layout after appends/streaming upserts fragment it (the
-    Delta ``OPTIMIZE ZORDER BY`` maintenance shape, composing the
-    compaction family's temp-write-then-swap: the new layout fully
-    materializes before the old one drops, so no reader ever sees a
-    PARTIAL directory). Honest reader contract, same as ``compact_path``:
-    the swap itself is rmtree-then-move, so a reader that lists the path
-    inside that window errors on a missing directory — schedule under
-    ``sinks.writer_lock``, or recluster into a versioned mart
-    (``sinks.transactional_upsert_to_path``'s snapshot+pointer layout)
-    when readers need a truly atomic flip. Returns the post-rewrite file
-    count."""
+    Delta ``OPTIMIZE ZORDER BY`` maintenance shape). Like ``compact_path``
+    it swaps the new layout in through ``sinks._write_and_swap``: the new
+    files fully materialize in a staging dir before one journaled commit
+    moves them in and drops the old ones, so a crash leaves the old or the
+    new layout. A reader that lists the path during the commit is not
+    isolated and may see both; schedule under ``sinks.writer_lock``.
+    Returns the post-rewrite file count."""
     import glob
     import os
 
-    from ..sources.sinks import _write_and_swap
+    from ..sources.sinks import _write_and_swap, read_mart
 
-    df = spark.read.parquet(path)
+    df = read_mart(spark, path)
     keyed = df.withColumn("__zkey", zorder_key(cols, bits=bits))
     ranged = (
         keyed.repartitionByRange(target_files, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    _write_and_swap(ranged, path, prefix="zorder_")
+    _write_and_swap(ranged, path)
     return len(glob.glob(os.path.join(path, "*.parquet")))

@@ -54,11 +54,8 @@ from ..operators.textstats import quality_features
 from ..sources.sinks import (
     overwrite_path,
     read_mart,
-    read_versioned,
     replace_groups_to_path,
-    transactional_upsert_to_path,
     upsert_to_path,
-    vacuum_versions,
 )
 
 # Curation gates — match the catalog's curated_documents thresholds.
@@ -127,12 +124,10 @@ def ingest_batch(
     stats: dict[str, int] = {}
     batch = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
 
-    # 1. corpus: crash-safe versioned upsert keyed on doc_id; keep the new
-    # snapshot and the previous one (for a reader still on it), drop older
+    # 1. corpus: keyed upsert on doc_id, committed like every mart write
     corpus_path = _mart(marts, "corpus")
-    transactional_upsert_to_path(batch, corpus_path, ["doc_id"])
-    vacuum_versions(corpus_path)
-    corpus = read_versioned(spark, corpus_path)
+    upsert_to_path(batch, corpus_path, ["doc_id"])
+    corpus = read_mart(spark, corpus_path)
     stats["corpus"] = corpus.count()
 
     # 2. signature mart: hash ONLY the batch, upsert band keys

@@ -12403,9 +12403,7 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             cur = spark.read.parquet(target)
-            _write_and_swap(
-                compact(cur.unionByName(batch_df)), target, prefix="cdc_"
-            )
+            _write_and_swap(compact(cur.unionByName(batch_df)), target)
 
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         with stream_shuffle_partitions(spark, 2):

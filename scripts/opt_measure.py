@@ -30,7 +30,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PLANS_DIR = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_TAG", "r11"))
 
 
-def main() -> None:
+def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--explain", action="store_true")
     ap.add_argument("--time", action="store_true")
@@ -42,9 +42,6 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark, _ = measure.session("opt-measure")
-
     qs = testdata_queries.queries()
     names = list(args.queries)
     if args.all_over is not None:
@@ -52,8 +49,11 @@ def main() -> None:
         names += [q for q, s in detail["queries"].items() if s >= args.all_over and q not in names]
     unknown = [n for n in names if n not in qs]
     if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
+        print(f"unknown queries: {unknown}")
+        return 2
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, _ = measure.session("opt-measure")
     os.makedirs(PLANS_DIR, exist_ok=True)
 
     t0 = time.perf_counter()
@@ -90,7 +90,8 @@ def main() -> None:
 
     if results:
         print(json.dumps({"timings": {k: v["min"] for k, v in results.items()}}))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

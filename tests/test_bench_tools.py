@@ -1,7 +1,8 @@
 """The bench tools' gates, on hand-written bench records: ``bench.py``'s
 baseline gate, ``pin_bench_baseline.py``'s refusals, ``bench_compare.py``'s
-and ``scale_stress.py``'s exit codes, and ``selfcheck.py``'s row count. No
-Spark session is started."""
+and ``scale_stress.py``'s exit codes, ``selfcheck.py``'s row count and
+``opt_measure.py``'s refusal of an unknown row. No Spark session is
+started."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import bench  # noqa: E402
 import bench_compare  # noqa: E402
+import opt_measure  # noqa: E402
 import pin_bench_baseline  # noqa: E402
 import scale_stress  # noqa: E402
 import selfcheck  # noqa: E402
@@ -165,3 +167,22 @@ def test_selfcheck_refuses_an_unknown_row_name(tmp_path, monkeypatch, capsys):
     assert _selfcheck(monkeypatch, tmp_path, "a", "no_such_row") == 2
     out = capsys.readouterr().out
     assert "unknown queries: ['no_such_row']" in out and "[smoke]" not in out
+
+
+def _session_started(*args, **kwargs):
+    raise RuntimeError("a Spark session started")
+
+
+@pytest.mark.parametrize("args, unknown", [
+    (["--time", "no_such_row"], "no_such_row"),
+    (["--time", "--all-over", "1.0"], "gone_row"),
+])
+def test_opt_measure_refuses_an_unknown_row_before_a_session(tmp_path, monkeypatch, capsys, args, unknown):
+    """An unknown name, typed or taken from bench_detail.json by --all-over,
+    exits 2 before a session starts."""
+    (tmp_path / "bench_detail.json").write_text(json.dumps({"queries": {"gone_row": 5.0, LAZY: 0.1}}))
+    monkeypatch.setattr(opt_measure, "REPO", str(tmp_path))
+    monkeypatch.setattr(opt_measure.measure, "session", _session_started)
+    monkeypatch.setattr(sys, "argv", ["opt_measure.py", *args])
+    assert opt_measure.main() == 2
+    assert f"unknown queries: ['{unknown}']" in capsys.readouterr().out

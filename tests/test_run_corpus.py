@@ -127,13 +127,13 @@ def test_corpus_pipeline_stream_converges_marts(spark, tmp_path):
     assert seq_ids == curated
 
 
-def test_repeated_ingests_keep_two_corpus_snapshots(spark, tmp_path):
-    """Every ingest commits a full corpus snapshot and then vacuums all but
-    the newest two (the previous one stays for a reader still on it), so
-    three ingests leave two snapshot dirs and a corpus holding every doc.
-    The run history numbers the runs 0, 1, 2."""
+def test_repeated_ingests_upsert_the_corpus_in_place(spark, tmp_path):
+    """Every ingest upserts its docs into the flat corpus mart: three
+    ingests of disjoint doc ids add one file each and rewrite none, leave
+    no journal or staging, and the corpus holds every doc. The run history
+    numbers the runs 0, 1, 2."""
     from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import record_run
-    from pipeline_etl_ecommerce_spark.sources.sinks import read_versioned
+    from pipeline_etl_ecommerce_spark.sources.sinks import read_mart
 
     marts = str(tmp_path / "marts")
     run_ids = []
@@ -143,8 +143,9 @@ def test_repeated_ingests_keep_two_corpus_snapshots(spark, tmp_path):
         stats = ingest_batch(spark, docs, marts, chunk_size=8, pack_budget=16, n_shards=2)
         run_ids.append(record_run(spark, marts, stats))
     assert run_ids == [0, 1, 2]
-    assert sorted(os.listdir(f"{marts}/corpus/_v")) == ["v00000002", "v00000003"]
-    assert sorted(r.doc_id for r in read_versioned(spark, f"{marts}/corpus").collect()) == list(range(6))
+    files = os.listdir(f"{marts}/corpus")
+    assert len(files) == 3 and all(f.endswith(".parquet") for f in files)
+    assert sorted(r.doc_id for r in read_mart(spark, f"{marts}/corpus").collect()) == list(range(6))
 
 
 def test_semantic_decontamination_stage_drops_eval_proximate_docs(spark, tmp_path, batch1):

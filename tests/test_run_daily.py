@@ -157,6 +157,51 @@ def test_backfill_crash_resume_idempotent(spark, tmp_path, payload_dir):
     assert _mart_counts(spark, crashy) == clean_counts
 
 
+
+def test_backfill_resumes_a_crash_inside_a_commit(spark, tmp_path, payload_dir, monkeypatch):
+    """Day 2 re-delivers order 100 with one of its two items, so its
+    vendas_financeiro upsert picks the file that also holds the other item.
+    That upsert crashes between its moves and its deletes; the resumed
+    backfill converges to the clean run's marts. Without a journaled commit
+    the other item was left twice, and the re-run's keyed replace removed
+    only the batch's item."""
+    import shutil
+
+    from run_daily import run_backfill
+
+    start, end = dt.date(2025, 8, 10), dt.date(2025, 8, 11)
+    day2 = str(tmp_path / "payloads_day2")
+    shutil.copytree(payload_dir, day2)
+    with open(os.path.join(payload_dir, "orders.jsonl")) as fh:
+        order = json.loads(fh.readline())
+    order["order_items"] = order["order_items"][:1]
+    with open(os.path.join(day2, "orders.jsonl"), "w") as fh:
+        fh.write(json.dumps(order) + "\n")
+
+    def day_fn(spark_, payloads_, marts_, day_):
+        return run_day(spark_, day2 if day_ == end else payloads_, marts_, day_)
+
+    clean = str(tmp_path / "clean")
+    run_backfill(spark, payload_dir, clean, start, end, day_fn=day_fn)
+    clean_counts = _mart_counts(spark, clean)
+
+    crashy = str(tmp_path / "crashy")
+    vendas, real_remove, crashed = os.path.join(crashy, "vendas_financeiro") + os.sep, os.remove, []
+
+    def remove(f, *args, **kwargs):
+        # the first delete of a vendas file: day 1 writes into an empty mart
+        if not crashed and str(f).startswith(vendas) and str(f).endswith(".parquet"):
+            crashed.append(f)
+            raise RuntimeError("simulated crash between the moves and the deletes")
+        return real_remove(f, *args, **kwargs)
+
+    monkeypatch.setattr(os, "remove", remove)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_backfill(spark, payload_dir, crashy, start, end, day_fn=day_fn)
+    assert run_backfill(spark, payload_dir, crashy, start, end, day_fn=day_fn) == [end]
+    assert _mart_counts(spark, crashy) == clean_counts
+
+
 def _alert_payloads(d, skus):
     """A catalog of ``skus`` and two listings, of SKU-A and SKU-Z: SKU-Z
     raises an alert while it is missing from the catalog."""

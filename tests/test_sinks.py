@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import count_jobs
@@ -14,13 +15,10 @@ from pipeline_etl_ecommerce_spark.sources.sinks import (
     merge_upsert,
     overwrite_date_partitions,
     read_mart,
-    read_versioned,
     delete_keys_from_path,
     replace_groups,
     replace_groups_to_path,
-    transactional_upsert_to_path,
     upsert_to_path,
-    vacuum_versions,
 )
 
 
@@ -382,55 +380,95 @@ def test_upsert_to_path_daily_cost_stays_flat(spark, tmp_path):
     assert got == expect
 
 
-def test_transactional_upsert_roundtrip(spark, tmp_path):
-    path = os.path.join(str(tmp_path), "tmart")
-    v1 = transactional_upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1)]), path, ["k"])
-    v2 = transactional_upsert_to_path(_df(spark, [("b", 20, 2), ("c", 30, 2)]), path, ["k"])
-    assert (v1, v2) == ("v00000001", "v00000002")
-    got = {r["k"]: r["v"] for r in read_versioned(spark, path).collect()}
-    assert got == {"a": 1, "b": 20, "c": 30}
-    # previous snapshot still intact (readable during/after the new write)
-    old = {r["k"]: r["v"] for r in spark.read.parquet(os.path.join(path, "_v", v1)).collect()}
-    assert old == {"a": 1, "b": 2}
+# ---------------------------------------------------------------------------
+# The commit every path writer finishes through: a crash at any filesystem
+# step leaves exactly the before rows or the after rows
+# ---------------------------------------------------------------------------
 
 
-def test_transactional_upsert_crash_between_write_and_commit(spark, tmp_path, monkeypatch):
-    """Kill the writer AFTER the new snapshot is fully written but BEFORE the
-    pointer swap: the mart must still read as the previous committed version,
-    and the next vacuum must clear the orphaned snapshot."""
-    import pipeline_etl_ecommerce_spark.sources.sinks as sinks
+class _Crash(RuntimeError):
+    pass
 
-    path = os.path.join(str(tmp_path), "tmart")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
 
-    def boom(_path, _version):
-        raise RuntimeError("simulated crash before pointer commit")
+# the filesystem steps of one commit of the upsert below, in order (a
+# checksum file goes with its parquet file and is no step of its own)
+_COMMIT_STEPS = [
+    ("write-journal", "replace"),
+    ("move-batch", "rename"),
+    ("move-rewrite", "rename"),
+    ("delete-picked", "remove"),
+    ("drop-journal", "remove"),
+]
 
-    monkeypatch.setattr(sinks, "_commit_pointer", boom)
-    try:
-        transactional_upsert_to_path(_df(spark, [("a", 99, 2)]), path, ["k"])
-    except RuntimeError:
-        pass
+
+def _steps_on(monkeypatch, path, crash_at=None):
+    """Record the ``os.replace``/``rename``/``remove`` calls on files of the
+    mart at ``path``; the call numbered ``crash_at`` raises instead."""
+    seen = []
+    for fn in ("replace", "rename", "remove"):
+        def step(src, *args, _fn=fn, _real=getattr(os, fn), **kwargs):
+            if str(src).startswith(path + os.sep) and not str(src).endswith(".crc"):
+                seen.append(_fn)
+                if len(seen) - 1 == crash_at:
+                    raise _Crash(f"crash at {_fn} of {src}")
+            return _real(src, *args, **kwargs)
+
+        monkeypatch.setattr(os, fn, step)
+    return seen
+
+
+def _mart_rows(spark, path):
+    return sorted((r["k"], r["v"]) for r in read_mart(spark, path).collect())
+
+
+_BEFORE, _AFTER = [("a", 1), ("b", 2), ("c", 3)], [("a", 1), ("b", 20), ("c", 3)]
+
+
+def test_transactional_upsert_roundtrip(spark, tmp_path, monkeypatch):
+    """A clean upsert that picks a file commits in the steps the crash test
+    below injects into, and leaves no journal or staging in the mart."""
+    path = str(tmp_path / "mart")
+    upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]), path, ["k"])
+    seen = _steps_on(monkeypatch, path)
+    upsert_to_path(_df(spark, [("b", 20, 2)]), path, ["k"])
+    assert seen == [fn for _, fn in _COMMIT_STEPS]
+    assert _mart_rows(spark, path) == _AFTER
+    assert [f for f in os.listdir(path) if not f.endswith(".parquet")] == []
+
+
+@pytest.mark.parametrize("crash_at", range(len(_COMMIT_STEPS)), ids=[name for name, _ in _COMMIT_STEPS])
+def test_a_crash_at_any_commit_step_leaves_the_before_or_the_after_rows(spark, tmp_path, monkeypatch, crash_at):
+    """The upsert of b=20 picks the file holding a, b and c, and crashes at
+    one step of its commit. The next read sees exactly the before rows (the
+    crash came before the journal landed) or the after rows (the read
+    finishes the journal), with no key twice; re-running the same upsert
+    gives the after rows and sweeps every journal and staging file. A swap
+    without a journal left a and c twice when it crashed between the moves
+    and the delete, and a re-run removed only b."""
+    path = str(tmp_path / "mart")
+    upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]), path, ["k"])
+    batch = _df(spark, [("b", 20, 2)])
+    seen = _steps_on(monkeypatch, path, crash_at)
+    with pytest.raises(_Crash):
+        upsert_to_path(batch, path, ["k"])
     monkeypatch.undo()
-
-    # still readable, still the OLD committed content
-    got = {r["k"]: r["v"] for r in read_versioned(spark, path).collect()}
-    assert got == {"a": 1}
-    # the half-committed v2 dir exists as debris, then vacuum removes it
-    assert os.path.isdir(os.path.join(path, "_v", "v00000002"))
-    assert vacuum_versions(path) == ["v00000002"]
-    # a later upsert commits cleanly on top
-    transactional_upsert_to_path(_df(spark, [("a", 7, 3)]), path, ["k"])
-    assert {r["k"]: r["v"] for r in read_versioned(spark, path).collect()} == {"a": 7}
+    assert _mart_rows(spark, path) == (_BEFORE if crash_at == 0 else _AFTER)
+    assert seen == [fn for _, fn in _COMMIT_STEPS[: crash_at + 1]]
+    upsert_to_path(batch, path, ["k"])
+    assert _mart_rows(spark, path) == _AFTER
+    assert [f for f in os.listdir(path) if not f.endswith(".parquet")] == []
 
 
-def test_vacuum_keeps_newest_committed(spark, tmp_path):
-    path = os.path.join(str(tmp_path), "tmart")
-    for i in range(4):
-        transactional_upsert_to_path(_df(spark, [("a", i, i)]), path, ["k"])
-    removed = vacuum_versions(path, keep=2)
-    assert removed == ["v00000001", "v00000002"]
-    assert {r["v"] for r in read_versioned(spark, path).collect()} == {3}
+def test_staging_of_a_killed_writer_is_invisible_and_swept(spark, tmp_path):
+    """A writer killed before its commit leaves its staged files in the
+    mart: reads skip them, and the next writer sweeps them."""
+    path = str(tmp_path / "mart")
+    upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
+    _df(spark, [("a", 99, 2), ("z", 9, 2)]).write.parquet(os.path.join(path, "_stage_killed", "batch"))
+    assert _mart_rows(spark, path) == [("a", 1)]
+    upsert_to_path(_df(spark, [("b", 2, 2)]), path, ["k"])
+    assert _mart_rows(spark, path) == [("a", 1), ("b", 2)]
+    assert [f for f in os.listdir(path) if not f.endswith(".parquet")] == []
 
 
 def test_overwrite_date_partitions_touches_only_delta_days(spark, tmp_path):
@@ -486,49 +524,24 @@ def test_compact_path_preserves_content(spark, tmp_path):
     assert {r["k"] for r in spark.read.parquet(path).collect()} == before
 
 
-def test_time_travel_read_pinned_version(spark, tmp_path):
-    path = str(tmp_path / "tt")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
-    transactional_upsert_to_path(_df(spark, [("a", 99, 2), ("b", 5, 2)]), path, ["k"])
-
-    # current = v2; v1 is still readable as-of
-    assert {r["v"] for r in read_versioned(spark, path).collect()} == {99, 5}
-    v1 = {r["v"] for r in read_versioned(spark, path, version="v00000001").collect()}
-    assert v1 == {1}
-
-    # future/uncommitted versions refuse to load
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_versioned(spark, path, version="v00000009")
-
-    # vacuum keeps 2 -> v1 survives here; after a third commit it is dropped
-    transactional_upsert_to_path(_df(spark, [("c", 7, 3)]), path, ["k"])
-    vacuum_versions(path, keep=2)
-    with _pytest.raises(FileNotFoundError):
-        read_versioned(spark, path, version="v00000001")
-
-
-def test_snapshot_diff_change_feed(spark, tmp_path):
-    """The change feed between two committed snapshots: operators.diff over
-    two read_versioned frames. A NULL that moves between two payload columns
-    is a change (a row fingerprint such as xxhash64 hashes (NULL, 5) and
-    (5, NULL) alike)."""
+def test_snapshot_diff_change_feed(spark):
+    """The change feed between a mart and the mart after an upsert:
+    operators.diff over the two frames. A NULL that moves between two
+    payload columns is a change (a row fingerprint such as xxhash64 hashes
+    (NULL, 5) and (5, NULL) alike)."""
     from pipeline_etl_ecommerce_spark.operators.diff import snapshot_diff
 
-    path = str(tmp_path / "cdf")
     schema = "k string, v int, w int"
-    transactional_upsert_to_path(spark.createDataFrame([("a", 1, 1), ("b", 2, 1), ("d", None, 5)], schema), path, ["k"])
-    transactional_upsert_to_path(spark.createDataFrame([("b", 20, 2), ("c", 30, 2), ("d", 5, None)], schema), path, ["k"])
+    old = spark.createDataFrame([("a", 1, 1), ("b", 2, 1), ("d", None, 5)], schema)
+    new = merge_upsert(old, spark.createDataFrame([("b", 20, 2), ("c", 30, 2), ("d", 5, None)], schema), ["k"])
 
-    def feed(v_old, v_new):
-        old, new = (read_versioned(spark, path, version=v) for v in (v_old, v_new))
-        return {r.k: r.change_type for r in snapshot_diff(old, new, ["k"], ["v", "w"]).collect()}
+    def feed(before, after):
+        return {r.k: r.change_type for r in snapshot_diff(before, after, ["k"], ["v", "w"]).collect()}
 
     # a unchanged (absent from the feed), b changed, c added, d's NULL swapped columns
-    assert feed("v00000001", "v00000002") == {"b": "changed", "c": "added", "d": "changed"}
+    assert feed(old, new) == {"b": "changed", "c": "added", "d": "changed"}
     # reverse direction flips added <-> removed
-    assert feed("v00000002", "v00000001") == {"b": "changed", "c": "removed", "d": "changed"}
+    assert feed(new, old) == {"b": "changed", "c": "removed", "d": "changed"}
 
 
 # ---------------------------------------------------------------------------
@@ -623,7 +636,7 @@ def test_writer_lock_excludes_second_writer(spark, tmp_path):
 
     path = str(tmp_path / "locked")
     with writer_lock(path):
-        transactional_upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
+        upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
         # a second non-blocking writer must back off while we hold the lock
         import pytest as _pytest
 
@@ -632,8 +645,8 @@ def test_writer_lock_excludes_second_writer(spark, tmp_path):
                 pass
     # released: the next writer proceeds
     with writer_lock(path, blocking=False):
-        transactional_upsert_to_path(_df(spark, [("b", 2, 2)]), path, ["k"])
-    assert read_versioned(spark, path).count() == 2
+        upsert_to_path(_df(spark, [("b", 2, 2)]), path, ["k"])
+    assert read_mart(spark, path).count() == 2
 
 
 def test_zorder_key_interleaves_bits_exactly(spark):
@@ -755,96 +768,6 @@ def test_merge_aggregate_mart_handles_retractions(spark, tmp_path):
     assert got == want
 
 
-def test_vacuum_retention_gives_concurrent_readers_one_commit_grace(spark, tmp_path):
-    """The retention contract for readers running WHILE a writer commits:
-    a reader that resolved the current snapshot just before a commit is one
-    version behind afterwards — with the default keep=2, vacuum must never
-    delete that snapshot, so the in-flight (lazy, un-materialized) read
-    still completes. Only a reader >= keep commits stale loses its files."""
-    from pipeline_etl_ecommerce_spark.sources.sinks import current_snapshot_path
-
-    path = str(tmp_path / "grace")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
-
-    # reader resolves v1 and builds a LAZY plan over its files
-    pinned = current_snapshot_path(path)
-    lazy_reader = spark.read.parquet(pinned)
-
-    # writer commits v2 and vacuums with the default retention
-    transactional_upsert_to_path(_df(spark, [("a", 99, 2)]), path, ["k"])
-    vacuum_versions(path, keep=2)
-
-    # the one-behind reader still completes against its pinned snapshot
-    assert {r["v"] for r in lazy_reader.collect()} == {1}
-
-    # one more commit + vacuum expires v1: a reader two commits stale is
-    # out of the retention window by contract
-    transactional_upsert_to_path(_df(spark, [("a", 7, 3)]), path, ["k"])
-    vacuum_versions(path, keep=2)
-    assert not os.path.isdir(pinned)
-
-
-def test_vacuum_expired_reader_fails_loudly_never_partial(spark, tmp_path):
-    """r3 verdict item 6: a reader pinned at a version that vacuum removes
-    must either complete (materialized before the vacuum) or fail LOUDLY —
-    never silently return a partial/empty snapshot. vacuum's atomic
-    tombstone-rename guarantees all-or-nothing visibility."""
-    import pytest as _pytest
-
-    from pipeline_etl_ecommerce_spark.sources.sinks import current_snapshot_path, read_versioned
-
-    path = str(tmp_path / "loud")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1)]), path, ["k"])
-    pinned_dir = current_snapshot_path(path)
-
-    # lazy reader over v1, NOT materialized; snapshot-pinned reader too
-    lazy = spark.read.parquet(pinned_dir)
-    pinned = read_versioned(spark, path, version="v00000001")
-    # a reader that materialized before the vacuum completes regardless
-    survived = read_versioned(spark, path, version="v00000001").localCheckpoint()
-
-    # three commits push v1 out of the keep=2 window
-    transactional_upsert_to_path(_df(spark, [("a", 9, 2)]), path, ["k"])
-    transactional_upsert_to_path(_df(spark, [("a", 10, 3)]), path, ["k"])
-    removed = vacuum_versions(path, keep=2)
-    assert "v00000001" in removed and not os.path.isdir(pinned_dir)
-
-    # loud failure, not a partial result, for both un-materialized readers
-    for df in (lazy, pinned):
-        with _pytest.raises(Exception) as exc:
-            df.collect()
-        assert "v00000001" in str(exc.value) or "exist" in str(exc.value).lower()
-    # the materialized reader still serves the old snapshot (v1 state:
-    # a->1, b->2 — the later commits' a->9/a->10 must not leak in)
-    assert {(r["k"], r["v"]) for r in survived.collect()} == {("a", 1), ("b", 2)}
-    # a NEW pin of the vacuumed version is refused up-front
-    with _pytest.raises(FileNotFoundError, match="vacuumed"):
-        read_versioned(spark, path, version="v00000001")
-
-
-def test_vacuum_tombstone_crash_is_swept_and_invisible(spark, tmp_path):
-    """A vacuum that crashes between tombstone-rename and rmtree leaves only
-    a .del_* dir: invisible to read_versioned (the committed path is gone in
-    one atomic step) and swept by the next vacuum."""
-    import pytest as _pytest
-
-    from pipeline_etl_ecommerce_spark.sources.sinks import _VERSIONS_DIR, read_versioned
-
-    path = str(tmp_path / "tomb")
-    transactional_upsert_to_path(_df(spark, [("a", 1, 1)]), path, ["k"])
-    transactional_upsert_to_path(_df(spark, [("a", 2, 2)]), path, ["k"])
-    transactional_upsert_to_path(_df(spark, [("a", 3, 3)]), path, ["k"])
-    vdir = os.path.join(path, _VERSIONS_DIR)
-    # simulate the crash: v1 renamed to tombstone, rmtree never ran
-    os.rename(os.path.join(vdir, "v00000001"), os.path.join(vdir, ".del_v00000001"))
-    with _pytest.raises(FileNotFoundError, match="vacuumed"):
-        read_versioned(spark, path, version="v00000001")
-    vacuum_versions(path, keep=2)
-    assert not any(d.startswith(".del_") for d in os.listdir(vdir))
-    # current snapshot unaffected throughout
-    assert {r["v"] for r in read_versioned(spark, path).collect()} == {3}
-
-
 def test_merge_upsert_schema_drift_raises_by_default(spark):
     """r9: a batch whose columns drift from the target must fail loudly —
     the pre-r9 code silently dropped columns the target lacked."""
@@ -922,27 +845,3 @@ def test_merge_upsert_evolve_schema_null_backfills(spark):
         for r in merge_upsert(old, widened, ["k"], evolve_schema=True).collect()
     }
     assert got == {"a": (1, None), "b": (2, 0.5)}
-
-
-def test_transactional_upsert_schema_evolution_mid_stream(spark, tmp_path):
-    """r8 verdict item 7: a NEW column arriving mid-stream lands as a new
-    snapshot version with NULL backfill for pre-existing keys; the same
-    batch WITHOUT the opt-in fails before any snapshot is written (the
-    pointer still aims at the old version)."""
-    import pytest
-
-    path = str(tmp_path / "mart")
-    v1 = transactional_upsert_to_path(_df(spark, [("a", 1, 1), ("b", 2, 1)]), path, ["k"])
-    widened = spark.createDataFrame(
-        [("b", 20, 2, "EUR"), ("c", 30, 2, "USD")],
-        "k string, v int, ts long, currency string",
-    )
-    with pytest.raises(ValueError, match="schema drifts"):
-        transactional_upsert_to_path(widened, path, ["k"])
-    assert read_versioned(spark, path).columns == ["k", "v", "ts"]  # v1 intact
-    v2 = transactional_upsert_to_path(widened, path, ["k"], evolve_schema=True)
-    assert v2 > v1
-    got = {
-        r["k"]: (r["v"], r["currency"]) for r in read_versioned(spark, path).collect()
-    }
-    assert got == {"a": (1, None), "b": (20, "EUR"), "c": (30, "USD")}

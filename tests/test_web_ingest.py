@@ -44,15 +44,15 @@ def test_idempotent_reingest(spark, tmp_path, warc_media):
 def test_recrawl_updates_content_not_rows(spark, tmp_path):
     ids = spark.range(0, 6).select(F.col("id").alias("media_id"))
     marts = str(tmp_path / "marts")
-    from pipeline_etl_ecommerce_spark.sources.sinks import read_versioned
+    from pipeline_etl_ecommerce_spark.sources.sinks import read_mart
 
     web_ingest_batch(spark, synthesize_warc_html_streams(ids), marts)
     before = {
         r["doc_id"]: r["text"]
-        for r in read_versioned(spark, f"{marts}/corpus").select("doc_id", "text").collect()
+        for r in read_mart(spark, f"{marts}/corpus").select("doc_id", "text").collect()
     }
     # same URLs again -> same doc_ids, same row count (url-keyed upsert)
     web_ingest_batch(spark, synthesize_warc_html_streams(ids), marts)
-    after = read_versioned(spark, f"{marts}/corpus")
+    after = read_mart(spark, f"{marts}/corpus")
     assert after.count() == len(before)
     assert {r["doc_id"] for r in after.select("doc_id").collect()} == set(before)
