@@ -1,17 +1,11 @@
 from .scalars import (
     parse_locale_double,
-    to_sp_timestamp,
     day_of,
-    extract_seller_sku,
     extract_deposito_saldo,
-    json_field,
 )
 
 __all__ = [
     "parse_locale_double",
-    "to_sp_timestamp",
     "day_of",
-    "extract_seller_sku",
     "extract_deposito_saldo",
-    "json_field",
 ]

@@ -11,9 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-SP_TZ = "America/Sao_Paulo"
-
-
 def parse_locale_double(col: str | Column) -> Column:
     """F4: pt-BR decimal-comma numeric parse (reference
     ``tarefa_sincronizar_catalogo_tiny.php:81``).
@@ -29,38 +26,10 @@ def parse_locale_double(col: str | Column) -> Column:
     return cleaned.cast("double")
 
 
-def to_sp_timestamp(col: str | Column) -> Column:
-    """F2: ISO8601-with-offset string → America/Sao_Paulo wall-clock timestamp
-    (reference ``tarefa_coletar_financas.php:79-98``). Malformed dates parse
-    to NULL, mirroring the reference's try/catch → NULL."""
-    c = F.col(col) if isinstance(col, str) else col
-    # try_to_timestamp honors the embedded offset and yields an instant (NULL
-    # on malformed input, like the reference's try/catch); with the session tz
-    # pinned to America/Sao_Paulo (session.py) its rendering — and any
-    # to_date() day-grain derived from it — is SP wall-clock, matching the
-    # reference's DateTime::setTimezone conversion.
-    return F.try_to_timestamp(c)
-
-
 def day_of(col: str | Column) -> Column:
     """Day-grain truncation (F3): timestamps → session-tz calendar date."""
     c = F.col(col) if isinstance(col, str) else col
     return F.to_date(c)
-
-
-def extract_seller_sku(variation_attrs: Column, *fallbacks: Column) -> Column:
-    """F10/UD2: the reference's 2-level SKU fallback chain (reference
-    ``tarefa_sincronizar_anuncios_meli.php:95-108,126-139``): look for the
-    ``SELLER_SKU`` attribute in a variation's attributes[]; when absent, fall
-    back through ``seller_custom_field`` (variation, then listing).
-
-    Pure higher-order-function expression: ``filter(attrs, a -> a.id ==
-    'SELLER_SKU')[0].value_name`` with ``coalesce`` over the fallbacks.
-    """
-    sku_attr = F.filter(variation_attrs, lambda a: a["id"] == F.lit("SELLER_SKU"))
-    from_attr = F.when(F.size(sku_attr) > 0, sku_attr[0]["value_name"])
-    chain = [from_attr, *fallbacks]
-    return F.coalesce(*chain)
 
 
 def extract_deposito_saldo(depositos: Column, nome: str) -> Column:
@@ -70,10 +39,3 @@ def extract_deposito_saldo(depositos: Column, nome: str) -> Column:
     return F.coalesce(
         F.when(F.size(match) > 0, match[0]["deposito"]["saldo"]), F.lit(0.0)
     )
-
-
-def json_field(col: str | Column, field: str) -> Column:
-    """F10: JSON string field extraction (reference ``json_decode`` chains,
-    ``config.php:44,82``) — ``get_json_object`` stays JVM-side."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{field}")

@@ -1,20 +1,18 @@
 from .allocation import AllocSpec, allocate_ratio_to_parent, allocate_by_share
 from .ranking import first_per_group, top_k_per_group, rank_capture
 from .dedupe import (
-    exact_dedup,
     minhash_band_keys,
     minhash_candidate_pairs,
     simhash32,
     ngram_jaccard_pairs,
 )
-from .similarity import cosine_topk, lsh_bucket_topk, embedding_norms
+from .similarity import cosine_topk, embedding_norms
 from .textstats import lang_id, quality_features, token_count, bpe_ish_token_count, fingerprint
 from .multimodal import extract_features, documents_as_media
 from .importance import dsir_importance_weights, hashed_bucket_distribution
 from .pq import pq_adc_topk, pq_codebooks, pq_encode
 from .graph import pagerank_undirected
-from .bpe import apply_bpe_merges, learn_bpe_merges, word_frequencies
-from .sketches import build_hll_mart, merge_hll_estimate
+from .bpe import learn_bpe_merges, word_frequencies
 
 __all__ = [
     "AllocSpec",
@@ -23,13 +21,11 @@ __all__ = [
     "first_per_group",
     "top_k_per_group",
     "rank_capture",
-    "exact_dedup",
     "minhash_band_keys",
     "minhash_candidate_pairs",
     "simhash32",
     "ngram_jaccard_pairs",
     "cosine_topk",
-    "lsh_bucket_topk",
     "embedding_norms",
     "lang_id",
     "quality_features",
@@ -44,9 +40,6 @@ __all__ = [
     "pq_codebooks",
     "pq_encode",
     "pagerank_undirected",
-    "apply_bpe_merges",
     "learn_bpe_merges",
     "word_frequencies",
-    "build_hll_mart",
-    "merge_hll_estimate",
 ]

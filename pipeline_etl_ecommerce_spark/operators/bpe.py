@@ -142,23 +142,3 @@ def bpe_tokens_expr(words, merges: list[tuple[str, str]]) -> "F.Column":
         )
 
     return F.flatten(F.transform(words, tokenize))
-
-
-def apply_bpe_merges(
-    df: DataFrame, merges: list[tuple[str, str]], text_col: str, id_col: str
-) -> DataFrame:
-    """Tokenize with a LEARNED merge list (e.g. ``learn_bpe_merges``
-    output collected once as the shipped model): per word, apply each
-    merge in training order. Map-only — the merge list is a plan
-    literal, the corpus streams through codegen ``replace`` chains via
-    ``bpe_tokens_expr`` (r10: formerly a posexplode + groupBy/collect_list
-    round trip — a full corpus shuffle — now zero exchanges; token order
-    and values are identical, and wordless documents still produce no
-    row, matching the old groupBy's semantics).
-    Returns ``(id_col, tokens array<string>)`` for the whole document."""
-    words = split_words(text_col)
-    return (
-        df.select(F.col(id_col), words.alias("__w"))
-        .where(F.size("__w") > 0)
-        .select(id_col, bpe_tokens_expr(F.col("__w"), merges).alias("tokens"))
-    )

@@ -34,15 +34,6 @@ def content_hash(col: str | Column) -> Column:
     return F.md5(c.cast("binary"))
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Canonicalize exact duplicates: min id per content hash + copy count."""
-    return (
-        df.withColumn("text_hash", content_hash(text_col))
-        .groupBy("text_hash")
-        .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies"))
-    )
-
-
 def char_shingles(col: str | Column, k: int = 5) -> Column:
     """Array of all k-char shingles (positions 1..len-k+1; at least one)."""
     c = F.col(col) if isinstance(col, str) else col

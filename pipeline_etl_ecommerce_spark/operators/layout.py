@@ -119,7 +119,7 @@ def recluster_zordered(
     ``target_files`` Z-clustered files IN PLACE — the scheduled job that
     repairs the layout after appends/streaming upserts fragment it (the
     Delta ``OPTIMIZE ZORDER BY`` maintenance shape). Like ``compact_path``
-    it swaps the new layout in through ``sinks._write_and_swap``: the new
+    it swaps the new layout in through ``sinks.overwrite_path``: the new
     files fully materialize in a staging dir before one journaled commit
     moves them in and drops the old ones, so a crash leaves the old or the
     new layout. A reader that lists the path during the commit is not
@@ -128,7 +128,7 @@ def recluster_zordered(
     import glob
     import os
 
-    from ..sources.sinks import _write_and_swap, read_mart
+    from ..sources.sinks import overwrite_path, read_mart
 
     df = read_mart(spark, path)
     keyed = df.withColumn("__zkey", zorder_key(cols, bits=bits))
@@ -137,5 +137,5 @@ def recluster_zordered(
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    _write_and_swap(ranged, path)
+    overwrite_path(ranged, path)
     return len(glob.glob(os.path.join(path, "*.parquet")))

@@ -5,10 +5,10 @@ Two paths:
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
   Query set × corpus cross join; dot products via ``F.aggregate`` over
   zipped arrays (JVM-side, no Python). Use only with a bounded query set.
-- ``lsh_bucket_topk``: the scale path — random-hyperplane LSH signatures
-  bucket the corpus; candidates come from a bucket equi-join, then exact
-  cosine re-ranks within buckets. At 100 TB the cross join disappears; the
-  shuffle key is the bucket signature.
+- ``embedding_near_dup_pairs`` and the IVF search (``operators/ivf.py``):
+  the scale paths — candidates come from a bucket or inverted-list
+  equi-join, then exact cosine re-ranks them. At 100 TB the cross join
+  disappears; the shuffle key is the bucket.
 
 Cosine is computed in double precision with a fixed left-to-right summation
 (array order), so results are reproducible across engines.
@@ -434,36 +434,6 @@ def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
         )
         bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
-
-
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 3,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket; exact
-    cosine re-ranks them. Recall depends on the plane count (more planes →
-    smaller buckets → faster + lower recall)."""
-    sig_c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        _dvec(F.col(vec_col)).alias("cv"),
-        hyperplane_signature(_dvec(F.col(vec_col)), planes).alias("bucket"),
-    )
-    sig_q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _dvec(F.col(vec_col)).alias("qv"),
-        hyperplane_signature(_dvec(F.col(vec_col)), planes).alias("bucket"),
-    )
-    scored = (
-        sig_q.join(sig_c, "bucket")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"))
-    )
-    return _top_k_by_cos_sim(scored, k)
 
 
 def embedding_near_dup_pairs(

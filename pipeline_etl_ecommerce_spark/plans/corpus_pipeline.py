@@ -3,7 +3,7 @@ LLM-data analog of the daily e-commerce driver (scripts/run_daily.py).
 
 One invocation ingests a document batch and converges every derived mart:
 
-  corpus (crash-safe keyed snapshots)
+  corpus (keyed upsert)
     └─ minhash band-key signature mart          (delta-only hashing)
         └─ candidate pairs (delta × mart join)  → verified-pairs mart
             └─ connected components             → canonical mart
@@ -24,7 +24,11 @@ properties (a new duplicate can evict an OLD document from the curated
 set), so their cost is proportional to the corpus — at 100 TB these run
 as scheduled maintenance over the pair/curated marts, while 1-3 run per
 ingest. Every sink is idempotent (keyed upsert / group replace /
-overwrite), so re-running any batch converges.
+overwrite), so re-running any batch converges, and every sink commits
+crash-safe (``sinks._commit``). A full refresh is one ``overwrite_path``:
+it stages the new rows in full before the old files go, so a stage may
+rewrite a mart from a frame that reads it (curated, sequences), and its
+row count comes from the staged footers.
 """
 
 from __future__ import annotations
@@ -70,13 +74,11 @@ def _mart(marts: str, name: str) -> str:
 def _overwrite_and_read(
     spark: SparkSession, df: DataFrame, path: str, *, partition_by: list[str] | None = None
 ):
-    """Overwrite ``path`` with ``df`` and hand back a readable frame + count.
-    An EMPTY DataFrame write produces no part files (the directory can't be
-    re-read), so the in-memory empty frame is returned instead — downstream
-    stages must keep working when a gate legitimately empties a mart."""
-    n = df.count()
-    overwrite_path(df, path, partition_by=partition_by)
-    return (read_mart(spark, path) if n > 0 else df.limit(0)), n
+    """Overwrite ``path`` with ``df``, which may read ``path`` itself, and
+    hand back the mart read back and the rows written (from the footers, so
+    ``df`` runs once)."""
+    n = overwrite_path(df, path, partition_by=partition_by)
+    return read_mart(spark, path), n
 
 
 def ingest_batch(
@@ -149,15 +151,11 @@ def ingest_batch(
     quality = quality_features(corpus, "text", "doc_id")
     comp = connected_components(pairs)
     best = keep_best_per_cluster(comp, quality, score_col="quality_score")
-    canon_path = _mart(marts, "canonical")
-    overwrite_path(
-        comp.join(
-            best.select(F.col("component_id"), F.col("best_doc_id")), "component_id"
-        ),
-        canon_path,
+    canonical, stats["canonical"] = _overwrite_and_read(
+        spark,
+        comp.join(best.select("component_id", "best_doc_id"), "component_id"),
+        _mart(marts, "canonical"),
     )
-    canonical = read_mart(spark, canon_path)
-    stats["canonical"] = canonical.count()
 
     # 5. curated mart: drop non-representatives of dup clusters + junk
     curated = (
@@ -190,11 +188,10 @@ def ingest_batch(
             spark, flagged, flag_path
         )
         if stats["semantic_contaminated"]:
-            curated = curated.join(
-                flagged.select(F.col("vec_id").alias("doc_id")), "doc_id", "anti"
-            ).localCheckpoint()
             curated, stats["curated"] = _overwrite_and_read(
-                spark, curated, curated_path
+                spark,
+                curated.join(flagged.select(F.col("vec_id").alias("doc_id")), "doc_id", "anti"),
+                curated_path,
             )
 
     # 5c. perplexity gate (optional): CCNet-style fluency filter — score
@@ -211,11 +208,8 @@ def ingest_batch(
         rej_path = _mart(marts, "ppl_rejected")
         rejected, stats["ppl_rejected"] = _overwrite_and_read(spark, rejected, rej_path)
         if stats["ppl_rejected"]:
-            curated = curated.join(
-                rejected.select("doc_id"), "doc_id", "anti"
-            ).localCheckpoint()
             curated, stats["curated"] = _overwrite_and_read(
-                spark, curated, curated_path
+                spark, curated.join(rejected.select("doc_id"), "doc_id", "anti"), curated_path
             )
 
     # 6. sequences: chunk curated docs; per-doc REPLACE so re-chunking a
@@ -229,12 +223,9 @@ def ingest_batch(
         # curation can EVICT previously-curated docs (a new dup wins): drop
         # their chunks so the sequences mart mirrors the curated set
         live = seqs_now.join(curated.select("doc_id"), "doc_id", "semi")
-        if live.count() != seqs_now.count():
-            seqs, stats["sequences"] = _overwrite_and_read(
-                spark, live.localCheckpoint(), seq_path
-            )
-        else:
-            seqs, stats["sequences"] = seqs_now, seqs_now.count()
+        seqs, stats["sequences"] = seqs_now, seqs_now.count()
+        if live.count() != stats["sequences"]:
+            seqs, stats["sequences"] = _overwrite_and_read(spark, live, seq_path)
     else:
         seqs, stats["sequences"] = chunks.limit(0), 0
 

@@ -27,17 +27,32 @@ import sys
 
 from pyspark.sql import SparkSession
 
-DEFAULT_TZ = "America/Sao_Paulo"
 # JVM system property set once the accumulator-spam filter is installed
 _ACCUMULATOR_FILTER_MARK = "pipeline_etl_ecommerce_spark.accumulatorFilter"
+
+# The engine's runtime-settable confs: ``get_spark`` builds with them and
+# ``tune_session`` sets them on a session built elsewhere.
+_RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Runtime bloom-filter join pruning: when a selective dim filters a
+    # fact-sized probe side, inject a bloom filter on the join key so
+    # non-matching fact rows die at the scan instead of shuffling — at
+    # 100 TB this is the difference between shuffling the whole fact and
+    # shuffling the matching slice. (Explicit: default varies by build.)
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # Push MIN/MAX/COUNT down to parquet footers for filter-less
+    # aggregates — a full-table COUNT(*) reads row-group metadata only.
+    "spark.sql.parquet.aggregatePushdown": "true",
+}
 
 
 def get_spark(
     app_name: str = "pipeline-etl-ecommerce-spark",
     *,
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
-    tz: str = DEFAULT_TZ,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
@@ -45,21 +60,9 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.session.timeZone", tz)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Runtime bloom-filter join pruning: when a selective dim filters a
-        # fact-sized probe side, inject a bloom filter on the join key so
-        # non-matching fact rows die at the scan instead of shuffling — at
-        # 100 TB this is the difference between shuffling the whole fact and
-        # shuffling the matching slice. (Explicit: default varies by build.)
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # Push MIN/MAX/COUNT down to parquet footers for filter-less
-        # aggregates — a full-table COUNT(*) reads row-group metadata only.
-        .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config(map=_RUNTIME_CONF)
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.session.timeZone", "America/Sao_Paulo")
         # Keep the whole generated-code working set, so a plan shape compiles
         # once per JVM. Spark's LRU cache of compiled classes holds 100 by
         # default. Distinct classes measured on 4 cores: one run_day 167-171,
@@ -90,9 +93,7 @@ def get_spark(
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = builder.config(map=extra_conf or {}).getOrCreate()
     _silence_accumulator_gc_spam(spark)
     return spark
 
@@ -141,7 +142,7 @@ def _silence_accumulator_gc_spam(spark: SparkSession) -> None:
     )
 
 
-def tune_session(spark: SparkSession, *, tz: str | None = None) -> SparkSession:
+def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable configs to an existing session.
 
     Used when the caller owns the session (``__spark_entry__.entry(spark)``
@@ -152,13 +153,7 @@ def tune_session(spark: SparkSession, *, tz: str | None = None) -> SparkSession:
     ``selfcheck.hostile_spark`` keeps that default on purpose, because no
     result may depend on it.
     """
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    if tz:
-        spark.conf.set("spark.sql.session.timeZone", tz)
+    for k, v in _RUNTIME_CONF.items():
+        spark.conf.set(k, v)
     _silence_accumulator_gc_spam(spark)
     return spark

@@ -1,21 +1,17 @@
-from .readers import load_tables, read_parquet_table, read_json_payloads
+from .readers import read_json_payloads
 from .sinks import (
     merge_upsert,
     insert_if_absent,
     upsert_to_path,
     append_to_path,
     overwrite_path,
-    overwrite_date_partitions,
 )
 
 __all__ = [
-    "load_tables",
-    "read_parquet_table",
     "read_json_payloads",
     "merge_upsert",
     "insert_if_absent",
     "upsert_to_path",
     "append_to_path",
     "overwrite_path",
-    "overwrite_date_partitions",
 ]

@@ -39,8 +39,13 @@ Scale notes
   When no top-level footer carries a Spark schema (files written by
   pyarrow alone, Hive-partitioned dirs, an absent or empty path), the read
   falls back to ``spark.read.parquet`` and its inference job.
-- ``compact_path`` and ``merge_aggregate_mart_to_path`` rewrite the whole
-  mart and swap it in (``_write_and_swap``).
+- ``overwrite_path`` is the one whole-mart replace (``TRUNCATE`` + reload):
+  it writes the new rows in full into the mart's staging dir and swaps them
+  in for every data file, so the new rows may be computed from the mart
+  itself. ``compact_path``, ``merge_aggregate_mart_to_path`` and the
+  Z-order recluster go through it, and so does the corpus job's
+  Hive-partitioned shards mart: a staged ``key=value/`` file lands in its
+  own partition dir.
 - Every path writer stages its files inside the mart and finishes through
   one commit (``_commit``): a journal of moves and deletes, written with one
   atomic rename, then carried out and dropped. A crash at any step leaves
@@ -48,8 +53,6 @@ Scale notes
   ``read_mart`` and the writers finish a pending journal first. There is
   one writer per mart, and a reader that runs during a commit is not
   isolated.
-- For Hive-partitioned date-grain marts, ``overwrite_date_partitions``
-  (dynamic partition overwrite) rewrites only the affected date partitions.
 """
 
 from __future__ import annotations
@@ -256,24 +259,25 @@ def append_to_path(df: DataFrame, path: str, *, partition_by: list[str] | None =
     writer.parquet(path)
 
 
-def overwrite_path(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
-    """``TRUNCATE`` + reload (SURVEY.md §2.1 S13)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def overwrite_date_partitions(df: DataFrame, path: str, partition_col: str) -> None:
-    """Dynamic partition overwrite: replace exactly the date partitions present
-    in ``df`` and leave the rest of the mart untouched. The scalable upsert for
-    date-grain marts (SURVEY.md §2.1 S9 → Spark mapping)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+def overwrite_path(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> int:
+    """``TRUNCATE`` + reload (SURVEY.md §2.1 S13): replace every data file of
+    the mart at ``path`` by ``df``. ``df`` is written in full to a staging
+    dir inside the mart before :func:`_commit` swaps its files in, so ``df``
+    may read ``path`` itself and a crash leaves the before or the after
+    rows. With ``partition_by`` the mart is Hive-partitioned and each staged
+    ``key=value/`` file lands in that partition dir. A ``df`` without rows
+    leaves one schema-only file, so the mart reads back as 0 rows. Returns
+    the rows written, from the staged footers."""
+    with _staging(path) as tmp:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        if not _parquet_files(tmp, nested=True):  # a partitioned write of no rows stages no file
+            df.sparkSession.createDataFrame([], df.schema).write.mode("overwrite").parquet(tmp)
+        staged = _footers(_parquet_files(tmp, nested=True), [])[0]
+        _commit(path, list(staged), _parquet_files(path, nested=True), under=tmp)
+    return sum(rows for rows, _ in staged.values())
 
 
 def upsert_to_path(new: DataFrame, path: str, keys: list[str], order_by: list | None = None) -> int:
@@ -385,12 +389,15 @@ def _replace_in_path(
     return landed, sum(old[f][0] for f in picked) - sum(n for n, _ in rewritten.values())
 
 
-def _parquet_files(path: str) -> list[str]:
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+def _parquet_files(path: str, *, nested: bool = False) -> list[str]:
+    """The mart's top-level data files; with ``nested`` also those in its
+    Hive ``key=value/`` dirs. Names Spark's reads skip (``_``, ``.``) are
+    skipped here too, staging dirs included."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if nested and not d.startswith((".", "_")))
+        out += sorted(os.path.join(root, f) for f in files if f.endswith(".parquet") and not f.startswith((".", "_")))
+    return out
 
 
 def _footers(files: list[str], keys: list[str]) -> tuple[dict[str, tuple[int, list[list]]], StructType | None]:
@@ -437,16 +444,6 @@ def _may_overlap(a: list, b: list) -> bool:
     return True
 
 
-def _write_and_swap(df: DataFrame, path: str) -> None:
-    """Replace every file of the mart at ``path`` by ``df``, whose plan may
-    lazily read ``path``: ``df`` is written in full to a staging dir inside
-    the mart before :func:`_commit` swaps its files in for the old ones, so
-    a crash leaves the before rows or the after rows."""
-    with _staging(path) as tmp:
-        df.write.mode("overwrite").parquet(tmp)
-        _commit(path, _parquet_files(tmp), _parquet_files(path))
-
-
 # --------------------------------------------------------------------------
 # The commit of every path writer above: a journal of moves and deletes,
 # made durable by one atomic rename and rolled forward by the next reader or
@@ -486,17 +483,23 @@ def _staging(path: str):
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _commit(path: str, landing: list[str], stale: list[str]) -> None:
+def _commit(path: str, landing: list[str], stale: list[str], *, under: str | None = None) -> None:
     """Swap the staged files ``landing`` in for the mart's files ``stale``.
-    The journal naming every move and delete is written to a temp file,
-    fsynced and ``os.replace``d into place: that rename is the commit point.
-    :func:`_roll_forward` then does the moves, the deletes and drops the
-    journal; a crash before the rename leaves the mart as it was, a crash
-    after it leaves a journal the next reader or writer finishes."""
-    moves = [(os.path.relpath(f, path), f"part-{uuid.uuid4().hex}.parquet") for f in landing]
+    A landing file keeps the dirs it has below the staging dir ``under``
+    (Hive ``key=value/``); without ``under`` it lands at the top level. The
+    journal naming every move and delete by its path in the mart is written
+    to a temp file, fsynced and ``os.replace``d into place: that rename is
+    the commit point. :func:`_roll_forward` then does the moves, the deletes
+    and drops the journal; a crash before the rename leaves the mart as it
+    was, a crash after it leaves a journal the next reader or writer
+    finishes."""
+    moves = []
+    for f in landing:
+        sub = os.path.relpath(os.path.dirname(f), under) if under else ""
+        moves.append((os.path.relpath(f, path), os.path.normpath(os.path.join(sub, f"part-{uuid.uuid4().hex}.parquet"))))
     fd, tmp = tempfile.mkstemp(prefix=_STAGE, dir=path)
     with os.fdopen(fd, "w") as fh:
-        json.dump({"moves": moves, "deletes": [os.path.basename(f) for f in stale]}, fh)
+        json.dump({"moves": moves, "deletes": [os.path.relpath(f, path) for f in stale]}, fh)
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, os.path.join(path, _JOURNAL))
@@ -506,7 +509,8 @@ def _commit(path: str, landing: list[str], stale: list[str]) -> None:
 def _roll_forward(path: str) -> None:
     """Finish the commit journaled at ``path``, if one is pending. Every step
     is idempotent: a rename whose source is gone and a delete whose file is
-    gone were done by an earlier attempt."""
+    gone were done by an earlier attempt. A partition dir the deletes
+    leave empty goes too."""
     journal = os.path.join(path, _JOURNAL)
     try:
         with open(journal) as fh:
@@ -514,12 +518,18 @@ def _roll_forward(path: str) -> None:
     except (FileNotFoundError, NotADirectoryError):
         return
     for src, dst in plan["moves"]:
+        if os.path.dirname(dst):
+            os.makedirs(os.path.join(path, os.path.dirname(dst)), exist_ok=True)
         with contextlib.suppress(FileNotFoundError):
             os.rename(os.path.join(path, src), os.path.join(path, dst))
     for name in plan["deletes"]:
-        for victim in (name, f".{name}.crc"):
+        head, tail = os.path.split(name)
+        for victim in (name, os.path.join(head, f".{tail}.crc")):
             with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(path, victim))
+        if head:
+            with contextlib.suppress(OSError):  # not empty: the partition is still live
+                os.rmdir(os.path.join(path, head))
     with contextlib.suppress(FileNotFoundError):
         os.remove(journal)
 
@@ -528,7 +538,7 @@ def compact_path(spark, path: str, *, target_partitions: int | None = None) -> i
     """Compact a parquet mart's small files (the debris a checkpointed
     streaming upsert leaves after many micro-batches): rewrite the path with
     ``target_partitions`` output files via read → coalesce →
-    ``_write_and_swap``, so a crash leaves the before or the after files.
+    :func:`overwrite_path`, so a crash leaves the before or the after files.
     Content is byte-identical, only the file layout changes.
 
     Defaults to one file per 128 MB of on-disk data (min 1) — the parquet
@@ -536,7 +546,7 @@ def compact_path(spark, path: str, *, target_partitions: int | None = None) -> i
     would run per partition. Returns the number of output partitions."""
     df = read_mart(spark, path)
     n = target_partitions or max(1, sum(map(os.path.getsize, _parquet_files(path))) // _FILE_BYTES)
-    _write_and_swap(df.coalesce(int(n)), path)
+    overwrite_path(df.coalesce(int(n)), path)
     return int(n)
 
 
@@ -618,12 +628,7 @@ def merge_aggregate_mart_to_path(
 ) -> None:
     """Path-level IVM merge: read the mart if present, additively merge
     the delta's partial aggregates and swap the merged mart in with
-    ``_write_and_swap``, so a crash leaves the before or the after mart.
+    :func:`overwrite_path`, so a crash leaves the before or the after mart.
     One writer per mart (``writer_lock``)."""
-    spark = delta_agg.sparkSession
-    if not os.path.exists(path):
-        delta_agg.write.mode("overwrite").parquet(path)
-        return
-    old = read_mart(spark, path)
-    merged = merge_aggregate_mart(old, delta_agg, keys, sum_cols)
-    _write_and_swap(merged, path)
+    old = read_mart(delta_agg.sparkSession, path) if os.path.exists(path) else None
+    overwrite_path(merge_aggregate_mart(old, delta_agg, keys, sum_cols), path)

@@ -6,7 +6,6 @@ from .runner import (
     run_upsert_stream,
     dedup_stream,
     backfill,
-    incremental_day_targets,
 )
 
 __all__ = [
@@ -17,5 +16,4 @@ __all__ = [
     "run_upsert_stream",
     "dedup_stream",
     "backfill",
-    "incremental_day_targets",
 ]

@@ -175,24 +175,6 @@ def run_upsert_stream(
     )
 
 
-def incremental_day_targets(
-    processed_days: DataFrame | None, *, today: dt.date, lateness_days: int = 3, lookback_days: int = 7
-) -> list[dt.date]:
-    """Which days should a scheduled batch run process?  The reference's rule
-    set: the settled day (D-``lateness_days``) plus any day in the lookback
-    window not yet processed (T2/T3). ``processed_days``: single date column
-    or None."""
-    done: set[dt.date] = set()
-    if processed_days is not None:
-        done = {r[0] for r in processed_days.collect()}
-    targets = []
-    for delta in range(lateness_days, lateness_days + lookback_days):
-        d = today - dt.timedelta(days=delta)
-        if d not in done or delta == lateness_days:
-            targets.append(d)
-    return sorted(targets)
-
-
 def backfill(
     dates: Iterable[dt.date | str],
     run_day: Callable[[dt.date | str], DataFrame],

@@ -117,23 +117,29 @@ def _counted(spark: SparkSession, sf_dir: str, label: str, df: DataFrame) -> int
     return n
 
 
-def _scratch_dir(prefix: str) -> str:
-    """Scratch root for EXECUTED rows (stream checkpoints, staged file drops,
-    sink targets, bucketed-table locations). Honors $SPARK_GRAFT_SCRATCH;
-    defaults to /dev/shm when present — the RAM-backed stand-in for the fast
-    local NVMe a real cluster gives its checkpoint/scratch dirs (guide §6:
-    scratch I/O should never ride the slow root disk) — else falls back to
-    the system temp dir. Results are unaffected: these dirs hold per-call
-    intermediates that are created and deleted inside one callable."""
+def _scratch_root() -> str:
+    """The scratch root of every catalog row: $SPARK_GRAFT_SCRATCH, else
+    /dev/shm when present — the RAM-backed stand-in for the fast local NVMe
+    a real cluster gives its checkpoint/scratch dirs (scratch I/O should
+    never ride the slow root disk) — else the system temp dir."""
     import tempfile as _tf
 
     root = os.environ.get("SPARK_GRAFT_SCRATCH")
     if root is None and os.path.isdir("/dev/shm"):
         root = "/dev/shm/spark-graft-scratch"
-    if root:
-        os.makedirs(root, exist_ok=True)
-        return _tf.mkdtemp(prefix=prefix, dir=root)
-    return _tf.mkdtemp(prefix=prefix)
+    root = root or _tf.gettempdir()
+    os.makedirs(root, exist_ok=True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh dir under :func:`_scratch_root` for an EXECUTED row (stream
+    checkpoints, staged file drops, sink targets, bucketed-table
+    locations). Results are unaffected: these dirs hold per-call
+    intermediates that are created and deleted inside one callable."""
+    import tempfile as _tf
+
+    return _tf.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2429,16 +2435,9 @@ def _materialize_mart(
 
 
 def _session_mart_root(spark: SparkSession) -> str:
-    """Session-scoped scratch root for materialized side marts (removed at
-    interpreter exit; /dev/shm or $SPARK_GRAFT_SCRATCH, like _scratch_dir)."""
-    root = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if root is None and os.path.isdir("/dev/shm"):
-        root = "/dev/shm/spark-graft-scratch"
-    if root is None:
-        import tempfile as _tf
-
-        root = _tf.gettempdir()
-    mart_root = os.path.join(root, f"marts-{spark.sparkContext.applicationId}")
+    """Session-scoped dir under :func:`_scratch_root` for materialized side
+    marts (removed at interpreter exit)."""
+    mart_root = os.path.join(_scratch_root(), f"marts-{spark.sparkContext.applicationId}")
     if mart_root not in _MART_ROOTS_CLEANUP:
         import atexit
         import shutil as _shutil
@@ -12353,7 +12352,7 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from .operators.cdc import cdc_compact_log
-    from .sources.sinks import _write_and_swap
+    from .sources.sinks import overwrite_path
     from .streaming.runner import read_json_stream, run_batches, stream_shuffle_partitions
 
     base = _scratch_dir(prefix="stream_cdc_")
@@ -12403,7 +12402,7 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             cur = spark.read.parquet(target)
-            _write_and_swap(compact(cur.unionByName(batch_df)), target)
+            overwrite_path(compact(cur.unionByName(batch_df)), target)
 
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         with stream_shuffle_partitions(spark, 2):

@@ -237,7 +237,7 @@ def diff_against_baseline(
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan-audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan-audit", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm every shared side mart FIRST (same setup step as bench.py):

@@ -147,9 +147,7 @@ def run_backfill(
     """Resumable multi-day consolidation (the reference's commented backfill
     loop, ``tarefa_consolidar_dados.php:33-49``, made first-class): process
     every day in [start, end] IN ORDER, journaling each completed day to
-    ``marts/_backfill_journal`` (single ``day`` column — the same
-    processed-days shape ``streaming.runner.incremental_day_targets``
-    consumes). A crashed run resumes where it stopped: already-journaled
+    ``marts/_backfill_journal`` (single ``day`` column). A crashed run resumes where it stopped: already-journaled
     days are skipped, and the in-flight day re-runs safely because every
     sink is a keyed upsert (the journal row is appended only AFTER the day
     completes — at-least-once day execution, exactly-once day effects).

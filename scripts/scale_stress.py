@@ -14,12 +14,14 @@ dims stay fixed, exactly how a real corpus grows:
 
 Then runs the two heaviest families at sf0.1 and at the synthetic sf1
 under IDENTICAL confs and reports wall seconds + shuffle-write bytes per
-query (from the Spark UI REST API — the same numbers the History Server
-would show on a cluster). The claim under test: wall and shuffle grow
-~linearly (≤ ~10-15× for 10× data; the near-dup verify legs may exceed
-that bound by design, since their PAIR workload grows superlinearly with
-duplication factor — that expansion is the documented candidate-pair
-semantics, not a plan defect).
+query (from Spark's status store, read as perfbench does — the same
+numbers the History Server would show on a cluster). The session is
+``scripts/measure.py``'s, sized to the host's cores like every other
+tool's, and the artifact records its core count. The claim under test:
+wall and shuffle grow ~linearly (≤ ~10-15× for 10× data; the near-dup
+verify legs may exceed that bound by design, since their PAIR workload
+grows superlinearly with duplication factor — that expansion is the
+documented candidate-pair semantics, not a plan defect).
 
 Usage: python scripts/scale_stress.py [--copies 10] [--keep] [--json OUT]
 Prints a markdown table; with ``--json`` also writes a structured artifact
@@ -40,29 +42,15 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import measure  # noqa: E402
+from perfbench.workloads import shuffle_written  # noqa: E402
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 SF_SRC = "/root/testdata/sf0.1"
 KEY_OFFSET = 100_000_000
-
-
-def build_session() -> SparkSession:
-    return (
-        SparkSession.builder.master("local[16]")
-        .appName("scale-stress")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "America/Sao_Paulo")
-        .getOrCreate()
-    )
 
 
 def synthesize(spark: SparkSession, out_dir: str, copies: int, *, near_dup: bool) -> None:
@@ -117,19 +105,6 @@ def synthesize(spark: SparkSession, out_dir: str, copies: int, *, near_dup: bool
         shutil.copyfile(
             os.path.join(SF_SRC, f"{dim}.parquet"), os.path.join(out_dir, f"{dim}.parquet")
         )
-
-
-def shuffle_write_bytes(spark: SparkSession) -> int:
-    """Total shuffle-write bytes across completed stages, via the UI REST
-    API (same source as the History Server on a real cluster)."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages?status=complete") as r:
-            stages = json.load(r)
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    except Exception:
-        return -1
 
 
 # Written adjudication per stressed family: what growth the DESIGN predicts
@@ -236,8 +211,7 @@ def main() -> int:
     args = ap.parse_args()
     load0 = round(os.getloadavg()[0], 2)
 
-    spark = build_session()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, cpus = measure.session("scale-stress")
     import __spark_entry__ as entrymod  # noqa: F401  (registers catalog)
     from pipeline_etl_ecommerce_spark import testdata_queries as tq
 
@@ -284,13 +258,11 @@ def main() -> int:
     for name in queries:
         rec = {"query": name}
         for label, sf_dir in (("sf0.1", SF_SRC), ("sf1", sf1_dir)):
-            sw0 = shuffle_write_bytes(spark)
+            sw0 = sum(shuffle_written(spark).values())
             [wall] = measure.time_row(spark, sf_dir, name, 1)
-            sw1 = shuffle_write_bytes(spark)
+            sw1 = sum(shuffle_written(spark).values())
             rec[f"{label}_wall_s"] = round(wall, 2)
-            rec[f"{label}_shuffle_mb"] = (
-                round((sw1 - sw0) / 1e6, 1) if sw0 >= 0 and sw1 >= 0 else None
-            )
+            rec[f"{label}_shuffle_mb"] = round((sw1 - sw0) / 1e6, 1)
             print(f"  {name} @ {label}: {wall:.2f}s shuffleΔ={rec[f'{label}_shuffle_mb']}MB")
         rec["wall_ratio"] = (
             round(rec["sf1_wall_s"] / rec["sf0.1_wall_s"], 2) if rec["sf0.1_wall_s"] else None
@@ -524,6 +496,7 @@ def main() -> int:
             "span_postings": span_stats,
             "bitext_candidates": bitext_stats,
             "copies": args.copies,
+            "cpus": cpus,
             "source_sf_dir": SF_SRC,
             "loadavg_start": load0,
             "loadavg_end": round(os.getloadavg()[0], 2),

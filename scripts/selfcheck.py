@@ -181,7 +181,7 @@ def main() -> int:
         print("[mode] HOSTILE session: UTC tz, default confs")
         spark = hostile_spark()
     else:
-        spark = get_spark("selfcheck", cpus=8, shuffle_partitions=8)
+        spark = get_spark("selfcheck", cpus=8)
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")

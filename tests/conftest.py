@@ -24,7 +24,7 @@ OFF_TS = dt.datetime(2025, 8, 9, 23, 59, 0)  # off-day row, must be filtered
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pipeline-etl-ecommerce-tests", cpus=4, shuffle_partitions=4)
+    s = get_spark("pipeline-etl-ecommerce-tests", cpus=4)
     yield s
 
 

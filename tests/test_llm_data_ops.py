@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline_etl_ecommerce_spark.operators.dedupe import (
-    exact_dedup,
     minhash_band_keys,
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
@@ -20,7 +19,7 @@ from pipeline_etl_ecommerce_spark.operators.multimodal import (
     documents_as_media,
     extract_features,
 )
-from pipeline_etl_ecommerce_spark.operators.similarity import cosine_topk, lsh_bucket_topk
+from pipeline_etl_ecommerce_spark.operators.similarity import cosine_topk
 from pipeline_etl_ecommerce_spark.operators.textstats import lang_id, quality_features
 
 
@@ -34,12 +33,6 @@ def docs(spark):
         (5, "completamente diferente texto sobre otra cosa que nada tiene"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(docs):
-    got = {r["canonical_id"]: r["n_copies"] for r in exact_dedup(docs, "text", "doc_id").collect()}
-    assert got[1] == 2  # docs 1+2 collapse
-    assert got[3] == 1
 
 
 def test_minhash_lsh_finds_near_dups(docs):
@@ -81,17 +74,6 @@ def test_cosine_topk_exact(spark):
     top = {r["cand_id"]: r["cos_sim"] for r in got}
     assert top[2] == pytest.approx(0.9 / math.sqrt(0.82), abs=1e-6)
     assert top[4] == -1.0
-
-
-def test_lsh_bucket_topk_recall_on_aligned_vectors(spark):
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.99, 0.05]), (3, [-1.0, -0.1])],
-        "vec_id long, embedding array<float>",
-    )
-    planes = [[1.0, 0.0], [0.0, 1.0]]
-    got = lsh_bucket_topk(emb, emb.filter(F.col("vec_id") == 1), planes, k=3).collect()
-    cands = {r["cand_id"] for r in got}
-    assert cands == {2}  # same bucket as query; opposite vector pruned
 
 
 def test_lang_id(docs):
@@ -446,10 +428,7 @@ def test_pagerank_hub_outranks_leaves_and_is_layout_independent(spark):
 
 
 def test_bpe_learns_classic_merges_and_tokenizes(spark):
-    from pipeline_etl_ecommerce_spark.operators.bpe import (
-        apply_bpe_merges,
-        learn_bpe_merges,
-    )
+    from pipeline_etl_ecommerce_spark.operators.bpe import bpe_tokens_expr, learn_bpe_merges, split_words
 
     df = spark.createDataFrame(
         [(1, "low lower lowest low low"), (2, "new newer newest new")],
@@ -463,7 +442,7 @@ def test_bpe_learns_classic_merges_and_tokenizes(spark):
     assert rows[0]["pair_count"] == 5 and all(r["pair_count"] >= 1 for r in rows)
     toks = {
         r["doc_id"]: r["tokens"]
-        for r in apply_bpe_merges(df, merges, "text", "doc_id").collect()
+        for r in df.select("doc_id", bpe_tokens_expr(split_words("text"), merges).alias("tokens")).collect()
     }
     # full words that reached a single symbol tokenize to one token, and
     # token order follows word order

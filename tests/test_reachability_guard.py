@@ -4,7 +4,10 @@ reached from something that runs, or is listed in ``KEPT`` with a reason.
 The roots are what the engine really runs: ``scripts/``, ``bench.py``,
 ``__spark_entry__.py``, ``perfbench/`` (outside its tests), and every
 package module's top-level code (imports, constants, the ``@register``
-catalog rows and their decorators). From the roots the test follows every
+catalog rows and their decorators) except a package ``__init__.py``'s: its
+``from .x import y`` and ``__all__`` only name what the package offers, so
+a function whose one mention is its own re-export is not reached by it.
+From the roots the test follows every
 ``Name``, ``Attribute``, import alias and identifier-shaped string constant
 to a fixpoint: a top-level definition whose name was met is reached, and
 its whole body (decorators, defaults, methods) is followed in turn. Tests
@@ -58,6 +61,7 @@ KEPT = {
     ("operators/jpegcodec.py", "_fdct"): "test oracle: the scalar DCT _fdct_batch must match bit for bit",
     ("operators/jpegcodec.py", "_idct"): "test oracle: the scalar inverse DCT _idct_batch must match bit for bit",
     ("operators/jpegcodec.py", "_round_half_away"): "test oracle: the scalar rounding _rha_np must match",
+    ("sources/sinks.py", "merge_upsert"): "test oracle: the JDBC MERGE's end state must equal it",
     ("sources/sinks.py", "writer_lock"): "safety: excludes a second writer of one mart path",
     ("sources/sinks.py", "WriterLockHeld"): "safety: raised by writer_lock(blocking=False)",
     ("streaming/runner.py", "idempotent_foreach_batch"): "safety: exactly-once wrapper for a run_batches sink",
@@ -99,7 +103,7 @@ def _definitions() -> tuple[dict[tuple[str, str], ast.AST], set[str]]:
                 seen |= decorators
                 if "register" in decorators:  # a catalog row: the catalog runs it
                     seen.add(stmt.name)
-            else:
+            elif path.name != "__init__.py":
                 seen |= _names(stmt)
     return defs, seen
 

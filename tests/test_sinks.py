@@ -13,7 +13,7 @@ from pipeline_etl_ecommerce_spark.sources.sinks import (
     insert_if_absent,
     keyed_update,
     merge_upsert,
-    overwrite_date_partitions,
+    overwrite_path,
     read_mart,
     delete_keys_from_path,
     replace_groups,
@@ -471,17 +471,81 @@ def test_staging_of_a_killed_writer_is_invisible_and_swept(spark, tmp_path):
     assert [f for f in os.listdir(path) if not f.endswith(".parquet")] == []
 
 
-def test_overwrite_date_partitions_touches_only_delta_days(spark, tmp_path):
-    path = os.path.join(str(tmp_path), "daily")
-    base = spark.createDataFrame(
-        [("2025-08-01", "a", 1), ("2025-08-02", "b", 2)], "d string, k string, v int"
-    )
-    base.write.partitionBy("d").parquet(path)
-    delta = spark.createDataFrame([("2025-08-02", "b", 99)], "d string, k string, v int")
-    overwrite_date_partitions(delta, path, "d")
-    # partition values are type-inferred on read (string -> date), so compare as str
-    got = {(str(r["d"]), r["k"]): r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {("2025-08-01", "a"): 1, ("2025-08-02", "b"): 99}
+def _leftovers(path):
+    """Everything in the mart but its data files and Hive partition dirs."""
+    return [n for _, dirs, files in os.walk(path) for n in dirs + files if not (n.endswith(".parquet") or "=" in n)]
+
+
+def _set_b_to_20(spark, path, partition_by=None):
+    """Overwrite the mart with its own rows, b's value set to 20: a frame
+    that reads the mart it replaces. Returns the rows written."""
+    mart = read_mart(spark, path)
+    new = mart.withColumn("v", F.when(F.col("k") == "b", 20).otherwise(F.col("v")))
+    return overwrite_path(new.coalesce(1), path, partition_by=partition_by)
+
+
+def test_overwrite_path_of_a_frame_reading_its_own_mart(spark, tmp_path):
+    """The new rows are staged in full before the old files go, so they may
+    be computed from the mart itself. A plain ``mode("overwrite")`` deleted
+    the mart before its read ran: the write failed and no data file was
+    left."""
+    path = str(tmp_path / "mart")
+    assert overwrite_path(_df(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]), path) == 3
+    assert _set_b_to_20(spark, path) == 3
+    assert _mart_rows(spark, path) == _AFTER
+    assert _leftovers(path) == []
+
+
+# the filesystem steps of one overwrite commit: the flat mart holds one
+# file, the Hive mart one file in each of p=0 and p=1
+_OVERWRITE_STEPS = {
+    "flat": [("write-journal", "replace"), ("move", "rename"), ("delete", "remove"), ("drop-journal", "remove")],
+    "hive": [("write-journal", "replace"), ("move-p0", "rename"), ("move-p1", "rename"),
+             ("delete-p0", "remove"), ("delete-p1", "remove"), ("drop-journal", "remove")],
+}
+
+
+@pytest.mark.parametrize(
+    "layout,crash_at",
+    [(layout, i) for layout, steps in _OVERWRITE_STEPS.items() for i in range(len(steps))],
+    ids=[f"{layout}-{name}" for layout, steps in _OVERWRITE_STEPS.items() for name, _ in steps],
+)
+def test_a_crash_at_any_overwrite_step_leaves_the_before_or_the_after_rows(spark, tmp_path, monkeypatch, layout, crash_at):
+    """A self-reading overwrite of a flat mart and of a mart partitioned by
+    ``p`` crashes at one step of its commit. The next read sees exactly the
+    before rows or the after rows, and re-running the same overwrite gives
+    the after rows and sweeps every journal and staging entry."""
+    path = str(tmp_path / "mart")
+    partition_by = ["p"] if layout == "hive" else None
+    rows = _df(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]).withColumn("p", (F.col("k") != "a").cast("int"))
+    overwrite_path(rows.coalesce(1), path, partition_by=partition_by)
+    seen = _steps_on(monkeypatch, path, crash_at)
+    with pytest.raises(_Crash):
+        _set_b_to_20(spark, path, partition_by)
+    monkeypatch.undo()
+    assert seen == [fn for _, fn in _OVERWRITE_STEPS[layout][: crash_at + 1]]
+    assert _mart_rows(spark, path) == (_BEFORE if crash_at == 0 else _AFTER)
+    assert _set_b_to_20(spark, path, partition_by) == 3
+    assert _mart_rows(spark, path) == _AFTER
+    assert _leftovers(path) == []
+
+
+def test_overwrite_path_partitioned_keeps_only_the_live_partitions(spark, tmp_path):
+    """A re-overwrite into fewer partitions reads back only the live ones
+    and leaves no emptied partition dir; one without rows leaves a mart
+    that reads as 0 rows with its columns."""
+    path = str(tmp_path / "shards")
+    rows = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "shard int, v string")
+    assert overwrite_path(rows, path, partition_by=["shard"]) == 3
+    assert sorted(os.listdir(path)) == ["shard=0", "shard=1", "shard=2"]
+    kept = read_mart(spark, path).filter(F.col("shard") == 0)
+    assert overwrite_path(kept, path, partition_by=["shard"]) == 1
+    assert [(r.shard, r.v) for r in read_mart(spark, path).collect()] == [(0, "a")]
+    assert os.listdir(path) == ["shard=0"]
+    assert overwrite_path(read_mart(spark, path).filter(F.lit(False)), path, partition_by=["shard"]) == 0
+    empty = read_mart(spark, path)
+    assert empty.count() == 0 and sorted(empty.columns) == ["shard", "v"]
+    assert _leftovers(path) == []
 
 
 def test_merge_upsert_null_safe_keys(spark):

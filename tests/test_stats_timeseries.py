@@ -180,26 +180,3 @@ def test_group_mad_ignores_outliers(spark):
     rows = [("a", float(v)) for v in range(1, 10)] + [("a", 10_000.0)]
     got = group_mad(spark.createDataFrame(rows, "g string, x double"), ["g"], "x").collect()[0]
     assert got["n"] == 10 and got["median"] == 5.0 and got["mad"] == 2.0
-
-
-def test_hll_mart_merge_is_exact_vs_direct_sketch(spark):
-    from pipeline_etl_ecommerce_spark.operators.sketches import (
-        build_hll_mart,
-        merge_hll_estimate,
-    )
-
-    rows = [(d % 5, (d * 7) % 400) for d in range(5000)]
-    df = spark.createDataFrame(rows, "day int, user long")
-    # per-day sketch mart, then merged across days
-    mart = build_hll_mart(df, ["day"], "user")
-    merged = merge_hll_estimate(mart, []).collect()[0]["approx_distinct"]
-    # sketching the union directly: the union path may route registers
-    # through a different mode, so the estimates are close but not
-    # byte-identical — both must sit in the sketch's error envelope
-    direct = merge_hll_estimate(build_hll_mart(df, [], "user"), []).collect()[0][
-        "approx_distinct"
-    ]
-    exact = df.select("user").distinct().count()
-    assert abs(merged - exact) / exact < 0.05
-    assert abs(direct - exact) / exact < 0.05
-    assert abs(merged - direct) / exact < 0.05

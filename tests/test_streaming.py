@@ -15,7 +15,6 @@ from pipeline_etl_ecommerce_spark.streaming.runner import (
     backfill,
     daily_rollup_stream,
     dedup_stream,
-    incremental_day_targets,
     read_json_stream,
     run_upsert_stream,
 )
@@ -125,17 +124,6 @@ def test_dedup_stream_drops_repeated_keys(spark, tmp_path):
     q.awaitTermination(120)
     rows = spark.read.parquet(out_dir).collect()
     assert sorted(r["event_id"] for r in rows) == [1, 2]
-
-
-def test_incremental_day_targets(spark):
-    today = dt.date(2025, 8, 13)
-    # nothing processed: settled day D-3 plus the whole lookback window
-    targets = incremental_day_targets(None, today=today, lateness_days=3, lookback_days=4)
-    assert targets == [dt.date(2025, 8, 7), dt.date(2025, 8, 8), dt.date(2025, 8, 9), dt.date(2025, 8, 10)]
-    # with history: only unprocessed days + always the settled day
-    done = spark.createDataFrame([(dt.date(2025, 8, 9),), (dt.date(2025, 8, 8),)], "d date")
-    targets2 = incremental_day_targets(done, today=today, lateness_days=3, lookback_days=4)
-    assert targets2 == [dt.date(2025, 8, 7), dt.date(2025, 8, 10)]
 
 
 def test_backfill_runner(spark, tmp_path):
