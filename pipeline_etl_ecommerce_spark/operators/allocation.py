@@ -113,7 +113,6 @@ def allocate_by_share(
     amount: str | Column,
     share: str | Column,
     out: str,
-    round_to: int | None = 2,
 ) -> DataFrame:
     """W6: per-group ratio allocation (the order-freight "rateio").
 
@@ -127,6 +126,4 @@ def allocate_by_share(
     w = Window.partitionBy(*keys)
     total = F.sum(share_c).over(w)
     alloc = F.when(total > 0, amount_c * share_c / total).otherwise(F.lit(0.0))
-    if round_to is not None:
-        alloc = F.round(alloc, round_to)
-    return df.withColumn(out, alloc)
+    return df.withColumn(out, F.round(alloc, 2))

@@ -89,14 +89,13 @@ def semantic_contamination(
     corpus: DataFrame,
     eval_set: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.9,
 ) -> DataFrame:
     """Embedding-proximity decontamination — the semantic sibling of the
-    n-gram ``contamination_report``: a corpus item whose embedding is
-    within ``threshold`` cosine of ANY eval-set item is contaminated even
-    when no exact n-gram survives paraphrase. Returns one row per
+    n-gram ``contamination_report``: both frames carry ``(vec_id,
+    embedding)``, and a corpus item whose embedding is within ``threshold``
+    cosine of ANY eval-set item is contaminated even when no exact n-gram
+    survives paraphrase. Returns one row per
     contaminated corpus item: ``(vec_id, nearest_eval_id, max_eval_sim)``
     with ties on similarity broken toward the lower eval id.
 
@@ -109,24 +108,24 @@ def semantic_contamination(
     contract as the knn family)."""
     from .similarity import _dvec, cosine
 
-    e = eval_set.select(F.col(id_col).alias("eval_id"), _dvec(F.col(vec_col)).alias("qv"))
-    c = corpus.select(F.col(id_col), _dvec(F.col(vec_col)).alias("cv"))
+    e = eval_set.select(F.col("vec_id").alias("eval_id"), _dvec(F.col("embedding")).alias("qv"))
+    c = corpus.select("vec_id", _dvec(F.col("embedding")).alias("cv"))
     scored = (
         c.crossJoin(F.broadcast(e))
         .select(
-            id_col,
+            "vec_id",
             "eval_id",
             F.round(cosine(F.col("cv"), F.col("qv")), 6).alias("sim"),
         )
         .filter(F.col("sim") >= F.lit(threshold))
     )
-    best = scored.groupBy(id_col).agg(
+    best = scored.groupBy("vec_id").agg(
         F.max_by(
             F.struct(F.col("sim"), (-F.col("eval_id")).alias("neg_eval")), F.struct(F.col("sim"), (-F.col("eval_id")).alias("neg_eval"))
         ).alias("top")
     )
     return best.select(
-        id_col,
+        "vec_id",
         (-F.col("top.neg_eval")).cast("long").alias("nearest_eval_id"),
         F.col("top.sim").alias("max_eval_sim"),
     )

@@ -247,18 +247,16 @@ def verify_candidate_pairs(
     *,
     k: int = 3,
     threshold: float = 0.6,
-    broadcast_grams: bool = True,
 ) -> DataFrame:
     """LSH verification stage: exact k-gram Jaccard computed ONLY for the
     candidate pairs (the scalable shape — candidates are ~linear in corpus
     size, so verification never goes quadratic). Returns pairs with
     jaccard >= threshold.
 
-    ``broadcast_grams`` ships the per-doc gram sets to every executor instead
-    of shuffling a multi-KB array for each side of every candidate pair —
-    the dominant cost otherwise (measured 18s -> ~4s at sf0.1). Correct while
-    the gram table of CANDIDATE docs fits the broadcast budget; for corpora
-    past that, set False for the shuffle-join plan."""
+    The per-doc gram sets are broadcast to every executor instead of
+    shuffling a multi-KB array for each side of every candidate pair — the
+    dominant cost otherwise (measured 18s -> ~4s at sf0.1). Correct while
+    the gram table of CANDIDATE docs fits the broadcast budget."""
     pairs = pairs.persist()
     # only docs that appear in a candidate pair need gram sets — semi-join the
     # corpus down BEFORE shingling so the (expensive) gram build and the
@@ -268,13 +266,11 @@ def verify_candidate_pairs(
         .unionByName(pairs.select(F.col("doc_b").alias("gid")))
         .distinct()
     )
-    grams = (
+    grams = F.broadcast(
         df.join(cand_ids, F.col(id_col) == F.col("gid"), "left_semi")
         .select(F.col(id_col).alias("gid"), F.array_distinct(char_shingles(text_col, k)).alias("grams"))
         .persist()  # read twice (both sides of the pair join): shingle once
     )
-    if broadcast_grams:
-        grams = F.broadcast(grams)
     ga = grams.select(F.col("gid").alias("doc_a"), F.col("grams").alias("grams_a"))
     gb = grams.select(F.col("gid").alias("doc_b"), F.col("grams").alias("grams_b"))
     inter = F.size(F.array_intersect(F.col("grams_a"), F.col("grams_b")))
@@ -1088,12 +1084,12 @@ def _bloom_pos(hash_col: Column, i: int, n_bits: int) -> Column:
 
 def bloom_bitmap(
     hashes: DataFrame,
-    hash_col: str = "text_hash",
     *,
     n_bits: int = BLOOM_BITS_DEFAULT,
     n_hashes: int = BLOOM_HASHES_DEFAULT,
 ) -> DataFrame:
-    """(word_idx, bits) bitmap rows packing 32 positions per BIGINT word.
+    """(word_idx, bits) bitmap rows of the ``text_hash`` column, packing 32
+    positions per BIGINT word.
 
     32, not 64: shifting into bit 63 overflows signed-int64 shift on some
     engines (DuckDB rejects ``1::BIGINT << 63``), and the doubled row count
@@ -1101,7 +1097,7 @@ def bloom_bitmap(
     combinable bit_or groupBy; absent words are implicit zeros."""
     pos = hashes.select(
         F.explode(
-            F.array(*[_bloom_pos(F.col(hash_col), i, n_bits) for i in range(n_hashes)])
+            F.array(*[_bloom_pos(F.col("text_hash"), i, n_bits) for i in range(n_hashes)])
         ).alias("pos")
     )
     return (

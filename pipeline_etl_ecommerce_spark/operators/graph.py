@@ -87,13 +87,11 @@ def bfs_distances(
     seed: DataFrame,
     *,
     max_depth: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """Level-synchronous BFS over an undirected edge list: hop distances
-    from the nodes in ``seed`` (a frame with one ``node`` column whose
-    rows are DISTINCT — duplicate seed rows would duplicate their dist-0
-    output rows), capped at ``max_depth``. Returns ``(node, dist)`` for
+    """Level-synchronous BFS over an undirected ``(src, dst)`` edge list:
+    hop distances from the nodes in ``seed`` (a frame with one ``node``
+    column whose rows are DISTINCT — duplicate seed rows would duplicate
+    their dist-0 output rows), capped at ``max_depth``. Returns ``(node, dist)`` for
     every reached node, seeds included at 0. Multi-seed frames compute
     distance-from-nearest-seed (used by the disjoint-union property test
     to solve many graphs in one job).
@@ -112,8 +110,8 @@ def bfs_distances(
     # rationale): every level joins it, and without the pin each level
     # re-derives it from the pair list's upstream lineage
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .localCheckpoint(eager=False)
     )
     dist = seed.select("node", F.lit(0).alias("dist"))
@@ -134,7 +132,7 @@ def bfs_distances(
     return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
-def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Distributed triangle enumeration via ordered wedge closure: with
     every edge stored once as ``src < dst``, join edges (a,b)+(b,c) into
     wedges and close them against (a,c) — each triangle (a<b<c) is emitted
@@ -151,9 +149,9 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     are row-for-row interchangeable under the same oracle.
 
     Output columns: node_a < node_b < node_c, one row per triangle."""
-    e1 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e2 = edges.select(F.col(src).alias("b"), F.col(dst).alias("c"))
-    e3 = edges.select(F.col(src).alias("a"), F.col(dst).alias("c"))
+    e1 = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    e3 = edges.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     wedges = e1.join(e2, "b")
     return (
         wedges.join(e3, ["a", "c"])
@@ -165,7 +163,7 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     )
 
 
-def triangles_degree_ordered(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles_degree_ordered(edges: DataFrame) -> DataFrame:
     """Triangle enumeration with the power-law hub guard (r9 — the
     optimization :func:`triangles` documents): re-orient every undirected
     edge from lower to higher rank under the (degree, id) TOTAL order
@@ -182,7 +180,7 @@ def triangles_degree_ordered(edges: DataFrame, src: str = "src", dst: str = "dst
     equi-joins (the degree table is |V| rows — broadcastable); the payoff
     is the wedge join's output, which is the term that explodes on skewed
     graphs."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))

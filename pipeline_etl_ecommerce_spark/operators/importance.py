@@ -11,9 +11,9 @@ Spark-first shape, end to end in whole-stage codegen:
 1. one token explode over the corpus (the only fan-out);
 2. hashed-bucket counts for raw and target in a SINGLE pass — the target
    membership is a flag summed alongside the raw count, so the two
-   distributions cost one aggregate over ``n_buckets`` rows;
+   distributions cost one aggregate over ``N_BUCKETS`` rows;
 3. the per-bucket likelihood ratio table (Laplace-smoothed) is tiny
-   (``n_buckets`` rows) and BROADCASTS onto the token stream;
+   (``N_BUCKETS`` rows) and BROADCASTS onto the token stream;
 4. per-document reduce — map-side partial agg, one shuffle keyed on the
    doc id.
 
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+N_BUCKETS = 64  # hashed unigram buckets per distribution
 
 
 def _widen(df: DataFrame) -> DataFrame:
@@ -82,10 +84,10 @@ def _tokens(df: DataFrame, text_col: str, id_col: str, extra: list[str]) -> Data
     )
 
 
-def _bucket(col: Column, n_buckets: int) -> Column:
+def _bucket(col: Column) -> Column:
     # first 6 md5 hexits -> integer -> bucket; exact in any engine
     return (F.conv(F.substring(F.md5(col.cast("binary")), 1, 6), 16, 10).cast("long")
-            % F.lit(n_buckets))
+            % F.lit(N_BUCKETS))
 
 
 def hashed_bucket_distribution(
@@ -93,15 +95,13 @@ def hashed_bucket_distribution(
     text_col: str,
     id_col: str,
     target_pred: Column,
-    *,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """One-pass raw + target hashed-unigram bucket counts:
     (bucket, raw_count, target_count). ``target_pred`` marks the rows of
     the target corpus (e.g. a trusted high-quality slice)."""
     toks = _tokens(df.withColumn("__is_t", target_pred.cast("long")), text_col, id_col, ["__is_t"])
     return (
-        toks.withColumn("bucket", _bucket(F.col("tok"), n_buckets))
+        toks.withColumn("bucket", _bucket(F.col("tok")))
         .groupBy("bucket")
         .agg(
             F.count("*").alias("raw_count"),
@@ -115,8 +115,6 @@ def dsir_importance_weights(
     text_col: str,
     id_col: str,
     target_pred: Column,
-    *,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Per-document importance weight: mean Laplace-smoothed
     target/raw likelihood ratio of the document's hashed unigram buckets.
@@ -125,15 +123,13 @@ def dsir_importance_weights(
     loop (weight ∝ p_target / p_raw, exactly the paper's estimator with a
     mean-of-ratios aggregation instead of sum-of-logs; see module doc)."""
     df = _widen(df)
-    dist = hashed_bucket_distribution(
-        df, text_col, id_col, target_pred, n_buckets=n_buckets
-    )
-    # totals over n_buckets rows: a scalar-sized cross join both engines
+    dist = hashed_bucket_distribution(df, text_col, id_col, target_pred)
+    # totals over N_BUCKETS rows: a scalar-sized cross join both engines
     # plan as a broadcast nested loop over one row
     tot = dist.agg(
         F.sum("raw_count").alias("__nr"), F.sum("target_count").alias("__nt")
     )
-    b = F.lit(float(n_buckets))
+    b = F.lit(float(N_BUCKETS))
     ratio = dist.crossJoin(F.broadcast(tot)).select(
         "bucket",
         F.round(
@@ -142,9 +138,7 @@ def dsir_importance_weights(
             8,
         ).alias("bucket_ratio"),
     )
-    toks = _tokens(df, text_col, id_col, []).withColumn(
-        "bucket", _bucket(F.col("tok"), n_buckets)
-    )
+    toks = _tokens(df, text_col, id_col, []).withColumn("bucket", _bucket(F.col("tok")))
     return (
         toks.join(F.broadcast(ratio), "bucket")
         .groupBy(id_col)

@@ -28,9 +28,9 @@ from .ranking import rank_per_group, top_k_per_group
 from .similarity import _dvec, _ivf_probes, _top_k_by_cos_sim, dot, norm
 
 
-def adaptive_nprobe(k_clusters: int, *, probe_fraction: float = 3 / 8, floor: int = 3) -> int:
+def adaptive_nprobe(k_clusters: int) -> int:
     """Probe count that keeps the probed FRACTION of the corpus constant as
-    the coarse quantizer's k scales: ``max(floor, ceil(k * probe_fraction))``.
+    the coarse quantizer's k scales: ``max(3, ceil(k * 3/8))``.
 
     Why: the quantizer shared with SemDeDup scales k ∝ n (constant cluster
     size — the pair-budget contract), so a FIXED nprobe probes a shrinking
@@ -42,14 +42,14 @@ def adaptive_nprobe(k_clusters: int, *, probe_fraction: float = 3 / 8, floor: in
     (:func:`sublinear_k`) with spilled lists and nprobe ≈ sqrt(k) is the
     DEFAULT search-only path since r7; this constant-fraction helper
     remains for searches that piggyback on the dedup-shared quantizer.
-    ``probe_fraction`` defaults to the family's pinned 3-of-8. The ceil is
+    3-of-8 is the family's pinned fraction. The ceil is
     exact cross-engine: k * 3/8 multiplies an exact int by a power-of-two
     dyadic, so the double is exact and CEIL is deterministic."""
     import math
 
     if k_clusters <= 0:
         raise ValueError("k_clusters must be positive")
-    return max(floor, math.ceil(k_clusters * probe_fraction))
+    return max(3, math.ceil(k_clusters * 3 / 8))
 
 
 def sublinear_k(n_vectors: int) -> int:
@@ -113,8 +113,6 @@ def ivfadc_topk(
     codebooks: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 2,
     nprobe: int = 3,
     k: int = 3,
@@ -127,7 +125,7 @@ def ivfadc_topk(
     appears in NEITHER stage. Composes the two persisted marts this
     module family already maintains: the (spilled) sublinear search lists
     (:func:`spilled_assignment` over a :func:`sublinear_k` quantizer) and the PQ codes/codebooks
-    (``operators/pq.py``).
+    (``operators/pq.py``). ``queries`` carries ``(vec_id, embedding)``.
 
     ``refine > 0`` adds the IVFADC+R stage (Jégou et al. 2011 §V): the
     ADC top-``refine`` shortlist per query is re-ranked by EXACT squared
@@ -149,12 +147,12 @@ def ivfadc_topk(
     from .pq import _subvec
 
     if dim is None:
-        dim = len(queries.select(F.col(vec_col)).first()[0])
+        dim = len(queries.select("embedding").first()[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub_dim = dim // m
 
-    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), _dvec(F.col("embedding")).alias("qv"))
     probe_scored = q.crossJoin(F.broadcast(centroids.select("cid", "cvec"))).select(
         "query_id", F.col("cid"), _sq_dist(F.col("qv"), F.col("cvec")).alias("d2")
     )
@@ -178,9 +176,9 @@ def ivfadc_topk(
         DataFrame.unionByName,
         [
             queries.select(
-                F.col(id_col).alias("query_id"),
+                F.col("vec_id").alias("query_id"),
                 F.lit(s).cast("int").alias("sub"),
-                _dvec(_subvec(vec_col, s, sub_dim)).alias("_q"),
+                _dvec(_subvec("embedding", s, sub_dim)).alias("_q"),
             )
             for s in range(m)
         ],
@@ -219,14 +217,13 @@ def ivf_search_pinned(
     centroids: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     nprobe: int = 3,
     k: int = 3,
     dedupe_candidates: bool = False,
 ) -> DataFrame:
     """Pinned IVF search over a PRECOMPUTED ``(_vid, _v, cid, ...)``
-    assignment and ``(cid, cvec)`` centroid table —
+    assignment and ``(cid, cvec)`` centroid table, for ``(vec_id, embedding)``
+    queries —
     the persisted-mart path: train once per corpus version
     (``clustering.centroids_table``), search any number of query batches
     without re-running Lloyd's per query. ``dedupe_candidates=True`` is
@@ -237,7 +234,7 @@ def ivf_search_pinned(
     lists = assigned.select(
         F.col("_vid").alias("cand_id"), F.col("_v").alias("cv"), F.col("cid").alias("cluster")
     )
-    probes = _ivf_probes(queries, centroids, vec_col=vec_col, id_col=id_col, nprobe=nprobe)
+    probes = _ivf_probes(queries, centroids, vec_col="embedding", id_col="vec_id", nprobe=nprobe)
     scored = (
         probes.join(lists, "cluster")  # inverted-list join replaces the cross join
         .filter(F.col("query_id") != F.col("cand_id"))

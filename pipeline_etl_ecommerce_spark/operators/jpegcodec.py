@@ -649,14 +649,15 @@ def encode_jpeg(
     )
 
 
-def encode_jpeg_gray(width: int, height: int, gray: bytes, *, quant: list[int] | None = None) -> bytes:
-    """Single-component (grayscale) baseline JPEG — the 1-component layout
-    real scanners/thumbnailers emit; exercises the decoder's ncomp=1 path."""
+def encode_jpeg_gray(width: int, height: int, gray: bytes) -> bytes:
+    """Single-component (grayscale) baseline JPEG with an all-ones quant
+    table — the 1-component layout real scanners/thumbnailers emit;
+    exercises the decoder's ncomp=1 path."""
     if len(gray) != width * height:
         raise ValueError("raster size mismatch")
     if width <= 0 or height <= 0 or width > 0xFFFF or height > 0xFFFF:
         raise ValueError("jpeg: bad dimensions")
-    ql = quant or [1] * 64
+    ql = [1] * 64
     plane = np.frombuffer(gray, dtype=np.uint8).reshape(height, width).astype(np.int64)
     pad = _pad_plane(plane, width, height, 8)
     dc_l = _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
@@ -1134,12 +1135,11 @@ def encode_jpeg_progressive(
     *,
     subsampling: str = "4:4:4",
     quant_luma: list[int] | None = None,
-    quant_chroma: list[int] | None = None,
 ) -> bytes:
     """Progressive (SOF2) encode of a top-down RGB raster. Same planes,
-    quant tables, and coefficient pipeline as :func:`encode_jpeg` — only
-    the entropy layer differs — so a progressive decode must land on the
-    bit-identical raster of the baseline round-trip."""
+    quant tables (all-ones chroma), and coefficient pipeline as
+    :func:`encode_jpeg` — only the entropy layer differs — so a progressive
+    decode must land on the bit-identical raster of the baseline round-trip."""
     if len(raster) != width * height * 3:
         raise ValueError("raster size mismatch")
     if width <= 0 or height <= 0 or width > 0xFFFF or height > 0xFFFF:
@@ -1147,7 +1147,7 @@ def encode_jpeg_progressive(
     if subsampling not in ("4:4:4", "4:2:2", "4:2:0"):
         raise ValueError("jpeg: subsampling must be 4:4:4, 4:2:2 or 4:2:0")
     ql = quant_luma or [1] * 64
-    qc = quant_chroma or [1] * 64
+    qc = [1] * 64
     ypad, cbpad, crpad, h1, v1 = _prep_planes(width, height, raster, subsampling)
     mcux = (width + 8 * h1 - 1) // (8 * h1)
     mcuy = (height + 8 * v1 - 1) // (8 * v1)

@@ -89,13 +89,12 @@ def write_zordered(
     *,
     bits: int = 16,
     target_files: int = 8,
-    mode: str = "overwrite",
     keep_key: bool = False,
 ) -> None:
-    """Rewrite ``df`` as ``target_files`` parquet files clustered on the
-    Z-curve of ``cols``: one range shuffle on the z-key, a local sort inside
-    each range. Each output file then holds a contiguous z-range — narrow
-    min/max on every participating column. ``keep_key=True`` persists the
+    """Rewrite ``df`` (overwriting ``path``) as ``target_files`` parquet
+    files clustered on the Z-curve of ``cols``: one range shuffle on the
+    z-key, a local sort inside each range. Each output file then holds a
+    contiguous z-range — narrow min/max on every participating column. ``keep_key=True`` persists the
     ``__zkey`` column so readers can range-filter on it directly; the
     default drops it."""
     keyed = df.withColumn("__zkey", zorder_key(cols, bits=bits))
@@ -104,7 +103,7 @@ def write_zordered(
     )
     if not keep_key:
         ranged = ranged.drop("__zkey")
-    ranged.write.mode(mode).parquet(path)
+    ranged.write.mode("overwrite").parquet(path)
 
 
 def recluster_zordered(

@@ -69,15 +69,14 @@ def perplexity_scores(
     model: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Score every document's character-trigram perplexity under ``model``
     (output of :func:`train_char_trigram_lm`).
 
-    Per trigram occurrence: logp = ln((n_tri + α) / (n_ctx + α·V)) with
-    unseen (ctx, nxt) → n_tri = 0 and unseen ctx → n_ctx = 0 (the add-α
-    mass handles both uniformly — an unseen context scores ln(1/V)).
+    Per trigram occurrence, with α = 0.5:
+    logp = ln((n_tri + α) / (n_ctx + α·V)) with unseen (ctx, nxt) →
+    n_tri = 0 and unseen ctx → n_ctx = 0 (the add-α mass handles both
+    uniformly — an unseen context scores ln(1/V)).
     Per document: ``avg_logp`` = mean logp, ``ppl`` = exp(−avg_logp),
     both rounded to 6dp (absorbs summation-order ulps, same contract as
     the BM25/tf-idf family). Documents shorter than 3 chars emit no
@@ -106,7 +105,7 @@ def perplexity_scores(
     grams = _trigram_stream(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col)), text_col, ["doc_id"]
     )
-    a = F.lit(float(alpha))
+    a = F.lit(0.5)
     logp = F.log(
         (F.coalesce(F.col("n_tri"), F.lit(0.0)) + a)
         / (F.coalesce(F.col("n_ctx"), F.lit(0.0)) + a * F.col("v_chars"))

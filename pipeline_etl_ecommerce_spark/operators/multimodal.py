@@ -252,18 +252,14 @@ def fake_resize(payload: bytes, width: int, height: int) -> dict:
     }
 
 
-def resize_media(media: DataFrame, *, width: int, height: int, kernel=fake_resize) -> DataFrame:
-    """Resize over binary payloads (:func:`row_kernel`): one output row per
-    input, carrying the resized payload's size/hash instead of the bytes
-    (project the heavy column away before anything shuffles). Every row,
-    ``decoder_unavailable`` ones included, carries the target dims."""
+def resize_media(media: DataFrame, *, width: int, height: int) -> DataFrame:
+    """Resize over binary payloads (:func:`row_kernel` over
+    :func:`fake_resize`): one output row per input, carrying the resized
+    payload's size/hash instead of the bytes (project the heavy column away
+    before anything shuffles). Every row carries the target dims."""
 
     def resize(_media_id, payload):
-        try:
-            r = kernel(payload, width, height)
-        except NotImplementedError:
-            r = {"resize_status": "decoder_unavailable"}
-        return r | {"width": width, "height": height}
+        return fake_resize(payload, width, height) | {"width": width, "height": height}
 
     return row_kernel(media, ["media_id", "payload"], resize, RESIZE_SCHEMA)
 
@@ -629,11 +625,12 @@ FRAME_STATS_SCHEMA = StructType(
 )
 
 
-def synth_stream_raster(media_id: int, frame_index: int, w: int = 4, h: int = 2) -> bytes:
-    """Frame ``frame_index`` of the deterministic per-id P6 stream: byte i is
-    ``(id*31 + frame*131 + i*7) % 256`` — SQL-replayable like synth_raster."""
+def synth_stream_raster(media_id: int, frame_index: int) -> bytes:
+    """Frame ``frame_index`` (4x2 RGB) of the deterministic per-id P6
+    stream: byte i is ``(id*31 + frame*131 + i*7) % 256`` — SQL-replayable
+    like synth_raster."""
     base = media_id * 31 + frame_index * 131
-    return bytes((base + i * 7) % 256 for i in range(w * h * 3))
+    return bytes((base + i * 7) % 256 for i in range(4 * 2 * 3))
 
 
 def synthesize_ppm_streams(media_ids: DataFrame) -> DataFrame:

@@ -46,10 +46,9 @@ def assemble_packs(
     token_col: str,
     *,
     shard_col: str | None = None,
-    separator: str = " ",
 ) -> DataFrame:
     """Materialize each pack as ONE training sequence: group by
-    (shard, pack_id), concatenate member texts in id order.
+    (shard, pack_id), join member texts with single spaces in id order.
 
     Order inside the pack must be deterministic and ``collect_list`` gives
     no ordering guarantee under a shuffle, so members are collected as
@@ -64,5 +63,5 @@ def assemble_packs(
     return packed.groupBy(*keys).agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col(token_col)).cast("long").alias("pack_tokens"),
-        F.concat_ws(separator, F.transform(members, lambda s: s["t"])).alias("packed_text"),
+        F.concat_ws(" ", F.transform(members, lambda s: s["t"])).alias("packed_text"),
     )

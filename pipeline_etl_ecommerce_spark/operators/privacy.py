@@ -69,19 +69,19 @@ def redact_documents(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def pii_redaction_sql(table: str = "documents", text_col: str = "text") -> str:
-    """DuckDB expression mirroring ``redact_pii`` (global-flag replaces,
-    same pattern order) — exported so oracle SQL never drifts from the
+def pii_redaction_sql() -> str:
+    """DuckDB expression over ``text`` mirroring ``redact_pii`` (global-flag
+    replaces, same pattern order) — exported so oracle SQL never drifts from the
     pattern table."""
-    expr = text_col
+    expr = "text"
     for _, pat, repl in PII_PATTERNS:
         expr = f"regexp_replace({expr}, '{pat}', '{repl}', 'g')"
     return expr
 
 
-def pseudonymize(df: DataFrame, cols: Sequence[str], *, salt: str, prefix_len: int = 16) -> DataFrame:
+def pseudonymize(df: DataFrame, cols: Sequence[str], *, salt: str) -> DataFrame:
     """Salted-hash pseudonymization: replace each identifier column with the
-    first ``prefix_len`` hex chars of sha256(salt || value) — stable joins
+    first 16 hex chars of sha256(salt || value) — stable joins
     across tables pseudonymized with the same salt, irreversible without
     it. NULLs stay NULL (a hashed NULL would silently mint a fake
     identity). Map-only; sha256 is whole-stage-codegen on the JVM."""
@@ -94,7 +94,7 @@ def pseudonymize(df: DataFrame, cols: Sequence[str], *, salt: str, prefix_len: i
                 F.substring(
                     F.sha2(F.concat(F.lit(salt), F.col(c).cast("string")), 256),
                     1,
-                    prefix_len,
+                    16,
                 ),
             ),
         )

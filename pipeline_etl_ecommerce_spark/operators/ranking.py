@@ -190,7 +190,6 @@ def rank_capture(
     partition_by: str | list[str] | None = None,
     rank_col: str = "posicao",
     page_size: int | None = None,
-    page_col: str = "pagina",
     limit: int | None = None,
 ) -> DataFrame:
     """W4: assign 1-based positions in a defined order, with optional page
@@ -203,5 +202,5 @@ def rank_capture(
     """
     out = rank_per_group(df, partition_by or [], order_by, rank_col=rank_col, k=limit)
     if page_size:
-        out = out.withColumn(page_col, ((F.col(rank_col) - 1) / F.lit(page_size)).cast("int") + 1)
+        out = out.withColumn("pagina", ((F.col(rank_col) - 1) / F.lit(page_size)).cast("int") + 1)
     return out

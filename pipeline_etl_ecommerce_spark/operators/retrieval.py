@@ -34,18 +34,15 @@ def bm25_scores(
     text_col: str,
     id_col: str,
     query_terms: list[str],
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 relevance of every document against ``query_terms``.
 
     idf uses the standard Robertson-Sparck Jones form
     ``ln(1 + (N - df + 0.5) / (df + 0.5))`` (always positive), tf
     saturation/length normalization the classic
-    ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``. Docs matching no term
-    are omitted (inner semantics — filter pipelines join back as needed).
-    Output: (doc_id, n_terms_matched, score)."""
+    ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))`` with k1 = 1.2, b = 0.75.
+    Docs matching no term are omitted (inner semantics — filter pipelines
+    join back as needed). Output: (doc_id, n_terms_matched, score)."""
     toks = _tokens(df, text_col, id_col)
     dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     # corpus constants: one tiny row, broadcast into the scoring join
@@ -60,6 +57,7 @@ def bm25_scores(
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    k1, b = 1.2, 0.75
     tf_part = (F.col("tf") * (k1 + 1)) / (
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
     )

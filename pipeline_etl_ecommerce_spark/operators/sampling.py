@@ -46,9 +46,8 @@ def deterministic_split(
     *,
     train: float = 0.8,
     val: float = 0.1,
-    split_col: str = "split",
 ) -> DataFrame:
-    """Assign every row to 'train' / 'val' / 'test' by identity hash.
+    """Set every row's ``split`` to 'train' / 'val' / 'test' by identity hash.
     Proportions are (train, val, 1 - train - val); assignment depends only
     on the row id, never on data layout or run order."""
     h = _hash8(F.col(id_col).cast("string"))
@@ -57,7 +56,7 @@ def deterministic_split(
         .when(h < _hex_threshold(train + val), "val")
         .otherwise("test")
     )
-    return df.withColumn(split_col, split)
+    return df.withColumn("split", split)
 
 
 def stratified_sample(

@@ -47,12 +47,11 @@ def score_documents(
     id_col: str,
     *,
     model: Callable[[pd.Series], pd.Series] = md5_stub_model,
-    high: float = 0.67,
-    low: float = 0.33,
 ) -> DataFrame:
     """Score every document with a batch model and bucket the scores
-    (``high`` / ``mid`` / ``low`` — the triage a model-filtered corpus
-    keeps / reviews / drops). Output: (doc_id, model_score, score_bucket).
+    (``high`` from 0.67 / ``mid`` from 0.33 / ``low`` — the triage a
+    model-filtered corpus keeps / reviews / drops). Output: (doc_id,
+    model_score, score_bucket).
 
     The projection inside the kernel is the important part at scale: the
     text enters the Arrow batch, the score leaves it — downstream stages
@@ -62,7 +61,7 @@ def score_documents(
         # a real kernel lazy-loads its weights here, once per task
         for pdf in batches:
             scores = model(pdf[text_col])
-            bucket = scores.map(lambda s: "high" if s >= high else ("mid" if s >= low else "low"))
+            bucket = scores.map(lambda s: "high" if s >= 0.67 else ("mid" if s >= 0.33 else "low"))
             yield pd.DataFrame(
                 {"doc_id": pdf[id_col], "model_score": scores, "score_bucket": bucket}
             )

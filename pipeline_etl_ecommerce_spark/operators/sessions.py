@@ -30,9 +30,8 @@ def sessionize(
     *,
     gap: int,
     tiebreak_cols: Sequence[str] = (),
-    session_col: str = "session_index",
 ) -> DataFrame:
-    """Assign a per-user session index (1-based) to every row.
+    """Assign a per-user ``session_index`` (1-based) to every row.
 
     A row starts a new session when it is the user's first row or when
     ``ts - previous_ts > gap`` (same unit as ``ts_col``). ``tiebreak_cols``
@@ -48,7 +47,7 @@ def sessionize(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn("__is_start", is_start).withColumn(
-        session_col, F.sum("__is_start").over(running).cast("long")
+        "session_index", F.sum("__is_start").over(running).cast("long")
     ).drop("__is_start")
 
 
@@ -90,12 +89,10 @@ def cohort_retention(
     events: DataFrame,
     user_col: str,
     date_col: str,
-    *,
-    user_count_col: str = "n_active",
 ) -> DataFrame:
     """Weekly cohort-retention triangle: users bucketed by the ISO week of
-    their FIRST event, counted distinct per (cohort_week, week_offset) of
-    later activity. ``date_col`` must be a DATE column.
+    their FIRST event, counted distinct (``n_active``) per (cohort_week,
+    week_offset) of later activity. ``date_col`` must be a DATE column.
 
     Scale shape: the first-event groupBy and the per-week activity distinct
     both shuffle on the user key, and the join that follows is co-partitioned
@@ -123,7 +120,7 @@ def cohort_retention(
             .cast("long")
             .alias("week_offset"),
         )
-        .agg(F.countDistinct(user_col).alias(user_count_col))
+        .agg(F.countDistinct(user_col).alias("n_active"))
     )
 
 

@@ -128,8 +128,6 @@ def margin_mined_pairs(
     side_a: DataFrame,
     side_b: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 4,
     tau: float = 1.1,
 ) -> DataFrame:
@@ -142,7 +140,8 @@ def margin_mined_pairs(
         margin(x, y) = 2·cos(x, y) / (avg_k cos(x, NN_B(x)) + avg_k cos(y, NN_A(y)))
 
     and x keeps its best-margin candidate when ``margin >= tau``. Returns
-    one row per mined source: ``(src_id, tgt_id, cos_sim, margin)``.
+    one row per mined source: ``(src_id, tgt_id, cos_sim, margin)``. Both
+    sides carry ``(vec_id, embedding)``.
 
     This is the EXACT form: forward/backward kNN via :func:`cosine_topk`
     (a broadcast cross join) — use it only when at least one side is
@@ -158,8 +157,8 @@ def margin_mined_pairs(
     both the candidate set and the neighborhood averages, corrupting
     margins. (The indexed variant does not id-filter and is safe either
     way.)"""
-    fwd = cosine_topk(side_b, side_a, vec_col=vec_col, id_col=id_col, k=k)
-    bwd = cosine_topk(side_a, side_b, vec_col=vec_col, id_col=id_col, k=k)
+    fwd = cosine_topk(side_b, side_a, k=k)
+    bwd = cosine_topk(side_a, side_b, k=k)
     return _margin_select(fwd, bwd, tau)
 
 
@@ -440,22 +439,21 @@ def embedding_near_dup_pairs(
     corpus: DataFrame,
     planes: list[list[float]],
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate detection at corpus scale: vectors
-    sharing a hyperplane-LSH bucket are candidates (nearby vectors land on
-    the same side of most planes), exact cosine filters at ``threshold``.
+    """Embedding-cosine near-duplicate detection at corpus scale over
+    ``(vec_id, embedding)`` rows: vectors sharing a hyperplane-LSH bucket
+    are candidates (nearby vectors land on the same side of most planes),
+    exact cosine filters at ``threshold``.
     All-pairs within buckets — quadratic only per bucket, like the MinHash
     band join."""
     # norm once per VECTOR in the signature stage, not once per PAIR in the
     # bucket join — the pair stage then does a single dot product + divide
     # (identical floating-point arithmetic, so oracle parity is preserved)
     sig = corpus.select(
-        F.col(id_col).alias("vid"),
-        _dvec(F.col(vec_col)).alias("v"),
-        hyperplane_signature(_dvec(F.col(vec_col)), planes).alias("bucket"),
+        F.col("vec_id").alias("vid"),
+        _dvec(F.col("embedding")).alias("v"),
+        hyperplane_signature(_dvec(F.col("embedding")), planes).alias("bucket"),
     ).withColumn("nv", norm(F.col("v")))
     a = sig.select(F.col("bucket"), F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("nv").alias("na"))
     b = sig.select(F.col("bucket"), F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
@@ -476,14 +474,12 @@ def random_projection(
     vec_col: str,
     id_col: str,
     planes: list[list[float]],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project each
     embedding onto ``planes`` (one output component per plane, the same
     pinned-literal matrix recipe as ``hyperplane_signature`` — the LSH
     signature is exactly the SIGN of this projection). Emits one
-    ``p{i}`` column per plane, rounded for cross-engine determinism.
+    ``p{i}`` column per plane, rounded to 6dp for cross-engine determinism.
 
     Scale shape: pure map-side codegen (literal matrix baked into the
     plan, no broadcast, no shuffle) — reduces a 100 TB embedding table to
@@ -498,7 +494,7 @@ def random_projection(
                 F.lit(0.0),
                 lambda acc, w: acc + w,
             ),
-            round_to,
+            6,
         ).alias(f"p{i}")
         for i, p in enumerate(planes)
     ]

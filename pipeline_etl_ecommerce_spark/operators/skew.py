@@ -38,7 +38,7 @@ def _default_salt_cols(df: DataFrame, keys: list[str]) -> list[str]:
     cols = [c for c in df.columns if c not in keys]
     if not cols:
         raise ValueError(
-            "salted_groupby_agg: no non-key columns to salt on; pass salt_on explicitly"
+            "salted_groupby_agg: no non-key columns to salt on"
         )
     return cols
 
@@ -49,7 +49,6 @@ def salted_groupby_agg(
     sum_cols: list[str],
     *,
     n_salts: int = 16,
-    salt_on: list[str] | None = None,
     count_col: str | None = None,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation: groupBy(keys + salt) partial sums,
@@ -57,15 +56,13 @@ def salted_groupby_agg(
 
     Equivalent to a plain groupBy+sum for any input (tested property), but
     the first shuffle spreads a hot key over ``n_salts`` reducers.
-    ``salt_on`` defaults to ALL non-key columns (not just ``sum_cols``): a
-    hot key's metric values are often low-cardinality (constant price, zero
-    quantity), and a salt hashed from them alone would collapse the hot key
-    back into a couple of buckets. If every non-key column is constant within
-    the hot key too, no content hash can spread it — pass ``salt_on`` with a
-    high-cardinality column, or accept that a key whose rows are fully
+    The salt hashes ALL non-key columns (not just ``sum_cols``): a hot key's
+    metric values are often low-cardinality (constant price, zero quantity),
+    and a salt hashed from them alone would collapse the hot key back into a
+    couple of buckets. If every non-key column is constant within the hot
+    key too, no content hash can spread it: a key whose rows are fully
     identical is a dedup problem, not a skew problem."""
-    salt_cols = salt_on or _default_salt_cols(df, keys)
-    salted = df.withColumn("__salt", deterministic_salt(salt_cols, n_salts))
+    salted = df.withColumn("__salt", deterministic_salt(_default_salt_cols(df, keys), n_salts))
     partial_aggs = [F.sum(c).alias(f"__p_{c}") for c in sum_cols]
     if count_col:
         partial_aggs.append(F.count("*").alias("__p_cnt"))
@@ -82,14 +79,13 @@ def salted_join(
     key: str,
     *,
     n_salts: int = 8,
-    how: str = "inner",
-    fact_scatter_on: list[str] | None = None,
 ) -> DataFrame:
-    """Skewed fact ⨝ non-broadcastable dim: the dim is replicated once per
-    salt (explode over a literal range), the fact scatters deterministically,
-    and the join key becomes (key, salt) — a hot key now occupies ``n_salts``
-    partitions instead of one."""
-    scatter = fact_scatter_on or [c for c in fact.columns if c != key]
+    """Skewed fact ⨝ non-broadcastable dim, inner: the dim is replicated
+    once per salt (explode over a literal range), the fact scatters
+    deterministically on its non-key columns, and the join key becomes
+    (key, salt) — a hot key now occupies ``n_salts`` partitions instead of
+    one."""
+    scatter = [c for c in fact.columns if c != key]
     f = fact.withColumn("__salt", deterministic_salt(scatter, n_salts))
     d = dim.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    return f.join(d, [key, "__salt"], how).drop("__salt")
+    return f.join(d, [key, "__salt"]).drop("__salt")

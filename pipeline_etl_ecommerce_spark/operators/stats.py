@@ -150,14 +150,13 @@ def group_percentiles_cont(
     percentiles: Sequence[float],
     *,
     out_names: Sequence[str] | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Linear-interpolation percentiles (SQL ``percentile_cont`` / type-7)
     per group, DISTRIBUTED: rank rows in one window pass, select the two
     bracketing ranks per percentile with conditional aggregation, and
     interpolate ``v_lo + frac * (v_hi - v_lo)`` at position
-    ``p * (n - 1)`` — the same arithmetic Spark's built-in ``percentile``
-    and DuckDB's ``quantile_cont`` use, WITHOUT the built-in's failure
+    ``p * (n - 1)``, rounded to 6dp — the same arithmetic Spark's built-in
+    ``percentile`` and DuckDB's ``quantile_cont`` use, WITHOUT the built-in's failure
     mode: the native aggregate buffers every value of a group in one
     reducer's memory, which is exactly what dies on a 100 TB group. Here
     the heavy work is a sort within hash partitions and each group
@@ -177,7 +176,7 @@ def group_percentiles_cont(
         frac = pos[name] - F.floor(pos[name]).cast("double")
         lo, hi = F.col(f"__lo_{name}"), F.col(f"__hi_{name}")
         val = F.when(hi.isNull() | (frac == 0.0), lo).otherwise(lo + frac * (hi - lo))
-        outs.append(F.round(val, round_to).alias(name))
+        outs.append(F.round(val, 6).alias(name))
     return _rank_pick(df, group_cols, value_col, picks).select(*group_cols, *outs)
 
 
@@ -185,12 +184,9 @@ def winsorized_stats(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str,
-    *,
-    lo_p: float = 0.05,
-    hi_p: float = 0.95,
 ) -> DataFrame:
     """Robust per-group aggregates: clip ``value_col`` to its group's
-    nearest-rank [lo_p, hi_p] percentiles (winsorization), then aggregate
+    nearest-rank [5%, 95%] percentiles (winsorization), then aggregate
     the clipped values — the standard outlier-tolerant mean/total for
     metric columns where a handful of extreme rows would otherwise own
     the statistic.
@@ -202,7 +198,7 @@ def winsorized_stats(
     Output: group cols, n, p_lo, p_hi, winsorized_sum, winsorized_mean."""
     gl = list(group_cols)
     thresholds = group_percentiles(
-        df, gl, value_col, [lo_p, hi_p], out_names=["p_lo", "p_hi"]
+        df, gl, value_col, [0.05, 0.95], out_names=["p_lo", "p_hi"]
     )
     v = F.col(value_col)
     # a NULL value stays NULL: GREATEST/LEAST skip NULLs and would clip it to p_lo

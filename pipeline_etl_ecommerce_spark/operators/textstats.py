@@ -223,7 +223,6 @@ def _char_gram_stream(
 
 def train_lang_profiles(
     df: DataFrame, text_col: str, lang_col: str, *, n: int = 3, top_k: int = 50,
-    id_col: str | None = "doc_id",
 ) -> DataFrame:
     """Train a character-n-gram language profile table IN the engine: the
     ``top_k`` most document-frequent n-grams per language (deterministic
@@ -233,17 +232,11 @@ def train_lang_profiles(
     is just a count (the distinct-per-doc dedup rides the same aggregation
     as a countDistinct instead of an interpreted array_distinct).
 
-    ``id_col`` must exist in ``df`` and be UNIQUE per document — document
-    frequency is ``countDistinct(id)``, so duplicated ids undercount and a
-    missing column fails at analysis time. Frames without a stable id can
-    pass any unique key; as a convenience, ``id_col=None`` derives a
-    surrogate via ``monotonically_increasing_id()`` (fine for training —
-    profiles only need per-document distinctness, not stable ids)."""
-    if id_col is None:
-        df = df.withColumn("__surrogate_doc", F.monotonically_increasing_id())
-        id_col = "__surrogate_doc"
+    ``doc_id`` must exist in ``df`` and be UNIQUE per document — document
+    frequency is ``countDistinct(doc_id)``, so duplicated ids undercount and
+    a missing column fails at analysis time."""
     grams = _char_gram_stream(
-        df.select(F.col(lang_col).alias("lang"), F.col(id_col).alias("_doc"), F.col(text_col)),
+        df.select(F.col(lang_col).alias("lang"), F.col("doc_id").alias("_doc"), F.col(text_col)),
         text_col,
         ["lang", "_doc"],
         n,

@@ -252,14 +252,14 @@ _cu4 AS (
 )"""
 
 
-def dedup_by_canonical_url(pages: DataFrame, *, url_col: str = "url", id_col: str = "page_id") -> DataFrame:
-    """Group a crawl by canonical URL: one row per canonical form with the
-    raw-variant count, distinct source pages, and the winning (min-id)
-    representative. One hash-shuffle on the canonical key — the standard
-    first-pass web dedup, orders of magnitude cheaper than content dedup
-    because it runs before fetch/extract at crawl time."""
+def dedup_by_canonical_url(pages: DataFrame) -> DataFrame:
+    """Group a ``(page_id, url)`` crawl by canonical URL: one row per
+    canonical form with the raw-variant count, distinct source pages, and
+    the winning (min-id) representative. One hash-shuffle on the canonical
+    key — the standard first-pass web dedup, orders of magnitude cheaper
+    than content dedup because it runs before fetch/extract at crawl time."""
     canon = with_canonical_url(
-        pages.select(F.col(id_col).alias("_pid"), F.col(url_col).alias("_raw")), "_raw"
+        pages.select(F.col("page_id").alias("_pid"), F.col("url").alias("_raw")), "_raw"
     )
     return (
         canon.where(F.col("canonical_url").isNotNull())

@@ -24,11 +24,11 @@ def write_bucketed(
     *,
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a bucketed (optionally sorted) managed table. Sorting
-    within buckets additionally enables merge-join without a sort step."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
+    """Write ``df`` as a bucketed (optionally sorted) managed table,
+    replacing any table of that name. Sorting within buckets additionally
+    enables merge-join without a sort step."""
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)

@@ -16,15 +16,12 @@ from pyspark.sql.types import StructType
 
 
 def read_json_payloads(
-    spark: SparkSession, path: str | list[str], schema: StructType, *, multiline: bool = False
+    spark: SparkSession, path: str | list[str], schema: StructType
 ) -> DataFrame:
-    """Read API-shaped JSON payloads with an explicit schema (SURVEY.md §2.1 S4-S8).
+    """Read API-shaped JSON-lines payloads with an explicit schema (SURVEY.md
+    §2.1 S4-S8). JSON-lines is the scalable layout (splittable → parallel
+    scan).
 
     ``path`` may be a directory/glob or an explicit list of files (the REST
-    landing zone passes the exact files it just landed).
-    ``multiline=True`` for pretty-printed single-document files; default is
-    JSON-lines, the scalable layout (splittable → parallel scan)."""
-    reader = spark.read.schema(schema)
-    if multiline:
-        reader = reader.option("multiLine", "true")
-    return reader.json(path)
+    landing zone passes the exact files it just landed)."""
+    return spark.read.schema(schema).json(path)

@@ -91,12 +91,10 @@ def fetch_scroll(fetch: Callable[[str | None], dict]) -> Iterator[list[dict]]:
     raise RuntimeError("scroll pagination exceeded 1e6 pages; server is looping")
 
 
-def fetch_page_number(
-    fetch: Callable[[int], list[dict]], *, start: int = 1
-) -> Iterator[list[dict]]:
-    """S6: ``fetch(page) -> [rows]`` from ``start`` until the first empty
+def fetch_page_number(fetch: Callable[[int], list[dict]]) -> Iterator[list[dict]]:
+    """S6: ``fetch(page) -> [rows]`` from page 1 until the first empty
     page — the Tiny-API dialect (four reference jobs share it)."""
-    page = start
+    page = 1
     for _ in range(1_000_000):
         rows = fetch(page)
         if not rows:
@@ -106,17 +104,15 @@ def fetch_page_number(
     raise RuntimeError("page-number pagination exceeded 1e6 pages; server is looping")
 
 
-def land_pages(
-    pages: Iterator[list[dict]], drop_dir: str, *, prefix: str = "page"
-) -> list[str]:
+def land_pages(pages: Iterator[list[dict]], drop_dir: str) -> list[str]:
     """Write each page as one JSON-lines file in ``drop_dir`` (zero-padded
-    sequence names keep file order == fetch order for audit). Returns the
+    ``page_<i>.json`` names keep file order == fetch order for audit). Returns the
     landed file paths. The landing zone is the connector/engine boundary:
     everything after it is distributed."""
     os.makedirs(drop_dir, exist_ok=True)
     paths: list[str] = []
     for i, page in enumerate(pages):
-        path = os.path.join(drop_dir, f"{prefix}_{i:06d}.json")
+        path = os.path.join(drop_dir, f"page_{i:06d}.json")
         with open(path, "w") as fh:
             for row in page:
                 fh.write(json.dumps(row) + "\n")

@@ -48,7 +48,8 @@ Scale notes
   own partition dir.
 - Every path writer stages its files inside the mart and finishes through
   one commit (``_commit``): a journal of moves and deletes, written with one
-  atomic rename, then carried out and dropped. A crash at any step leaves
+  atomic rename, then carried out and dropped (``append_to_path`` moves
+  its staged files in and deletes none). A crash at any step leaves
   the next reader or writer exactly the before rows or the after rows;
   ``read_mart`` and the writers finish a pending journal first. There is
   one writer per mart, and a reader that runs during a commit is not
@@ -252,11 +253,18 @@ def _as_nullable(t: DataType) -> DataType:
 
 
 def append_to_path(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
-    """Plain ``INSERT`` append (SURVEY.md §2.1 S11)."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    """Plain ``INSERT`` append (SURVEY.md §2.1 S11): add ``df``'s rows to
+    the mart at ``path`` and keep its files. ``df`` is written in full to a
+    staging dir inside the mart before :func:`_commit` moves its files in,
+    so a crash leaves the before or the after rows. With ``partition_by``
+    the mart is Hive-partitioned and each staged ``key=value/`` file lands
+    in that partition dir."""
+    with _staging(path) as tmp:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        _commit(path, _parquet_files(tmp, nested=True), [], under=tmp)
 
 
 def overwrite_path(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> int:

@@ -132,14 +132,21 @@ def _scratch_root() -> str:
     return root
 
 
-def _scratch_dir(prefix: str) -> str:
+@contextmanager
+def _scratch_dir(prefix: str):
     """A fresh dir under :func:`_scratch_root` for an EXECUTED row (stream
     checkpoints, staged file drops, sink targets, bucketed-table
-    locations). Results are unaffected: these dirs hold per-call
-    intermediates that are created and deleted inside one callable."""
+    locations), removed on the way out. Results are unaffected: these dirs
+    hold per-call intermediates that are created and deleted inside one
+    callable."""
+    import shutil as _shutil
     import tempfile as _tf
 
-    return _tf.mkdtemp(prefix=prefix, dir=_scratch_root())
+    base = _tf.mkdtemp(prefix=prefix, dir=_scratch_root())
+    try:
+        yield base
+    finally:
+        _shutil.rmtree(base, ignore_errors=True)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,15 +231,16 @@ def _session_tz(spark: SparkSession, tz: str = BUSINESS_TZ):
         spark.conf.set("spark.sql.session.timeZone", old)
 
 
-def _tz_day(us_col, tz: str = BUSINESS_TZ):
+def _tz_day(us_col):
     """Session-independent calendar day of a naive-UTC epoch-micros column in
-    ``tz``. Every function in the chain carries its timezone explicitly:
-    ``timestamp_micros`` builds the instant, ``from_utc_timestamp`` shifts by
-    the per-instant offset of ``tz`` (DST-correct), ``unix_micros`` drops back
-    to tz-free epoch arithmetic, and the day number is integer floor-division
-    — nothing reads ``spark.sql.session.timeZone``. Matches DuckDB's
+    ``BUSINESS_TZ``. Every function in the chain carries its timezone
+    explicitly: ``timestamp_micros`` builds the instant,
+    ``from_utc_timestamp`` shifts by the per-instant offset of the zone
+    (DST-correct), ``unix_micros`` drops back to tz-free epoch arithmetic,
+    and the day number is integer floor-division — nothing reads
+    ``spark.sql.session.timeZone``. Matches DuckDB's
     ``CAST(timezone(tz, timezone('UTC', ts)) AS DATE)``."""
-    shifted = F.unix_micros(F.from_utc_timestamp(F.timestamp_micros(us_col), tz))
+    shifted = F.unix_micros(F.from_utc_timestamp(F.timestamp_micros(us_col), BUSINESS_TZ))
     return F.date_add(
         F.lit("1970-01-01").cast("date"),
         F.floor(shifted / F.lit(US_PER_DAY)).cast("int"),
@@ -3083,13 +3091,10 @@ def dpp_quarter_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTES r4): the dim must be a FILE source — a VALUES local relation
     constant-folds its filter away and DPP sees no selective predicate —
     and the join key must be the partition column itself."""
-    import shutil as _shutil
-
     o = _t(spark, sf_dir, "orders")
-    base = _scratch_dir(prefix="dpp_")
-    fact_path = os.path.join(base, "fact")
-    dim_path = os.path.join(base, "dim")
-    try:
+    with _scratch_dir(prefix="dpp_") as base:
+        fact_path = os.path.join(base, "fact")
+        dim_path = os.path.join(base, "dim")
         (
             # project to the two columns the query touches BEFORE the write
             # (guide §2.3): the DPP demo needs the partition column and the
@@ -3119,8 +3124,6 @@ def dpp_quarter_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _BLOOM_CONFS = {
@@ -7461,8 +7464,6 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trigger.AvailableNow over two drop files whose contents overlap. The
     result is localCheckpoint-materialized so the temp dirs can be removed
     before the driver collects."""
-    import shutil as _shutil
-
     from .streaming.runner import (
         dedup_stream,
         read_json_stream,
@@ -7476,11 +7477,10 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", F.expr("ts DIV 1000").alias("tus"), "value"
     )
 
-    base = _scratch_dir(prefix="stream_dedup_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stream_dedup_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         # evens -> file 1, odds -> file 2, every third -> BOTH
         schema = _stage_drops(drops, e, lambda r: (
             ("b1.json", "b2.json") if r.event_id % 3 == 0
@@ -7494,8 +7494,6 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         with stream_shuffle_partitions(spark, 2):
             _await_stream(run_parquet_append(deduped, target, ckpt))
         return spark.read.parquet(target).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # T2/T3/T4 EXECUTED: watermarked daily rollup run as a real stream, with
@@ -7528,8 +7526,6 @@ def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRECTNESS_r02's one red row: an unpinned UTC driver session produced
     150 UTC-day groups where the oracle pins 155 America/Sao_Paulo-day
     groups."""
-    import shutil as _shutil
-
     from .streaming.runner import (
         daily_rollup_stream,
         read_json_stream,
@@ -7541,11 +7537,10 @@ def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.expr("ts DIV 1000").alias("tus"), "value"
     )
 
-    base = _scratch_dir(prefix="stream_rollup_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stream_rollup_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         schema = _stage_drops(drops, e, _late_every_fifth)
         # Pin the session tz BEFORE the plan is built: ResolveTimeZone bakes
         # the session zone into date_trunc at analysis time, so the pin must
@@ -7573,8 +7568,6 @@ def streaming_rollup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rolled, target, ["event_date", "event_type"], ckpt
                 ))
             return spark.read.parquet(target).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # ===========================================================================
@@ -8249,8 +8242,6 @@ def ivf_delta_list_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # assignment bit-for-bit, so the oracle is _IVF_DELTA_SQL verbatim.
 @register("streaming_ann_ingest_executed", _IVF_DELTA_SQL, kind="streaming")
 def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-
     from .operators.ivf import spilled_assignment
     from .streaming.runner import read_json_stream, run_batches, stream_shuffle_partitions
 
@@ -8261,11 +8252,10 @@ def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("vec_id", _dvec(F.col("embedding")).alias("embedding"))
     )
 
-    base = _scratch_dir(prefix="stream_ann_ingest_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stream_ann_ingest_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         # bounded staging: the DELTA slice only; each vector arrives exactly
         # once, in one of two REAL triggers
         schema = _stage_drops(drops, delta, _by_parity)
@@ -8281,8 +8271,6 @@ def streaming_ann_ingest_executed(spark: SparkSession, sf_dir: str) -> DataFrame
         with stream_shuffle_partitions(spark, 2):
             _await_stream(run_batches(stream, ckpt, ingest))
         return spark.read.parquet(target).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @register("ivfadc_recall_at3", _IVFADC_RECALL_SQL)
@@ -8514,14 +8502,11 @@ def sink_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``append_to_path``), read back and aggregated — append semantics are
     bag semantics, so the p_size 21..25 overlap must appear once per
     batch. The oracle is the same bag union computed directly."""
-    import shutil as _shutil
-
     from .sources.sinks import append_to_path
 
     p = _t(spark, sf_dir, "part")
-    base = _scratch_dir(prefix="sink_append_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="sink_append_") as base:
+        target = os.path.join(base, "mart")
         append_to_path(
             p.filter(F.col("p_size") <= 25).select("p_brand", F.lit(1).alias("batch")),
             target,
@@ -8540,8 +8525,6 @@ def sink_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _SINK_RELOAD_SQL = """
@@ -8558,14 +8541,11 @@ def sink_truncate_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, balances zeroed), then truncate+reloaded with the real table
     (``overwrite_path``); the read-back aggregate must equal the clean
     batch aggregate — proving the overwrite replaced, not merged."""
-    import shutil as _shutil
-
     from .sources.sinks import overwrite_path
 
     c = _t(spark, sf_dir, "customer")
-    base = _scratch_dir(prefix="sink_reload_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="sink_reload_") as base:
+        target = os.path.join(base, "mart")
         overwrite_path(
             c.filter(F.col("c_custkey") % 2 == 0).withColumn("c_acctbal", F.lit(0.0)),
             target,
@@ -8582,8 +8562,6 @@ def sink_truncate_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _SINK_BI_SQL = """
@@ -8606,8 +8584,6 @@ def sink_partitioned_bi_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-PRUNED scan (two months' directories). The value hash
     proves the partition column round-trips through the directory
     encoding and the pruned read sees every row."""
-    import shutil as _shutil
-
     from .sources.sinks import append_to_path
 
     o = (
@@ -8615,9 +8591,8 @@ def sink_partitioned_bi_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("order_date", F.col("o_orderdate").cast("date"))
         .withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
     )
-    base = _scratch_dir(prefix="sink_bi_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="sink_bi_") as base:
+        target = os.path.join(base, "mart")
         append_to_path(
             o.select("order_month", "order_date", "o_orderstatus", "o_totalprice")
             .repartition("order_month"),
@@ -8636,8 +8611,6 @@ def sink_partitioned_bi_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # T7 EXECUTED: a 5-day backfill drives the daily batch transform through
@@ -8663,14 +8636,11 @@ def backfill_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass must converge to the identical mart, which must equal
     the one-shot batch rollup the oracle computes."""
     import datetime as _dt
-    import shutil as _shutil
 
     from .sources.sinks import upsert_to_path
     from .streaming.runner import backfill
 
     ev = _events(spark, sf_dir)
-    base = _scratch_dir(prefix="backfill_")
-    target = os.path.join(base, "mart")
 
     def run_day(d: _dt.date) -> DataFrame:
         return (
@@ -8685,12 +8655,11 @@ def backfill_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     days = [_dt.date(2024, 1, 3) + _dt.timedelta(days=i) for i in range(5)]
-    try:
+    with _scratch_dir(prefix="backfill_") as base:
+        target = os.path.join(base, "mart")
         backfill(days, run_day, lambda df: upsert_to_path(df, target, ["event_date", "event_type"]))
         backfill(days, run_day, lambda df: upsert_to_path(df, target, ["event_date", "event_type"]))
         return spark.read.parquet(target).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def _bpe_apply_sql(rounds: int) -> str:
@@ -8867,8 +8836,6 @@ def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes and append-mode emits it exactly once into the keyed mart.
     Output in tz-free epoch micros; the oracle replays session_window's
     boundary rule as batch gaps-and-islands."""
-    import shutil as _shutil
-
     from .streaming.runner import (
         read_json_stream,
         run_upsert_stream,
@@ -8884,11 +8851,10 @@ def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("tus") + 40 * 86400 * 1_000_000).alias("tus"),
     )
 
-    base = _scratch_dir(prefix="stream_sessions_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stream_sessions_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         schema = _stage_drops(drops, e, lambda r: "b1_events.json")
         _stage_drops(drops, sentinel, lambda r: "b2_sentinel.json")
         stream = (
@@ -8918,8 +8884,6 @@ def streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("user_id") >= 0)
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # ===========================================================================
@@ -8950,14 +8914,11 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read sees every row of both generations with the right nullability —
     the operational contract a 100 TB mart's readers rely on during a
     rolling schema change."""
-    import shutil as _shutil
-
     from .sources.sinks import append_to_path
 
     o = _t(spark, sf_dir, "orders")
-    base = _scratch_dir(prefix="schema_evo_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="schema_evo_") as base:
+        target = os.path.join(base, "mart")
         append_to_path(
             o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_orderstatus"),
             target,
@@ -8978,8 +8939,6 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _QUARANTINE_SQL = """
@@ -9003,46 +8962,43 @@ def json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     check proves no good row is lost and every corrupt line is captured
     (the S8 source's operational failure path, reference ingestion
     scripts crash on the first bad payload)."""
-    import shutil as _shutil
-
     e = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "event_type"
     )
     rows = e.collect()
-    base = _scratch_dir(prefix="quarantine_")
-    drop = os.path.join(base, "drop.json")
-    dead = os.path.join(base, "dead_letter")
-    raw = None  # bound inside try; guard the finally so an early failure
-    # (e.g. writing the drop file) surfaces as itself, not a NameError
-    try:
-        with open(drop, "w") as f:
-            for r in rows:
-                line = json.dumps({"event_id": r.event_id, "event_type": r.event_type})
-                f.write((line[: len(line) // 2] if r.event_id % 97 == 0 else line) + "\n")
-        schema = StructType.fromDDL(
-            "event_id bigint, event_type string, _corrupt_record string"
-        )
-        raw = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(drop)
-            .cache()  # Spark requires caching to reference _corrupt_record
-        )
-        bad = raw.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
-        bad.write.mode("overwrite").parquet(dead)
-        n_bad = spark.read.parquet(dead).count()
-        good = raw.filter(F.col("_corrupt_record").isNull())
-        return (
-            good.groupBy("event_type")
-            .agg(F.count("*").alias("n_good"))
-            .withColumn("n_quarantined", F.lit(n_bad).cast("long"))
-            .localCheckpoint()
-        )
-    finally:
-        if raw is not None:
-            raw.unpersist()
-        _shutil.rmtree(base, ignore_errors=True)
+    with _scratch_dir(prefix="quarantine_") as base:
+        drop = os.path.join(base, "drop.json")
+        dead = os.path.join(base, "dead_letter")
+        raw = None  # bound inside try; guard the finally so an early failure
+        # (e.g. writing the drop file) surfaces as itself, not a NameError
+        try:
+            with open(drop, "w") as f:
+                for r in rows:
+                    line = json.dumps({"event_id": r.event_id, "event_type": r.event_type})
+                    f.write((line[: len(line) // 2] if r.event_id % 97 == 0 else line) + "\n")
+            schema = StructType.fromDDL(
+                "event_id bigint, event_type string, _corrupt_record string"
+            )
+            raw = (
+                spark.read.schema(schema)
+                .option("mode", "PERMISSIVE")
+                .option("columnNameOfCorruptRecord", "_corrupt_record")
+                .json(drop)
+                .cache()  # Spark requires caching to reference _corrupt_record
+            )
+            bad = raw.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
+            bad.write.mode("overwrite").parquet(dead)
+            n_bad = spark.read.parquet(dead).count()
+            good = raw.filter(F.col("_corrupt_record").isNull())
+            return (
+                good.groupBy("event_type")
+                .agg(F.count("*").alias("n_good"))
+                .withColumn("n_quarantined", F.lit(n_bad).cast("long"))
+                .localCheckpoint()
+            )
+        finally:
+            if raw is not None:
+                raw.unpersist()
 
 
 # ===========================================================================
@@ -9071,8 +9027,6 @@ def rest_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetches until ``offset >= total`` (pages 2+ concurrently — the one
     parallelism the offset dialect permits), lands JSONL, and the engine
     parses distributed and aggregates."""
-    import shutil as _shutil
-
     from .sources.rest import fetch_offset_limit, ingest_pages
 
     src = (
@@ -9087,8 +9041,7 @@ def rest_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fetch(offset: int, limit: int) -> dict:
         return {"results": rows[offset : offset + limit], "paging": {"total": len(rows)}}
 
-    base = _scratch_dir(prefix="rest_offset_")
-    try:
+    with _scratch_dir(prefix="rest_offset_") as base:
         schema = StructType.fromDDL("event_id bigint, event_type string, value double")
         df = ingest_pages(
             spark, fetch_offset_limit(fetch, limit=1000, max_workers=4), schema, base
@@ -9103,8 +9056,6 @@ def rest_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _REST_SCROLL_SQL = """
@@ -9122,8 +9073,6 @@ def rest_scroll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tarefa_sincronizar_anuncios_meli.php:14-37``): sequential by
     construction — each page's token comes from the previous response;
     terminates on the first empty page."""
-    import shutil as _shutil
-
     from .sources.rest import fetch_scroll, ingest_pages
 
     src = (
@@ -9142,8 +9091,7 @@ def rest_scroll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo = 0 if scroll_id is None else int(scroll_id)
         return {"results": rows[lo : lo + page_size], "scroll_id": str(lo + page_size)}
 
-    base = _scratch_dir(prefix="rest_scroll_")
-    try:
+    with _scratch_dir(prefix="rest_scroll_") as base:
         schema = StructType.fromDDL("p_partkey bigint, p_brand string, p_retailprice double")
         df = ingest_pages(spark, fetch_scroll(fetch), schema, base)
         return (
@@ -9156,8 +9104,6 @@ def rest_scroll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _REST_PAGE_SQL = """
@@ -9174,8 +9120,6 @@ def rest_page_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 page-number ingest EXECUTED (reference ``pagina=N`` until the
     first empty page, ``tarefa_sincronizar_catalogo_tiny.php:16-33`` and 3
     sibling jobs)."""
-    import shutil as _shutil
-
     from .sources.rest import fetch_page_number, ingest_pages
 
     src = (
@@ -9194,8 +9138,7 @@ def rest_page_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo = (page - 1) * page_size
         return rows[lo : lo + page_size]
 
-    base = _scratch_dir(prefix="rest_page_")
-    try:
+    with _scratch_dir(prefix="rest_page_") as base:
         schema = StructType.fromDDL("c_custkey bigint, c_mktsegment string, c_acctbal double")
         df = ingest_pages(spark, fetch_page_number(fetch), schema, base)
         return (
@@ -9208,8 +9151,6 @@ def rest_page_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # Tokenizer fertility by language — THE metric that decides whether a
@@ -9377,13 +9318,10 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-pass is a second full scan at 100 TB and can mis-type empty
     partitions), then joined and aggregated. Proves the text-format
     round-trip preserves types and values exactly."""
-    import shutil as _shutil
-
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
-    base = _scratch_dir(prefix="csv_rt_")
-    path = os.path.join(base, "supplier_csv")
-    try:
+    with _scratch_dir(prefix="csv_rt_") as base:
+        path = os.path.join(base, "supplier_csv")
         s.write.option("header", "true").csv(path)
         back = (
             spark.read.schema("s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double")
@@ -9401,8 +9339,6 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 _ORC_ROUNDTRIP_SQL = """
@@ -9424,12 +9360,9 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max plus bloom-filterable predicate pushdown — same data-skipping
     contract as the parquet path. The oracle recomputes from the parquet
     original, so the hash proves type and value fidelity across formats."""
-    import shutil as _shutil
-
     o = _t(spark, sf_dir, "orders")
-    base = _scratch_dir(prefix="orc_rt_")
-    path = os.path.join(base, "orders_orc")
-    try:
+    with _scratch_dir(prefix="orc_rt_") as base:
+        path = os.path.join(base, "orders_orc")
         o.write.orc(path)
         back = spark.read.orc(path).filter(F.col("o_orderstatus") == "O")
         return (
@@ -9442,8 +9375,6 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # XML source (NEW r4): Spark 4 ships the spark-xml reader built in —
@@ -9469,12 +9400,9 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash proves type and value fidelity across the text format. XML is a
     landing-zone format (supplier feeds arrive as documents) — at scale
     it is parsed ONCE at ingest into parquet, exactly this shape."""
-    import shutil as _shutil
-
     s = _t(spark, sf_dir, "supplier")
-    base = _scratch_dir(prefix="xml_rt_")
-    path = os.path.join(base, "supplier_xml")
-    try:
+    with _scratch_dir(prefix="xml_rt_") as base:
+        path = os.path.join(base, "supplier_xml")
         s.write.format("xml").option("rowTag", "supplier").save(path)
         back = (
             spark.read.format("xml")
@@ -9492,8 +9420,6 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # ===========================================================================
@@ -9606,8 +9532,6 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed state store across two file triggers; every
     emission is a running snapshot and the keyed upsert keeps the
     last-wins row, converging the mart to the batch aggregate."""
-    import shutil as _shutil
-
     from .streaming.runner import read_json_stream, run_upsert_stream, stream_shuffle_partitions
     from .streaming.stateful import running_user_totals_exact
 
@@ -9619,11 +9543,10 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
     )
 
-    base = _scratch_dir(prefix="stateful_totals_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stateful_totals_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         schema = _stage_drops(drops, e, _by_parity, route_only=("event_id",))
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         totals = running_user_totals_exact(stream)
@@ -9633,8 +9556,6 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 output_mode="append", order_by=["n_events"],
             ))
         return spark.read.parquet(target).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # No transformWithStateInPandas twin of the query above: Spark 4's TWS
@@ -9665,19 +9586,16 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store), appends to parquet, and the read-back aggregate must
     hash-match the batch join. The staging collect is the documented
     <=20k-row harness bound shared by the other executed streams."""
-    import shutil as _shutil
-
     from .streaming.runner import read_json_stream, run_parquet_append, stream_shuffle_partitions
 
     ev = _events(spark, sf_dir).filter(F.col("event_id") <= 20000).select(
         "event_id", "user_id"
     )
 
-    base = _scratch_dir(prefix="stream_static_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="stream_static_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         schema = _stage_drops(drops, ev, _by_parity)
         stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
         dim = _t(spark, sf_dir, "customer").select(
@@ -9693,8 +9611,6 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 def _click_purchase_sides(spark: SparkSession, sf_dir: str, *, max_id: int) -> dict[str, DataFrame]:
@@ -9744,15 +9660,12 @@ def streaming_attribution_executed(spark: SparkSession, sf_dir: str) -> DataFram
     24 hours through Spark's two-sided join state — a click buffered in
     trigger 1 still joins a purchase arriving in trigger 2. Append sink;
     must hash-match the batch interval join."""
-    import shutil as _shutil
-
     from .streaming.pipelines import click_attribution_join_stream
     from .streaming.runner import stream_shuffle_partitions
 
-    base = _scratch_dir(prefix="stream_attrib_")
-    target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
-    cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
-    try:
+    with _scratch_dir(prefix="stream_attrib_") as base:
+        target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
+        cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
         for side, rows in _click_purchase_sides(spark, sf_dir, max_id=20000).items():
             _stage_drops(os.path.join(base, side), rows, _by_parity)
         with stream_shuffle_partitions(spark, 2):
@@ -9770,8 +9683,6 @@ def streaming_attribution_executed(spark: SparkSession, sf_dir: str) -> DataFram
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # Stream-stream LEFT OUTER interval join EXECUTED: the outer side makes
@@ -9807,16 +9718,13 @@ def streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame
     with NULL purchase columns — only after the watermark proves no match
     can still arrive. Hash-matches the batch LEFT JOIN, which is the
     convergence contract for the whole outer-join protocol."""
-    import shutil as _shutil
-
     from .streaming.pipelines import click_conversion_outer_stream
     from .streaming.runner import stream_shuffle_partitions
 
-    base = _scratch_dir(prefix="stream_outer_")
-    target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
-    cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
-    sides = _click_purchase_sides(spark, sf_dir, max_id=12000)
-    try:
+    with _scratch_dir(prefix="stream_outer_") as base:
+        target, ckpt = os.path.join(base, "target"), os.path.join(base, "ckpt")
+        cdir, pdir = os.path.join(base, "clicks"), os.path.join(base, "purchases")
+        sides = _click_purchase_sides(spark, sf_dir, max_id=12000)
         for side, rows in sides.items():
             _stage_drops(os.path.join(base, side), rows, _by_parity)
         with stream_shuffle_partitions(spark, 2):
@@ -9860,8 +9768,6 @@ def streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # Embedding-proximity decontamination: the semantic sibling of the n-gram
@@ -10285,43 +10191,41 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the executed plan (the status filter rides the bucketed scan without
     disturbing co-location). Unique per-call database under a temp
     location, dropped CASCADE afterwards."""
-    import shutil as _shutil
     import uuid as _uuid
 
     from .sources.bucketing import write_bucketed
 
     db = f"bucketed_{_uuid.uuid4().hex[:8]}"
-    base = _scratch_dir(prefix=db + "_")
-    try:
-        spark.sql(f"CREATE DATABASE {db} LOCATION '{base}'")
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-        o = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_orderpriority"
-        )
-        write_bucketed(
-            li, f"{db}.lineitem_b", ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"]
-        )
-        write_bucketed(
-            o, f"{db}.orders_b", ["o_orderkey"], num_buckets=8, sort_cols=["o_orderkey"]
-        )
-        with _conf_pin(spark, _BUCKETED_CONFS):
-            lb = spark.table(f"{db}.lineitem_b")
-            ob = spark.table(f"{db}.orders_b").filter(F.col("o_orderstatus") == "F")
-            out = (
-                lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-                .groupBy(F.col("l_orderkey").alias("order_id"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_lines"),
-                    F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                    .cast("double")
-                    .alias("revenue"),
-                    F.max("o_orderpriority").alias("priority"),
-                )
+    with _scratch_dir(prefix=db + "_") as base:
+        try:
+            spark.sql(f"CREATE DATABASE {db} LOCATION '{base}'")
+            li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+            o = _t(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderstatus", "o_orderpriority"
             )
-            return out.localCheckpoint()
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        _shutil.rmtree(base, ignore_errors=True)
+            write_bucketed(
+                li, f"{db}.lineitem_b", ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"]
+            )
+            write_bucketed(
+                o, f"{db}.orders_b", ["o_orderkey"], num_buckets=8, sort_cols=["o_orderkey"]
+            )
+            with _conf_pin(spark, _BUCKETED_CONFS):
+                lb = spark.table(f"{db}.lineitem_b")
+                ob = spark.table(f"{db}.orders_b").filter(F.col("o_orderstatus") == "F")
+                out = (
+                    lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+                    .groupBy(F.col("l_orderkey").alias("order_id"))
+                    .agg(
+                        F.count(F.lit(1)).cast("long").alias("n_lines"),
+                        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+                        .cast("double")
+                        .alias("revenue"),
+                        F.max("o_orderpriority").alias("priority"),
+                    )
+                )
+                return out.localCheckpoint()
+        finally:
+            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 # percent_rank + cume_dist (NEW r4): the two relative-position window
@@ -10665,15 +10569,12 @@ def incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/sinks.merge_aggregate_mart_to_path) — O(delta) per ingest,
     the fact never re-scanned. The converged mart hash-matches the
     one-shot batch aggregate; DECIMAL partials keep every merge exact."""
-    import shutil as _shutil
-
     from .sources.sinks import merge_aggregate_mart_to_path
 
     li = _t(spark, sf_dir, "lineitem")
-    base = _scratch_dir(prefix="ivm_")
-    target = os.path.join(base, "mart")
-    keys = ["l_returnflag", "l_linestatus"]
-    try:
+    with _scratch_dir(prefix="ivm_") as base:
+        target = os.path.join(base, "mart")
+        keys = ["l_returnflag", "l_linestatus"]
         for part in range(3):
             delta = li.filter(F.col("l_orderkey") % 3 == part)
             agg = delta.groupBy(*keys).agg(
@@ -10689,8 +10590,6 @@ def incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_qty").cast("double").alias("sum_qty"),
             F.col("sum_price").cast("double").alias("sum_price"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # S7 under the oracle: point-lookup enrichment — the reference's per-row
@@ -11140,8 +11039,6 @@ def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch aggregate value-for-value. Result is materialized
     (localCheckpoint) under the conf pin, so nothing the driver collects
     depends on the restored session confs."""
-    import shutil as _shutil
-
     from .streaming.runner import (
         ROCKSDB_STATE_CONFS,
         read_json_stream,
@@ -11153,11 +11050,10 @@ def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", F.expr("ts DIV 1000").alias("tus"), "value"
     )
 
-    base = _scratch_dir(prefix="rocksdb_totals_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "target")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with _scratch_dir(prefix="rocksdb_totals_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         schema = _stage_drops(drops, e, _late_every_fifth)
         with _conf_pin(spark, ROCKSDB_STATE_CONFS):
             stream = read_json_stream(spark, drops, schema, max_files_per_trigger=1)
@@ -11172,8 +11068,6 @@ def rocksdb_user_totals_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.read.parquet(target).select(
                 "user_id", "n_events", "total_value"
             ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # ===========================================================================
@@ -11982,14 +11876,12 @@ GROUP BY l_returnflag
 @register("sink_compaction_roundtrip", _SINK_COMPACT_SQL, kind="executed")
 def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import shutil as _shutil
 
     from .sources.sinks import compact_path
 
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
-    base = _scratch_dir(prefix="sink_compact_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="sink_compact_") as base:
+        target = os.path.join(base, "mart")
         li.repartition(64).write.parquet(target)
         compact_path(spark, target, target_partitions=2)
         n_files = len(_glob.glob(os.path.join(target, "*.parquet")))
@@ -12005,8 +11897,6 @@ def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_files", F.lit(n_files).cast("long"))
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # Z-order layout (operators/layout.py): the multi-column clustering pass a
@@ -12090,14 +11980,12 @@ FROM z GROUP BY 1
 @register("zorder_recluster_roundtrip", _ZORDER_RECLUSTER_SQL, kind="executed")
 def zorder_recluster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import shutil as _shutil
 
     from .operators.layout import recluster_zordered
 
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_size", "p_retailprice")
-    base = _scratch_dir(prefix="zorder_recluster_")
-    target = os.path.join(base, "mart")
-    try:
+    with _scratch_dir(prefix="zorder_recluster_") as base:
+        target = os.path.join(base, "mart")
         p.repartition(64).write.parquet(target)  # the fragmented debris
         # explicit raise, not assert: the "recluster actually defragmented"
         # precondition must hold under `python -O` too
@@ -12143,8 +12031,6 @@ def zorder_recluster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("files_ok", F.lit(n_files <= 8))
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # Batch CDC apply (operators/cdc.py): fold an I/U/D op log into a
@@ -12349,16 +12235,10 @@ WHERE l.op IS NULL OR l.op <> 'D'
 
 @register("streaming_cdc_apply_executed", _STREAM_CDC_SQL, kind="streaming")
 def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-
     from .operators.cdc import cdc_compact_log
     from .sources.sinks import overwrite_path
     from .streaming.runner import read_json_stream, run_batches, stream_shuffle_partitions
 
-    base = _scratch_dir(prefix="stream_cdc_")
-    drops = os.path.join(base, "drops")
-    target = os.path.join(base, "mart")
-    ckpt = os.path.join(base, "ckpt")
     keys, order = ["p_partkey"], ["ts", "okey", "lnum"]
 
     def compact(df: DataFrame) -> DataFrame:
@@ -12381,7 +12261,10 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.col("l_extendedprice").alias("price"),
     )
-    try:
+    with _scratch_dir(prefix="stream_cdc_") as base:
+        drops = os.path.join(base, "drops")
+        target = os.path.join(base, "mart")
+        ckpt = os.path.join(base, "ckpt")
         # seed: the base snapshot enters the log at a sentinel order below
         # every real op (ts=-1), already compacted (keys are unique)
         seed = _t(spark, sf_dir, "part").select(
@@ -12413,8 +12296,6 @@ def streaming_cdc_apply_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("p_partkey", "price")
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -37,7 +37,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import time
 
 import measure  # also puts the repo root on sys.path
@@ -103,28 +102,25 @@ def main() -> int:
         raise SystemExit(f"panel rows must be lazy: {not_lazy}")
     spark, cpus = measure.session("bench-sf1")
 
-    scratch = testdata_queries._scratch_dir(prefix="sf1_bench_")
-    sf_dir = os.path.join(scratch, f"sf1x{args.copies}")
-    load_start = round(os.getloadavg()[0], 2)
-    t0 = time.perf_counter()
-    synthesize(spark, sf_dir, args.copies, near_dup=False)
-    synth_sec = round(time.perf_counter() - t0, 1)
-    print(f"[synth] {args.copies}x sf0.1 -> {sf_dir} in {synth_sec}s", flush=True)
+    with testdata_queries._scratch_dir(prefix="sf1_bench_") as scratch:
+        sf_dir = os.path.join(scratch, f"sf1x{args.copies}")
+        load_start = round(os.getloadavg()[0], 2)
+        t0 = time.perf_counter()
+        synthesize(spark, sf_dir, args.copies, near_dup=False)
+        synth_sec = round(time.perf_counter() - t0, 1)
+        print(f"[synth] {args.copies}x sf0.1 -> {sf_dir} in {synth_sec}s", flush=True)
 
-    t0 = time.perf_counter()
-    measure.warm(spark, sf_dir)
-    warm_sec = round(time.perf_counter() - t0, 1)
-    print(f"[warm] marts in {warm_sec}s", flush=True)
+        t0 = time.perf_counter()
+        measure.warm(spark, sf_dir)
+        warm_sec = round(time.perf_counter() - t0, 1)
+        print(f"[warm] marts in {warm_sec}s", flush=True)
 
-    timings: dict[str, float] = {}
-    try:
+        timings: dict[str, float] = {}
         for name in PANEL:
             samples = measure.time_row(spark, sf_dir, name, args.reps)
             timings[name] = round(min(samples), 3)
             print(f"[time] {name}: min={min(samples):.3f}s "
                   f"max={max(samples):.3f}s", flush=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
     doc = {}
     if os.path.exists(OUT):

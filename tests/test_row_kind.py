@@ -53,8 +53,7 @@ def test_declared_kind_matches_observed(spark, monkeypatch):
     monkeypatch.setattr(DataStreamWriter, "start", spy("streaming", DataStreamWriter.start))
     monkeypatch.setattr(DataStreamWriter, "toTable", spy("streaming", DataStreamWriter.toTable))
     monkeypatch.setattr(tempfile, "mkdtemp", spy("executed", tempfile.mkdtemp))
-    monkeypatch.setattr(tq, "_scratch_dir", spy("executed", tq._scratch_dir))
-    for name in ("_conf_pin", "_session_tz"):
+    for name in ("_conf_pin", "_session_tz", "_scratch_dir"):
         monkeypatch.setattr(tq, name, contextmanager(spy("executed", getattr(tq, name).__wrapped__)))
 
     observed: dict[str, str] = {}

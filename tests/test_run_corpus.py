@@ -130,17 +130,22 @@ def test_corpus_pipeline_stream_converges_marts(spark, tmp_path):
 def test_repeated_ingests_upsert_the_corpus_in_place(spark, tmp_path):
     """Every ingest upserts its docs into the flat corpus mart: three
     ingests of disjoint doc ids add one file each and rewrite none, leave
-    no journal or staging, and the corpus holds every doc. The run history
-    numbers the runs 0, 1, 2."""
+    no journal or staging, and the corpus holds every doc. Every doc passes
+    curation, so each ingest refreshes non-empty curated, sequences, packs
+    and shards marts over all the docs so far. The run history numbers the
+    runs 0, 1, 2."""
     from pipeline_etl_ecommerce_spark.plans.corpus_pipeline import record_run
     from pipeline_etl_ecommerce_spark.sources.sinks import read_mart
 
     marts = str(tmp_path / "marts")
     run_ids = []
+    tags = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     for b in range(3):
         ids = (2 * b, 2 * b + 1)
-        docs = spark.createDataFrame([(i, _good_text(f"doc{i}")) for i in ids], "doc_id long, text string")
+        docs = spark.createDataFrame([(i, _good_text(tags[i])) for i in ids], "doc_id long, text string")
         stats = ingest_batch(spark, docs, marts, chunk_size=8, pack_budget=16, n_shards=2)
+        assert stats["curated"] == 2 * (b + 1), stats
+        assert all(stats[m] > 0 for m in ("sequences", "packs", "shards")), stats
         run_ids.append(record_run(spark, marts, stats))
     assert run_ids == [0, 1, 2]
     files = os.listdir(f"{marts}/corpus")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import count_jobs
 from pipeline_etl_ecommerce_spark.sources.sinks import (
+    append_to_path,
     dedupe_last_wins,
     insert_if_absent,
     keyed_update,
@@ -527,6 +528,46 @@ def test_a_crash_at_any_overwrite_step_leaves_the_before_or_the_after_rows(spark
     assert _mart_rows(spark, path) == (_BEFORE if crash_at == 0 else _AFTER)
     assert _set_b_to_20(spark, path, partition_by) == 3
     assert _mart_rows(spark, path) == _AFTER
+    assert _leftovers(path) == []
+
+
+# the filesystem steps of one append commit: the batch is one file in the
+# flat mart, one file in each of p=0 and p=1 in the Hive mart
+_APPEND_STEPS = {
+    "flat": [("write-journal", "replace"), ("move", "rename"), ("drop-journal", "remove")],
+    "hive": [("write-journal", "replace"), ("move-p0", "rename"), ("move-p1", "rename"), ("drop-journal", "remove")],
+}
+
+
+@pytest.mark.parametrize(
+    "layout,crash_at",
+    [(layout, i) for layout, steps in _APPEND_STEPS.items() for i in range(len(steps))],
+    ids=[f"{layout}-{name}" for layout, steps in _APPEND_STEPS.items() for name, _ in steps],
+)
+def test_a_crash_at_any_append_step_leaves_the_before_or_the_after_rows(spark, tmp_path, monkeypatch, layout, crash_at):
+    """An append of d and e to a flat mart and to a mart partitioned by
+    ``p`` crashes at one step of its commit. The next read sees exactly the
+    before rows or the after rows, and the next append adds its own rows
+    and sweeps every journal and staging entry. A plain Spark append wrote
+    into the mart itself, so a crash in its job commit could leave part of
+    the batch behind."""
+    path = str(tmp_path / "mart")
+    partition_by = ["p"] if layout == "hive" else None
+
+    def append(rows):
+        df = _df(spark, rows).withColumn("p", F.col("k").isin("a", "d").cast("int"))
+        append_to_path(df.coalesce(1), path, partition_by=partition_by)
+
+    append([("a", 1, 1), ("b", 2, 1), ("c", 3, 1)])
+    seen = _steps_on(monkeypatch, path, crash_at)
+    with pytest.raises(_Crash):
+        append([("d", 4, 2), ("e", 5, 2)])
+    monkeypatch.undo()
+    assert seen == [fn for _, fn in _APPEND_STEPS[layout][: crash_at + 1]]
+    after = [*_BEFORE, ("d", 4), ("e", 5)]
+    assert _mart_rows(spark, path) == (_BEFORE if crash_at == 0 else after)
+    append([("f", 6, 3)])
+    assert _mart_rows(spark, path) == ([*_BEFORE, ("f", 6)] if crash_at == 0 else [*after, ("f", 6)])
     assert _leftovers(path) == []
 
 

@@ -78,7 +78,7 @@ def test_default_salt_spreads_constant_metric_hot_key(spark):
 
 def test_default_salt_requires_a_non_key_column(spark):
     df = spark.createDataFrame([("a",)], "k string")
-    with pytest.raises(ValueError, match="salt_on"):
+    with pytest.raises(ValueError, match="no non-key columns to salt on"):
         salted_groupby_agg(df, ["k"], [])
 
 
